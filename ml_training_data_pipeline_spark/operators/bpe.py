@@ -17,7 +17,7 @@ symbol pairs, merge the most frequent, repeat — expressed the Spark way:
 - The merge itself is a pure JVM higher-order fold (``aggregate``) over
   each term's symbol array — left-to-right, non-overlapping, exactly
   BPE's greedy replacement — so NO Python UDF anywhere in the loop.
-- Lineage is cut with localCheckpoint every few iterations (the
+- Lineage is cut with materialize() every few iterations (the
   connected_components discipline) so N merges stay O(N) planning, not
   O(N²).
 """
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
 from .tfidf import doc_tokens, term_counts
 
 # left-to-right greedy merge of the adjacent pair (L, R) inside a symbol
@@ -89,7 +90,7 @@ def train_bpe(
     Ties on pair frequency break by (left, right) lexicographic order —
     a total order, so the learned rules are deterministic across
     partitionings and engines."""
-    state = vocab_symbols(docs, text_col, id_col).localCheckpoint()
+    state = materialize(vocab_symbols(docs, text_col, id_col))
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(n_merges):
         pairs = state.where(F.size("syms") >= 2).select(
@@ -116,7 +117,7 @@ def train_bpe(
         fold = _MERGE_FOLD.format(COL="syms", L=_lit(l), R=_lit(r), M=_lit(merged))
         state = state.select("term", "tf", F.expr(fold).alias("syms"))
         if (step + 1) % checkpoint_every == 0:
-            state = state.localCheckpoint()
+            state = materialize(state)
     return merges, state
 
 
@@ -144,7 +145,7 @@ def apply_merges(
         fold = _MERGE_FOLD.format(COL=_ident(syms_col), L=_lit(l), R=_lit(r), M=_lit(merged))
         out = out.withColumn(syms_col, F.expr(fold))
         if (step + 1) % checkpoint_every == 0:
-            out = out.localCheckpoint()
+            out = materialize(out)
     return out
 
 

@@ -19,6 +19,8 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 @dataclass
 class ClusterResult:
@@ -165,8 +167,6 @@ def quantize_vectors(
     recipe runs on, materialized ONCE — the third return slot of
     ``lloyd_quantized`` and the ``prequantized`` input a k-sweep (m11)
     shares across every k (and across concurrently-submitted fits)."""
-    from .materialize import materialize
-
     q = vectors.select(
         F.col(id_col).alias("vec_id"),
         F.transform(

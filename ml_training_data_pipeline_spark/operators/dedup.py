@@ -245,10 +245,8 @@ def jaccard_pairs(
         # only covers the identical a/b legs, not the sizes shape). The
         # scoped table is LSH-candidate-bounded, so the checkpoint is
         # small at any corpus size while the scans it replaces grow with
-        # the corpus. localCheckpoint (not cache) keeps true size stats
+        # the corpus. materialize() (not cache) keeps true size stats
         # visible to AQE — see minhash_dedup's 18×-regression note.
-        from .materialize import materialize
-
         sh = materialize(sh.join(cand_docs, "doc_id", "left_semi"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
@@ -319,8 +317,6 @@ def lsh_admission_rejects(
         )
         .distinct()
     )
-    from .materialize import materialize
-
     cand = (
         delta_bands.join(corpus_bands, ["band", "band_sig"])
         .where(F.col("delta_doc") != F.col("corpus_doc"))
@@ -382,14 +378,12 @@ def minhash_dedup(
     """Full MinHash-LSH dedup: shingle → sign → band → candidates →
     verified Jaccard ≥ threshold. Returns (doc_a, doc_b, jaccard)."""
     # The shingle table has THREE consumers (signatures, per-doc sizes,
-    # intersection join) — materialize it ONCE via localCheckpoint.
+    # intersection join) — materialize it ONCE.
     # NOT .cache(): a cached plan hides its stats from AQE and turned the
     # downstream self-join 18× slower (132s vs 7s at sf0.1), whereas a
     # checkpointed RDD reports its true materialized size, so AQE keeps
     # planning correctly (measured: ~30% faster than recomputing the
-    # tokenize→shingle lineage per consumer). The cluster deployment picks
-    # persist-to-disk / eager-parquet via SPARK_GRAFT_MATERIALIZE
-    # (operators/materialize.py) instead of editing this operator.
+    # tokenize→shingle lineage per consumer).
     sh = materialize(doc_shingles(docs, k=k))
     # The candidate pair list has THREE plan references downstream
     # (jaccard_pairs uses it in both legs of the cand_docs union and in
@@ -529,7 +523,7 @@ def connected_components(
     reaching the fixpoint raises rather than silently returning split
     components (multiple survivors per true dup group, with no error
     signal).
-    ``localCheckpoint`` per round truncates the iterative lineage (the
+    ``materialize`` per round truncates the iterative lineage (the
     driver-loop analogue of the reference's in-memory igraph step).
 
     Two per-round shuffles removed (r16, guide §2.4): (1) the symmetric

@@ -1,12 +1,14 @@
-"""Materialization-strategy knob for multi-consumer intermediates.
+"""The engine's one materialization path.
 
-Several operators materialize a shared intermediate exactly once so the
-plan doesn't re-run an expensive upstream lineage per consumer (the
-doc-term counts under tf-idf, the shingle table under MinHash, the
-window position stream under the span scrub, the per-round label table
-of connected components). The single-JVM form is ``localCheckpoint()``;
-SURVEY §4 notes the 100 TB form is a persist-to-disk of the same table.
-This helper makes that a DEPLOYMENT knob instead of an operator edit:
+Every operator and query that pins a frame goes through
+:func:`materialize` — nothing else in the package checkpoints. Two
+reasons to pin: a shared intermediate with several consumers is computed
+once instead of re-running its upstream lineage per consumer (the
+doc-term counts under tf-idf, the shingle table under MinHash, refine's
+split output, a query's per-source totals), and an iterative loop
+(connected components, BPE merges, refine rounds) cuts its lineage each
+round so plan depth stays bounded. Where the frame lives is a
+DEPLOYMENT setting, not an operator edit:
 
     SPARK_GRAFT_MATERIALIZE=local     (default) localCheckpoint(eager=True)
     SPARK_GRAFT_MATERIALIZE=reliable  df.checkpoint(eager=True) to
@@ -43,8 +45,8 @@ CacheManager.
 
 All three strategies are EAGER — callers rely on the intermediate
 existing before fan-out, and the iterative operators (connected
-components) rely on per-round lineage truncation, which every strategy
-preserves.
+components, BPE, refine rounds) rely on per-round lineage truncation,
+which every strategy preserves.
 """
 
 from __future__ import annotations
@@ -93,9 +95,7 @@ def _strategy() -> str:
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` once and return the frame downstream
     consumers should read. Strategy per SPARK_GRAFT_MATERIALIZE (module
-    docstring); the default (``local``) is byte-identical to the
-    ``localCheckpoint(eager=True)`` the operators previously hard-coded,
-    so the plan ledger is unchanged unless the knob is set."""
+    docstring); the default (``local``) is ``localCheckpoint(eager=True)``."""
     s = _strategy()
     if s == "local":
         return df.localCheckpoint(eager=True)

@@ -17,8 +17,8 @@ coherence) so the loop is bounded; everything inside stays distributed.
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -27,8 +27,10 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from .centroids import centroid_cosine_pairs, merge_components
 from .coherence import binary_doc_term, prob_coherence
+from .materialize import materialize
 from .tfidf import cluster_term_scores
 
 
@@ -59,10 +61,6 @@ class RefineConfig:
     # × 8B ≈ 80 MB per group — safely inside an executor's task memory;
     # raise only with a correspondingly larger executor heap.
     local_fit_max_docs: int = 5000
-    # concurrent driver threads submitting oversized-candidate MLlib fits
-    # (each fit's stages still shard across the cluster; this just stops
-    # the per-candidate jobs from serializing on the driver).
-    big_fit_parallelism: int = 4
 
 
 def renumber_clusters(assignments: DataFrame) -> DataFrame:
@@ -308,10 +306,10 @@ def split_low_coherence_clusters(
     IN PARALLEL as one ``groupBy(cluster_id).applyInPandas`` stage —
     every per-cluster fit is an executor-local numpy/sklearn job, no
     driver-blocking chain. Larger candidates (rare by construction) fall
-    back to distributed MLlib LDA jobs submitted CONCURRENTLY from a
-    driver thread pool (``cfg.big_fit_parallelism``, FAIR pools). One
-    anti-join ∪ union applies all minted assignments at once. Returns (new_assignments,
-    split_cluster_ids) — ids whose docs actually moved.
+    back to distributed MLlib LDA jobs submitted CONCURRENTLY from driver
+    threads (``session.run_concurrently``, FAIR pools). One anti-join ∪
+    union applies all minted assignments at once. Returns
+    (new_assignments, split_cluster_ids) — ids whose docs actually moved.
 
     ``binary``/``coherence``: caller-supplied precomputed frames (the
     binarized DFM, and this exact assignments' cluster coherence) so the
@@ -386,7 +384,7 @@ def split_low_coherence_clusters(
         # final LDA fit ran TWICE per split round (ReuseExchange only
         # dedupes the shuffle BELOW the Python node, not the node itself;
         # measured r17 at sf0.1: m5's split stage 4.5 s → 2.9 s).
-        grouped = grouped.localCheckpoint(eager=True)
+        grouped = materialize(grouped)
         out = out.join(grouped.select("doc_id"), "doc_id", "left_anti").unionByName(grouped)
 
     def fit_big_candidate(cid: int, base_id: int) -> DataFrame | None:
@@ -395,16 +393,7 @@ def split_low_coherence_clusters(
         candidates overlap instead of serializing on the driver (the
         reference's loop is serial, 02_build_models.R:487-564 — at 100×
         many >local_fit_max_docs low-coherence clusters would make that
-        the refine wall-clock). A per-thread scheduler pool keeps the
-        concurrent jobs fairly interleaved when FAIR mode is on."""
-        # setLocalProperty is only THREAD-scoped under PySpark pinned-
-        # thread mode (PYSPARK_PIN_THREAD, default on since Spark 3.2).
-        # With it disabled, concurrent workers share one JVM-local
-        # property map and would silently clobber each other's pool
-        # assignment — skip the per-thread pool entirely in that case
-        # (jobs still run concurrently, just in the default pool).
-        if os.environ.get("PYSPARK_PIN_THREAD", "true").lower() not in ("0", "false", "no"):
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"refine-{cid}")
+        the refine wall-clock)."""
         members = assignments.where(F.col("cluster_id") == cid).select("doc_id")
         sub = tf_vectors.join(members, "doc_id").cache()
         try:
@@ -433,9 +422,9 @@ def split_low_coherence_clusters(
             final = lda_topic_assignments(sub, best_k, _probe_seed(cfg.seed, cid, best_k), cfg.lda_final_iter)
             # argmax materialized inside the thread so unpersist is safe;
             # result is candidate-sized (doc_id, cluster_id) rows.
-            return final.select(
+            return materialize(final.select(
                 "doc_id", (F.lit(base_id) + F.col("topic")).cast("long").alias("cluster_id")
-            ).localCheckpoint(eager=True)
+            ))
         finally:
             sub.unpersist()
 
@@ -445,10 +434,9 @@ def split_low_coherence_clusters(
         big_bases = [
             (cid, max_id + 1 + (len(small) + i) * max_k) for i, cid in enumerate(big)
         ]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(len(big), cfg.big_fit_parallelism)) as pool:
-            minted_parts = list(pool.map(lambda cb: fit_big_candidate(*cb), big_bases))
+        minted_parts = run_concurrently(
+            spark, *[partial(fit_big_candidate, cid, base) for cid, base in big_bases]
+        )
         minted_parts = [m for m in minted_parts if m is not None]
         if minted_parts:
             all_minted = minted_parts[0]
@@ -464,7 +452,7 @@ def split_low_coherence_clusters(
     # cluster ids replaces the old full-width old⋈new join + distinct
     # (guide §2.4 — the join was a per-round shuffle of the whole
     # assignment table at 100 TB).
-    out = out.localCheckpoint(eager=True)
+    out = materialize(out)
     block_owner = list(small) + list(big)  # block i ↔ candidate order
     new_ids = [int(r["cluster_id"]) for r in out.select("cluster_id").distinct().collect()]
     split_ids = sorted(
@@ -498,7 +486,7 @@ def merge_similar_clusters(
     # and merge_components' group-universe collect) — left lazy, each
     # reference re-runs the full tfidf⋈assignments aggregation (a full
     # corpus pass per reference at 100 TB). The frame is k×vocab rows.
-    cents = cents.localCheckpoint(eager=True)
+    cents = materialize(cents)
     pairs = centroid_cosine_pairs(cents)
     mapping = merge_components(pairs, threshold, groups=cents)
     return (
@@ -523,7 +511,7 @@ def refine(
 ) -> DataFrame:
     """M11 — optimize_clusters_with_coherence (02_opt:831-911):
     split low-coherence clusters → renumber → merge similar → renumber.
-    Each round checkpoints lineage via localCheckpoint (the reference's
+    Each round cuts lineage via materialize() (the reference's
     eager materialization, kept deliberately: iterative loops otherwise
     accumulate unbounded plan depth).
 
@@ -546,9 +534,9 @@ def refine(
         # checkpoint BEFORE merge: the split output carries LDA-transform
         # lineage that merge's aggregations would otherwise re-execute per
         # downstream job.
-        out = renumber_clusters(out).localCheckpoint(eager=True)
+        out = materialize(renumber_clusters(out))
         out = merge_similar_clusters(tfidf, out, cfg.merge_threshold)
-        out = renumber_clusters(out).localCheckpoint(eager=True)
+        out = materialize(renumber_clusters(out))
         if not split_ids:
             break
     return out

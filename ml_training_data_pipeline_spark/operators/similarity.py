@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .materialize import materialize
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -648,16 +650,15 @@ def pq_codebooks(
     )
     # ≤ train_n·m rows regardless of corpus size — safe to materialize,
     # and pinning it keeps the fit input stable across the fit/collect
-    fit_slices = slices.join(
+    fit_slices = materialize(slices.join(
         F.broadcast(train_ids), "vec_id", "left_semi"
-    ).localCheckpoint()
-    book_df = (
+    ))
+    book_df = materialize(
         fit_slices.groupBy("j")
         .applyInPandas(
             _make_codebook_fitter(ksub, seed), "j int, code int, cvec array<double>"
         )
-        .localCheckpoint()  # consumers: the collect below + the encode join
-    )
+    )  # consumers: the collect below + the encode join
     rows = book_df.collect()  # bounded: m × ksub codebook rows
     by_j: dict[int, dict[int, list[float]]] = {}
     for r in rows:

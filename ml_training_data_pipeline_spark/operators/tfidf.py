@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import ngrams_up_to, remove_stopwords, tokenize
+from .materialize import materialize
 
 
 def _token_array(
@@ -119,12 +120,7 @@ def tfidf_long(
     # sf0.1 (warm, cache-cold): lazy 20.8 CPU-s vs checkpointed 10.4 —
     # the materialization HALVES the real cost, exactly the economics
     # the old comment predicted for 100 TB (corpus scan ≫ doc-term
-    # shuffle materialization). At cluster scale this becomes a
-    # persist-to-disk of the doc-term table — selected via
-    # SPARK_GRAFT_MATERIALIZE (operators/materialize.py); the default is
-    # the single-JVM localCheckpoint form.
-    from .materialize import materialize
-
+    # shuffle materialization).
     counts = materialize(term_counts(tokens))
     n_docs = corpus_size(docs, text_col, stopwords=stopwords)
     # df(t) via groupBy + join, not a window over term: the groupBy gets

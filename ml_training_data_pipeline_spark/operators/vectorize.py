@@ -94,7 +94,7 @@ def vectorize_dfm(
     # three full corpus passes for one (guide §5), and the reconstructed
     # token-array column (the widest in the frame) rode along into every
     # one of them (guide §2.3: project before materializing). cache(), not
-    # localCheckpoint: the cache is populated by the IDF fit's own
+    # materialize(): the cache is populated by the IDF fit's own
     # execution of the unchanged plan, preserving the partition layout
     # KMeans' seeded init samples from (a checkpoint re-plans the subtree
     # in isolation and measurably changed ep2's clustering).

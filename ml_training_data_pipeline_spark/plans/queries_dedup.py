@@ -27,10 +27,11 @@ from ..operators.dedup import (
     simhash_near_dups,
     span_scrub_removals,
 )
+from ..operators.materialize import materialize
 from .oracle_fragments import (
     H60,
     SPAN_WIDTH,
-    materialize,
+    materialize as materialize_ctes,
     quality_cte,
     span_scrub_ctes,
     stopword_list_sql,
@@ -497,8 +498,8 @@ def cur4_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # curation hashes fixed-stride passages (8-token chunks here) and flags
 # each doc's fraction of passages seen elsewhere. Plan shape: passages
 # are built as an in-row `transform(sequence(...))` + `array_distinct`
-# PROJECTION (no distinct shuffle), materialized ONCE (localCheckpoint —
-# two consumers, the d4 pattern), then the cross-doc counts come from a
+# PROJECTION (no distinct shuffle), materialized ONCE (two consumers,
+# the d4 pattern), then the cross-doc counts come from a
 # map-side-combinable groupBy JOINED back — NOT a window partitioned by
 # passage, which would funnel every posting of a hot boilerplate passage
 # (the very thing this query detects) into one task at 100 TB. The join
@@ -539,7 +540,7 @@ def cur5_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # passages ride the shuffle as 60-bit md5 longs, not 8-token strings
     # (the d15 discipline: 8-byte keys, identical hashing both engines).
-    passages = toks.select(
+    passages = materialize(toks.select(
         "doc_id",
         F.explode(
             F.expr(
@@ -547,7 +548,7 @@ def cur5_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " i -> conv(substr(md5(concat_ws(' ', slice(toks, i*8+1, 8))), 1, 15), 16, 10)))"
             ).cast("array<long>")
         ).alias("passage"),
-    ).localCheckpoint()
+    ))
     per_passage = passages.groupBy("passage").agg(
         F.count("*").alias("n_docs_with")
     )
@@ -730,7 +731,7 @@ def cur6_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    t8 = (
+    t8 = materialize(
         docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .where(F.size("toks") >= 8)
         .select(
@@ -739,7 +740,6 @@ def cur6_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("toks").alias("L"),
             F.expr("size(toks) div 8").alias("np"),
         )
-        .localCheckpoint()
     )
     occ = t8.select(
         "doc_id",
@@ -889,7 +889,7 @@ def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs on the hashed form. Both engines hash identically (the md5
     # bridge), so results agree exactly even in the astronomically-
     # unlikely collision case.
-    wins = toks.select(
+    wins = materialize(toks.select(
         "doc_id",
         F.explode(
             F.expr(
@@ -897,7 +897,7 @@ def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " i -> conv(substr(md5(concat_ws(' ', slice(toks, i+1, 8))), 1, 15), 16, 10)))"
             ).cast("array<long>")
         ).alias("win"),
-    ).localCheckpoint()
+    ))
     per_win = wins.groupBy("win").agg(F.count("*").alias("n_docs_with"))
     counted = wins.join(per_win, "win")
     agg = counted.groupBy("doc_id").agg(
@@ -924,7 +924,7 @@ def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sketch's statistical contract surfaced as a checkable query instead of
 # trusted on faith. One shingle materialization feeds all three
 # consumers (signatures, candidate scoping, exact verification — the d4
-# localCheckpoint discipline); the estimate needs no new shuffle beyond
+# discipline); the estimate needs no new shuffle beyond
 # the signature aggregate d4 already pays.
 @query(
     "d16_minhash_estimate_audit",
@@ -956,7 +956,7 @@ def d16_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = doc_shingles(docs, k=3).localCheckpoint()
+    sh = materialize(doc_shingles(docs, k=3))
     wide = minhash_wide(sh, num_hashes=8)
     cands = lsh_candidate_pairs(lsh_bands_from_wide(wide, rows_per_band=2))
     exact = jaccard_pairs(sh, candidates=cands)
@@ -1125,12 +1125,12 @@ def x27_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # THREE consumers (survivor keys, survivor join, raw totals) — the
     # d4 discipline: materialize the doc-level projection once instead
     # of re-tokenizing the corpus per consumer.
-    tc = docs.select(
+    tc = materialize(docs.select(
         "doc_id",
         "source",
         token_count(F.col("text")).alias("n_toks"),
         fingerprint(F.col("text")).alias("fp"),
-    ).localCheckpoint()
+    ))
     keep = tc.groupBy("fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     surv = tc.join(keep, "doc_id", "left_semi").select(
         F.col("doc_id").alias("s_doc_id"), F.col("n_toks").alias("s_toks"),
@@ -1429,7 +1429,7 @@ def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % 2 == 1
     # one tokenize/shingle/band build over BOTH halves, split by parity
     # afterwards (three consumers — the d4 checkpoint discipline)
-    sh = doc_shingles(docs, k=3).localCheckpoint()
+    sh = materialize(doc_shingles(docs, k=3))
     bands = lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
     nb = bands.where(is_new).select(
         F.col("doc_id").alias("delta_doc"), "band", "band_sig"
@@ -1591,7 +1591,7 @@ def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the s14 diff, on exact fingerprints: the KEY-partitioned join that
     # classifies the delta (removed docs never enter admission)
-    snap = (
+    snap = materialize(
         new.withColumn("fp_b", fingerprint_pair(F.col("text")))
         .join(old, "doc_id", "left")
         .select(
@@ -1603,9 +1603,8 @@ def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("unchanged")
             .alias("status"),
         )
-        .localCheckpoint()  # consumers: shingle build, delta report
-    )
-    sh = doc_shingles(snap, k=3).localCheckpoint()
+    )  # consumers: shingle build, delta report
+    sh = materialize(doc_shingles(snap, k=3))
     bands = lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
     stat = snap.select("doc_id", "status")
     b = bands.join(stat, "doc_id")
@@ -1793,7 +1792,7 @@ def cur14_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_eval = F.col("doc_id") % 97 == 0
     # one shingle build, three consumers (eval bits, exact truth, train probes)
-    sh = doc_shingles(docs, k=3).localCheckpoint()
+    sh = materialize(doc_shingles(docs, k=3))
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     bits = (
         sh.where(is_eval)
@@ -1923,7 +1922,7 @@ def _band_config_select(r: int) -> str:
     # >80 GB of temp (filled the disk, 772 s, killed). Materialized, the
     # same query finishes in 160 s with zero spill. See
     # oracle_fragments.materialize for the measurements.
-    oracle=materialize(
+    oracle=materialize_ctes(
         f"""
     WITH {_MINHASH},
     {_JACCARD},
@@ -1940,13 +1939,12 @@ def _band_config_select(r: int) -> str:
 )
 def d20_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = doc_shingles(docs, k=3).localCheckpoint()  # signature + truth share it
-    wide = minhash_wide(sh, num_hashes=8).localCheckpoint()  # 3 band projections
-    truth = (
+    sh = materialize(doc_shingles(docs, k=3))  # signature + truth share it
+    wide = materialize(minhash_wide(sh, num_hashes=8))  # 3 band projections
+    truth = materialize(
         jaccard_pairs(sh, threshold=0.5)
         .select("doc_a", "doc_b")
-        .localCheckpoint()  # joined by all 3 configs
-    )
+    )  # joined by all 3 configs
     n_true = truth.count()
     parts = []
     for r in (1, 2, 4):
@@ -2173,10 +2171,10 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed because the admission pipeline reads each side twice
     # (same-id screen + band equi-join) — without it the minhash groupBy
     # re-executes per consumer
-    sh = doc_shingles(docs, k=3).localCheckpoint()
-    bands = lsh_bands_from_wide(
+    sh = materialize(doc_shingles(docs, k=3))
+    bands = materialize(lsh_bands_from_wide(
         minhash_wide(sh, num_hashes=8), rows_per_band=2
-    ).localCheckpoint()
+    ))
     tb = bands.where(is_test).select(
         F.col("doc_id").alias("delta_doc"), "band", "band_sig"
     )
@@ -2299,7 +2297,7 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = F.col("doc_id") % 97 == 0
     is_train = ~is_test & ~is_eval
     # one shingle build, three consumers (eval gate, bands, Jaccard verify)
-    sh = doc_shingles(docs, k=3).localCheckpoint()
+    sh = materialize(doc_shingles(docs, k=3))
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     contaminated = (
         sh.where(is_train)
@@ -2309,9 +2307,9 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_shared") >= 2)
         .select("doc_id", F.lit(1).alias("_c"))
     )
-    bands = lsh_bands_from_wide(
+    bands = materialize(lsh_bands_from_wide(
         minhash_wide(sh, num_hashes=8), rows_per_band=2
-    ).localCheckpoint()  # two sides read it (train delta + test corpus)
+    ))  # two sides read it (train delta + test corpus)
     train_b = bands.where(is_train).select(
         F.col("doc_id").alias("delta_doc"), "band", "band_sig"
     )
@@ -2322,7 +2320,7 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("delta_doc").alias("doc_id"), F.lit(1).alias("_l")
     )
     survives = F.col("_c").isNull() & F.col("_l").isNull()
-    per_src = (
+    per_src = materialize(
         docs.where(is_train)
         .select(
             "doc_id", "source", token_count(F.col("text")).cast("long").alias("ntok")
@@ -2340,8 +2338,7 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_tokens"),
         )
         .where(F.col("n_survivors") > 0)
-        .localCheckpoint()  # |sources| rows; totals/weights/normalizer reuse it
-    )
+    )  # |sources| rows; totals/weights/normalizer reuse it
     tot = per_src.agg(
         F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
     )
@@ -2454,17 +2451,16 @@ def cur17_bloom_sizing_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_col = F.explode(F.array(*[F.lit(m) for m in MS])).alias("m")
     # one shingle build, hashes computed ONCE; three consumers
     # (bitsets, probes, exact truth)
-    sh = doc_shingles(docs, k=3).localCheckpoint()
+    sh = materialize(doc_shingles(docs, k=3))
     eval_sh = sh.where(is_eval).select("shingle").distinct()
-    bits = (
+    bits = materialize(
         sh.where(is_eval)
         .select(F.explode(F.array(*[h(i) for i in range(K)])).alias("hv"))
         .distinct()
         .select("hv", m_col)
         .select("m", F.pmod(F.col("hv"), F.col("m")).alias("bit"))
         .distinct()
-        .localCheckpoint()  # ≤ ΣM rows; K probe joins + the fill count read it
-    )
+    )  # ≤ ΣM rows; K probe joins + the fill count read it
     nb = bits.groupBy("m").agg(F.count("*").cast("long").alias("bits_set"))
     probe = sh.where(~is_eval).select("doc_id", *[h(i) for i in range(K)]).select(
         "doc_id", "h0", "h1", "h2", m_col
@@ -2587,7 +2583,7 @@ def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataF
     tok_rows = docs.select(
         "doc_id", F.explode(F.array(tokenize(F.col("text")))).alias("_toks")
     )
-    sh = (
+    sh = materialize(
         tok_rows.select(
             "doc_id",
             F.posexplode(
@@ -2601,8 +2597,7 @@ def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataF
         )
         .select("doc_id", "n", md5_long(F.col("g")).alias("shingle"))
         .distinct()
-        .localCheckpoint()  # consumers: eval sets + train probe
-    )
+    )  # consumers: eval sets + train probe
     ev = sh.where(is_eval).select("n", "shingle").distinct()
     flagged = (
         sh.where(~is_eval)
@@ -2654,7 +2649,7 @@ def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataF
     # materialize(): same CTE-inlining hazard d20 hit at sf1 (cands is
     # referenced by cj AND nc; sh three times through _JACCARD) — see
     # oracle_fragments.materialize.
-    oracle=materialize(
+    oracle=materialize_ctes(
         f"""
     WITH {_CANDIDATES},
     {_JACCARD},
@@ -2694,12 +2689,12 @@ def d21_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     TS = (0.5, 0.7, 0.9)
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    sh = doc_shingles(docs, k=3).localCheckpoint()  # consumers: bands + verify
-    cands = lsh_candidate_pairs(
+    sh = materialize(doc_shingles(docs, k=3))  # consumers: bands + verify
+    cands = materialize(lsh_candidate_pairs(
         lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
-    ).localCheckpoint()  # consumers: verification scope + the count face
+    ))  # consumers: verification scope + the count face
     # ONE candidate-scoped verification; three thresholds filter it
-    jac = jaccard_pairs(sh, candidates=cands).localCheckpoint()
+    jac = materialize(jaccard_pairs(sh, candidates=cands))
     n_cand = cands.agg(F.count("*").cast("long").alias("n_candidate_pairs"))
     n_docs = docs.agg(F.count("*").cast("long").alias("n_docs"))
     ts = spark.range(1).select(
@@ -2816,7 +2811,7 @@ def d22_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("w"),
     ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.win").alias("win"))
-    p = p.localCheckpoint()  # 2 consumers: cross-doc support + the span probe
+    p = materialize(p)  # 2 consumers: cross-doc support + the span probe
     dw = (
         p.select("doc_id", "win")
         .distinct()
@@ -2947,9 +2942,9 @@ def d23_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 1: exact groups on the 120-bit long-pair fingerprint (never
     # surfaced — the ep5 key discipline: 16-byte shuffle keys, collision
     # budget n²/2^121)
-    fps = docs.select(
+    fps = materialize(docs.select(
         "doc_id", "source", fingerprint_pair(F.col("text")).alias("fp")
-    ).localCheckpoint()  # 2 consumers: group build + per-doc classification
+    ))  # 2 consumers: group build + per-doc classification
     grp = fps.groupBy("fp").agg(F.min("doc_id").alias("rep"))
     cls = fps.join(grp, "fp").select("doc_id", "source", "rep")
     # stage 2: LSH near-dup over REPRESENTATIVES only — exact clusters
@@ -3101,9 +3096,9 @@ def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # d23's cascade, survivor-set form: exact groups on the 120-bit
     # fingerprint, LSH near-dup over the representatives only
-    fps = docs.select(
+    fps = materialize(docs.select(
         "doc_id", "source", fingerprint_pair(F.col("text")).alias("fp")
-    ).localCheckpoint()  # 2 consumers: group build + survivor classification
+    ))  # 2 consumers: group build + survivor classification
     grp = fps.groupBy("fp").agg(F.min("doc_id").alias("rep"))
     reps = docs.join(
         grp.select(F.col("rep").alias("doc_id")).distinct(), "doc_id"
@@ -3117,7 +3112,7 @@ def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source")
     )
     # mix9's integer-exact water-fill over the SURVIVING token mass
-    per_src = (
+    per_src = materialize(
         survivors.join(docs.select("doc_id", "text"), "doc_id")
         .groupBy("source")
         .agg(
@@ -3127,8 +3122,7 @@ def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cap_tokens"),
         )
-        .localCheckpoint()  # |sources| rows; totals + window + level reuse it
-    )
+    )  # |sources| rows; totals + window + level reuse it
     tot = per_src.agg(
         F.expr("sum(n_tokens) div 2").cast("long").alias("b"),
         F.count("*").alias("n"),
@@ -3147,11 +3141,11 @@ def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("prefix"),
     )
-    marked = ranked.withColumn(
+    marked = materialize(ranked.withColumn(
         "is_capped",
         F.col("cap_tokens") * (F.col("n") - F.col("i") + 1)
         <= F.col("b") - (F.col("prefix") - F.col("cap_tokens")),
-    ).localCheckpoint()  # 2 consumers: the level aggregate + the report
+    ))  # 2 consumers: the level aggregate + the report
     lvl = marked.agg(
         F.coalesce(F.sum(F.when(F.col("is_capped"), F.col("cap_tokens"))), F.lit(0))
         .cast("long")
@@ -3236,11 +3230,10 @@ def d24_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    t8 = (
+    t8 = materialize(
         docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .where(F.size("toks") >= SPAN_WIDTH)
-        .localCheckpoint()  # 2 consumers: the window stream + reassembly
-    )
+    )  # 2 consumers: the window stream + reassembly
     # d22's position stream → duplicated-window inventory → removed
     # positions: the shared pipeline (operators/dedup.span_scrub_removals),
     # factored once so the scrub semantics cannot diverge across
@@ -3346,9 +3339,9 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = docs.select(
+    toks = materialize(docs.select(
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
-    ).localCheckpoint()  # 2 consumers: the window stream + the corpus mass
+    ))  # 2 consumers: the window stream + the corpus mass
     t8 = toks.where(F.size("toks") >= SPAN_WIDTH)
     # d24's removal pipeline (shared operator), counts only — no
     # reassembly join here
@@ -3356,7 +3349,7 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_removed")
     )
     nrem = F.coalesce("n_removed", F.lit(0))
-    per_src = (
+    per_src = materialize(
         toks.join(rc, "doc_id", "left")
         .groupBy("source")
         .agg(
@@ -3366,8 +3359,7 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.size("toks") - nrem).cast("long").alias("n_tokens"),
             (F.lit(4) * F.sum(F.size("toks") - nrem)).cast("long").alias("cap_tokens"),
         )
-        .localCheckpoint()  # |sources| rows; totals + window + level reuse it
-    )
+    )  # |sources| rows; totals + window + level reuse it
     tot = per_src.agg(
         F.expr("sum(n_tokens) div 2").cast("long").alias("b"),
         F.count("*").alias("n"),
@@ -3388,11 +3380,11 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("prefix"),
     )
-    marked = ranked.withColumn(
+    marked = materialize(ranked.withColumn(
         "is_capped",
         F.col("cap_tokens") * (F.col("n") - F.col("i") + 1)
         <= F.col("b") - (F.col("prefix") - F.col("cap_tokens")),
-    ).localCheckpoint()  # 2 consumers: the level aggregate + the report
+    ))  # 2 consumers: the level aggregate + the report
     lvl = marked.agg(
         F.coalesce(F.sum(F.when(F.col("is_capped"), F.col("cap_tokens"))), F.lit(0))
         .cast("long")
@@ -3585,14 +3577,14 @@ def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
         docs.select("doc_id", "source", "text"), keep_tokens=True
     )
     st = analysis.with_fingerprint_pair(st, "fp", "_qs_toks")
-    scored = st.select(
+    scored = materialize(st.select(
         "doc_id",
         "source",
         analysis.quality_score_from_ratios(
             F.col("_qs_sw"), F.col("_qs_pr"), F.col("_qs_mwl")
         ).alias("q"),
         "fp",
-    ).localCheckpoint()  # 2 consumers: group build + per-doc classification
+    ))  # 2 consumers: group build + per-doc classification
     # combinable argmax: lexicographic max of (q, -doc_id) ≡ the oracle's
     # ORDER BY q DESC, doc_id ASC — one map-side-combinable groupBy, no
     # fp-partitioned window
@@ -3719,7 +3711,6 @@ def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
 def d26_boilerplate_contagion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize
     from ..operators.dedup import span_window_stream
-    from ..operators.materialize import materialize
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     t8 = docs.select(
@@ -3825,7 +3816,6 @@ def d26_boilerplate_contagion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d27_cross_source_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize
     from ..operators.dedup import span_window_stream
-    from ..operators.materialize import materialize
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
@@ -3894,7 +3884,7 @@ def d27_cross_source_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
 # d24/ep14/st17/d28.
 @query(
     "d28_compaction_arrival_scrub",
-    oracle=materialize(
+    oracle=materialize_ctes(
         f"""
     WITH {toks_cte()},
     {span_scrub_ctes()},
@@ -3953,7 +3943,6 @@ def d28_compaction_arrival_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         span_removed_positions,
         span_window_stream,
     )
-    from ..operators.materialize import materialize as mat
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
@@ -3965,15 +3954,15 @@ def d28_compaction_arrival_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # standing inventory: distinct corpus window keys (st17's shape); the
     # -1 sentinel keeper matches no arriving doc_id (corpus always wins)
-    cw = mat(span_window_stream(corpus_t8).select("win").distinct())
+    cw = materialize(span_window_stream(corpus_t8).select("win").distinct())
     # 3 consumers: cross-arrival dup groupBy + two removal probes
-    ap = mat(span_window_stream(arr_t8))
+    ap = materialize(span_window_stream(arr_t8))
 
     cw_k = cw.withColumn("keep_doc", F.lit(-1).cast("long"))
     # cross-arrival duplicated windows NOT already owned by the corpus:
     # keep-first among arrivals (min doc_id), the d24 batch policy
     adw = duplicated_windows(ap).join(cw, "win", "left_anti")
-    rem_c = mat(span_removed_positions(ap, cw_k))  # 2 consumers: count + anti
+    rem_c = materialize(span_removed_positions(ap, cw_k))  # 2 consumers: count + anti
     rem_x = span_removed_positions(ap, adw).join(
         rem_c, ["doc_id", "tok"], "left_anti"
     )
@@ -4022,7 +4011,7 @@ def d28_compaction_arrival_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expansion and mix9's partitionBy(lit(0)) window.
 @query(
     "ep15_source_drop_impact",
-    oracle=materialize(
+    oracle=materialize_ctes(
         f"""
     WITH {toks_cte()},
     {span_scrub_ctes()},
@@ -4134,14 +4123,13 @@ def ep15_source_drop_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.text import tokenize
     from ..operators.dedup import span_window_stream
-    from ..operators.materialize import materialize as mat
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
     t8 = toks.where(F.size("toks") >= SPAN_WIDTH)
     # ONE position-stream build (d27's construction), 2 consumers:
     # multi-source-window inventory + coverage probe
-    p = mat(span_window_stream(t8, keep=("source",)))
+    p = materialize(span_window_stream(t8, keep=("source",)))
     xw = (
         p.groupBy("win")
         .agg(F.count_distinct("source").alias("cs"))
@@ -4162,14 +4150,13 @@ def ep15_source_drop_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     es = exposed.groupBy("source").agg(
         F.count("*").cast("long").alias("exposed_tokens")
     )
-    base = (
+    base = materialize(
         toks.groupBy("source")
         .agg(
             F.sum(F.size("toks")).cast("long").alias("n_tokens"),
             (F.lit(4) * F.sum(F.size("toks"))).cast("long").alias("cap_tokens"),
         )
-        .localCheckpoint()  # |sources| rows; totals/baseline/candidates reuse it
-    )
+    )  # |sources| rows; totals/baseline/candidates reuse it
     tot = base.agg(
         F.sum("n_tokens").cast("long").alias("t_all"),
         F.count("*").alias("n_all"),
@@ -4289,7 +4276,7 @@ for _name in (
     "cur2_component_survivors",
     "cur8_dedup_quality_interaction",
 ):
-    ORACLE_SQL[_name] = materialize(
+    ORACLE_SQL[_name] = materialize_ctes(
         ORACLE_SQL[_name],
         "toks", "sh", "mh", "bands", "cands", "jac", "inter", "sizes",
     )

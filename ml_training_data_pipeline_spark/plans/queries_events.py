@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io.sources import load_table
+from ..operators.materialize import materialize
 from .registry import query
 
 
@@ -888,13 +889,12 @@ def w15_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j13_coactivity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    pres = (
+    pres = materialize(
         e.select(
             F.floor(F.col("ts").cast("double") / 300).cast("long").alias("win"), "user_id"
         )
         .distinct()
-        .localCheckpoint()  # both self-join sides read THIS, not the fact table twice
-    )
+    )  # both self-join sides read THIS, not the fact table twice
     a = pres.select("win", F.col("user_id").alias("user_a"))
     b = pres.select("win", F.col("user_id").alias("user_b"))
     return (

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..io.sources import load_table, scratch_dir
 from ..functions.text import tokenize
+from ..operators.materialize import materialize
 from ..operators.tfidf import doc_tokens
 from .oracle_fragments import toks_cte
 from .registry import ORACLE_SQL, query
@@ -1176,9 +1177,9 @@ def s15_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # runs BEFORE joining 100 TB of facts against dims (orphans silently
 # vanish in inner joins and silently null in outer ones). Each edge is
 # a LEFT ANTI join with the dim side broadcast. Each fact table's key
-# projection is materialized ONCE (localCheckpoint) and all its edges
-# probe that — without it the lazy union re-scans lineitem for every
-# one of its three edges (and again for each count).
+# projection is materialized ONCE and all its edges probe that —
+# without it the lazy union re-scans lineitem for every one of its
+# three edges (and again for each count).
 @query(
     "p11_referential_integrity",
     oracle="""
@@ -1229,15 +1230,13 @@ def p11_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(name).alias("fk_edge"), "n_rows", "n_orphans")
         )
 
-    l = (
+    l = materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-        .localCheckpoint()
     )
-    o = (
+    o = materialize(
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
-        .localCheckpoint()
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -1375,7 +1374,7 @@ def ep7_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 1×1 broadcast crossJoin, materialized (a single row!) so the
     # 7-branch unpivot union can't re-execute the scans per branch
-    wide = base.crossJoin(F.broadcast(tok_stats)).localCheckpoint()
+    wide = materialize(base.crossJoin(F.broadcast(tok_stats)))
     metrics = (
         "n_docs", "n_tokens", "n_langs", "top_lang_share",
         "exact_dup_rate", "mean_doc_chars", "short_doc_rate",
@@ -1460,10 +1459,9 @@ def x28_length_drift_ks(spark: SparkSession, sf_dir: str, vc: DataFrame | None =
         docs = load_table(spark, sf_dir, "documents")
         # (source × length) counts: tiny after one corpus scan, THREE
         # consumers (totals, per-source n, grid join) — materialize once
-        vc = (
+        vc = materialize(
             docs.groupBy("source", F.col("n_chars").alias("v"))
             .agg(F.count("*").alias("c"))
-            .localCheckpoint()
         )
     tot = vc.groupBy("v").agg(F.sum("c").cast("long").alias("c_tot"))
     ns = vc.groupBy("source").agg(F.sum("c").cast("long").alias("n_s"))
@@ -1627,7 +1625,7 @@ def x29_token_psi(spark: SparkSession, sf_dir: str, vc: DataFrame | None = None)
         # (source × token-count) histogram: tiny after one corpus scan,
         # THREE consumers (global histogram, bin join, via-sbin totals) —
         # the x28 materialize-once discipline
-        vc = tc.groupBy("source", "v").agg(F.count("*").alias("c")).localCheckpoint()
+        vc = materialize(tc.groupBy("source", "v").agg(F.count("*").alias("c")))
     g = vc.groupBy("v").agg(F.sum("c").cast("long").alias("c_tot"))
     n_all = g.agg(F.sum("c_tot").cast("long").alias("n"))
     # cumulative over the token-count DOMAIN (distinct values, never
@@ -1657,10 +1655,9 @@ def x29_token_psi(spark: SparkSession, sf_dir: str, vc: DataFrame | None = None)
         )
     )
     # sources × ≤10 bins: THREE consumers (global bins, per-source n, grid)
-    sbin = (
+    sbin = materialize(
         binned.groupBy("source", "bin")
         .agg(F.sum("c").cast("long").alias("c_s"))
-        .localCheckpoint()
     )
     gbin = sbin.groupBy("bin").agg(F.sum("c_s").cast("long").alias("c_bin"))
     ns = sbin.groupBy("source").agg(F.sum("c_s").cast("long").alias("n_s"))
@@ -1726,7 +1723,7 @@ def g6_source_lang_chi2(spark: SparkSession, sf_dir: str, o: DataFrame | None = 
         docs = load_table(spark, sf_dir, "documents")
         # contingency cells: tiny after one corpus scan, THREE consumers
         # (row margins, column margins, grid join) — materialize once
-        o = docs.groupBy("source", "lang").agg(F.count("*").alias("n")).localCheckpoint()
+        o = materialize(docs.groupBy("source", "lang").agg(F.count("*").alias("n")))
     r = o.groupBy("source").agg(F.sum("n").cast("long").alias("n_src"))
     k = o.groupBy("lang").agg(F.sum("n").cast("long").alias("n_lang"))
     n_all = o.agg(F.sum("n").cast("long").alias("n"))
@@ -1824,7 +1821,7 @@ def ep8_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from a genuine NULL: gid 3 = chars marginal, 5 = lang, 6 = ntok.
     # ntok is NULL for null-text docs so x29's marginal can apply its
     # text-IS-NOT-NULL filter while x28/g6 keep counting every doc.
-    marg = (
+    marg = materialize(
         docs.select(
             "source",
             "n_chars",
@@ -1836,7 +1833,6 @@ def ep8_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", "n_chars", "lang", "ntok",
         )
         .agg(F.count("*").alias("c"), F.grouping_id().alias("gid"))
-        .localCheckpoint()
     )
     # each marginal's several in-component consumers re-read the (small)
     # checkpoint through a cheap filter — no corpus re-scan anywhere
@@ -1900,7 +1896,7 @@ def s17_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast, leak probe, per-source deleted counts, source-list
     # union) — materialize once so documents is scanned exactly twice
     # (this build + the retained rewrite), not once per consumer
-    tombstones = docs.where(dead).select("doc_id", "source").localCheckpoint()
+    tombstones = materialize(docs.where(dead).select("doc_id", "source"))
     retained = docs.join(
         F.broadcast(tombstones.select("doc_id")), "doc_id", "left_anti"
     )
@@ -2225,7 +2221,7 @@ def ep12_data_card_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 1×1 broadcast crossJoin, materialized (a single row) so the 7-branch
     # unpivot union cannot re-execute the scans per branch (ep7 discipline)
-    wide = base.crossJoin(F.broadcast(tok)).localCheckpoint()
+    wide = materialize(base.crossJoin(F.broadcast(tok)))
     metrics = (
         "n_docs", "n_tokens", "n_langs", "top_lang_share",
         "exact_dup_rate", "mean_doc_chars", "short_doc_rate",

@@ -7,12 +7,15 @@ in tests/test_refine.py.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.sources import load_table, scratch_dir
-from ..operators.cluster import cluster_sizes, fit_kmeans
+from ..operators.cluster import ClusterResult, cluster_sizes, fit_kmeans
+from ..operators.materialize import materialize
 from ..operators.refine import RefineConfig, refine
 from ..operators.tfidf import tfidf_long
 from ..operators.vectorize import (
@@ -21,6 +24,7 @@ from ..operators.vectorize import (
     vectorize,
     vectorize_dfm,
 )
+from ..session import run_concurrently
 from .registry import query
 
 
@@ -157,42 +161,26 @@ def s5_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # synthetic corpus, merge 0.9, renumbered output summary.
 @query("m5_refine_pipeline")
 def m5_refine_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import InheritableThread
-
     docs = load_table(spark, sf_dir, "documents")
     tokens = tokens_frame(docs)
     # tfidf_long eagerly materializes the doc-term counts at construction
     # and refine's n_docs count materializes the tfidf cache — both
-    # independent of the vectorizer/kmeans fits below, so they run on a
-    # side thread and back-fill the executors the fits leave idle (guide
-    # §2.6). The thread touches NOTHING in the kmeans features lineage
-    # (tfidf_long is its own scan + checkpoint), so the seeded fit sees
-    # byte-identical input partitioning.
-    side: dict = {}
-
-    def _build_tfidf() -> None:
+    # independent of the vectorizer/kmeans fits, so the two run
+    # concurrently and the counts back-fill the executors the fits leave
+    # idle (guide §2.6). _build_tfidf touches NOTHING in the kmeans
+    # features lineage (tfidf_long is its own scan + checkpoint), so the
+    # seeded fit sees byte-identical input partitioning.
+    def _build_tfidf() -> tuple[DataFrame, int]:
         t = tfidf_long(docs).cache()
-        side["tfidf"] = t
-        side["n_docs"] = t.select("doc_id").distinct().count()
+        return t, t.select("doc_id").distinct().count()
 
-    th = InheritableThread(target=_build_tfidf, session=spark)
-    th.start()
-    vec_model = fit_tfidf_vectorizer(tokens, vocab_size=500)
-    vecs = vectorize(tokens, vec_model)
-    res = fit_kmeans(vecs, k=6, seed=123)
-    th.join()
-    tfidf, n_docs = side["tfidf"], side["n_docs"]
-    cfg = RefineConfig(
-        coherence_threshold=0.05,
-        k_range=(2,),
-        min_docs=10,
-        merge_threshold=0.9,
-        lda_search_iter=5,
-        lda_final_iter=10,
-        max_split_clusters=2,
-    )
+    def _fit() -> tuple[DataFrame, ClusterResult]:
+        vecs = vectorize(tokens, fit_tfidf_vectorizer(tokens, vocab_size=500))
+        return vecs, fit_kmeans(vecs, k=6, seed=123)
+
+    (tfidf, n_docs), (vecs, res) = run_concurrently(spark, _build_tfidf, _fit)
     refined = refine(
-        vecs.select("doc_id", "tf"), tfidf, res.assignments, cfg, n_docs=n_docs
+        vecs.select("doc_id", "tf"), tfidf, res.assignments, _phase1_cfg(), n_docs=n_docs
     )
     return refined.groupBy("cluster_id").agg(F.count("*").alias("size"))
 
@@ -241,12 +229,11 @@ def phase1_summary(
     # gate's computation instead of re-running it. The gate's ranked
     # top-terms frame is checkpointed too (cluster_coherence inlined):
     # when no cluster refines it IS the final ranking up to a relabel.
-    topterms0 = (
+    topterms0 = materialize(
         cluster_term_scores(tfidf, assignments, top_n=cfg.top_m)
         .select("cluster_id", "term", "rank")
-        .localCheckpoint(eager=True)
     )
-    coh0 = prob_coherence(binary, topterms0, n_docs).localCheckpoint(eager=True)
+    coh0 = materialize(prob_coherence(binary, topterms0, n_docs))
     n_low = coh0.where(F.col("coherence") < cfg.coherence_threshold).count()
     if n_low > 0:
         refined = refine(tf_vectors, tfidf, assignments, cfg,
@@ -254,7 +241,7 @@ def phase1_summary(
         # final coherence and keyword extraction share ONE ranked
         # top-terms frame when their term counts coincide (they do for
         # _phase1_cfg: coherence's ranking is this exact top_n=5 call).
-        topterms = cluster_term_scores(tfidf, refined, top_n=5).localCheckpoint(eager=True)
+        topterms = materialize(cluster_term_scores(tfidf, refined, top_n=5))
         coh = (
             prob_coherence(binary, topterms.select("cluster_id", "term", "rank"), n_docs)
             if cfg.top_m == 5
@@ -280,7 +267,7 @@ def phase1_summary(
             topterms0.join(F.broadcast(ids), "cluster_id")
             .select(F.col("new_id").alias("cluster_id"), "term", "rank")
             if cfg.top_m == 5
-            else cluster_term_scores(tfidf, refined, top_n=5).localCheckpoint(eager=True)
+            else materialize(cluster_term_scores(tfidf, refined, top_n=5))
         )
         coh = coh0.join(F.broadcast(ids), "cluster_id").select(
             F.col("new_id").alias("cluster_id"), "coherence"
@@ -318,7 +305,6 @@ def phase1_summary(
 # EP2=this, EP3=ep3.
 @query("ep2_build_models")
 def ep2_build_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.materialize import materialize
     from ..operators.pos_keywords import extract_pos_keywords
     from ..operators.tfidf import reduce_to_vocabulary, top_vocabulary
 
@@ -368,41 +354,30 @@ def ep3_phase1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io.sources import write_parquet
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import InheritableThread, inheritable_thread_target
-
     docs = load_table(spark, sf_dir, "documents")
     tokens = tokens_frame(docs)
     base = scratch_dir(spark, "phase1", sf_dir)
     # tfidf_long eagerly materializes the doc-term counts at construction;
     # it shares nothing with the vectorizer/kmeans lineage, so build AND
-    # persist it on a side thread while the fits run (guide §2.6 — the
-    # fits leave executor tails idle that the counts shuffle back-fills).
+    # persist it concurrently with the fits (guide §2.6 — the fits leave
+    # executor tails idle that the counts shuffle back-fills).
     def _build_and_write_tfidf() -> None:
         write_parquet(tfidf_long(docs), os.path.join(base, "tfidf"))
 
-    th = InheritableThread(target=_build_and_write_tfidf, session=spark)
-    th.start()
-    vec_model = fit_tfidf_vectorizer(tokens, vocab_size=500)
-    vecs = vectorize(tokens, vec_model)
-    res = fit_kmeans(vecs, k=6, seed=123)
-
-    # persist the phase-0 artifacts (the saveRDS step, 02:770-772) — the
-    # three remaining persists are independent of each other, so they run
-    # as concurrent jobs instead of serial driver calls (guide §2.6).
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(
-            pool.map(
-                inheritable_thread_target(spark)(lambda fn: fn()),
-                [
-                    lambda: res.model.write().overwrite().save(os.path.join(base, "kmeans")),
-                    lambda: vec_model.write().overwrite().save(os.path.join(base, "vectorizer")),
-                    lambda: write_parquet(res.assignments, os.path.join(base, "assignments")),
-                ],
-            )
+    def _fit_and_persist() -> None:
+        vec_model = fit_tfidf_vectorizer(tokens, vocab_size=500)
+        res = fit_kmeans(vectorize(tokens, vec_model), k=6, seed=123)
+        # persist the phase-0 artifacts (the saveRDS step, 02:770-772) —
+        # the three persists are independent of each other, so they run
+        # as concurrent jobs instead of serial driver calls (guide §2.6).
+        run_concurrently(
+            spark,
+            lambda: res.model.write().overwrite().save(os.path.join(base, "kmeans")),
+            lambda: vec_model.write().overwrite().save(os.path.join(base, "vectorizer")),
+            lambda: write_parquet(res.assignments, os.path.join(base, "assignments")),
         )
-    th.join()
+
+    run_concurrently(spark, _build_and_write_tfidf, _fit_and_persist)
 
     # fresh lineage off persisted state ONLY (04:729-731): reload models +
     # tables; re-read the documents table like the reference re-reads the CSV
@@ -494,14 +469,11 @@ def m6_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k. Each fit is an independent MLlib job over the SAME cached feature
 # frame (one corpus scan, four fits — at scale the fits are the cost,
 # so the sweep parallelizes by k across FAIR-pool jobs like refine's
-# big-candidate stage; serial here since k is small). Deterministic:
+# big-candidate stage). Deterministic:
 # fixed seed per k, so rows-only still reruns identically. Invariant
 # pinned in tests/test_round6c.py: withinss is non-increasing in k.
 @query("m7_kmeans_elbow")
 def m7_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.cluster import fit_kmeans, withinss
 
     vecs = _embedding_vectors(spark, sf_dir).cache()
@@ -513,8 +485,6 @@ def m7_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
         big-candidate fits; each fit is seeded, so the parallel sweep is
         bit-identical to the old serial loop). Measured sf0.1:
         7.6 s serial → ~4 s overlapped."""
-        if _os.environ.get("PYSPARK_PIN_THREAD", "true").lower() not in ("0", "false", "no"):
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"elbow-{k}")
         res = fit_kmeans(vecs, k=k, seed=123)
         cdf = spark.createDataFrame(
             [
@@ -528,9 +498,7 @@ def m7_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
         total = wss.agg(F.sum("withinss").alias("t")).collect()[0]["t"]
         return (k, float(total))
 
-    ks = (2, 5, 10, 20)
-    with ThreadPoolExecutor(max_workers=len(ks)) as pool:
-        rows = list(pool.map(fit_one, ks))  # map preserves k order
+    rows = run_concurrently(spark, *[partial(fit_one, k) for k in (2, 5, 10, 20)])
     vecs.unpersist()
     return spark.createDataFrame(rows, "k long, total_withinss double").select(
         "k", F.round("total_withinss", 4).alias("total_withinss")
@@ -645,12 +613,11 @@ def m9_classifier_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
 
     model_dir = scratch_dir(spark, "lrq_sweep", sf_dir)
     lr.fit(assembled).write().overwrite().save(model_dir)
-    scored = (
+    scored = materialize(
         LogisticRegressionModel.load(model_dir)
         .transform(assembled)
         .select("label", vector_to_array("probability").getItem(1).alias("p1"))
-        .localCheckpoint()  # one fit+score, three cutoff passes
-    )
+    )  # one fit+score, three cutoff passes
     rows = None
     for cutoff in (0.3, 0.5, 0.7):
         pred = (F.col("p1") >= cutoff).cast("long")
@@ -775,9 +742,6 @@ def _m11_oracle() -> str:
 
 @query("m11_lloyd_elbow_exact", oracle=_m11_oracle())
 def m11_lloyd_elbow_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.cluster import lloyd_quantized, quantize_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -794,8 +758,6 @@ def m11_lloyd_elbow_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         sweep is bit-identical to the old serial loop — the driver-side
         job latency of three chains just stops serializing. Measured
         sf0.1: 6.8 s serial → ~3.4 s overlapped."""
-        if _os.environ.get("PYSPARK_PIN_THREAD", "true").lower() not in ("0", "false", "no"):
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"lloyd-{k}")
         assign, centers, _ = lloyd_quantized(
             emb, k=k, iters=_M11_ITERS, quant=_LLOYD_Q, prequantized=qframe
         )
@@ -829,15 +791,14 @@ def m11_lloyd_elbow_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize inside the thread so every fit's jobs (including
         # the inertia aggregation) actually overlap; the frame is k rows
-        return inertia.select(
+        return materialize(inertia.select(
             F.lit(k).cast("long").alias("k"),
             "cluster_id",
             F.col("n").cast("long").alias("n_members"),
             "inertia_num",
-        ).localCheckpoint(eager=True)
+        ))
 
-    with ThreadPoolExecutor(max_workers=len(_M11_KS)) as pool:
-        parts = list(pool.map(fit_one, _M11_KS))  # map preserves k order
+    parts = run_concurrently(spark, *[partial(fit_one, k) for k in _M11_KS])
     out = parts[0]
     for res in parts[1:]:
         out = out.unionAll(res)

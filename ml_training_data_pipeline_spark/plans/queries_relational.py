@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io.sources import load_table
+from ..operators.materialize import materialize
 from .registry import query
 
 
@@ -927,9 +928,9 @@ def h14_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         1 - F.col("l_discount").cast("decimal(18,4)")
     )
-    revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+    revenue = materialize(l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.sum(rev).cast("double").alias("total_revenue")
-    ).localCheckpoint()  # supplier-sized; max scalar + winner filter share it
+    ))  # supplier-sized; max scalar + winner filter share it
     best = revenue.agg(F.max("total_revenue").alias("mx"))
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
@@ -1058,10 +1059,10 @@ def h16_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def h17_sole_final_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    per_order = l.groupBy("l_orderkey").agg(
+    per_order = materialize(l.groupBy("l_orderkey").agg(
         F.max("l_shipdate").alias("maxship"),
         F.countDistinct("l_suppkey").alias("nsupp"),
-    ).localCheckpoint()  # two consumers: the at-max scan and the final join
+    ))  # two consumers: the at-max scan and the final join
     at_max = (
         l.join(
             per_order.select("l_orderkey", "maxship"),
@@ -1264,7 +1265,6 @@ def h20_late_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def h21_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.materialize import materialize
 
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal", "s_nationkey"
@@ -1401,7 +1401,6 @@ def h23_important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = l.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("value")
     )
-    from ..operators.materialize import materialize
 
     per_part = materialize(per_part)  # consumed by the total AND the filter
     tot = per_part.agg(
@@ -1451,7 +1450,6 @@ def h23_important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def h24_dominant_seasonal_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.materialize import materialize
 
     red = load_table(spark, sf_dir, "part").where(
         F.col("p_name").startswith("red")

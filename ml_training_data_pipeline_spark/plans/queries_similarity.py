@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.sources import load_table
+from ..operators.materialize import materialize
 from ..operators.similarity import (
     brute_force_topk,
     embedding_near_dups,
@@ -19,6 +20,7 @@ from ..operators.similarity import (
     lsh_topk,
     srp_buckets,
 )
+from ..session import run_concurrently
 from .registry import query
 
 # Fixed SRP hyperplanes (seeded, 4 planes × 64 dims) — inlined as literals
@@ -713,10 +715,9 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.where(F.col("vec_id") < 10)
     # ground truth is shared by every sweep branch — materialize once
     # (50 rows) instead of re-scoring the corpus per config
-    exact = (
+    exact = materialize(
         brute_force_topk(emb, probes, k=5)
         .select("query_id", "neighbor_id")
-        .localCheckpoint()
     )
     n_q = probes.agg(F.count("*").alias("nq"))
     # configs are PREFIXES of one fixed table list, so hash the corpus
@@ -728,12 +729,12 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # superset; each config just rank-filters its subset. Both
     # materialized tables are probe-volume-sized (queries × bucket
     # mates), never corpus-sized.
-    cand_long = multi_table_candidates_long(
+    cand_long = materialize(multi_table_candidates_long(
         emb, probes, SWEEP_PLANE_TABLES[: max(_SWEEP_TS)]
-    ).localCheckpoint()
-    scored_all = score_pairs(
+    ))
+    scored_all = materialize(score_pairs(
         emb, probes, cand_long.select("query_id", "neighbor_id").distinct()
-    ).localCheckpoint()
+    ))
     rows = None
     for T in _SWEEP_TS:
         cands = (
@@ -835,33 +836,27 @@ def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_topk,
     )
 
-    from pyspark import InheritableThread
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
+
     # exact ground truth ‖ index build (guide §2.6) — shared by all five
     # probe branches; independent of the KMeans fit, so it back-fills the
     # executors the fit's iteration tail leaves idle
-    side: dict = {}
-
-    def _exact() -> None:
-        side["exact"] = (
-            brute_force_topk(emb, probes, k=5)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+    def _exact() -> DataFrame:
+        return materialize(
+            brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
         )
 
-    th = InheritableThread(target=_exact, session=spark)
-    th.start()
-    centers, assigned = ivf_assignments(emb, nlist=16, seed=123)
-    assigned = assigned.localCheckpoint()  # one index build, five probe passes
-    th.join()
-    exact = side["exact"]
+    def _index() -> tuple[list[list[float]], DataFrame]:
+        centers, assigned = ivf_assignments(emb, nlist=16, seed=123)
+        return centers, materialize(assigned)  # one index build, five probe passes
+
+    exact, (centers, assigned) = run_concurrently(spark, _exact, _index)
     # scores don't depend on nprobe and the full-probe branch scores the
     # whole corpus anyway — score ONCE tagged by probe rank p; each
     # config is p <= nprobe (the n13 score-once discipline). Probe-batch
     # × corpus sized, the same volume the nprobe=16 branch produced.
-    scored_all = ivf_probe_scored_all(centers, assigned, emb, probes).localCheckpoint()
+    scored_all = materialize(ivf_probe_scored_all(centers, assigned, emb, probes))
     rows = None
     for nprobe in (1, 2, 4, 8, 16):
         approx = rank_topk(
@@ -1017,7 +1012,7 @@ def cur11_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # pairs has three consumers (closure, both score directions) — tiny
     # (verified near-dups only), materialize once
-    pairs = embedding_near_dups(emb, threshold=0.35, block_col="label").localCheckpoint()
+    pairs = materialize(embedding_near_dups(emb, threshold=0.35, block_col="label"))
     comp = connected_components(pairs, a_col="vec_a", b_col="vec_b").select(
         F.col("doc_id").alias("vec_id"), "component_id"
     )
@@ -1176,7 +1171,7 @@ def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", "cos_sim"
     )
     books, encoded = pq_codebooks(emb, m=16, ksub=16, seed=123)
-    scored = pq_adc_scores(books, encoded, probes).localCheckpoint()  # 2 consumers
+    scored = materialize(pq_adc_scores(books, encoded, probes))  # 2 consumers
     approx = rank_topk(scored, k=5, score_col="approx_cos").select(
         F.col("query_id").alias("a_query_id"), F.col("neighbor_id").alias("a_neighbor_id")
     )
@@ -1223,33 +1218,22 @@ def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_round10b.py.
 @query("n19_ivfpq_audit")
 def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import InheritableThread
-
     from ..operators.similarity import ivfpq_index, ivfpq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
     # the exact ground truth is independent of the IVF-PQ index build —
-    # compute it on a side thread while the build's fit/encode chain runs
-    # (guide §2.6); both sides are deterministic, so overlap is result-free
-    side: dict = {}
-
-    def _exact() -> None:
-        side["exact"] = (
-            brute_force_topk(emb, probes, k=5)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
-        )
-
-    th = InheritableThread(target=_exact, session=spark)
-    th.start()
-    centers, books, cellmap, encoded = ivfpq_index(
-        emb, nlist=16, m=16, ksub=16, seed=123
+    # compute it while the build's fit/encode chain runs (guide §2.6);
+    # both sides are deterministic, so overlap is result-free
+    exact, (centers, books, cellmap, encoded) = run_concurrently(
+        spark,
+        lambda: materialize(
+            brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
+        ),
+        lambda: ivfpq_index(emb, nlist=16, m=16, ksub=16, seed=123),
     )
-    th.join()
-    exact = side["exact"]
-    cellmap = cellmap.localCheckpoint()  # 2 consumers: scoring + cost count
-    encoded = encoded.localCheckpoint()
+    cellmap = materialize(cellmap)  # 2 consumers: scoring + cost count
+    encoded = materialize(encoded)
     approx = ivfpq_topk(centers, books, cellmap, encoded, probes, nprobe=8, k=5)
     # the cost face: how many corpus vectors each query's probed cells hold
     from ..operators.similarity import _query_cell_ranks
@@ -1360,7 +1344,7 @@ def n20_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dim) group IS the label's mean norm, and cnt IS its vector count);
     # the global centroid is a rollup OF the (label, dim) partial sums —
     # never a second pass over the vectors
-    lab = (
+    lab = materialize(
         emb.select("label", norm(F.col("v")).alias("nrm"), F.posexplode("v").alias("i", "x"))
         .groupBy("label", "i")
         .agg(
@@ -1368,8 +1352,7 @@ def n20_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("cnt"),
             F.avg("nrm").alias("mn"),
         )
-        .localCheckpoint()  # consumers: label stats, label centroids, global rollup
-    )
+    )  # consumers: label stats, label centroids, global rollup
     per_label = lab.groupBy("label").agg(
         F.max("cnt").cast("long").alias("n_vecs"),
         F.avg("mn").alias("m_nrm"),  # identical across dims; d=2^k so exact
@@ -1502,11 +1485,10 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import dot, srp_buckets, with_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    b = (
+    b = materialize(
         srp_buckets(emb, SRP_PLANES)
         .join(with_norm(emb).select("vec_id", "nrm"), "vec_id")
-        .localCheckpoint()  # corpus index: 2 consumers (probe join ×2 rows)
-    )
+    )  # corpus index: 2 consumers (probe join ×2 rows)
     qsrc = emb.where(F.col("vec_id") < 10)
     margins = [
         F.abs(dot(F.col("vec"), F.array(*[F.lit(float(x)) for x in p]))).alias(f"m{i}")
@@ -1548,7 +1530,7 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).alias("probe"),
         )
     )
-    cand = (
+    cand = materialize(
         probes.join(b, "bucket")  # a corpus row lives in exactly ONE bucket
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -1559,8 +1541,7 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dot(F.col("vec"), F.col("qvec")) / (F.col("nrm") * F.col("qnrm")), 6
             ).alias("cos_sim"),
         )
-        .localCheckpoint()  # 3 consumers: counts + single top-5 + multi top-5
-    )
+    )  # 3 consumers: counts + single top-5 + multi top-5
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     multi = (
         cand.withColumn("r", F.row_number().over(w)).where(F.col("r") <= 5)
@@ -1730,11 +1711,10 @@ def n22_srp_probe_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import dot, srp_buckets, with_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    b = (
+    b = materialize(
         srp_buckets(emb, SRP_PLANES)
         .join(with_norm(emb).select("vec_id", "nrm"), "vec_id")
-        .localCheckpoint()  # corpus index: probed once per probe_rank row
-    )
+    )  # corpus index: probed once per probe_rank row
     qsrc = emb.where(F.col("vec_id") < 10)
     margins = [
         F.abs(dot(F.col("vec"), F.array(*[F.lit(float(x)) for x in p]))).alias(f"m{i}")
@@ -1789,7 +1769,7 @@ def n22_srp_probe_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(probe(flip2, 3))
         .unionByName(probe(flip12, 4))
     )
-    cand = (
+    cand = materialize(
         probes.join(b, "bucket")  # a corpus row lives in exactly ONE bucket
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -1800,8 +1780,7 @@ def n22_srp_probe_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dot(F.col("vec"), F.col("qvec")) / (F.col("nrm") * F.col("qnrm")), 6
             ).alias("cos_sim"),
         )
-        .localCheckpoint()  # consumers: per-budget top-5 + candidate counts
-    )
+    )  # consumers: per-budget top-5 + candidate counts
     budgets = F.array(F.lit(1), F.lit(2), F.lit(4))
     # nested budgets: a rank-r candidate belongs to every budget >= r
     expl = cand.select(

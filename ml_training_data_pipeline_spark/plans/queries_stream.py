@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
+from ..session import run_concurrently
 from ..streaming.enrich import (
     run_bounded,
     stream_table,
@@ -565,7 +567,7 @@ def st12_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("text").isNotNull() & (F.col("doc_id") % 2 == 0))
         .select(token_count(F.col("text")).alias("v"))
     )
-    refvc = ref.groupBy("v").agg(F.count("*").alias("c")).localCheckpoint()
+    refvc = materialize(ref.groupBy("v").agg(F.count("*").alias("c")))
     n_ref_df = refvc.agg(F.sum("c").cast("long").alias("n"))
     wv = Window.partitionBy(F.lit(0)).orderBy("v")
     cum = refvc.select("v", F.sum("c").over(wv).alias("cum_tot"))
@@ -601,7 +603,7 @@ def st12_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "bin")
         .agg(F.count("*").cast("long").alias("c_s"))
     )
-    sbin = run_bounded(counts, "st12_out", output_mode="complete").localCheckpoint()
+    sbin = materialize(run_bounded(counts, "st12_out", output_mode="complete"))
 
     # batch-side report over the bounded counter table (tiny from here on)
     rbin = (
@@ -658,7 +660,7 @@ def _admission_counts(
         minhash_wide,
     )
 
-    sh_new = doc_shingles(batch_df, k=3).localCheckpoint()
+    sh_new = materialize(doc_shingles(batch_df, k=3))
     nb = lsh_bands_from_wide(
         minhash_wide(sh_new, num_hashes=8), rows_per_band=2
     ).select(F.col("doc_id").alias("delta_doc"), "band", "band_sig")
@@ -706,11 +708,10 @@ def st13_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # standing-corpus index, built ONCE before the stream starts: shingle
     # sets (exact verification) + band table (candidate generation)
-    corpus_sh = doc_shingles(corpus, k=3).localCheckpoint()
-    corpus_bands = (
+    corpus_sh = materialize(doc_shingles(corpus, k=3))
+    corpus_bands = materialize(
         lsh_bands_from_wide(minhash_wide(corpus_sh, num_hashes=8), rows_per_band=2)
         .select(F.col("doc_id").alias("corpus_doc"), "band", "band_sig")
-        .localCheckpoint()
     )
 
     results: list[tuple] = []
@@ -882,7 +883,7 @@ def st15_stream_semantic_admission(spark: SparkSession, sf_dir: str) -> DataFram
     # standing index, built ONCE before the stream starts: SRP bucket +
     # norm per corpus vector (norms precomputed so probe-time cosine is
     # one fold per candidate, never O(pairs) norm recomputation)
-    corpus_b = (
+    corpus_b = materialize(
         srp_buckets(corpus, SRP_PLANES)
         .join(with_norm(corpus).select("vec_id", "nrm"), "vec_id")
         .select(
@@ -891,7 +892,6 @@ def st15_stream_semantic_admission(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("nrm").alias("cnrm"),
             "bucket",
         )
-        .localCheckpoint()
     )
 
     results: list[tuple] = []
@@ -1025,30 +1025,23 @@ def st16_stream_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # standing indexes, built ONCE before the stream starts: the cheap
     # stage-A fingerprint set and the stage-B shingle/band tables. The
-    # fingerprint set is independent of the shingle→band chain, so it
-    # builds on a side thread while the chain materializes (guide §2.6).
-    from pyspark import InheritableThread
-
-    side: dict = {}
-
-    def _build_fp() -> None:
-        side["fp"] = (
+    # fingerprint set is independent of the shingle→band chain, so the
+    # two build concurrently (guide §2.6).
+    def _build_fp() -> DataFrame:
+        return materialize(
             corpus.select(fingerprint_pair(F.col("text")).alias("fp"))
             .distinct()
             .withColumn("known", F.lit(True))
-            .localCheckpoint()
         )
 
-    th = InheritableThread(target=_build_fp, session=spark)
-    th.start()
-    corpus_sh = doc_shingles(corpus, k=3).localCheckpoint()
-    corpus_bands = (
-        lsh_bands_from_wide(minhash_wide(corpus_sh, num_hashes=8), rows_per_band=2)
-        .select(F.col("doc_id").alias("corpus_doc"), "band", "band_sig")
-        .localCheckpoint()
-    )
-    th.join()
-    corpus_fp = side["fp"]
+    def _build_bands() -> tuple[DataFrame, DataFrame]:
+        sh = materialize(doc_shingles(corpus, k=3))
+        return sh, materialize(
+            lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
+            .select(F.col("doc_id").alias("corpus_doc"), "band", "band_sig")
+        )
+
+    corpus_fp, (corpus_sh, corpus_bands) = run_concurrently(spark, _build_fp, _build_bands)
 
     results: list[tuple] = []
 
@@ -1057,12 +1050,11 @@ def st16_stream_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame
         # AND the novel remainder — left lazy, the batch fingerprint
         # compute + corpus_fp join ran twice per micro-batch (guide §5;
         # the frame is micro-batch-sized, so the checkpoint is cheap).
-        flagged = (
+        flagged = materialize(
             batch_df.select(
                 "doc_id", "source", "text", fingerprint_pair(F.col("text")).alias("fp")
             )
             .join(corpus_fp, "fp", "left")
-            .localCheckpoint()
         )
         base = flagged.groupBy("source").agg(
             F.count("*").alias("n_new"),
@@ -1177,12 +1169,11 @@ def st17_stream_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus's distinct window keys with the corpus-always-wins sentinel
     # keeper (-1 matches no arriving doc_id), so the per-batch removal
     # probe IS the shared span_removed_positions operator
-    inventory = (
+    inventory = materialize(
         span_window_stream(corpus_t8)
         .select("win")
         .distinct()
         .withColumn("keep_doc", F.lit(-1).cast("long"))
-        .localCheckpoint()
     )
 
     results: list[tuple] = []

@@ -17,6 +17,7 @@ from ..functions.text import (
     tokenize,
 )
 from ..io.sources import load_table
+from ..operators.materialize import materialize
 from ..operators.tfidf import (
     corpus_size,
     doc_tokens,
@@ -888,7 +889,7 @@ def x13_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   Σ_{c=0} p0·(ln p0 − ln q_t) = p0·[(V−|T_s|)·ln p0 − (S_lnq − S_lnq_s)]
 # leaving one (source, term) aggregate, one term aggregate, and three
 # global scalars — no source×vocab cross join at any vocabulary size.
-# The term table is localCheckpointed: three consumers (two scalar
+# The term table is materialized: three consumers (two scalar
 # passes + the scoring join), one materialization.
 @query(
     "x14_source_divergence",
@@ -937,7 +938,7 @@ def x14_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(tokenize(F.col("text"))).alias("term")
     )
     st = tok.groupBy("source", "term").agg(F.count("*").alias("c"))
-    ct = st.groupBy("term").agg(F.sum("c").alias("ctot")).localCheckpoint()
+    ct = materialize(st.groupBy("term").agg(F.sum("c").alias("ctot")))
     # three global scalars (V, N, S_lnq): two bounded driver collects off
     # the checkpointed term table — job structure, not data movement.
     g = ct.agg(F.count("*").alias("v"), F.sum("ctot").cast("double").alias("n")).collect()[0]
@@ -2048,7 +2049,7 @@ def v12_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocab-sized after one corpus pass; TWO consumers (total mass +
     # ranked fan-out) — materialize instead of re-tokenizing per branch
-    tc = tok.groupBy("term").agg(F.count("*").alias("c")).localCheckpoint()
+    tc = materialize(tok.groupBy("term").agg(F.count("*").alias("c")))
     tot = tc.agg(F.sum("c").cast("double").alias("n"))
     # limit-then-window (v4's own pattern, operators/tfidf.py:152): only
     # ranks <= max(K)=4000 can contribute to covered_mass (the denominator
@@ -2381,10 +2382,10 @@ def mix7_target_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # |sources|-sized, materialized ONCE: the totals/weights/normalizer
     # branches would otherwise each re-scan the corpus (the ep9 fix)
-    per_src = docs.groupBy("source").agg(
+    per_src = materialize(docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
-    ).localCheckpoint()
+    ))
     tot = per_src.agg(
         F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
     )
@@ -2458,12 +2459,12 @@ def mix8_epoch_upsampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # per-doc token counts feed BOTH the per-source stats and the
     # exploded repetition — one materialization, not two corpus scans
-    with_tokens = docs.select(
+    with_tokens = materialize(docs.select(
         "doc_id", "source", token_count(F.col("text")).cast("long").alias("doc_tokens")
-    ).localCheckpoint()
-    per_src = with_tokens.groupBy("source").agg(
+    ))
+    per_src = materialize(with_tokens.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("doc_tokens").cast("long").alias("n_tokens")
-    ).localCheckpoint()  # |sources|-sized; epochs/report branches reuse it
+    ))  # |sources|-sized; epochs/report branches reuse it
     tot = per_src.agg(F.max("n_tokens").cast("long").alias("max_tokens"))
     epochs = per_src.crossJoin(F.broadcast(tot)).select(  # singleton max row
         "source",
@@ -2558,10 +2559,10 @@ def ep9_mixture_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # |sources|-sized; materialized ONCE so the three downstream branches
     # (totals, weights, normalizer) cannot re-scan the corpus
-    per_src = docs.groupBy("source").agg(
+    per_src = materialize(docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
-    ).localCheckpoint()
+    ))
     tot = per_src.agg(
         F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
     )
@@ -2711,10 +2712,10 @@ def mix9_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.analysis import token_count
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    per_src = docs.groupBy("source").agg(
+    per_src = materialize(docs.groupBy("source").agg(
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
         (F.lit(4) * F.sum(token_count(F.col("text")))).cast("long").alias("cap_tokens"),
-    ).localCheckpoint()  # |sources| rows; totals + window + level reuse it
+    ))  # |sources| rows; totals + window + level reuse it
     tot = per_src.agg(
         F.expr("sum(n_tokens) div 2").cast("long").alias("b"),
         F.count("*").alias("n"),
@@ -2734,11 +2735,11 @@ def mix9_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("prefix"),
         )
     )
-    marked = ranked.withColumn(
+    marked = materialize(ranked.withColumn(
         "is_capped",
         F.col("cap_tokens") * (F.col("n") - F.col("i") + 1)
         <= F.col("b") - (F.col("prefix") - F.col("cap_tokens")),
-    ).localCheckpoint()  # 2 consumers: the level aggregate + the report
+    ))  # 2 consumers: the level aggregate + the report
     lvl = marked.agg(
         F.coalesce(
             F.sum(F.when(F.col("is_capped"), F.col("cap_tokens"))), F.lit(0)
@@ -2833,13 +2834,13 @@ def ep11_release_diff_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_v2 = F.col("doc_id") % 7 != 0
     changed = in_v2 & (F.col("doc_id") % 2 == 0)
     toks = token_count(F.col("text")).cast("long")
-    per = docs.groupBy("source").agg(
+    per = materialize(docs.groupBy("source").agg(
         F.count("*").alias("docs_v1"),
         F.sum(F.when(in_v2, 1).otherwise(0)).cast("long").alias("docs_v2"),
         F.sum(F.when(changed, 1).otherwise(0)).cast("long").alias("n_changed"),
         F.sum(toks).cast("long").alias("tokens_v1"),
         F.sum(F.when(in_v2, toks).otherwise(0)).cast("long").alias("tokens_v2"),
-    ).localCheckpoint()  # |sources| rows; totals + report reuse it
+    ))  # |sources| rows; totals + report reuse it
     tot = per.agg(
         F.sum("tokens_v1").cast("long").alias("t1"),
         F.sum("tokens_v2").cast("long").alias("t2"),

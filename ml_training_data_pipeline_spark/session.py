@@ -3,13 +3,22 @@
 Local-mode defaults mirror what we would set fleet-wide on a real cluster:
 AQE on (runtime coalesce + skew-join), Arrow for the Pandas-UDF slow path,
 UTC session timezone so timestamp semantics match the DuckDB oracle.
+``run_concurrently`` is the one way the package overlaps independent
+driver-side jobs under the FAIR scheduling set here.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+# driver threads one run_concurrently call may use; each still submits
+# ordinary Spark jobs whose stages shard across the cluster
+_MAX_DRIVER_THREADS = 4
 
 
 def get_spark(
@@ -48,9 +57,9 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
         )
-        # refine's oversized-candidate LDA fits are submitted from
-        # concurrent driver threads (operators/refine.py); FAIR mode lets
-        # those jobs share executors instead of queueing FIFO.
+        # independent jobs are submitted from concurrent driver threads
+        # (run_concurrently below); FAIR mode lets those jobs share
+        # executors instead of queueing FIFO.
         # (A session-2 scheduler bisection briefly blamed FAIR for a
         # 3-20x CPU inflation on shuffle-heavy sf1 queries; a controlled
         # re-run reproduced the same inflation under FIFO at 8.9% steal —
@@ -72,3 +81,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, *fns: Callable[[], Any]) -> list:
+    """Run independent driver-side callables on at most
+    ``_MAX_DRIVER_THREADS`` threads and return their results in argument
+    order — the package's one way to overlap Spark jobs that share no
+    lineage (refine's oversized-candidate fits, a k-sweep's fits, ground
+    truth built beside an index).
+
+    Each callable is wrapped on the CALLER's thread by its own
+    ``inheritable_thread_target`` call, which clones the caller's local
+    properties once per wrap: every task sees the caller's job group
+    (what span attribution keys on) and gets a private property map, so
+    the per-task ``spark.scheduler.pool`` set below cannot overwrite a
+    sibling's. Local properties are only thread-scoped in PySpark's
+    pinned-thread mode; with it off the threads would share one JVM
+    property map, so the callables run unwrapped in the default pool.
+    Results come from ``future.result()``: the first failure re-raises
+    with its own type and traceback."""
+    # the same test PySpark's java_gateway applies when it launches the JVM
+    pinned = os.environ.get("PYSPARK_PIN_THREAD", "true").lower() == "true"
+
+    def task(i: int, fn: Callable[[], Any]) -> Callable[[], Any]:
+        if not pinned:
+            return fn
+
+        def run() -> Any:
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"graft-{i}")
+            return fn()
+
+        return inheritable_thread_target(spark)(run)
+
+    tasks = [task(i, fn) for i, fn in enumerate(fns)]
+    with ThreadPoolExecutor(max_workers=min(len(tasks), _MAX_DRIVER_THREADS)) as pool:
+        futures = [pool.submit(t) for t in tasks]
+        return [f.result() for f in futures]

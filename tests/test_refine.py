@@ -79,7 +79,7 @@ def test_forced_split_preserves_partition(spark, corpus, fitted):
 
 def test_forced_split_big_path_threaded(spark, corpus, fitted):
     """local_fit_max_docs=0 routes every candidate through the MLlib
-    fallback — now submitted from a driver thread pool. TWO candidate
+    fallback — submitted through session.run_concurrently. TWO candidate
     clusters (3 docs each, both under the forced threshold) so the fits
     actually run concurrently; same partition invariants as the
     applyInPandas path."""
@@ -96,7 +96,6 @@ def test_forced_split_big_path_threaded(spark, corpus, fitted):
         lda_search_iter=5,
         lda_final_iter=10,
         local_fit_max_docs=0,
-        big_fit_parallelism=2,
     )
     out, split_ids = split_low_coherence_clusters(
         vecs.select("doc_id", "tf"), tfidf, assignments, n_docs=6, cfg=cfg

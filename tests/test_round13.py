@@ -105,8 +105,12 @@ HEADLINE_PLAN_SHAPE = {
     # d4 changed in round 16: the LSH candidate-pair list is materialized
     # once (operators/dedup.minhash_dedup), so the three downstream plan
     # references no longer re-derive the minhash→bands→self-join subtree
-    # (was (28, 12, 0, 0); checkpointed index/pairs: scans upstream)
-    "d4_minhash_dedup": (10, 3, 0, 0),
+    # (was (28, 12, 0, 0); checkpointed index/pairs: scans upstream).
+    # Changed again in round 17: jaccard_pairs materializes its
+    # candidate-scoped shingle table, so the sizes aggregate and both
+    # intersection legs read that instead of re-running the semi-join
+    # (was (10, 3, 0, 0); re-measured with scripts/plan_audit.py).
+    "d4_minhash_dedup": (4, 3, 0, 0),
     "n1_ann_brute_topk": (1, 1, 1, 2),  # the bnlj is the broadcast probe batch
     "w2_sessionization": (1, 0, 0, 1),
     "x2_quality_scores": (0, 0, 0, 1),

@@ -201,14 +201,23 @@ def test_materialize_invalid_strategy_raises(monkeypatch):
         _strategy()
 
 
+_LOCAL_ROWS: dict[str, list[tuple]] = {}
+
+
+def _query_rows(spark, name: str) -> list[tuple]:
+    return sorted(tuple(r) for r in entry_mod.queries()[name](spark, SF_DIR).collect())
+
+
 @pytest.mark.parametrize("strategy", ["local", "reliable", "parquet"])
 def test_materialize_strategies_preserve_results(
     spark, tmp_path_factory, monkeypatch, strategy
 ):
     """Every strategy must return the same rows — the knob changes WHERE
     the intermediate lives, never WHAT it holds. d24 exercises the
-    span-window site; its internals also route tfidf/minhash helpers in
-    sibling queries, so one planted scrub covers the contract."""
+    span-window site on a planted scrub; m5 (refine's split, merge and
+    per-round frames) and n19 (the PQ codebook and index frames) must
+    match their rows under the default ``local`` strategy — both also
+    build a frame on a run_concurrently thread."""
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", strategy)
     monkeypatch.setenv(
         "SPARK_GRAFT_MATERIALIZE_DIR",
@@ -230,6 +239,12 @@ def test_materialize_strategies_preserve_results(
     )
     assert pdf["tokens_removed"].tolist() == [0, 10]
     assert pdf["tokens_kept"].tolist() == [16, 6]
+    for name in ("m5_refine_pipeline", "n19_ivfpq_audit"):
+        if name not in _LOCAL_ROWS:
+            with monkeypatch.context() as m:
+                m.setenv("SPARK_GRAFT_MATERIALIZE", "local")
+                _LOCAL_ROWS[name] = _query_rows(spark, name)
+        assert _query_rows(spark, name) == _LOCAL_ROWS[name], name
 
 
 # --- CkptRecorder reentry guard (r14 ADVICE) ---------------------------------------

@@ -1,0 +1,119 @@
+"""session.run_concurrently — the package's one driver-concurrency helper —
+and the source guard that keeps it (and operators/materialize.py's
+``materialize``) the only site of its kind."""
+
+from __future__ import annotations
+
+import importlib
+import os
+import re
+import threading
+import time
+from functools import partial
+from pathlib import Path
+
+import pytest
+
+from ml_training_data_pipeline_spark.operators.materialize import materialize
+from ml_training_data_pipeline_spark.session import _MAX_DRIVER_THREADS, run_concurrently
+
+GROUP_PROP = "spark.jobGroup.id"
+POOL_PROP = "spark.scheduler.pool"
+PINNED = os.environ.get("PYSPARK_PIN_THREAD", "true").lower() == "true"
+
+
+def test_failing_task_reraises_its_own_exception(spark):
+    def boom():
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        run_concurrently(spark, lambda: 1, boom)
+
+
+def test_tasks_inherit_the_callers_job_group(spark):
+    """Span attribution keys on the job group: every task must see the
+    caller's group, and the jobs it launches must be filed under it."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(GROUP_PROP)
+    sc.setLocalProperty(GROUP_PROP, "run-concurrently-group")
+    try:
+        def task(n: int) -> str:
+            spark.range(n).count()
+            return sc.getLocalProperty(GROUP_PROP)
+
+        groups = run_concurrently(spark, *[partial(task, n) for n in (3, 4, 5)])
+    finally:
+        sc.setLocalProperty(GROUP_PROP, prev)
+    assert groups == ["run-concurrently-group"] * 3
+    assert len(sc.statusTracker().getJobIdsForGroup("run-concurrently-group")) >= 3
+
+
+@pytest.mark.skipif(not PINNED, reason="local properties are thread-scoped only in pinned-thread mode")
+def test_concurrent_tasks_each_read_their_own_pool(spark):
+    both_running = threading.Barrier(2, timeout=60)
+
+    def pool() -> str:
+        both_running.wait()
+        return spark.sparkContext.getLocalProperty(POOL_PROP)
+
+    a, b = run_concurrently(spark, pool, pool)
+    assert a and b and a != b
+    assert spark.sparkContext.getLocalProperty(POOL_PROP) is None  # caller untouched
+
+
+def test_results_come_back_in_argument_order(spark):
+    """Later arguments finish first, and more tasks than threads are
+    queued: the order still follows the arguments and no more than
+    _MAX_DRIVER_THREADS run at once."""
+    lock = threading.Lock()
+    active, peak = [0], [0]
+
+    def task(i: int) -> int:
+        with lock:
+            active[0] += 1
+            peak[0] = max(peak[0], active[0])
+        time.sleep(0.05 * (6 - i))
+        with lock:
+            active[0] -= 1
+        return i
+
+    assert run_concurrently(spark, *[partial(task, i) for i in range(6)]) == list(range(6))
+    assert 1 < peak[0] <= _MAX_DRIVER_THREADS
+
+
+# --- source guard -----------------------------------------------------------------
+
+PKG = Path(__file__).resolve().parent.parent / "ml_training_data_pipeline_spark"
+CHECKPOINT = re.compile(r"\.localCheckpoint\(|\.checkpoint\(")
+THREADS = re.compile(r"ThreadPoolExecutor|InheritableThread|PYSPARK_PIN_THREAD")
+
+
+def test_one_checkpoint_site_and_one_driver_thread_site():
+    """materialize() is the package's only checkpoint call and
+    run_concurrently its only driver-thread site. functions/llm.py's
+    ThreadPoolExecutor is exempt: it runs inside executor tasks (HTTP
+    fan-out per partition), not on the driver."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if rel != "operators/materialize.py" and CHECKPOINT.search(line):
+                offenders.append(f"{rel}:{n}: {line.strip()}")
+            for m in THREADS.finditer(line):
+                if rel == "session.py" or (
+                    rel == "functions/llm.py" and m.group() == "ThreadPoolExecutor"
+                ):
+                    continue
+                offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_materialize_name_binds_the_operator():
+    """plans/oracle_fragments has a SQL helper also named materialize;
+    a module where it shadowed the operator would turn every checkpoint
+    site into a silent no-op (it returns its first argument)."""
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG.parent).with_suffix("").as_posix()
+        mod = importlib.import_module(rel.replace("/", "."))
+        if not rel.endswith("oracle_fragments"):
+            assert getattr(mod, "materialize", materialize) is materialize, rel
