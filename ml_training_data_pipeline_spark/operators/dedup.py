@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.analysis import fingerprint
+from ..functions.analysis import fingerprint, fingerprint_pair
 from .materialize import materialize
 from .tfidf import doc_tokens, term_counts
 
@@ -677,3 +677,85 @@ def span_scrub_removals(t8: DataFrame, width: int = SPAN_WIDTH) -> DataFrame:
     semantics fix lands once). Returns (doc_id, tok) distinct."""
     p = span_windows(t8, width)
     return span_removed_positions(p, duplicated_windows(p), width)
+
+
+# --- exact-then-near cascade (d23/d25/ep13) -----------------------------------
+
+
+def representative_near_pairs(docs: DataFrame, grp: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) — verified MinHash-LSH near-dup pairs
+    (jaccard >= 0.5) among the exact-group representatives
+    ``grp(fp, rep)`` of ``docs(doc_id, text)``: exact clusters collapse to
+    one node before any candidate pair is enumerated, which keeps pair
+    enumeration linear in the verbatim-duplicate mass."""
+    reps = docs.join(
+        grp.select(F.col("rep").alias("doc_id")).distinct(), "doc_id"
+    ).select("doc_id", "text")
+    return minhash_dedup(reps, k=3, num_hashes=8, rows_per_band=2, threshold=0.5)
+
+
+def exact_then_near(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The exact-first dedup cascade over ``docs(doc_id, source, text)``
+    (text non-null). Stage 1 groups on the 120-bit long-pair fingerprint
+    of the canonical token stream (16-byte shuffle keys, collision budget
+    n²/2^121) and keeps min(doc_id) per group; stage 2 is
+    ``representative_near_pairs``. Returns ``(cls, near)``:
+    cls(doc_id, source, rep) for every doc, and near(near_rep), the
+    representatives a verified pair links to a SMALLER representative."""
+    fps = materialize(docs.select(
+        "doc_id", "source", fingerprint_pair(F.col("text")).alias("fp")
+    ))  # 2 consumers: group build + per-doc classification
+    grp = fps.groupBy("fp").agg(F.min("doc_id").alias("rep"))
+    cls = fps.join(grp, "fp").select("doc_id", "source", "rep")
+    near = representative_near_pairs(docs, grp).select(F.col("doc_b").alias("near_rep"))
+    return cls, near.distinct()
+
+
+def cascade_ledger(marked: DataFrame, near_col: str, *extra: Column) -> DataFrame:
+    """Per-source drop ledger of a two-stage cascade: doc counts and rates
+    for exact drops (doc_id != rep), near drops (a representative whose
+    ``near_col`` is non-null) and survivors. ``extra`` aggregates are
+    appended after the rates."""
+    is_rep = F.col("doc_id") == F.col("rep")
+    exact = F.when(F.col("doc_id") != F.col("rep"), 1).otherwise(0)
+    near = F.when(is_rep & F.col(near_col).isNotNull(), 1).otherwise(0)
+    survivor = F.when(is_rep & F.col(near_col).isNull(), 1).otherwise(0)
+    n = F.count("*").cast("double")
+    return marked.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(exact).cast("long").alias("n_exact_dropped"),
+        F.sum(near).cast("long").alias("n_near_dropped"),
+        F.sum(survivor).cast("long").alias("n_survivors"),
+        F.round(F.sum(exact) / n, 6).alias("exact_drop_rate"),
+        F.round(F.sum(near) / n, 6).alias("near_drop_rate"),
+        F.round(F.sum(survivor) / n, 6).alias("survival_rate"),
+        *extra,
+    )
+
+
+def cross_source_exposure(t8: DataFrame) -> DataFrame:
+    """(doc_id, source, tok) distinct — every token position covered by a
+    ``SPAN_WIDTH`` window that appears in two or more sources. ``t8``
+    is (doc_id, source, toks) pre-filtered to ``size(toks) >= SPAN_WIDTH``.
+    The position stream carries ``source`` through the projection and is
+    materialized once for its two consumers (the multi-source-window
+    inventory and the coverage probe); the covered-position explode is
+    bounded to cross-source duplicated coverage."""
+    p = materialize(span_window_stream(t8, keep=("source",)))
+    xw = (
+        p.groupBy("win")
+        .agg(F.count_distinct("source").alias("cs"))
+        .where(F.col("cs") >= 2)
+        .select("win")
+    )
+    return (
+        p.join(xw, "win")
+        .select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.sequence(F.col("pos"), F.col("pos") + (SPAN_WIDTH - 1))
+            ).alias("tok"),
+        )
+        .distinct()
+    )

@@ -887,3 +887,36 @@ def ivfpq_topk(
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "approx_cos")
     )
     return rank_topk(scored, k, score_col="approx_cos")
+
+
+def recall_audit(
+    exact: DataFrame,
+    approx: DataFrame,
+    *extra: Column,
+    by: tuple[str, ...] = ("query_id",),
+    keys: tuple[str, str] = ("query_id", "neighbor_id"),
+    name: str = "recall_at_5",
+) -> DataFrame:
+    """Recall of an approximate top-k against the exact one. ``exact``
+    and ``approx`` both carry the ``keys`` (query, item) columns; every
+    exact row is looked up in ``approx``, and per ``by`` group (``()`` for
+    one row) the result holds n_exact, n_hit, ``name`` = n_hit / n_exact
+    rounded to 6, then the ``extra`` aggregates over the looked-up exact
+    rows. The join is per (query, item) on two k·|queries|-sized sets."""
+    q, item = keys
+    hits = approx.select(F.col(q).alias(f"a_{q}"), F.col(item).alias(f"a_{item}"))
+    found = F.when(F.col(f"a_{item}").isNotNull(), 1).otherwise(0)
+    return (
+        exact.join(
+            hits,
+            (F.col(q) == F.col(f"a_{q}")) & (F.col(item) == F.col(f"a_{item}")),
+            "left",
+        )
+        .groupBy(*by)
+        .agg(
+            F.count("*").alias("n_exact"),
+            F.sum(found).cast("long").alias("n_hit"),
+            F.round(F.sum(found) / F.count("*").cast("double"), 6).alias(name),
+            *extra,
+        )
+    )

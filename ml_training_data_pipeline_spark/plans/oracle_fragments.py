@@ -1,10 +1,27 @@
-"""Shared DuckDB SQL fragments that restate the engine's canonical
-contracts (tokenizer, TF-IDF formula, stopword list) — single source of
-truth for every text-family oracle query.
+"""Shared DuckDB SQL fragments: the one statement of every oracle
+contract that more than one query checks against.
 
-These must mirror ``functions/text.py`` exactly:
-    lower → strip non-[a-z0-9 space] → collapse ws → split(' ') → drop ''
-    weight = tf * ln(N / df), round 6
+Each fragment restates an engine contract exactly, so a fix lands in
+every oracle that uses it:
+
+- text: the tokenizer, unigram/n-gram streams, the TF-IDF formula, the
+  stopword list and the x2/cur1 quality formula (mirroring
+  ``functions/text.py``: lower → strip non-[a-z0-9 space] → collapse ws
+  → split(' ') → drop ''; weight = tf * ln(N / df), round 6);
+- clusters: the per-cluster top-terms ranking and the probabilistic
+  coherence pairs (``operators/tfidf.cluster_term_scores``,
+  ``operators/coherence.prob_coherence``);
+- dedup: the MinHash family (shingles → signatures → bands →
+  candidates → verified Jaccard), the exact-then-near cascade, the
+  near-dup closure, the span scrub and the cross-source exposure
+  (``operators/dedup``);
+- similarity: the rounded cosine and the exact top-k ground truth
+  (``operators/similarity``);
+- budgets: mix9's integer-exact water-fill (``operators/waterfill``);
+- Lloyd k-means and BPE training chains.
+
+Fragments return CTE text without the ``WITH`` keyword, to be joined
+with commas; the docstring of each names the CTEs it needs upstream.
 """
 
 from __future__ import annotations
@@ -112,7 +129,7 @@ def span_scrub_ctes(width: int = SPAN_WIDTH) -> str:
     rc AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id)"""
 
 
-def materialize(sql: str, *cte_names: str) -> str:
+def materialized_ctes(sql: str, *cte_names: str) -> str:
     """Rewrite ``name AS (`` → ``name AS MATERIALIZED (`` for the given
     CTE names (word-boundary match, all occurrences).
 
@@ -315,3 +332,313 @@ b{t} AS (SELECT l, r, freq FROM p{t} ORDER BY freq DESC, l, r LIMIT 1)"""
         for t in range(n_merges)
     )
     return ",\n".join(ctes), selects
+
+
+# --- clusters -------------------------------------------------------------------
+# the per-cluster term ranking (score DESC, term ASC) every top-terms
+# oracle filters; mirrors operators/tfidf.cluster_term_scores
+RANKED_TERMS = """
+        SELECT cluster_id, term, score,
+               row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, term ASC) AS rank
+        FROM scored"""
+
+
+def cluster_scores_ctes() -> str:
+    """CTEs ``toks … tfidf, assigned, scored(cluster_id, term, score)`` —
+    the unigram TF-IDF summed per (lang cluster, term) over exact 1e-6
+    integer units, so the sum is order-independent on both engines."""
+    return f"""{toks_cte()}, {unigram_cte()}, {tfidf_cte()},
+    assigned AS (
+      SELECT t.doc_id, t.term, t.weight, d.lang AS cluster_id
+      FROM tfidf t JOIN documents d ON t.doc_id = d.doc_id
+    ),
+    scored AS (
+      SELECT cluster_id, term, round(sum(CAST(round(weight * 1000000) AS BIGINT))
+                   / 1000000.0, 6) AS score
+      FROM assigned GROUP BY cluster_id, term
+    )"""
+
+
+def cluster_topterms_ctes() -> str:
+    """``cluster_scores_ctes`` plus ``topterms(cluster_id, term, rank)``,
+    the 5 best terms per cluster — the topic a cluster's coherence and
+    label are computed from."""
+    return f"""{cluster_scores_ctes()},
+    topterms AS (
+      SELECT cluster_id, term, rank FROM ({RANKED_TERMS}
+      ) WHERE rank <= 5
+    )"""
+
+
+def coherence_ctes() -> str:
+    """CTEs ``bin_dfm … scored_pairs(cluster_id, score)`` — the
+    probabilistic coherence of every ordered top-term pair
+    (02_build_models.R:457-471: d_ij/d_i − d_j/N over the binary DFM).
+    Requires ``tok`` and ``topterms`` upstream."""
+    return """
+    bin_dfm AS (SELECT DISTINCT doc_id, term FROM tok),
+    ncorp AS (SELECT count(DISTINCT doc_id) AS n_corp FROM tok),
+    needed AS (SELECT DISTINCT term FROM topterms),
+    bsub AS (SELECT b.doc_id, b.term FROM bin_dfm b JOIN needed USING (term)),
+    dfc AS (SELECT term, count(*) AS df FROM bsub GROUP BY term),
+    co AS (
+      SELECT x.term AS ta, y.term AS tb, count(*) AS d_ij
+      FROM bsub x JOIN bsub y ON x.doc_id = y.doc_id AND x.term < y.term
+      GROUP BY x.term, y.term
+    ),
+    pairs AS (
+      SELECT a.cluster_id, a.term AS wi, b.term AS wj
+      FROM topterms a JOIN topterms b
+        ON a.cluster_id = b.cluster_id AND a.rank < b.rank
+    ),
+    scored_pairs AS (
+      SELECT p.cluster_id,
+             coalesce(c.d_ij, 0) * 1.0 / di.df - dj.df * 1.0 / ncorp.n_corp AS score
+      FROM pairs p
+      LEFT JOIN co c ON least(p.wi, p.wj) = c.ta AND greatest(p.wi, p.wj) = c.tb
+      JOIN dfc di ON p.wi = di.term
+      JOIN dfc dj ON p.wj = dj.term
+      CROSS JOIN ncorp
+    )"""
+
+
+# --- dedup: the MinHash family --------------------------------------------------
+# Mirrors operators/dedup.doc_shingles → minhash_wide → lsh_bands_from_wide
+# → lsh_candidate_pairs → jaccard_pairs: word-3-shingles keyed by the
+# 60-bit md5 long (string keys never shuffle), 8 seeds, 4 bands of 2.
+
+# exact-group representatives' tokens: the shingle source of the
+# exact-then-near cascades (requires ``toks`` and ``grp(fp, rep)``)
+REP_TOKS = "toks t JOIN grp g ON g.rep = t.doc_id"
+
+
+def shingles_ctes(src: str = "toks") -> str:
+    """CTE ``sh(doc_id, shingle)`` — distinct word-3-shingles of every
+    ``src`` row (a relation exposing ``doc_id`` and ``toks``)."""
+    return f"""
+    sh AS (
+      SELECT DISTINCT doc_id, {H60.format(x="s.shingle")} AS shingle
+      FROM (
+        SELECT doc_id,
+               unnest([toks[i]||' '||toks[i+1]||' '||toks[i+2] for i in range(1, len(toks) - 1)]) AS shingle
+        FROM {src} WHERE len(toks) >= 3
+      ) s
+    )"""
+
+
+def minhash_ctes(src: str = "toks") -> str:
+    """``shingles_ctes`` plus ``mh(doc_id, seed, min_hash)``."""
+    return f"""{shingles_ctes(src)},
+    mh AS (
+      SELECT doc_id, seed,
+             min({H60.format(x="seed::VARCHAR || ':' || shingle::VARCHAR")}) AS min_hash
+      FROM sh CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
+      GROUP BY doc_id, seed
+    )"""
+
+
+def bands_ctes(src: str = "toks") -> str:
+    """``minhash_ctes`` plus ``bands(doc_id, band, band_sig)``."""
+    return f"""{minhash_ctes(src)},
+    bands AS (
+      SELECT doc_id, CAST(floor(seed / 2.0) AS INT) AS band,
+             {H60.format(x="string_agg(min_hash::VARCHAR, ',' ORDER BY seed)")} AS band_sig
+      FROM mh GROUP BY doc_id, CAST(floor(seed / 2.0) AS INT)
+    )"""
+
+
+def candidates_ctes(src: str = "toks") -> str:
+    """``bands_ctes`` plus ``cands(doc_a, doc_b)``, the banded candidate
+    pairs (doc_a < doc_b)."""
+    return f"""{bands_ctes(src)},
+    cands AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
+      WHERE a.doc_id < b.doc_id
+    )"""
+
+
+# CTEs sizes, inter, jac(doc_a, doc_b, jaccard) — exact shingle Jaccard
+# of every pair sharing a shingle (requires ``sh``)
+JACCARD_CTES = """
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    ),
+    jac AS (
+      SELECT i.doc_a, i.doc_b,
+             round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) AS jaccard
+      FROM inter i
+      JOIN sizes sa ON i.doc_a = sa.doc_id
+      JOIN sizes sb ON i.doc_b = sb.doc_id
+    )"""
+
+# CTE pairs(doc_a, doc_b) — verified near-dup pairs: LSH candidates with
+# Jaccard >= 0.5 (operators/dedup.minhash_dedup; requires cands, jac)
+NEAR_PAIRS_CTE = """
+    pairs AS (
+      SELECT j.doc_a, j.doc_b
+      FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
+      WHERE j.jaccard >= 0.5
+    )"""
+
+
+def closure_ctes(a: str = "doc_a", b: str = "doc_b") -> str:
+    """CTEs ``edges, reach(node, label)`` — the transitive closure of the
+    ``pairs(a, b)`` graph as a recursive CTE (needs ``WITH RECURSIVE``);
+    ``min(label)`` per node is operators/dedup.connected_components'
+    smallest-label fixpoint."""
+    return f"""
+    edges AS (
+      SELECT {a} AS node, {b} AS nbr FROM pairs
+      UNION SELECT {b}, {a} FROM pairs
+    ),
+    reach(node, label) AS (
+      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
+      UNION
+      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
+    )"""
+
+
+# CTE fps(doc_id, source, fp) — the exact fingerprint of every doc's
+# canonical token stream (requires toks)
+FPS_CTE = """
+    fps AS (
+      SELECT t.doc_id, d.source,
+             md5(coalesce(array_to_string(t.toks, ' '), '')) AS fp
+      FROM toks t JOIN documents d USING (doc_id)
+    )"""
+
+
+def cascade_ctes() -> str:
+    """CTEs ``fps, grp(fp, rep), sh … jac, near(rep)`` — the exact-then-near
+    dedup cascade (operators/dedup.exact_then_near): exact groups on the
+    canonical token stream keep min(doc_id), then MinHash-LSH over the
+    representatives only; ``near`` holds every representative a verified
+    pair links to a smaller one. Requires ``toks`` upstream."""
+    return f"""{FPS_CTE},
+    grp AS (SELECT fp, min(doc_id) AS rep FROM fps GROUP BY fp),
+    {candidates_ctes(REP_TOKS)},
+    {JACCARD_CTES},
+    near AS (
+      SELECT DISTINCT j.doc_b AS rep
+      FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
+      WHERE j.jaccard >= 0.5
+    )"""
+
+
+def cascade_ledger_sql(dropped: str) -> str:
+    """The per-source SELECT list of a cascade's drop ledger over
+    ``cls c(doc_id, source, rep)`` (operators/dedup.cascade_ledger):
+    ``dropped`` is non-null on representatives the near stage dropped."""
+    exact = "CASE WHEN c.doc_id <> c.rep THEN 1 ELSE 0 END"
+    near = f"CASE WHEN c.doc_id = c.rep AND {dropped} IS NOT NULL THEN 1 ELSE 0 END"
+    surv = f"CASE WHEN c.doc_id = c.rep AND {dropped} IS NULL THEN 1 ELSE 0 END"
+    return f"""c.source,
+           count(*) AS n_docs,
+           CAST(sum({exact}) AS BIGINT) AS n_exact_dropped,
+           CAST(sum({near}) AS BIGINT) AS n_near_dropped,
+           CAST(sum({surv}) AS BIGINT) AS n_survivors,
+           round(sum({exact}) / CAST(count(*) AS DOUBLE), 6) AS exact_drop_rate,
+           round(sum({near}) / CAST(count(*) AS DOUBLE), 6) AS near_drop_rate,
+           round(sum({surv}) / CAST(count(*) AS DOUBLE), 6) AS survival_rate"""
+
+
+def exposure_ctes() -> str:
+    """CTEs ``ps, xw, exp(doc_id, source, tok)`` — every token position a
+    window shared by two or more sources covers (operators/dedup.
+    cross_source_exposure). Requires ``span_scrub_ctes`` upstream."""
+    return f"""
+    ps AS (
+      SELECT p.doc_id, d.source, p.pos, p.win
+      FROM p JOIN documents d USING (doc_id)
+    ),
+    xw AS (
+      SELECT win FROM (
+        SELECT win, count(DISTINCT source) AS cs FROM ps GROUP BY win
+      ) WHERE cs >= 2
+    ),
+    exp AS (
+      SELECT DISTINCT doc_id, source, tok FROM (
+        SELECT ps.doc_id, ps.source, unnest(range(ps.pos, ps.pos + {SPAN_WIDTH})) AS tok
+        FROM ps JOIN xw USING (win)
+      )
+    )"""
+
+
+# --- budgets --------------------------------------------------------------------
+# CTEs tot, ranked, marked, lvl — mix9's integer-exact water-fill
+# (operators/waterfill.waterfill): budget B = ⌊Σ n_tokens / 2⌋ split as
+# evenly as the 4-epoch caps allow (requires per_src(source, …,
+# n_tokens, cap_tokens); read by waterfill_select)
+WATERFILL_CTES = """
+    tot AS (
+      SELECT CAST(sum(n_tokens) // 2 AS BIGINT) AS b, count(*) AS n FROM per_src
+    ),
+    ranked AS (
+      SELECT p.*, t.b, t.n,
+             row_number() OVER (ORDER BY p.cap_tokens, p.source) AS i,
+             CAST(sum(p.cap_tokens) OVER (ORDER BY p.cap_tokens, p.source
+                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix
+      FROM per_src p CROSS JOIN tot t
+    ),
+    marked AS (
+      SELECT r.*,
+             (r.cap_tokens * (r.n - r.i + 1) <= r.b - (r.prefix - r.cap_tokens))
+               AS is_capped
+      FROM ranked r
+    ),
+    lvl AS (
+      SELECT CAST(coalesce(sum(CASE WHEN is_capped THEN cap_tokens END), 0) AS BIGINT)
+               AS p_k,
+             CAST(sum(CASE WHEN is_capped THEN 1 ELSE 0 END) AS BIGINT) AS k
+      FROM marked
+    )"""
+
+
+def waterfill_select(*lead: str) -> str:
+    """The water-fill report over ``WATERFILL_CTES``: the ``lead``
+    expressions (over ``marked m``), then n_tokens, cap_tokens, is_capped
+    and the allocation columns."""
+    return f"""
+    SELECT {", ".join(lead)}, m.n_tokens, m.cap_tokens, m.is_capped,
+           CAST(m.b AS BIGINT) AS budget_tokens,
+           round(CASE WHEN m.is_capped THEN m.cap_tokens / 1.0
+                      ELSE (m.b - l.p_k) / (m.n - l.k) END, 6) AS alloc_tokens,
+           round(CASE WHEN m.is_capped THEN m.cap_tokens / m.b
+                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.b) END, 6) AS alloc_share,
+           round(CASE WHEN m.cap_tokens = 0 THEN 0.0
+                      WHEN m.is_capped THEN 4.0
+                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.n_tokens) END, 6)
+             AS epochs_equiv
+    FROM marked m CROSS JOIN lvl l"""
+
+
+# --- similarity -----------------------------------------------------------------
+def cos_sql(a: str, b: str) -> str:
+    """Cosine of two DOUBLE[] expressions, rounded to 6 — index-order
+    ``list_inner_product``, bit-identical to operators/similarity.cosine's
+    ``aggregate(zip_with(...))`` on double-cast arrays."""
+    return (
+        f"round(list_inner_product({a}, {b})"
+        f" / (sqrt(list_inner_product({a}, {a})) * sqrt(list_inner_product({b}, {b}))), 6)"
+    )
+
+
+def exact_topk_cte(q: str = "q") -> str:
+    """CTE ``exact(query_id, neighbor_id)`` — the brute-force cosine top-5
+    of every probe in ``q(query_id, qve)`` over ``v(vec_id, ve)``, ties to
+    the lower vec_id (operators/similarity.brute_force_topk)."""
+    return f"""
+    exact AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT {q}.query_id, v.vec_id AS neighbor_id,
+               row_number() OVER (
+                 PARTITION BY {q}.query_id
+                 ORDER BY {cos_sql("v.ve", f"{q}.qve")} DESC,
+                   v.vec_id ASC) AS rank
+        FROM v CROSS JOIN {q} WHERE v.vec_id <> {q}.query_id
+      ) WHERE rank <= 5
+    )"""

@@ -21,7 +21,12 @@ from ..operators.centroids import (
 )
 from ..operators.coherence import binary_doc_term, prob_coherence
 from ..operators.tfidf import cluster_term_scores, tfidf_long
-from .oracle_fragments import tfidf_cte, toks_cte, unigram_cte
+from .oracle_fragments import (
+    RANKED_TERMS,
+    cluster_scores_ctes,
+    cluster_topterms_ctes,
+    coherence_ctes,
+)
 from .registry import query
 
 # embeddings in long format, double-cast — shared oracle fragment
@@ -43,20 +48,8 @@ _CENT = f"""
 @query(
     "c1_cluster_term_scores",
     oracle=f"""
-    WITH {toks_cte()}, {unigram_cte()}, {tfidf_cte()},
-    assigned AS (
-      SELECT t.doc_id, t.term, t.weight, d.lang AS cluster_id
-      FROM tfidf t JOIN documents d ON t.doc_id = d.doc_id
-    ),
-    scored AS (
-      SELECT cluster_id, term, round(sum(CAST(round(weight * 1000000) AS BIGINT))
-                   / 1000000.0, 6) AS score
-      FROM assigned GROUP BY cluster_id, term
-    )
-    SELECT cluster_id, term, score, rank FROM (
-      SELECT cluster_id, term, score,
-             row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, term ASC) AS rank
-      FROM scored
+    WITH {cluster_scores_ctes()}
+    SELECT cluster_id, term, score, rank FROM ({RANKED_TERMS}
     ) WHERE rank <= 10
     """,
 )
@@ -165,61 +158,9 @@ def c5_merge_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_components(pairs, threshold=0.0, groups=cents)
 
 
-# --- C6: probabilistic coherence (M5/A5) ----------------------------------------
-# Reference formula: 02_build_models.R:457-471; per-cluster mean
-# (02_build_models.R:346-348). Cluster proxy = lang, topic = top-5 terms.
-@query(
-    "c6_prob_coherence",
-    oracle=f"""
-    WITH {toks_cte()}, {unigram_cte()}, {tfidf_cte()},
-    assigned AS (
-      SELECT t.doc_id, t.term, t.weight, d.lang AS cluster_id
-      FROM tfidf t JOIN documents d ON t.doc_id = d.doc_id
-    ),
-    scored AS (
-      SELECT cluster_id, term, round(sum(CAST(round(weight * 1000000) AS BIGINT))
-                   / 1000000.0, 6) AS score
-      FROM assigned GROUP BY cluster_id, term
-    ),
-    topterms AS (
-      SELECT cluster_id, term, rank FROM (
-        SELECT cluster_id, term, score,
-               row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, term ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 5
-    ),
-    bin_dfm AS (SELECT DISTINCT doc_id, term FROM tok),
-    ncorp AS (SELECT count(DISTINCT doc_id) AS n_corp FROM tok),
-    needed AS (SELECT DISTINCT term FROM topterms),
-    bsub AS (SELECT b.doc_id, b.term FROM bin_dfm b JOIN needed USING (term)),
-    dfc AS (SELECT term, count(*) AS df FROM bsub GROUP BY term),
-    co AS (
-      SELECT x.term AS ta, y.term AS tb, count(*) AS d_ij
-      FROM bsub x JOIN bsub y ON x.doc_id = y.doc_id AND x.term < y.term
-      GROUP BY x.term, y.term
-    ),
-    pairs AS (
-      SELECT a.cluster_id, a.term AS wi, b.term AS wj
-      FROM topterms a JOIN topterms b
-        ON a.cluster_id = b.cluster_id AND a.rank < b.rank
-    ),
-    scored_pairs AS (
-      SELECT p.cluster_id,
-             coalesce(c.d_ij, 0) * 1.0 / di.df - dj.df * 1.0 / ncorp.n_corp AS score
-      FROM pairs p
-      LEFT JOIN co c ON least(p.wi, p.wj) = c.ta AND greatest(p.wi, p.wj) = c.tb
-      JOIN dfc di ON p.wi = di.term
-      JOIN dfc dj ON p.wj = dj.term
-      CROSS JOIN ncorp
-    )
-    SELECT cluster_id,
-           round(sum(CAST(round(score * 1000000) AS BIGINT))
-                 / 1000000.0 / count(*), 6) AS coherence
-    FROM scored_pairs GROUP BY cluster_id
-    """,
-)
-def c6_prob_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+def _lang_coherence(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(tfidf, assignments, coherence) for the lang cluster proxy: the
+    top-5 terms per cluster scored against the binary DFM."""
     tfidf = tfidf_long(docs)
     assignments = docs.select("doc_id", F.col("lang").alias("cluster_id"))
     topterms = cluster_term_scores(tfidf, assignments, top_n=5).select("cluster_id", "term", "rank")
@@ -229,7 +170,25 @@ def c6_prob_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set IS the binarized DFM (r16; halves the query's corpus passes)
     binary = binary_doc_term(tfidf.select("doc_id", "term"), assume_unique=True)
     n_docs = binary.select("doc_id").distinct().count()
-    return prob_coherence(binary, topterms, n_docs)
+    return tfidf, assignments, prob_coherence(binary, topterms, n_docs)
+
+
+# --- C6: probabilistic coherence (M5/A5) ----------------------------------------
+# Reference formula: 02_build_models.R:457-471; per-cluster mean
+# (02_build_models.R:346-348). Cluster proxy = lang, topic = top-5 terms.
+@query(
+    "c6_prob_coherence",
+    oracle=f"""
+    WITH {cluster_topterms_ctes()},
+    {coherence_ctes()}
+    SELECT cluster_id,
+           round(sum(CAST(round(score * 1000000) AS BIGINT))
+                 / 1000000.0 / count(*), 6) AS coherence
+    FROM scored_pairs GROUP BY cluster_id
+    """,
+)
+def c6_prob_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _lang_coherence(load_table(spark, sf_dir, "documents"))[2]
 
 
 # --- C7: QA summary (M12) --------------------------------------------------------
@@ -238,48 +197,9 @@ def c6_prob_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "c7_quality_summary",
     oracle=f"""
-    WITH {toks_cte()}, {unigram_cte()}, {tfidf_cte()},
-    assigned AS (
-      SELECT t.doc_id, t.term, t.weight, d.lang AS cluster_id
-      FROM tfidf t JOIN documents d ON t.doc_id = d.doc_id
-    ),
+    WITH {cluster_topterms_ctes()},
     sizes AS (SELECT cluster_id, count(DISTINCT doc_id) AS documents FROM assigned GROUP BY cluster_id),
-    scored AS (
-      SELECT cluster_id, term, round(sum(CAST(round(weight * 1000000) AS BIGINT))
-                   / 1000000.0, 6) AS score
-      FROM assigned GROUP BY cluster_id, term
-    ),
-    topterms AS (
-      SELECT cluster_id, term, rank FROM (
-        SELECT cluster_id, term, score,
-               row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, term ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 5
-    ),
-    bin_dfm AS (SELECT DISTINCT doc_id, term FROM tok),
-    ncorp AS (SELECT count(DISTINCT doc_id) AS n_corp FROM tok),
-    needed AS (SELECT DISTINCT term FROM topterms),
-    bsub AS (SELECT b.doc_id, b.term FROM bin_dfm b JOIN needed USING (term)),
-    dfc AS (SELECT term, count(*) AS df FROM bsub GROUP BY term),
-    co AS (
-      SELECT x.term AS ta, y.term AS tb, count(*) AS d_ij
-      FROM bsub x JOIN bsub y ON x.doc_id = y.doc_id AND x.term < y.term
-      GROUP BY x.term, y.term
-    ),
-    pairs AS (
-      SELECT a.cluster_id, a.term AS wi, b.term AS wj
-      FROM topterms a JOIN topterms b
-        ON a.cluster_id = b.cluster_id AND a.rank < b.rank
-    ),
-    scored_pairs AS (
-      SELECT p.cluster_id,
-             coalesce(c.d_ij, 0) * 1.0 / di.df - dj.df * 1.0 / ncorp.n_corp AS score
-      FROM pairs p
-      LEFT JOIN co c ON least(p.wi, p.wj) = c.ta AND greatest(p.wi, p.wj) = c.tb
-      JOIN dfc di ON p.wi = di.term
-      JOIN dfc dj ON p.wj = dj.term
-      CROSS JOIN ncorp
-    ),
+    {coherence_ctes()},
     coh AS (SELECT cluster_id,
                    round(sum(CAST(round(score * 1000000) AS BIGINT))
                          / 1000000.0 / count(*), 6) AS coherence
@@ -289,16 +209,7 @@ def c6_prob_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def c7_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    tfidf = tfidf_long(docs)
-    assignments = docs.select("doc_id", F.col("lang").alias("cluster_id"))
-    topterms = cluster_term_scores(tfidf, assignments, top_n=5).select("cluster_id", "term", "rank")
-    # same key-set identity as c6: the checkpointed tf-idf frame is one
-    # row per (doc_id, term) over the identical token stream — no second
-    # tokenize+distinct pass for the binary DFM
-    binary = binary_doc_term(tfidf.select("doc_id", "term"), assume_unique=True)
-    n_docs = binary.select("doc_id").distinct().count()
-    coh = prob_coherence(binary, topterms, n_docs)
+    tfidf, assignments, coh = _lang_coherence(load_table(spark, sf_dir, "documents"))
     sizes = (
         tfidf.join(assignments, "doc_id")
         .groupBy("cluster_id")

@@ -6,93 +6,71 @@ oracle-checkable because the hash is the engine-portable
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.analysis import (
+    fingerprint,
+    fingerprint_pair,
+    quality_score_from_ratios,
+    token_count,
+    with_fingerprint_pair,
+    with_quality_ratios,
+    with_quality_score,
+)
+from ..functions.text import ngrams, tokenize
 from ..io.sources import load_table
 from ..operators.dedup import (
+    cascade_ledger,
     connected_components,
+    cross_source_exposure,
     doc_shingles,
+    duplicated_windows,
     exact_dup_groups,
+    exact_then_near,
     jaccard_pairs,
-    lsh_bands,
+    lsh_admission_rejects,
     lsh_bands_from_wide,
     lsh_candidate_pairs,
     md5_long,
     minhash_dedup,
     minhash_signatures,
     minhash_wide,
+    representative_near_pairs,
+    shingle_df_audit,
     simhash,
     simhash_banded_near_dups,
     simhash_near_dups,
+    span_removed_positions,
     span_scrub_removals,
+    span_window_stream,
 )
 from ..operators.materialize import materialize
+from ..operators.waterfill import waterfill
 from .oracle_fragments import (
+    FPS_CTE,
     H60,
+    JACCARD_CTES,
+    NEAR_PAIRS_CTE,
+    REP_TOKS,
     SPAN_WIDTH,
-    materialize as materialize_ctes,
+    WATERFILL_CTES,
+    bands_ctes,
+    candidates_ctes,
+    cascade_ctes,
+    cascade_ledger_sql,
+    closure_ctes,
+    exposure_ctes,
+    materialized_ctes,
+    minhash_ctes,
     quality_cte,
+    shingles_ctes,
     span_scrub_ctes,
     stopword_list_sql,
     toks_cte,
+    waterfill_select,
 )
 from .registry import ORACLE_SQL, query
-
-# shared shingle CTE: distinct word-3-shingles per doc, keyed by the
-# 60-bit md5 long (mirrors doc_shingles — string keys never shuffle;
-# the distinct and every downstream join operate on the hashed BIGINT)
-_SHINGLES = f"""
-    {toks_cte()},
-    sh AS (
-      SELECT DISTINCT doc_id, {H60.format(x="s.shingle")} AS shingle
-      FROM (
-        SELECT doc_id,
-               unnest([toks[i]||' '||toks[i+1]||' '||toks[i+2] for i in range(1, len(toks) - 1)]) AS shingle
-        FROM toks WHERE len(toks) >= 3
-      ) s
-    )"""
-
-_MINHASH = f"""
-    {_SHINGLES},
-    mh AS (
-      SELECT doc_id, seed,
-             min({H60.format(x="seed::VARCHAR || ':' || shingle::VARCHAR")}) AS min_hash
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
-      GROUP BY doc_id, seed
-    )"""
-
-_BANDS = f"""
-    {_MINHASH},
-    bands AS (
-      SELECT doc_id, CAST(floor(seed / 2.0) AS INT) AS band,
-             {H60.format(x="string_agg(min_hash::VARCHAR, ',' ORDER BY seed)")} AS band_sig
-      FROM mh GROUP BY doc_id, CAST(floor(seed / 2.0) AS INT)
-    )"""
-
-_CANDIDATES = f"""
-    {_BANDS},
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    )"""
-
-_JACCARD = """
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    jac AS (
-      SELECT i.doc_a, i.doc_b,
-             round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) AS jaccard
-      FROM inter i
-      JOIN sizes sa ON i.doc_a = sa.doc_id
-      JOIN sizes sb ON i.doc_b = sb.doc_id
-    )"""
-
 
 # --- D1: exact duplicate groups ----------------------------------------------
 @query(
@@ -112,7 +90,7 @@ def d1_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d2_minhash_signatures",
     oracle=f"""
-    WITH {_MINHASH}
+    WITH {toks_cte()}, {minhash_ctes()}
     SELECT doc_id, seed, min_hash FROM mh
     """,
 )
@@ -125,7 +103,7 @@ def d2_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d3_lsh_candidate_pairs",
     oracle=f"""
-    WITH {_CANDIDATES}
+    WITH {toks_cte()}, {candidates_ctes()}
     SELECT doc_a, doc_b FROM cands
     """,
 )
@@ -140,8 +118,8 @@ def d3_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d4_minhash_dedup",
     oracle=f"""
-    WITH {_CANDIDATES},
-    {_JACCARD}
+    WITH {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES}
     SELECT j.doc_a, j.doc_b, j.jaccard
     FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
     WHERE j.jaccard >= 0.5
@@ -257,22 +235,10 @@ def d9_simhash_banded_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d10_neardup_components",
     oracle=f"""
-    WITH RECURSIVE {_CANDIDATES},
-    {_JACCARD},
-    pairs AS (
-      SELECT j.doc_a, j.doc_b
-      FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
-      WHERE j.jaccard >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS node, doc_b AS nbr FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    )
+    WITH RECURSIVE {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
+    {NEAR_PAIRS_CTE},
+    {closure_ctes()}
     SELECT node AS doc_id, min(label) AS component_id
     FROM reach GROUP BY node
     """,
@@ -286,8 +252,8 @@ def d10_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d7_jaccard_pairs",
     oracle=f"""
-    WITH {_SHINGLES},
-    {_JACCARD}
+    WITH {toks_cte()}, {shingles_ctes()},
+    {JACCARD_CTES}
     SELECT doc_a, doc_b, jaccard FROM jac WHERE jaccard >= 0.2
     """,
 )
@@ -304,7 +270,7 @@ def d7_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d8_jaccard_capped",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     capped AS (
       SELECT doc_id, shingle FROM (
         SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
@@ -342,22 +308,10 @@ def d8_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur2_component_survivors",
     oracle=f"""
-    WITH RECURSIVE {_CANDIDATES},
-    {_JACCARD},
-    pairs AS (
-      SELECT j.doc_a, j.doc_b
-      FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
-      WHERE j.jaccard >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS node, doc_b AS nbr FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    ),
+    WITH RECURSIVE {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
+    {NEAR_PAIRS_CTE},
+    {closure_ctes()},
     comp AS (SELECT node AS doc_id, min(label) AS component_id FROM reach GROUP BY node),
     q AS (
       SELECT t.doc_id,
@@ -380,8 +334,6 @@ def d8_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur2_component_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import with_quality_score
-
     docs = load_table(spark, sf_dir, "documents")
     comp = connected_components(minhash_dedup(docs, threshold=0.5))
     scored = with_quality_score(
@@ -423,7 +375,7 @@ def cur2_component_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur3_decontaminate",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     eval_sh AS (
       SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0
     )
@@ -475,10 +427,6 @@ def cur3_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur4_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.analysis import fingerprint
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     fps = docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
     corpus_fps = fps.where(F.col("doc_id") % 10 < 8).select("fp").distinct()
@@ -532,8 +480,6 @@ def cur4_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur5_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).where(
         F.size("toks") >= 8
@@ -580,7 +526,7 @@ def cur5_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d11_containment_pairs",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     capped AS (
       SELECT doc_id, shingle FROM (
         SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
@@ -621,8 +567,8 @@ def d11_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d12_cross_source_dups",
     oracle=f"""
-    WITH {_CANDIDATES},
-    {_JACCARD},
+    WITH {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
     pairs AS (
       SELECT j.doc_a, j.doc_b, j.jaccard
       FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
@@ -728,8 +674,6 @@ def d12_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur6_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     t8 = materialize(
         docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
@@ -818,10 +762,6 @@ def cur6_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d14_source_dup_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.analysis import fingerprint
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     fps = docs.select("doc_id", "source", fingerprint(F.col("text")).alias("fp"))
     marked = fps.withColumn(
@@ -877,8 +817,6 @@ def d14_source_dup_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).where(
         F.size("toks") >= 8
@@ -929,8 +867,8 @@ def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d16_minhash_estimate_audit",
     oracle=f"""
-    WITH {_CANDIDATES},
-    {_JACCARD},
+    WITH {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
     est AS (
       SELECT ma.doc_id AS doc_a, mb.doc_id AS doc_b,
              sum(CASE WHEN ma.min_hash = mb.min_hash THEN 1 ELSE 0 END) / 8.0
@@ -948,13 +886,6 @@ def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d16_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (
-        jaccard_pairs,
-        lsh_bands_from_wide,
-        lsh_candidate_pairs,
-        minhash_wide,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sh = materialize(doc_shingles(docs, k=3))
     wide = minhash_wide(sh, num_hashes=8)
@@ -999,8 +930,8 @@ def d16_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d17_lsh_precision",
     oracle=f"""
-    WITH {_CANDIDATES},
-    {_JACCARD},
+    WITH {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
     verified AS (
       SELECT j.jaccard
       FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
@@ -1063,9 +994,6 @@ def d17_lsh_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x26_crosslang_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import fingerprint
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # ONE tokenize pass feeds both grains (fingerprint is md5 over the
     # same token array the template prefix slices)
@@ -1119,8 +1047,6 @@ def x26_crosslang_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x27_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import fingerprint, token_count
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # THREE consumers (survivor keys, survivor join, raw totals) — the
     # d4 discipline: materialize the doc-level projection once instead
@@ -1168,22 +1094,10 @@ def x27_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d18_component_size_histogram",
     oracle=f"""
-    WITH RECURSIVE {_CANDIDATES},
-    {_JACCARD},
-    pairs AS (
-      SELECT j.doc_a, j.doc_b
-      FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
-      WHERE j.jaccard >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS node, doc_b AS nbr FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    ),
+    WITH RECURSIVE {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
+    {NEAR_PAIRS_CTE},
+    {closure_ctes()},
     comp AS (SELECT node, min(label) AS component_id FROM reach GROUP BY node),
     csizes AS (SELECT component_id, count(*) AS size FROM comp GROUP BY component_id)
     SELECT size, count(*) AS n_components,
@@ -1216,22 +1130,10 @@ def d18_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur8_dedup_quality_interaction",
     oracle=f"""
-    WITH RECURSIVE {_CANDIDATES},
-    {_JACCARD},
-    pairs AS (
-      SELECT j.doc_a, j.doc_b
-      FROM jac j JOIN cands c ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
-      WHERE j.jaccard >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS node, doc_b AS nbr FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    ),
+    WITH RECURSIVE {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
+    {NEAR_PAIRS_CTE},
+    {closure_ctes()},
     removed AS (
       SELECT node AS doc_id FROM reach GROUP BY node HAVING node <> min(label)
     ),
@@ -1254,10 +1156,6 @@ def d18_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur8_dedup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.analysis import with_quality_score
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     comp = connected_components(minhash_dedup(docs, threshold=0.5))
     removed = comp.where(F.col("doc_id") != F.col("component_id")).select(
@@ -1312,7 +1210,7 @@ def cur8_dedup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFram
 @query(
     "cur9_split_leakage",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     lab AS (
       SELECT doc_id, shingle,
              CASE WHEN ('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15))::BIGINT % 100 < 90 THEN 'train'
@@ -1338,8 +1236,6 @@ def cur8_dedup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def cur9_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_long
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     sh = doc_shingles(docs, k=3)
     bucket = F.pmod(md5_long(F.col("doc_id").cast("string")), F.lit(100))
@@ -1392,14 +1288,14 @@ def cur9_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur10_incremental_neardup",
     oracle=f"""
-    WITH {_BANDS},
+    WITH {toks_cte()}, {bands_ctes()},
     xc AS (
       SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
                       greatest(a.doc_id, b.doc_id) AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
       WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
     ),
-    {_JACCARD},
+    {JACCARD_CTES},
     rejected AS (
       SELECT DISTINCT CASE WHEN j.doc_a % 2 = 1 THEN j.doc_a ELSE j.doc_b END AS new_doc
       FROM jac j JOIN xc ON j.doc_a = xc.doc_a AND j.doc_b = xc.doc_b
@@ -1419,12 +1315,6 @@ def cur9_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (
-        lsh_admission_rejects,
-        lsh_bands_from_wide,
-        minhash_wide,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 2 == 1
     # one tokenize/shingle/band build over BOTH halves, split by parity
@@ -1472,7 +1362,7 @@ def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d19_shingle_df_audit",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
     hist AS (
       SELECT df, count(*) AS n_shingles, CAST(df * count(*) AS BIGINT) AS n_postings
@@ -1486,8 +1376,6 @@ def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d19_shingle_df_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import shingle_df_audit
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     return shingle_df_audit(doc_shingles(docs, k=3), cap=20)
 
@@ -1521,25 +1409,7 @@ def d19_shingle_df_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents WHERE text IS NOT NULL
     ),
     {toks_cte(table="snap")},
-    sh AS (
-      SELECT DISTINCT doc_id, {H60.format(x="s.shingle")} AS shingle
-      FROM (
-        SELECT doc_id,
-               unnest([toks[i]||' '||toks[i+1]||' '||toks[i+2] for i in range(1, len(toks) - 1)]) AS shingle
-        FROM toks WHERE len(toks) >= 3
-      ) s
-    ),
-    mh AS (
-      SELECT doc_id, seed,
-             min({H60.format(x="seed::VARCHAR || ':' || shingle::VARCHAR")}) AS min_hash
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(floor(seed / 2.0) AS INT) AS band,
-             {H60.format(x="string_agg(min_hash::VARCHAR, ',' ORDER BY seed)")} AS band_sig
-      FROM mh GROUP BY doc_id, CAST(floor(seed / 2.0) AS INT)
-    ),
+    {bands_ctes()},
     xc AS (
       SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
                       greatest(a.doc_id, b.doc_id) AS doc_b
@@ -1548,7 +1418,7 @@ def d19_shingle_df_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN snap sb ON sb.doc_id = b.doc_id
       WHERE sa.status <> 'unchanged' AND sb.status = 'unchanged'
     ),
-    {_JACCARD},
+    {JACCARD_CTES},
     rejected AS (
       SELECT DISTINCT CASE WHEN sa.status <> 'unchanged' THEN j.doc_a ELSE j.doc_b END AS delta_doc
       FROM jac j
@@ -1567,13 +1437,6 @@ def d19_shingle_df_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import fingerprint_pair
-    from ..operators.dedup import (
-        lsh_admission_rejects,
-        lsh_bands_from_wide,
-        minhash_wide,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # snapshot A (old version): doc_id % 7 == 0 docs don't exist yet
     old = docs.where(F.col("doc_id") % 7 != 0).select(
@@ -1649,7 +1512,7 @@ def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur13_decontamination_sweep",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     ov AS (
       SELECT s.doc_id, count(*) AS n_shared
@@ -1737,7 +1600,7 @@ def cur13_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur14_bloom_decontamination",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     bits AS (
       SELECT DISTINCT {H60.format(x="k.i::VARCHAR || ':' || ev.shingle::VARCHAR")} % 8192 AS bit
@@ -1921,11 +1784,11 @@ def _band_config_select(r: int) -> str:
     # re-ran the 113M-row intersection aggregate per branch and spilled
     # >80 GB of temp (filled the disk, 772 s, killed). Materialized, the
     # same query finishes in 160 s with zero spill. See
-    # oracle_fragments.materialize for the measurements.
-    oracle=materialize_ctes(
+    # oracle_fragments.materialized_ctes for the measurements.
+    oracle=materialized_ctes(
         f"""
-    WITH {_MINHASH},
-    {_JACCARD},
+    WITH {toks_cte()}, {minhash_ctes()},
+    {JACCARD_CTES},
     truth AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.5),
     nt AS (SELECT count(*) AS n FROM truth),
     {",".join(_band_config_cte(r) for r in (1, 2, 4))},
@@ -1993,7 +1856,7 @@ def d20_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur15_decontamination_impact",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     flagged AS (
       SELECT s.doc_id FROM sh s JOIN ev USING (shingle)
@@ -2031,8 +1894,6 @@ def d20_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur15_decontamination_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import token_count
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_eval = F.col("doc_id") % 97 == 0
     sh = doc_shingles(docs, k=3)
@@ -2125,14 +1986,14 @@ def cur15_decontamination_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur16_neardup_split_leakage",
     oracle=f"""
-    WITH {_BANDS},
+    WITH {toks_cte()}, {bands_ctes()},
     xc AS (
       SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
                       greatest(a.doc_id, b.doc_id) AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
       WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
     ),
-    {_JACCARD},
+    {JACCARD_CTES},
     leaked AS (
       SELECT DISTINCT CASE WHEN j.doc_a % 10 = 0 THEN j.doc_a ELSE j.doc_b END AS doc_id
       FROM jac j JOIN xc ON j.doc_a = xc.doc_a AND j.doc_b = xc.doc_b
@@ -2157,13 +2018,6 @@ def cur15_decontamination_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import token_count
-    from ..operators.dedup import (
-        lsh_admission_rejects,
-        lsh_bands_from_wide,
-        minhash_wide,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_test = F.col("doc_id") % 10 == 0
     # one shingle/band build over BOTH splits (the cur10 checkpoint
@@ -2229,7 +2083,7 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ep10_release_roadmap",
     oracle=f"""
-    WITH {_BANDS},
+    WITH {toks_cte()}, {bands_ctes()},
     ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     contaminated AS (
       SELECT s.doc_id FROM sh s JOIN ev USING (shingle)
@@ -2243,7 +2097,7 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE a.doc_id % 10 <> 0 AND a.doc_id % 97 <> 0
         AND b.doc_id % 10 = 0 AND b.doc_id % 97 <> 0
     ),
-    {_JACCARD},
+    {JACCARD_CTES},
     leaked AS (
       SELECT DISTINCT CASE WHEN j.doc_a % 10 <> 0 THEN j.doc_a ELSE j.doc_b END AS doc_id
       FROM jac j JOIN xc ON j.doc_a = xc.doc_a AND j.doc_b = xc.doc_b
@@ -2285,13 +2139,6 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import token_count
-    from ..operators.dedup import (
-        lsh_admission_rejects,
-        lsh_bands_from_wide,
-        minhash_wide,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_test = F.col("doc_id") % 10 == 0
     is_eval = F.col("doc_id") % 97 == 0
@@ -2390,7 +2237,7 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cur17_bloom_sizing_sweep",
     oracle=f"""
-    WITH {_SHINGLES},
+    WITH {toks_cte()}, {shingles_ctes()},
     ms AS (SELECT unnest([2048, 8192, 32768]) AS m),
     ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     evh AS (
@@ -2572,9 +2419,6 @@ def cur17_bloom_sizing_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.replace("{toks}", toks_cte()),
 )
 def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import token_count
-    from ..functions.text import ngrams, tokenize
-
     NS = (5, 9, 13)
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_eval = F.col("doc_id") % 97 == 0
@@ -2647,12 +2491,12 @@ def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataF
 @query(
     "d21_jaccard_threshold_sweep",
     # materialize(): same CTE-inlining hazard d20 hit at sf1 (cands is
-    # referenced by cj AND nc; sh three times through _JACCARD) — see
-    # oracle_fragments.materialize.
-    oracle=materialize_ctes(
+    # referenced by cj AND nc; sh three times through JACCARD_CTES) — see
+    # oracle_fragments.materialized_ctes.
+    oracle=materialized_ctes(
         f"""
-    WITH {_CANDIDATES},
-    {_JACCARD},
+    WITH {toks_cte()}, {candidates_ctes()},
+    {JACCARD_CTES},
     cj AS (
       SELECT j.doc_a, j.doc_b, j.jaccard
       FROM jac j JOIN cands c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
@@ -2680,13 +2524,6 @@ def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataF
     ),
 )
 def d21_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (
-        jaccard_pairs,
-        lsh_bands_from_wide,
-        lsh_candidate_pairs,
-        minhash_wide,
-    )
-
     TS = (0.5, 0.7, 0.9)
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     sh = materialize(doc_shingles(docs, k=3))  # consumers: bands + verify
@@ -2790,10 +2627,6 @@ def d21_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d22_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).where(
         F.size("toks") >= 8
@@ -2869,113 +2702,17 @@ def d22_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d23_dedup_cascade",
     oracle=f"""
     WITH {toks_cte()},
-    fps AS (
-      SELECT t.doc_id, d.source,
-             md5(coalesce(array_to_string(t.toks, ' '), '')) AS fp
-      FROM toks t JOIN documents d USING (doc_id)
-    ),
-    grp AS (SELECT fp, min(doc_id) AS rep FROM fps GROUP BY fp),
-    cls AS (SELECT f.doc_id, f.source, g.rep FROM fps f JOIN grp g USING (fp)),
-    sh AS (
-      SELECT DISTINCT s.doc_id, {H60.format(x="s.shingle")} AS shingle
-      FROM (
-        SELECT t.doc_id,
-               unnest([t.toks[i]||' '||t.toks[i+1]||' '||t.toks[i+2]
-                       for i in range(1, len(t.toks) - 1)]) AS shingle
-        FROM toks t JOIN grp g ON g.rep = t.doc_id WHERE len(t.toks) >= 3
-      ) s
-    ),
-    mh AS (
-      SELECT doc_id, seed,
-             min({H60.format(x="seed::VARCHAR || ':' || shingle::VARCHAR")}) AS min_hash
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(floor(seed / 2.0) AS INT) AS band,
-             {H60.format(x="string_agg(min_hash::VARCHAR, ',' ORDER BY seed)")} AS band_sig
-      FROM mh GROUP BY doc_id, CAST(floor(seed / 2.0) AS INT)
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    near AS (
-      SELECT DISTINCT i.doc_b AS rep
-      FROM inter i
-      JOIN cands c ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-      JOIN sizes sa ON i.doc_a = sa.doc_id
-      JOIN sizes sb ON i.doc_b = sb.doc_id
-      WHERE round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) >= 0.5
-    )
-    SELECT c.source,
-           count(*) AS n_docs,
-           CAST(sum(CASE WHEN c.doc_id <> c.rep THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact_dropped,
-           CAST(sum(CASE WHEN c.doc_id = c.rep AND n.rep IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_near_dropped,
-           CAST(sum(CASE WHEN c.doc_id = c.rep AND n.rep IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_survivors,
-           round(sum(CASE WHEN c.doc_id <> c.rep THEN 1 ELSE 0 END)
-                 / CAST(count(*) AS DOUBLE), 6) AS exact_drop_rate,
-           round(sum(CASE WHEN c.doc_id = c.rep AND n.rep IS NOT NULL
-                         THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6)
-             AS near_drop_rate,
-           round(sum(CASE WHEN c.doc_id = c.rep AND n.rep IS NULL
-                         THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6)
-             AS survival_rate
+    {cascade_ctes()},
+    cls AS (SELECT f.doc_id, f.source, g.rep FROM fps f JOIN grp g USING (fp))
+    SELECT {cascade_ledger_sql('n.rep')}
     FROM cls c LEFT JOIN near n ON n.rep = c.doc_id
     GROUP BY c.source
     """,
 )
 def d23_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.analysis import fingerprint_pair
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # stage 1: exact groups on the 120-bit long-pair fingerprint (never
-    # surfaced — the ep5 key discipline: 16-byte shuffle keys, collision
-    # budget n²/2^121)
-    fps = materialize(docs.select(
-        "doc_id", "source", fingerprint_pair(F.col("text")).alias("fp")
-    ))  # 2 consumers: group build + per-doc classification
-    grp = fps.groupBy("fp").agg(F.min("doc_id").alias("rep"))
-    cls = fps.join(grp, "fp").select("doc_id", "source", "rep")
-    # stage 2: LSH near-dup over REPRESENTATIVES only — exact clusters
-    # collapse to one node before any candidate pair is enumerated
-    reps = docs.join(
-        grp.select(F.col("rep").alias("doc_id")).distinct(), "doc_id"
-    ).select("doc_id", "text")
-    pairs = minhash_dedup(reps, k=3, num_hashes=8, rows_per_band=2, threshold=0.5)
-    near = pairs.select(F.col("doc_b").alias("near_rep")).distinct()
-    marked = cls.join(near, cls.doc_id == near.near_rep, "left")
-    is_exact_drop = F.col("doc_id") != F.col("rep")
-    is_near_drop = (F.col("doc_id") == F.col("rep")) & F.col("near_rep").isNotNull()
-    is_survivor = (F.col("doc_id") == F.col("rep")) & F.col("near_rep").isNull()
-    return marked.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(is_exact_drop, 1).otherwise(0)).cast("long").alias("n_exact_dropped"),
-        F.sum(F.when(is_near_drop, 1).otherwise(0)).cast("long").alias("n_near_dropped"),
-        F.sum(F.when(is_survivor, 1).otherwise(0)).cast("long").alias("n_survivors"),
-        F.round(
-            F.sum(F.when(is_exact_drop, 1).otherwise(0)) / F.count("*").cast("double"),
-            6,
-        ).alias("exact_drop_rate"),
-        F.round(
-            F.sum(F.when(is_near_drop, 1).otherwise(0)) / F.count("*").cast("double"),
-            6,
-        ).alias("near_drop_rate"),
-        F.round(
-            F.sum(F.when(is_survivor, 1).otherwise(0)) / F.count("*").cast("double"),
-            6,
-        ).alias("survival_rate"),
-    )
+    cls, near = exact_then_near(docs)
+    return cascade_ledger(cls.join(near, cls.doc_id == near.near_rep, "left"), "near_rep")
 
 
 # --- EP13: cascade-then-budget release roadmap --------------------------------------
@@ -2994,51 +2731,7 @@ def d23_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ep13_dedup_budget_roadmap",
     oracle=f"""
     WITH {toks_cte()},
-    fps AS (
-      SELECT t.doc_id, d.source,
-             md5(coalesce(array_to_string(t.toks, ' '), '')) AS fp
-      FROM toks t JOIN documents d USING (doc_id)
-    ),
-    grp AS (SELECT fp, min(doc_id) AS rep FROM fps GROUP BY fp),
-    sh AS (
-      SELECT DISTINCT s.doc_id, {H60.format(x="s.shingle")} AS shingle
-      FROM (
-        SELECT t.doc_id,
-               unnest([t.toks[i]||' '||t.toks[i+1]||' '||t.toks[i+2]
-                       for i in range(1, len(t.toks) - 1)]) AS shingle
-        FROM toks t JOIN grp g ON g.rep = t.doc_id WHERE len(t.toks) >= 3
-      ) s
-    ),
-    mh AS (
-      SELECT doc_id, seed,
-             min({H60.format(x="seed::VARCHAR || ':' || shingle::VARCHAR")}) AS min_hash
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(floor(seed / 2.0) AS INT) AS band,
-             {H60.format(x="string_agg(min_hash::VARCHAR, ',' ORDER BY seed)")} AS band_sig
-      FROM mh GROUP BY doc_id, CAST(floor(seed / 2.0) AS INT)
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    near AS (
-      SELECT DISTINCT i.doc_b AS rep
-      FROM inter i
-      JOIN cands c ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-      JOIN sizes sa ON i.doc_a = sa.doc_id
-      JOIN sizes sb ON i.doc_b = sb.doc_id
-      WHERE round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) >= 0.5
-    ),
+    {cascade_ctes()},
     survivors AS (
       SELECT f.doc_id, f.source
       FROM fps f JOIN grp g USING (fp)
@@ -3053,65 +2746,18 @@ def d23_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM survivors s JOIN toks t USING (doc_id)
       GROUP BY s.source
     ),
-    tot AS (
-      SELECT CAST(sum(n_tokens) // 2 AS BIGINT) AS b, count(*) AS n FROM per_src
-    ),
-    ranked AS (
-      SELECT p.*, t.b, t.n,
-             row_number() OVER (ORDER BY p.cap_tokens, p.source) AS i,
-             CAST(sum(p.cap_tokens) OVER (ORDER BY p.cap_tokens, p.source
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix
-      FROM per_src p CROSS JOIN tot t
-    ),
-    marked AS (
-      SELECT r.*,
-             (r.cap_tokens * (r.n - r.i + 1) <= r.b - (r.prefix - r.cap_tokens))
-               AS is_capped
-      FROM ranked r
-    ),
-    lvl AS (
-      SELECT CAST(coalesce(sum(CASE WHEN is_capped THEN cap_tokens END), 0) AS BIGINT)
-               AS p_k,
-             CAST(sum(CASE WHEN is_capped THEN 1 ELSE 0 END) AS BIGINT) AS k
-      FROM marked
-    )
-    SELECT m.source, m.n_survivors, m.n_tokens, m.cap_tokens, m.is_capped,
-           CAST(m.b AS BIGINT) AS budget_tokens,
-           round(CASE WHEN m.is_capped THEN m.cap_tokens / 1.0
-                      ELSE (m.b - l.p_k) / (m.n - l.k) END, 6) AS alloc_tokens,
-           round(CASE WHEN m.is_capped THEN m.cap_tokens / m.b
-                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.b) END, 6) AS alloc_share,
-           round(CASE WHEN m.cap_tokens = 0 THEN 0.0
-                      WHEN m.is_capped THEN 4.0
-                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.n_tokens) END, 6)
-             AS epochs_equiv
-    FROM marked m CROSS JOIN lvl l
+    {WATERFILL_CTES}
+    {waterfill_select('m.source', 'm.n_survivors')}
     """,
 )
 def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.analysis import fingerprint_pair, token_count
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # d23's cascade, survivor-set form: exact groups on the 120-bit
-    # fingerprint, LSH near-dup over the representatives only
-    fps = materialize(docs.select(
-        "doc_id", "source", fingerprint_pair(F.col("text")).alias("fp")
-    ))  # 2 consumers: group build + survivor classification
-    grp = fps.groupBy("fp").agg(F.min("doc_id").alias("rep"))
-    reps = docs.join(
-        grp.select(F.col("rep").alias("doc_id")).distinct(), "doc_id"
-    ).select("doc_id", "text")
-    pairs = minhash_dedup(reps, k=3, num_hashes=8, rows_per_band=2, threshold=0.5)
-    near = pairs.select(F.col("doc_b").alias("near_rep")).distinct()
+    cls, near = exact_then_near(docs)
     survivors = (
-        fps.join(grp, "fp")
-        .where(F.col("doc_id") == F.col("rep"))
+        cls.where(F.col("doc_id") == F.col("rep"))
         .join(near, F.col("doc_id") == F.col("near_rep"), "left_anti")
         .select("doc_id", "source")
     )
-    # mix9's integer-exact water-fill over the SURVIVING token mass
     per_src = materialize(
         survivors.join(docs.select("doc_id", "text"), "doc_id")
         .groupBy("source")
@@ -3123,63 +2769,7 @@ def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cap_tokens"),
         )
     )  # |sources| rows; totals + window + level reuse it
-    tot = per_src.agg(
-        F.expr("sum(n_tokens) div 2").cast("long").alias("b"),
-        F.count("*").alias("n"),
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy("cap_tokens", "source")
-    ranked = per_src.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_survivors",
-        "n_tokens",
-        "cap_tokens",
-        "b",
-        "n",
-        F.row_number().over(w).alias("i"),
-        F.sum("cap_tokens")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long")
-        .alias("prefix"),
-    )
-    marked = materialize(ranked.withColumn(
-        "is_capped",
-        F.col("cap_tokens") * (F.col("n") - F.col("i") + 1)
-        <= F.col("b") - (F.col("prefix") - F.col("cap_tokens")),
-    ))  # 2 consumers: the level aggregate + the report
-    lvl = marked.agg(
-        F.coalesce(F.sum(F.when(F.col("is_capped"), F.col("cap_tokens"))), F.lit(0))
-        .cast("long")
-        .alias("p_k"),
-        F.sum(F.when(F.col("is_capped"), 1).otherwise(0)).cast("long").alias("k"),
-    )
-    rem_num = F.col("b") - F.col("p_k")
-    rem_den = F.col("n") - F.col("k")
-    return marked.crossJoin(F.broadcast(lvl)).select(  # singleton level row
-        "source",
-        "n_survivors",
-        "n_tokens",
-        "cap_tokens",
-        "is_capped",
-        F.col("b").cast("long").alias("budget_tokens"),
-        F.round(
-            F.when(F.col("is_capped"), F.col("cap_tokens") / F.lit(1.0)).otherwise(
-                rem_num / rem_den
-            ),
-            6,
-        ).alias("alloc_tokens"),
-        F.round(
-            F.when(F.col("is_capped"), F.col("cap_tokens") / F.col("b")).otherwise(
-                rem_num / (rem_den * F.col("b"))
-            ),
-            6,
-        ).alias("alloc_share"),
-        F.round(
-            F.when(F.col("cap_tokens") == 0, F.lit(0.0))
-            .when(F.col("is_capped"), F.lit(4.0))
-            .otherwise(rem_num / (rem_den * F.col("n_tokens"))),
-            6,
-        ).alias("epochs_equiv"),
-    )
+    return waterfill(per_src)
 
 
 # --- D24: exact-substring span SCRUB (the transform d22's report feeds) --------------
@@ -3227,8 +2817,6 @@ def ep13_dedup_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d24_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     t8 = materialize(
         docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
@@ -3294,57 +2882,21 @@ def d24_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM base b LEFT JOIN rc ON rc.doc_id = b.doc_id
       GROUP BY b.source
     ),
-    tot AS (
-      SELECT CAST(sum(n_tokens) // 2 AS BIGINT) AS b, count(*) AS n FROM per_src
-    ),
-    ranked AS (
-      SELECT p.*, t.b, t.n,
-             row_number() OVER (ORDER BY p.cap_tokens, p.source) AS i,
-             CAST(sum(p.cap_tokens) OVER (ORDER BY p.cap_tokens, p.source
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix
-      FROM per_src p CROSS JOIN tot t
-    ),
-    marked AS (
-      SELECT r.*,
-             (r.cap_tokens * (r.n - r.i + 1) <= r.b - (r.prefix - r.cap_tokens))
-               AS is_capped
-      FROM ranked r
-    ),
-    lvl AS (
-      SELECT CAST(coalesce(sum(CASE WHEN is_capped THEN cap_tokens END), 0) AS BIGINT)
-               AS p_k,
-             CAST(sum(CASE WHEN is_capped THEN 1 ELSE 0 END) AS BIGINT) AS k
-      FROM marked
-    )
-    SELECT m.source, m.n_docs, m.tokens_before, m.tokens_removed,
-           round(CASE WHEN m.tokens_before = 0 THEN 0.0
-                      ELSE m.tokens_removed / m.tokens_before END, 6)
-             AS removed_frac,
-           m.n_tokens, m.cap_tokens, m.is_capped,
-           CAST(m.b AS BIGINT) AS budget_tokens,
-           round(CASE WHEN m.is_capped THEN m.cap_tokens / 1.0
-                      ELSE (m.b - l.p_k) / (m.n - l.k) END, 6) AS alloc_tokens,
-           round(CASE WHEN m.is_capped THEN m.cap_tokens / m.b
-                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.b) END, 6) AS alloc_share,
-           round(CASE WHEN m.cap_tokens = 0 THEN 0.0
-                      WHEN m.is_capped THEN 4.0
-                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.n_tokens) END, 6)
-             AS epochs_equiv
-    FROM marked m CROSS JOIN lvl l
+    {WATERFILL_CTES}
+    {waterfill_select(
+        'm.source', 'm.n_docs', 'm.tokens_before', 'm.tokens_removed',
+        'round(CASE WHEN m.tokens_before = 0 THEN 0.0'
+        ' ELSE m.tokens_removed / m.tokens_before END, 6) AS removed_frac',
+    )}
     """,
 )
 def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = materialize(docs.select(
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
     ))  # 2 consumers: the window stream + the corpus mass
     t8 = toks.where(F.size("toks") >= SPAN_WIDTH)
-    # d24's removal pipeline (shared operator), counts only — no
-    # reassembly join here
+    # d24's removal pipeline, counts only — no reassembly join here
     rc = span_scrub_removals(t8).groupBy("doc_id").agg(
         F.count("*").alias("n_removed")
     )
@@ -3359,74 +2911,22 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.size("toks") - nrem).cast("long").alias("n_tokens"),
             (F.lit(4) * F.sum(F.size("toks") - nrem)).cast("long").alias("cap_tokens"),
         )
+        .select(
+            "source",
+            "n_docs",
+            "tokens_before",
+            "tokens_removed",
+            F.round(
+                F.when(F.col("tokens_before") == 0, F.lit(0.0)).otherwise(
+                    F.col("tokens_removed") / F.col("tokens_before")
+                ),
+                6,
+            ).alias("removed_frac"),
+            "n_tokens",
+            "cap_tokens",
+        )
     )  # |sources| rows; totals + window + level reuse it
-    tot = per_src.agg(
-        F.expr("sum(n_tokens) div 2").cast("long").alias("b"),
-        F.count("*").alias("n"),
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy("cap_tokens", "source")
-    ranked = per_src.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        "tokens_before",
-        "tokens_removed",
-        "n_tokens",
-        "cap_tokens",
-        "b",
-        "n",
-        F.row_number().over(w).alias("i"),
-        F.sum("cap_tokens")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long")
-        .alias("prefix"),
-    )
-    marked = materialize(ranked.withColumn(
-        "is_capped",
-        F.col("cap_tokens") * (F.col("n") - F.col("i") + 1)
-        <= F.col("b") - (F.col("prefix") - F.col("cap_tokens")),
-    ))  # 2 consumers: the level aggregate + the report
-    lvl = marked.agg(
-        F.coalesce(F.sum(F.when(F.col("is_capped"), F.col("cap_tokens"))), F.lit(0))
-        .cast("long")
-        .alias("p_k"),
-        F.sum(F.when(F.col("is_capped"), 1).otherwise(0)).cast("long").alias("k"),
-    )
-    rem_num = F.col("b") - F.col("p_k")
-    rem_den = F.col("n") - F.col("k")
-    return marked.crossJoin(F.broadcast(lvl)).select(  # singleton level row
-        "source",
-        "n_docs",
-        "tokens_before",
-        "tokens_removed",
-        F.round(
-            F.when(F.col("tokens_before") == 0, F.lit(0.0)).otherwise(
-                F.col("tokens_removed") / F.col("tokens_before")
-            ),
-            6,
-        ).alias("removed_frac"),
-        "n_tokens",
-        "cap_tokens",
-        "is_capped",
-        F.col("b").cast("long").alias("budget_tokens"),
-        F.round(
-            F.when(F.col("is_capped"), F.col("cap_tokens") / F.lit(1.0)).otherwise(
-                rem_num / rem_den
-            ),
-            6,
-        ).alias("alloc_tokens"),
-        F.round(
-            F.when(F.col("is_capped"), F.col("cap_tokens") / F.col("b")).otherwise(
-                rem_num / (rem_den * F.col("b"))
-            ),
-            6,
-        ).alias("alloc_share"),
-        F.round(
-            F.when(F.col("cap_tokens") == 0, F.lit(0.0))
-            .when(F.col("is_capped"), F.lit(4.0))
-            .otherwise(rem_num / (rem_den * F.col("n_tokens"))),
-            6,
-        ).alias("epochs_equiv"),
-    )
+    return waterfill(per_src)
 
 
 # --- D25: cascade with the QUALITY survivor policy (d23 ∘ cur2) ----------------------
@@ -3461,11 +2961,7 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {toks_cte()},
     {quality_cte()},
-    fps AS (
-      SELECT t.doc_id, d.source,
-             md5(coalesce(array_to_string(t.toks, ' '), '')) AS fp
-      FROM toks t JOIN documents d USING (doc_id)
-    ),
+    {FPS_CTE},
     fq AS (
       SELECT f.doc_id, f.source, f.fp, q.quality_score AS q
       FROM fps f JOIN qual q ON q.doc_id = f.doc_id
@@ -3478,54 +2974,10 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT f.doc_id, f.source, g.rep, f.q
       FROM fq f JOIN grp g USING (fp)
     ),
-    sh AS (
-      SELECT DISTINCT s.doc_id, {H60.format(x="s.shingle")} AS shingle
-      FROM (
-        SELECT t.doc_id,
-               unnest([t.toks[i]||' '||t.toks[i+1]||' '||t.toks[i+2]
-                       for i in range(1, len(t.toks) - 1)]) AS shingle
-        FROM toks t JOIN grp g ON g.rep = t.doc_id WHERE len(t.toks) >= 3
-      ) s
-    ),
-    mh AS (
-      SELECT doc_id, seed,
-             min({H60.format(x="seed::VARCHAR || ':' || shingle::VARCHAR")}) AS min_hash
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(floor(seed / 2.0) AS INT) AS band,
-             {H60.format(x="string_agg(min_hash::VARCHAR, ',' ORDER BY seed)")} AS band_sig
-      FROM mh GROUP BY doc_id, CAST(floor(seed / 2.0) AS INT)
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    pairs AS (
-      SELECT i.doc_a, i.doc_b
-      FROM inter i
-      JOIN cands c ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-      JOIN sizes sa ON i.doc_a = sa.doc_id
-      JOIN sizes sb ON i.doc_b = sb.doc_id
-      WHERE round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS node, doc_b AS nbr FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    ),
+    {candidates_ctes(REP_TOKS)},
+    {JACCARD_CTES},
+    {NEAR_PAIRS_CTE},
+    {closure_ctes()},
     comp AS (SELECT node AS doc_id, min(label) AS component_id FROM reach GROUP BY node),
     membered AS (
       SELECT c.doc_id, coalesce(cp.component_id, c.doc_id) AS component_id, c.q
@@ -3541,22 +2993,7 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT m.doc_id FROM membered m JOIN surv s USING (component_id)
       WHERE m.doc_id <> s.survivor
     )
-    SELECT c.source,
-           count(*) AS n_docs,
-           CAST(sum(CASE WHEN c.doc_id <> c.rep THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact_dropped,
-           CAST(sum(CASE WHEN c.doc_id = c.rep AND n.doc_id IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_near_dropped,
-           CAST(sum(CASE WHEN c.doc_id = c.rep AND n.doc_id IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_survivors,
-           round(sum(CASE WHEN c.doc_id <> c.rep THEN 1 ELSE 0 END)
-                 / CAST(count(*) AS DOUBLE), 6) AS exact_drop_rate,
-           round(sum(CASE WHEN c.doc_id = c.rep AND n.doc_id IS NOT NULL
-                         THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6)
-             AS near_drop_rate,
-           round(sum(CASE WHEN c.doc_id = c.rep AND n.doc_id IS NULL
-                         THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6)
-             AS survival_rate,
+    SELECT {cascade_ledger_sql('n.doc_id')},
            round(max(CASE WHEN c.doc_id = c.rep AND n.doc_id IS NULL
                           THEN c.q END), 6) AS best_survivor_quality
     FROM cls c LEFT JOIN nd n ON n.doc_id = c.doc_id
@@ -3564,8 +3001,6 @@ def ep14_scrub_budget_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import analysis
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # stage 1: d23's exact groups, but each keeps its QUALITY-argmax
     # member (the fingerprint is token-normalized while punct_ratio reads
@@ -3573,16 +3008,12 @@ def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
     # token stream — min doc_id would keep whichever arrived first).
     # Staged shared-tokenize path: ONE tokenize feeds both the quality
     # stats and the fingerprint (the inline forms carried ~7 copies; r16).
-    st = analysis.with_quality_ratios(
-        docs.select("doc_id", "source", "text"), keep_tokens=True
-    )
-    st = analysis.with_fingerprint_pair(st, "fp", "_qs_toks")
+    st = with_quality_ratios(docs.select("doc_id", "source", "text"), keep_tokens=True)
+    st = with_fingerprint_pair(st, "fp", "_qs_toks")
     scored = materialize(st.select(
         "doc_id",
         "source",
-        analysis.quality_score_from_ratios(
-            F.col("_qs_sw"), F.col("_qs_pr"), F.col("_qs_mwl")
-        ).alias("q"),
+        quality_score_from_ratios(F.col("_qs_sw"), F.col("_qs_pr"), F.col("_qs_mwl")).alias("q"),
         "fp",
     ))  # 2 consumers: group build + per-doc classification
     # combinable argmax: lexicographic max of (q, -doc_id) ≡ the oracle's
@@ -3600,11 +3031,7 @@ def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
     cls = scored.join(grp, "fp").select("doc_id", "source", "q", "rep")
     # stage 2: verified near-dup pairs among representatives, closed into
     # components; each component keeps its quality-argmax member
-    reps = docs.join(
-        grp.select(F.col("rep").alias("doc_id")).distinct(), "doc_id"
-    ).select("doc_id", "text")
-    pairs = minhash_dedup(reps, k=3, num_hashes=8, rows_per_band=2, threshold=0.5)
-    comp = connected_components(pairs)
+    comp = connected_components(representative_near_pairs(docs, grp))
     membered = (
         cls.where(F.col("doc_id") == F.col("rep"))
         .join(comp, "doc_id", "left")
@@ -3634,30 +3061,11 @@ def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(F.col("doc_id") != F.col("survivor"))
         .select(F.col("doc_id").alias("nd"))
     )
-    marked = cls.join(near_dropped, cls.doc_id == near_dropped.nd, "left")
-    is_exact_drop = F.col("doc_id") != F.col("rep")
-    is_near_drop = (F.col("doc_id") == F.col("rep")) & F.col("nd").isNotNull()
     is_survivor = (F.col("doc_id") == F.col("rep")) & F.col("nd").isNull()
-    return marked.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(is_exact_drop, 1).otherwise(0)).cast("long").alias("n_exact_dropped"),
-        F.sum(F.when(is_near_drop, 1).otherwise(0)).cast("long").alias("n_near_dropped"),
-        F.sum(F.when(is_survivor, 1).otherwise(0)).cast("long").alias("n_survivors"),
-        F.round(
-            F.sum(F.when(is_exact_drop, 1).otherwise(0)) / F.count("*").cast("double"),
-            6,
-        ).alias("exact_drop_rate"),
-        F.round(
-            F.sum(F.when(is_near_drop, 1).otherwise(0)) / F.count("*").cast("double"),
-            6,
-        ).alias("near_drop_rate"),
-        F.round(
-            F.sum(F.when(is_survivor, 1).otherwise(0)) / F.count("*").cast("double"),
-            6,
-        ).alias("survival_rate"),
-        F.round(F.max(F.when(is_survivor, F.col("q"))), 6).alias(
-            "best_survivor_quality"
-        ),
+    return cascade_ledger(
+        cls.join(near_dropped, cls.doc_id == near_dropped.nd, "left"),
+        "nd",
+        F.round(F.max(F.when(is_survivor, F.col("q"))), 6).alias("best_survivor_quality"),
     )
 
 
@@ -3709,9 +3117,6 @@ def d25_cascade_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def d26_boilerplate_contagion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-    from ..operators.dedup import span_window_stream
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     t8 = docs.select(
         "doc_id", "source", tokenize(F.col("text")).alias("toks")
@@ -3776,21 +3181,7 @@ def d26_boilerplate_contagion(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {toks_cte()},
     {span_scrub_ctes()},
-    ps AS (
-      SELECT p.doc_id, d.source, p.pos, p.win
-      FROM p JOIN documents d USING (doc_id)
-    ),
-    xw AS (
-      SELECT win FROM (
-        SELECT win, count(DISTINCT source) AS cs FROM ps GROUP BY win
-      ) WHERE cs >= 2
-    ),
-    exp AS (
-      SELECT DISTINCT doc_id, source, tok FROM (
-        SELECT ps.doc_id, ps.source, unnest(range(ps.pos, ps.pos + {SPAN_WIDTH})) AS tok
-        FROM ps JOIN xw USING (win)
-      )
-    ),
+    {exposure_ctes()},
     es AS (
       SELECT source, count(*) AS exposed_tokens,
              count(DISTINCT doc_id) AS n_exposed_docs
@@ -3814,31 +3205,9 @@ def d26_boilerplate_contagion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d27_cross_source_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-    from ..operators.dedup import span_window_stream
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
-    t8 = toks.where(F.size("toks") >= SPAN_WIDTH)
-    # 2 consumers: the multi-source-window inventory + the coverage probe
-    p = materialize(span_window_stream(t8, keep=("source",)))
-    xw = (
-        p.groupBy("win")
-        .agg(F.count_distinct("source").alias("cs"))
-        .where(F.col("cs") >= 2)
-        .select("win")
-    )
-    exposed = (
-        p.join(xw, "win")
-        .select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (SPAN_WIDTH - 1))
-            ).alias("tok"),
-        )
-        .distinct()
-    )
+    exposed = cross_source_exposure(toks.where(F.size("toks") >= SPAN_WIDTH))
     es = exposed.groupBy("source").agg(
         F.count("*").cast("long").alias("exposed_tokens"),
         F.count_distinct("doc_id").cast("long").alias("n_exposed_docs"),
@@ -3884,7 +3253,7 @@ def d27_cross_source_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
 # d24/ep14/st17/d28.
 @query(
     "d28_compaction_arrival_scrub",
-    oracle=materialize_ctes(
+    oracle=materialized_ctes(
         f"""
     WITH {toks_cte()},
     {span_scrub_ctes()},
@@ -3937,13 +3306,6 @@ def d27_cross_source_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def d28_compaction_arrival_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokenize
-    from ..operators.dedup import (
-        duplicated_windows,
-        span_removed_positions,
-        span_window_stream,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
     corpus_t8 = toks.where(
@@ -4011,25 +3373,11 @@ def d28_compaction_arrival_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expansion and mix9's partitionBy(lit(0)) window.
 @query(
     "ep15_source_drop_impact",
-    oracle=materialize_ctes(
+    oracle=materialized_ctes(
         f"""
     WITH {toks_cte()},
     {span_scrub_ctes()},
-    ps AS (
-      SELECT p.doc_id, d.source, p.pos, p.win
-      FROM p JOIN documents d USING (doc_id)
-    ),
-    xw AS (
-      SELECT win FROM (
-        SELECT win, count(DISTINCT source) AS cs FROM ps GROUP BY win
-      ) WHERE cs >= 2
-    ),
-    exp AS (
-      SELECT DISTINCT doc_id, source, tok FROM (
-        SELECT ps.doc_id, ps.source, unnest(range(ps.pos, ps.pos + {SPAN_WIDTH})) AS tok
-        FROM ps JOIN xw USING (win)
-      )
-    ),
+    {exposure_ctes()},
     es AS (SELECT source, CAST(count(*) AS BIGINT) AS exposed_tokens FROM exp GROUP BY source),
     base AS (
       SELECT d.source, CAST(sum(len(t.toks)) AS BIGINT) AS n_tokens,
@@ -4119,34 +3467,9 @@ def d28_compaction_arrival_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ep15_source_drop_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.text import tokenize
-    from ..operators.dedup import span_window_stream
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks"))
-    t8 = toks.where(F.size("toks") >= SPAN_WIDTH)
-    # ONE position-stream build (d27's construction), 2 consumers:
-    # multi-source-window inventory + coverage probe
-    p = materialize(span_window_stream(t8, keep=("source",)))
-    xw = (
-        p.groupBy("win")
-        .agg(F.count_distinct("source").alias("cs"))
-        .where(F.col("cs") >= 2)
-        .select("win")
-    )
-    exposed = (
-        p.join(xw, "win")
-        .select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (SPAN_WIDTH - 1))
-            ).alias("tok"),
-        )
-        .distinct()
-    )
+    exposed = cross_source_exposure(toks.where(F.size("toks") >= SPAN_WIDTH))
     es = exposed.groupBy("source").agg(
         F.count("*").cast("long").alias("exposed_tokens")
     )
@@ -4259,7 +3582,7 @@ def ep15_source_drop_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle that references the shingle stream / full-Jaccard machinery
 # from several consumers re-evaluates it per consumer — d20's inlined
 # plan at sf1 spilled >80 GB of temp and filled the disk (measured; see
-# oracle_fragments.materialize), and ep10 reproduced the same failure
+# oracle_fragments.materialized_ctes), and ep10 reproduced the same failure
 # (785 s, disk full) with sh referenced six times. Every oracle below
 # multi-references at least one of these fragments; materializing them
 # is purely physical (results unchanged — re-verified at sf0.01/sf0.1
@@ -4276,7 +3599,7 @@ for _name in (
     "cur2_component_survivors",
     "cur8_dedup_quality_interaction",
 ):
-    ORACLE_SQL[_name] = materialize_ctes(
+    ORACLE_SQL[_name] = materialized_ctes(
         ORACLE_SQL[_name],
         "toks", "sh", "mh", "bands", "cands", "jac", "inter", "sizes",
     )

@@ -27,7 +27,7 @@ from ..functions.llm import (
 )
 from ..io.sources import load_table
 from ..operators.tfidf import cluster_term_scores, tfidf_long
-from .oracle_fragments import tfidf_cte, toks_cte, unigram_cte
+from .oracle_fragments import cluster_topterms_ctes
 from .registry import query
 
 
@@ -95,23 +95,7 @@ def l1_enrich_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "l2_cluster_labels",
     oracle=f"""
-    WITH {toks_cte()}, {unigram_cte()}, {tfidf_cte()},
-    assigned AS (
-      SELECT t.doc_id, t.term, t.weight, d.lang AS cluster_id
-      FROM tfidf t JOIN documents d ON t.doc_id = d.doc_id
-    ),
-    scored AS (
-      SELECT cluster_id, term, round(sum(CAST(round(weight * 1000000) AS BIGINT))
-                   / 1000000.0, 6) AS score
-      FROM assigned GROUP BY cluster_id, term
-    ),
-    topterms AS (
-      SELECT cluster_id, term, rank FROM (
-        SELECT cluster_id, term, score,
-               row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, term ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 5
-    ),
+    WITH {cluster_topterms_ctes()},
     kw AS (
       SELECT cluster_id, string_agg(term, ', ' ORDER BY rank) AS keywords
       FROM topterms GROUP BY cluster_id

@@ -8,19 +8,43 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io.sources import load_table
+from ..operators.cluster import center_dist_structs, lloyd_quantized
+from ..operators.dedup import connected_components
 from ..operators.materialize import materialize
 from ..operators.similarity import (
+    _as_double,
+    _query_cell_ranks,
     brute_force_topk,
+    cosine,
+    dot,
     embedding_near_dups,
+    ivf_assignments,
+    ivf_probe_scored_all,
     ivf_topk,
+    ivfpq_index,
+    ivfpq_topk,
+    label_prototypes,
     lsh_topk,
+    multi_table_candidates,
+    multi_table_candidates_long,
+    multi_table_lsh_topk,
+    norm,
+    pq_adc_scores,
+    pq_codebooks,
+    prototype_classify,
+    rank_topk,
+    recall_audit,
+    score_pairs,
     srp_buckets,
+    with_norm,
 )
 from ..session import run_concurrently
+from .oracle_fragments import closure_ctes, cos_sql, exact_topk_cte, lloyd_ctes, lloyd_dist
+from .queries_ml import _LLOYD_DIMS  # one documented 64, not two
 from .registry import query
 
 # Fixed SRP hyperplanes (seeded, 4 planes × 64 dims) — inlined as literals
@@ -52,8 +76,7 @@ _V = "v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ve FROM embeddi
     q AS (SELECT vec_id AS query_id, ve AS qve FROM v WHERE vec_id < 10),
     scored AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
-             round(list_inner_product(v.ve, q.qve)
-                   / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) AS cos_sim
+             {cos_sql("v.ve", "q.qve")} AS cos_sim
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
     SELECT query_id, neighbor_id, cos_sim, rank FROM (
@@ -90,8 +113,7 @@ def n2_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS query_id, ve AS qve, bucket FROM bv WHERE vec_id < 10),
     scored AS (
       SELECT q.query_id, bv.vec_id AS neighbor_id,
-             round(list_inner_product(bv.ve, q.qve)
-                   / (sqrt(list_inner_product(bv.ve, bv.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) AS cos_sim
+             {cos_sql("bv.ve", "q.qve")} AS cos_sim
       FROM bv JOIN q ON bv.bucket = q.bucket
       WHERE bv.vec_id <> q.query_id
     )
@@ -114,8 +136,7 @@ def n3_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_V}
     SELECT vec_a, vec_b, cos_sim FROM (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-             round(list_inner_product(a.ve, b.ve)
-                   / (sqrt(list_inner_product(a.ve, a.ve)) * sqrt(list_inner_product(b.ve, b.ve))), 6) AS cos_sim
+             {cos_sql("a.ve", "b.ve")} AS cos_sim
       FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
     ) WHERE cos_sim >= 0.35
     """,
@@ -152,27 +173,16 @@ def n5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs AS (
       SELECT vec_a, vec_b FROM (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round(list_inner_product(a.ve, b.ve)
-                     / (sqrt(list_inner_product(a.ve, a.ve)) * sqrt(list_inner_product(b.ve, b.ve))), 6) AS cos_sim
+               {cos_sql("a.ve", "b.ve")} AS cos_sim
         FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
       ) WHERE cos_sim >= 0.35
     ),
-    edges AS (
-      SELECT vec_a AS node, vec_b AS nbr FROM pairs
-      UNION SELECT vec_b, vec_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    )
+    {closure_ctes("vec_a", "vec_b")}
     SELECT node AS doc_id, min(label) AS component_id
     FROM reach GROUP BY node
     """,
 )
 def n6_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_near_dups(emb, threshold=0.35, block_col="label")
     return connected_components(pairs, a_col="vec_a", b_col="vec_b")
@@ -216,8 +226,6 @@ def n6_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n7_prototype_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import label_prototypes, prototype_classify
-
     emb = load_table(spark, sf_dir, "embeddings")
     pred = prototype_classify(emb, label_prototypes(emb))
     return pred.groupBy("label", "predicted_label").agg(
@@ -268,8 +276,6 @@ def n7_prototype_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n8_prototype_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import cosine, label_prototypes
-
     emb = load_table(spark, sf_dir, "embeddings")
     pl = label_prototypes(emb).select(
         F.col("label").alias("plabel"), F.col("proto")
@@ -317,8 +323,6 @@ def n8_prototype_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n9_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.select("vec_id", "label", norm(F.col("embedding")).alias("nrm"))
     stats = n.agg(
@@ -455,17 +459,7 @@ def n10_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_V},
     q AS (SELECT vec_id AS query_id, ve AS qve FROM v WHERE vec_id < 10),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_inner_product(v.ve, q.qve)
-                     / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) DESC,
-                   v.vec_id ASC) AS rank
-        FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
-      ) WHERE rank <= 5
-    ),
+    {exact_topk_cte()},
     bv AS (SELECT vec_id, ve, CAST({_BUCKET_SQL} AS BIGINT) AS bucket FROM v),
     qb AS (SELECT vec_id AS query_id, ve AS qve, bucket FROM bv WHERE vec_id < 10),
     approx AS (
@@ -473,8 +467,7 @@ def n10_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT qb.query_id, bv.vec_id AS neighbor_id,
                row_number() OVER (
                  PARTITION BY qb.query_id
-                 ORDER BY round(list_inner_product(bv.ve, qb.qve)
-                     / (sqrt(list_inner_product(bv.ve, bv.ve)) * sqrt(list_inner_product(qb.qve, qb.qve))), 6) DESC,
+                 ORDER BY {cos_sql("bv.ve", "qb.qve")} DESC,
                    bv.vec_id ASC) AS rank
         FROM bv JOIN qb ON bv.bucket = qb.bucket WHERE bv.vec_id <> qb.query_id
       ) WHERE rank <= 5
@@ -492,26 +485,7 @@ def n11_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
-    approx = lsh_topk(emb, probes, SRP_PLANES, k=5).select(
-        F.col("query_id").alias("a_query_id"), F.col("neighbor_id").alias("a_neighbor_id")
-    )
-    hit = exact.join(
-        approx,
-        (F.col("query_id") == F.col("a_query_id"))
-        & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-        "left",
-    )
-    return hit.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_hit"),
-        F.round(
-            F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-            / F.count("*").cast("double"),
-            6,
-        ).alias("recall_at_5"),
-    )
+    return recall_audit(exact, lsh_topk(emb, probes, SRP_PLANES, k=5))
 
 
 # fixed multi-table SRP hyperplanes: 4 tables × 4 planes × 64 dims,
@@ -546,17 +520,7 @@ def _mt_bucket_sql(planes: list[list[float]]) -> str:
     oracle=f"""
     WITH {_V},
     q AS (SELECT vec_id AS query_id, ve AS qve FROM v WHERE vec_id < 10),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_inner_product(v.ve, q.qve)
-                     / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) DESC,
-                   v.vec_id ASC) AS rank
-        FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
-      ) WHERE rank <= 5
-    ),
+    {exact_topk_cte()},
     vb AS (
 {" UNION ALL ".join(
     "SELECT vec_id, ve, %d AS tbl, CAST(%s AS BIGINT) AS bucket FROM v" % (t, _mt_bucket_sql(planes))
@@ -573,8 +537,7 @@ def _mt_bucket_sql(planes: list[list[float]]) -> str:
         SELECT c.query_id, c.neighbor_id,
                row_number() OVER (
                  PARTITION BY c.query_id
-                 ORDER BY round(list_inner_product(nv.ve, qv.ve)
-                     / (sqrt(list_inner_product(nv.ve, nv.ve)) * sqrt(list_inner_product(qv.ve, qv.ve))), 6) DESC,
+                 ORDER BY {cos_sql("nv.ve", "qv.ve")} DESC,
                    c.neighbor_id ASC) AS rank
         FROM cand c
         JOIN v nv ON nv.vec_id = c.neighbor_id
@@ -591,31 +554,10 @@ def _mt_bucket_sql(planes: list[list[float]]) -> str:
     """,
 )
 def n12_ann_multitable_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import multi_table_lsh_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
-    approx = multi_table_lsh_topk(emb, probes, MT_PLANE_TABLES, k=5).select(
-        F.col("query_id").alias("a_query_id"), F.col("neighbor_id").alias("a_neighbor_id")
-    )
-    hit = exact.join(
-        approx,
-        (F.col("query_id") == F.col("a_query_id"))
-        & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-        "left",
-    )
-    return hit.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_hit"),
-        F.round(
-            F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-            / F.count("*").cast("double"),
-            6,
-        ).alias("recall_at_5"),
-    )
+    return recall_audit(exact, multi_table_lsh_topk(emb, probes, MT_PLANE_TABLES, k=5))
 
 
 # fixed sweep hyperplanes: 16 tables × 4 planes × 64 dims, seeded apart
@@ -650,8 +592,7 @@ def _sweep_ctes(T: int) -> str:
         SELECT c.query_id, c.neighbor_id,
                row_number() OVER (
                  PARTITION BY c.query_id
-                 ORDER BY round(list_inner_product(nv.ve, qv.ve)
-                     / (sqrt(list_inner_product(nv.ve, nv.ve)) * sqrt(list_inner_product(qv.ve, qv.ve))), 6) DESC,
+                 ORDER BY {cos_sql("nv.ve", "qv.ve")} DESC,
                    c.neighbor_id ASC) AS rank
         FROM cand{T} c
         JOIN v nv ON nv.vec_id = c.neighbor_id
@@ -689,28 +630,12 @@ def _sweep_ctes(T: int) -> str:
     oracle=f"""
     WITH {_V},
     q AS (SELECT vec_id AS query_id, ve AS qve FROM v WHERE vec_id < 10),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_inner_product(v.ve, q.qve)
-                     / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) DESC,
-                   v.vec_id ASC) AS rank
-        FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
-      ) WHERE rank <= 5
-    ),
+    {exact_topk_cte()},
     {",".join(_sweep_ctes(T) for T in _SWEEP_TS)}
     {" UNION ALL ".join(f"SELECT * FROM row{T}" for T in _SWEEP_TS)}
     """,
 )
 def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import (
-        multi_table_candidates_long,
-        rank_topk,
-        score_pairs,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
     # ground truth is shared by every sweep branch — materialize once
@@ -742,24 +667,8 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         approx = rank_topk(
             cands.join(F.broadcast(scored_all), ["query_id", "neighbor_id"]), k=5
-        ).select(
-            F.col("query_id").alias("a_query_id"),
-            F.col("neighbor_id").alias("a_neighbor_id"),
         )
-        hit = exact.join(
-            approx,
-            (F.col("query_id") == F.col("a_query_id"))
-            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-            "left",
-        )
-        recall = hit.agg(
-            F.lit(T).cast("long").alias("n_tables"),
-            F.round(
-                F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-                / F.count("*").cast("double"),
-                6,
-            ).alias("mean_recall_at_5"),
-        )
+        recall = recall_audit(exact, approx, by=(), name="mean_recall_at_5")
         # singleton-stats broadcast crossJoins (1×1 rows — job structure)
         avg_c = (
             cands.agg(F.count("*").alias("nc"))
@@ -767,7 +676,7 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.round(F.col("nc") / F.col("nq").cast("double"), 6).alias("avg_candidates"))
         )
         row = recall.crossJoin(F.broadcast(avg_c)).select(
-            "n_tables", "avg_candidates", "mean_recall_at_5"
+            F.lit(T).cast("long").alias("n_tables"), "avg_candidates", "mean_recall_at_5"
         )
         rows = row if rows is None else rows.unionAll(row)
     return rows
@@ -786,12 +695,10 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS query_id, ve AS qve FROM v WHERE vec_id < 10),
     ranked AS (
       SELECT q.query_id,
-             round(list_inner_product(v.ve, q.qve)
-                 / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) AS cos_sim,
+             {cos_sql("v.ve", "q.qve")} AS cos_sim,
              row_number() OVER (
                PARTITION BY q.query_id
-               ORDER BY round(list_inner_product(v.ve, q.qve)
-                   / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) DESC,
+               ORDER BY {cos_sql("v.ve", "q.qve")} DESC,
                  v.vec_id ASC) AS rank
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
@@ -830,12 +737,6 @@ def n14_ann_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n5.
 @query("n15_ivf_nprobe_sweep")
 def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import (
-        ivf_assignments,
-        ivf_probe_scored_all,
-        rank_topk,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
 
@@ -859,25 +760,9 @@ def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_all = materialize(ivf_probe_scored_all(centers, assigned, emb, probes))
     rows = None
     for nprobe in (1, 2, 4, 8, 16):
-        approx = rank_topk(
-            scored_all.where(F.col("p") <= nprobe).drop("p"), k=5
-        ).select(
-            F.col("query_id").alias("a_query_id"),
-            F.col("neighbor_id").alias("a_neighbor_id"),
-        )
-        hit = exact.join(
-            approx,
-            (F.col("query_id") == F.col("a_query_id"))
-            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-            "left",
-        )
-        row = hit.agg(
-            F.lit(nprobe).cast("long").alias("nprobe"),
-            F.round(
-                F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-                / F.count("*").cast("double"),
-                6,
-            ).alias("mean_recall_at_5"),
+        approx = rank_topk(scored_all.where(F.col("p") <= nprobe).drop("p"), k=5)
+        row = recall_audit(exact, approx, by=(), name="mean_recall_at_5").select(
+            F.lit(nprobe).cast("long").alias("nprobe"), "mean_recall_at_5"
         )
         rows = row if rows is None else rows.unionAll(row)
     return rows
@@ -902,8 +787,7 @@ def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS anchor_id, ve AS qve FROM v WHERE vec_id % 100 = 0),
     scored AS (
       SELECT q.anchor_id, v.vec_id AS negative_id,
-             round(list_inner_product(v.ve, q.qve)
-                   / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) AS cos_sim
+             {cos_sql("v.ve", "q.qve")} AS cos_sim
       FROM v CROSS JOIN q WHERE v.vec_id <> q.anchor_id
     )
     SELECT anchor_id, negative_id, cos_sim, rank FROM (
@@ -914,9 +798,6 @@ def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n16_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import rank_topk, with_norm
-    from ..operators.similarity import dot as vdot
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = with_norm(emb)
     q = with_norm(emb.where(F.col("vec_id") % 100 == 0)).select(
@@ -931,7 +812,7 @@ def n16_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor_id",
             F.col("vec_id").alias("negative_id"),
             F.round(
-                vdot(F.col("vec"), F.col("qvec")) / (F.col("nrm") * F.col("qnrm")), 6
+                dot(F.col("vec"), F.col("qvec")) / (F.col("nrm") * F.col("qnrm")), 6
             ).alias("cos_sim"),
         )
     )
@@ -971,20 +852,11 @@ def n16_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs AS (
       SELECT vec_a, vec_b, cos_sim FROM (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round(list_inner_product(a.ve, b.ve)
-                     / (sqrt(list_inner_product(a.ve, a.ve)) * sqrt(list_inner_product(b.ve, b.ve))), 6) AS cos_sim
+               {cos_sql("a.ve", "b.ve")} AS cos_sim
         FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
       ) WHERE cos_sim >= 0.35
     ),
-    edges AS (
-      SELECT vec_a AS node, vec_b AS nbr FROM pairs
-      UNION SELECT vec_b, vec_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT node, node FROM (SELECT DISTINCT node FROM edges)
-      UNION
-      SELECT e.nbr, r.label FROM reach r JOIN edges e ON e.node = r.node
-    ),
+    {closure_ctes("vec_a", "vec_b")},
     comp AS (SELECT node AS vec_id, min(label) AS component_id FROM reach GROUP BY node),
     inc AS (
       SELECT vec_a AS vec_id, CAST(round(cos_sim * 1e6) AS BIGINT) AS w FROM pairs
@@ -1007,8 +879,6 @@ def n16_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cur11_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     emb = load_table(spark, sf_dir, "embeddings")
     # pairs has three consumers (closure, both score directions) — tiny
     # (verified near-dups only), materialize once
@@ -1059,8 +929,7 @@ def cur11_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS anchor_id, ve AS qve FROM v WHERE vec_id % 100 = 0),
     escored AS (
       SELECT q.anchor_id, v.vec_id AS negative_id,
-             round(list_inner_product(v.ve, q.qve)
-                   / (sqrt(list_inner_product(v.ve, v.ve)) * sqrt(list_inner_product(q.qve, q.qve))), 6) AS cos_sim
+             {cos_sql("v.ve", "q.qve")} AS cos_sim
       FROM v CROSS JOIN q WHERE v.vec_id <> q.anchor_id
     ),
     exact AS (
@@ -1083,8 +952,7 @@ def cur11_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     ascored AS (
       SELECT c.anchor_id, c.negative_id,
-             round(list_inner_product(nv.ve, qv.qve)
-                   / (sqrt(list_inner_product(nv.ve, nv.ve)) * sqrt(list_inner_product(qv.qve, qv.qve))), 6) AS cos_sim
+             {cos_sql("nv.ve", "qv.qve")} AS cos_sim
       FROM cand c
       JOIN v nv ON nv.vec_id = c.negative_id
       JOIN q qv ON qv.anchor_id = c.anchor_id
@@ -1107,8 +975,6 @@ def cur11_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n17_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import multi_table_candidates, rank_topk, score_pairs
-
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = emb.where(F.col("vec_id") % 100 == 0)
     exact = n16_hard_negatives(spark, sf_dir).select("anchor_id", "negative_id")
@@ -1118,25 +984,14 @@ def n17_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = multi_table_candidates(emb, anchors, MT_PLANE_TABLES)
     scored = score_pairs(emb, anchors, cands)
     approx = rank_topk(scored.where(F.col("cos_sim") < 0.35), k=5).select(
-        F.col("query_id").alias("a_anchor_id"),
-        F.col("neighbor_id").alias("a_negative_id"),
+        F.col("query_id").alias("anchor_id"), F.col("neighbor_id").alias("negative_id")
     )
-    hit = exact.join(
+    return recall_audit(
+        exact,
         approx,
-        (F.col("anchor_id") == F.col("a_anchor_id"))
-        & (F.col("negative_id") == F.col("a_negative_id")),
-        "left",
-    )
-    return hit.groupBy("anchor_id").agg(
-        F.count("*").alias("n_exact"),
-        F.sum(F.when(F.col("a_negative_id").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_hit"),
-        F.round(
-            F.sum(F.when(F.col("a_negative_id").isNotNull(), 1).otherwise(0))
-            / F.count("*").cast("double"),
-            6,
-        ).alias("overlap_at_5"),
+        by=("anchor_id",),
+        keys=("anchor_id", "negative_id"),
+        name="overlap_at_5",
     )
 
 
@@ -1163,8 +1018,6 @@ def n17_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # additions, no corpus-side float math.
 @query("n18_pq_adc_audit")
 def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import pq_adc_scores, pq_codebooks, rank_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, probes, k=5).select(
@@ -1172,25 +1025,9 @@ def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     books, encoded = pq_codebooks(emb, m=16, ksub=16, seed=123)
     scored = materialize(pq_adc_scores(books, encoded, probes))  # 2 consumers
-    approx = rank_topk(scored, k=5, score_col="approx_cos").select(
-        F.col("query_id").alias("a_query_id"), F.col("neighbor_id").alias("a_neighbor_id")
-    )
-    hit = exact.join(
-        approx,
-        (F.col("query_id") == F.col("a_query_id"))
-        & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-        "left",
-    ).join(scored, ["query_id", "neighbor_id"], "left")
-    return hit.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_hit"),
-        F.round(
-            F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-            / F.count("*").cast("double"),
-            6,
-        ).alias("recall_at_5"),
+    return recall_audit(
+        exact.join(scored, ["query_id", "neighbor_id"], "left"),
+        rank_topk(scored, k=5, score_col="approx_cos"),
         F.round(F.avg(F.abs(F.col("approx_cos") - F.col("cos_sim"))), 6).alias(
             "mean_cos_err"
         ),
@@ -1218,8 +1055,6 @@ def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_round10b.py.
 @query("n19_ivfpq_audit")
 def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import ivfpq_index, ivfpq_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
     # the exact ground truth is independent of the IVF-PQ index build —
@@ -1236,7 +1071,6 @@ def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = materialize(encoded)
     approx = ivfpq_topk(centers, books, cellmap, encoded, probes, nprobe=8, k=5)
     # the cost face: how many corpus vectors each query's probed cells hold
-    from ..operators.similarity import _query_cell_ranks
 
     probed = (
         _query_cell_ranks(centers, probes)
@@ -1264,30 +1098,7 @@ def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_candidates"),
         )
     )
-    hit = exact.join(
-        approx.select(
-            F.col("query_id").alias("a_query_id"),
-            F.col("neighbor_id").alias("a_neighbor_id"),
-        ),
-        (F.col("query_id") == F.col("a_query_id"))
-        & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-        "left",
-    )
-    return (
-        hit.groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_exact"),
-            F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_hit"),
-            F.round(
-                F.sum(F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0))
-                / F.count("*").cast("double"),
-                6,
-            ).alias("recall_at_5"),
-        )
-        .join(cost, "query_id")
-    )
+    return recall_audit(exact, approx).join(cost, "query_id")
 
 
 # --- N20: embedding-space health audit ----------------------------------------------
@@ -1334,8 +1145,6 @@ def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n20_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _as_double, norm
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "label", _as_double(F.col("embedding")).alias("v")
     )
@@ -1419,24 +1228,11 @@ def n20_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     bv AS (SELECT vec_id, ve, CAST({_BUCKET_SQL} AS BIGINT) AS bucket FROM v),
     cand AS (
       SELECT p.query_id, bv.vec_id AS neighbor_id, p.probe,
-             round(list_inner_product(bv.ve, p.qve)
-                   / (sqrt(list_inner_product(bv.ve, bv.ve))
-                      * sqrt(list_inner_product(p.qve, p.qve))), 6) AS cos_sim
+             {cos_sql("bv.ve", "p.qve")} AS cos_sim
       FROM probes p JOIN bv ON bv.bucket = p.bucket
       WHERE bv.vec_id <> p.query_id
     ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q0.query_id, v.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q0.query_id
-                 ORDER BY round(list_inner_product(v.ve, q0.qve)
-                     / (sqrt(list_inner_product(v.ve, v.ve))
-                        * sqrt(list_inner_product(q0.qve, q0.qve))), 6) DESC,
-                   v.vec_id ASC) AS rank
-        FROM v CROSS JOIN q0 WHERE v.vec_id <> q0.query_id
-      ) WHERE rank <= 5
-    ),
+    {exact_topk_cte("q0")},
     multi AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, neighbor_id,
@@ -1480,10 +1276,6 @@ def n20_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.similarity import dot, srp_buckets, with_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = materialize(
         srp_buckets(emb, SRP_PLANES)
@@ -1649,9 +1441,7 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bv AS (SELECT vec_id, ve, CAST({_BUCKET_SQL} AS BIGINT) AS bucket FROM v),
     cand AS (
       SELECT p.query_id, bv.vec_id AS neighbor_id, p.probe_rank,
-             round(list_inner_product(bv.ve, p.qve)
-                   / (sqrt(list_inner_product(bv.ve, bv.ve))
-                      * sqrt(list_inner_product(p.qve, p.qve))), 6) AS cos_sim
+             {cos_sql("bv.ve", "p.qve")} AS cos_sim
       FROM probes p JOIN bv ON bv.bucket = p.bucket
       WHERE bv.vec_id <> p.query_id
     ),
@@ -1668,18 +1458,7 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM expl
       ) WHERE r <= 5
     ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q0.query_id, v.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q0.query_id
-                 ORDER BY round(list_inner_product(v.ve, q0.qve)
-                     / (sqrt(list_inner_product(v.ve, v.ve))
-                        * sqrt(list_inner_product(q0.qve, q0.qve))), 6) DESC,
-                   v.vec_id ASC) AS rank
-        FROM v CROSS JOIN q0 WHERE v.vec_id <> q0.query_id
-      ) WHERE rank <= 5
-    ),
+    {exact_topk_cte("q0")},
     exb AS (SELECT e.query_id, e.neighbor_id, b.probe_budget FROM exact e CROSS JOIN bud b),
     hits AS (
       SELECT x.probe_budget,
@@ -1706,10 +1485,6 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def n22_srp_probe_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.similarity import dot, srp_buckets, with_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = materialize(
         srp_buckets(emb, SRP_PLANES)
@@ -1861,9 +1636,6 @@ _N23_TOPK = 3
 
 
 def _n23_oracle() -> str:
-    from .oracle_fragments import lloyd_ctes, lloyd_dist
-    from .queries_ml import _LLOYD_DIMS  # one documented 64, not two
-
     ctes = lloyd_ctes(_LLOYD_DIMS, _N23_K, _N23_ITERS, _N23_Q)
     cell_d = lloyd_dist("qv.qd", "c.c")
     cand_d = lloyd_dist("qd", "nd")
@@ -1894,10 +1666,6 @@ SELECT query_id, rank, neighbor_id, dist FROM (
 
 @query("n23_deterministic_ivf_topk", oracle=_n23_oracle())
 def n23_deterministic_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.cluster import center_dist_structs, lloyd_quantized
-
     emb = load_table(spark, sf_dir, "embeddings")
     assign, centers, q = lloyd_quantized(emb, k=_N23_K, iters=_N23_ITERS, quant=_N23_Q)
 

@@ -18,7 +18,14 @@ from ..streaming.enrich import (
     streaming_enrich,
     streaming_sessionize,
 )
-from .oracle_fragments import SPAN_WIDTH, span_scrub_ctes, toks_cte
+from .oracle_fragments import (
+    JACCARD_CTES,
+    SPAN_WIDTH,
+    bands_ctes,
+    cos_sql,
+    span_scrub_ctes,
+    toks_cte,
+)
 
 # st13's decorator reads ORACLE_SQL["cur10_incremental_neardup"] at module
 # definition time — importing queries_dedup here guarantees cur10 is
@@ -163,6 +170,49 @@ def st5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_bounded(deduped, "st5_out", output_mode="append")
 
 
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """st6/st14's click→purchase interval join: both sides watermarked
+    10 minutes, a purchase matches a click of the same user within the
+    following hour, and epoch seconds truncate per timestamp on both
+    sides so secs_to_purchase hashes identically to the oracle's floor."""
+    clicks = (
+        stream_table(spark, sf_dir, "events")
+        .where(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user_id"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", "10 minutes")
+    )
+    purchases = (
+        stream_table(spark, sf_dir, "events")
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "10 minutes")
+    )
+    return clicks.join(
+        purchases,
+        F.expr(
+            """
+            c_user_id = p_user_id AND
+            p_ts > c_ts AND
+            p_ts <= c_ts + interval 1 hour
+            """
+        ),
+        how,
+    ).select(
+        F.col("c_user_id").alias("user_id"),
+        "click_id",
+        "purchase_id",
+        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("secs_to_purchase"),
+    )
+
+
 # --- ST6: watermarked stream-stream join (interval join) --------------------------
 # Click→purchase attribution within one hour, per user — the canonical
 # stream-stream INNER join. Both sides carry watermarks and the join
@@ -189,43 +239,9 @@ def st5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st6_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clicks = (
-        stream_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
+    return run_bounded(
+        _click_purchase_join(spark, sf_dir, "inner"), "st6_out", output_mode="append"
     )
-    purchases = (
-        stream_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user_id = p_user_id AND
-            p_ts > c_ts AND
-            p_ts <= c_ts + interval 1 hour
-            """
-        ),
-        "inner",
-    ).select(
-        F.col("c_user_id").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("secs_to_purchase"),
-    )
-    return run_bounded(joined, "st6_out", output_mode="append")
 
 
 # --- ST7: streaming curation gate (the ingest-time cur1) --------------------------
@@ -781,43 +797,9 @@ def st13_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def st14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clicks = (
-        stream_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
+    return run_bounded(
+        _click_purchase_join(spark, sf_dir, "leftOuter"), "st14_out", output_mode="append"
     )
-    purchases = (
-        stream_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user_id = p_user_id AND
-            p_ts > c_ts AND
-            p_ts <= c_ts + interval 1 hour
-            """
-        ),
-        "leftOuter",
-    ).select(
-        F.col("c_user_id").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("secs_to_purchase"),
-    )
-    return run_bounded(joined, "st14_out", output_mode="append")
 
 
 def _semantic_admission_counts(batch_df: DataFrame, corpus_b: DataFrame) -> DataFrame:
@@ -933,8 +915,7 @@ def _st15_oracle() -> str:
     a AS (SELECT vec_id, label, ve, CAST({_BUCKET_SQL} AS BIGINT) AS bucket FROM v WHERE vec_id % 2 = 1),
     rej AS (
       SELECT DISTINCT a.vec_id FROM a JOIN c ON a.bucket = c.bucket
-      WHERE round(list_inner_product(a.ve, c.ve)
-            / (sqrt(list_inner_product(a.ve, a.ve)) * sqrt(list_inner_product(c.ve, c.ve))), 6)
+      WHERE {cos_sql("a.ve", "c.ve")}
             >= 0.35
     )
     SELECT a.label,
@@ -969,7 +950,7 @@ ORACLE_SQL["st15_stream_semantic_admission"] = _st15_oracle()
 @query(
     "st16_stream_cascade_admission",
     oracle=f"""
-    WITH {queries_dedup._BANDS},
+    WITH {toks_cte()}, {bands_ctes()},
     fps AS (
       SELECT doc_id, md5(coalesce(array_to_string(toks, ' '), '')) AS fp
       FROM toks
@@ -991,7 +972,7 @@ ORACLE_SQL["st15_stream_semantic_admission"] = _st15_oracle()
       WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
         AND NOT EXISTS (SELECT 1 FROM exact_rej e WHERE e.doc_id = a.doc_id)
     ),
-    {queries_dedup._JACCARD},
+    {JACCARD_CTES},
     near_rej AS (
       SELECT DISTINCT CASE WHEN j.doc_a % 2 = 1 THEN j.doc_a ELSE j.doc_b END AS new_doc
       FROM jac j JOIN xc ON j.doc_a = xc.doc_a AND j.doc_b = xc.doc_b

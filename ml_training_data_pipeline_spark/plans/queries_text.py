@@ -26,12 +26,15 @@ from ..operators.tfidf import (
     tfidf_long,
     top_vocabulary_from_counts,
 )
+from ..operators.waterfill import waterfill
 from .oracle_fragments import (
+    WATERFILL_CTES,
     ngram_cte,
     stopword_list_sql,
     tfidf_cte,
     toks_cte,
     unigram_cte,
+    waterfill_select,
 )
 from .registry import query
 
@@ -2673,39 +2676,8 @@ def v15_subword_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(4 * sum(len(t.toks)) AS BIGINT) AS cap_tokens
       FROM toks t JOIN documents d USING (doc_id) GROUP BY d.source
     ),
-    tot AS (
-      SELECT CAST(sum(n_tokens) // 2 AS BIGINT) AS b, count(*) AS n FROM per_src
-    ),
-    ranked AS (
-      SELECT p.*, t.b, t.n,
-             row_number() OVER (ORDER BY p.cap_tokens, p.source) AS i,
-             CAST(sum(p.cap_tokens) OVER (ORDER BY p.cap_tokens, p.source
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix
-      FROM per_src p CROSS JOIN tot t
-    ),
-    marked AS (
-      SELECT r.*,
-             (r.cap_tokens * (r.n - r.i + 1) <= r.b - (r.prefix - r.cap_tokens))
-               AS is_capped
-      FROM ranked r
-    ),
-    lvl AS (
-      SELECT CAST(coalesce(sum(CASE WHEN is_capped THEN cap_tokens END), 0) AS BIGINT)
-               AS p_k,
-             CAST(sum(CASE WHEN is_capped THEN 1 ELSE 0 END) AS BIGINT) AS k
-      FROM marked
-    )
-    SELECT m.source, m.n_tokens, m.cap_tokens, m.is_capped,
-           CAST(m.b AS BIGINT) AS budget_tokens,
-           round(CASE WHEN m.is_capped THEN m.cap_tokens / 1.0
-                      ELSE (m.b - l.p_k) / (m.n - l.k) END, 6) AS alloc_tokens,
-           round(CASE WHEN m.is_capped THEN m.cap_tokens / m.b
-                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.b) END, 6) AS alloc_share,
-           round(CASE WHEN m.cap_tokens = 0 THEN 0.0
-                      WHEN m.is_capped THEN 4.0
-                      ELSE (m.b - l.p_k) / ((m.n - l.k) * m.n_tokens) END, 6)
-             AS epochs_equiv
-    FROM marked m CROSS JOIN lvl l
+    {WATERFILL_CTES}
+    {waterfill_select('m.source')}
     """,
 )
 def mix9_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2716,65 +2688,7 @@ def mix9_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
         (F.lit(4) * F.sum(token_count(F.col("text")))).cast("long").alias("cap_tokens"),
     ))  # |sources| rows; totals + window + level reuse it
-    tot = per_src.agg(
-        F.expr("sum(n_tokens) div 2").cast("long").alias("b"),
-        F.count("*").alias("n"),
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy("cap_tokens", "source")
-    ranked = (
-        per_src.crossJoin(F.broadcast(tot))  # singleton budget row
-        .select(
-            "source",
-            "n_tokens",
-            "cap_tokens",
-            "b",
-            "n",
-            F.row_number().over(w).alias("i"),
-            F.sum("cap_tokens").over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("long")
-            .alias("prefix"),
-        )
-    )
-    marked = materialize(ranked.withColumn(
-        "is_capped",
-        F.col("cap_tokens") * (F.col("n") - F.col("i") + 1)
-        <= F.col("b") - (F.col("prefix") - F.col("cap_tokens")),
-    ))  # 2 consumers: the level aggregate + the report
-    lvl = marked.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("is_capped"), F.col("cap_tokens"))), F.lit(0)
-        ).cast("long").alias("p_k"),
-        F.sum(F.when(F.col("is_capped"), 1).otherwise(0)).cast("long").alias("k"),
-    )
-    rem_num = F.col("b") - F.col("p_k")  # BIGINT remainder after capped prefix
-    rem_den = F.col("n") - F.col("k")  # BIGINT uncapped count
-    return marked.crossJoin(F.broadcast(lvl)).select(  # singleton level row
-        "source",
-        "n_tokens",
-        "cap_tokens",
-        "is_capped",
-        F.col("b").cast("long").alias("budget_tokens"),
-        F.round(
-            F.when(F.col("is_capped"), F.col("cap_tokens") / F.lit(1.0)).otherwise(
-                rem_num / rem_den
-            ),
-            6,
-        ).alias("alloc_tokens"),
-        F.round(
-            F.when(F.col("is_capped"), F.col("cap_tokens") / F.col("b")).otherwise(
-                rem_num / (rem_den * F.col("b"))
-            ),
-            6,
-        ).alias("alloc_share"),
-        F.round(
-            # a zero-token source is "capped" at zero allocation: reporting
-            # the 4.0 cap multiple there would claim 4 epochs of nothing
-            F.when(F.col("cap_tokens") == 0, F.lit(0.0))
-            .when(F.col("is_capped"), F.lit(4.0))
-            .otherwise(rem_num / (rem_den * F.col("n_tokens"))),
-            6,
-        ).alias("epochs_equiv"),
-    )
+    return waterfill(per_src)
 
 
 # --- EP11: release diff card (version-to-version mixture ledger) ---------------------

@@ -151,19 +151,82 @@ def test_d25_plan_has_no_window_funnel(spark):
         assert "Window" not in seg, "component-partitioned window reappeared in d25"
 
 
-# --- shared span-scrub factoring: one fragment, three consumers -------------------
+# --- shared oracle fragments: one home per contract ------------------------------
 
 
-def test_span_scrub_oracles_share_the_fragment():
-    """d24, ep14 and st17's oracles must all embed the SAME span-scrub CTE
-    fragment (r14 ADVICE: a scrub-semantics fix lands once) — no drifted
-    inline copies."""
-    from ml_training_data_pipeline_spark.plans.oracle_fragments import span_scrub_ctes
+def _fragment_table() -> dict[str, tuple[str, ...]]:
+    """{fragment text: oracles that must embed it verbatim}."""
+    from ml_training_data_pipeline_spark.plans import oracle_fragments as of
 
-    frag = span_scrub_ctes().strip()
+    return {
+        of.span_scrub_ctes(): (
+            "d24_span_scrub", "ep14_scrub_budget_roadmap", "st17_stream_span_scrub",
+        ),
+        of.cluster_scores_ctes(): ("c1_cluster_term_scores",),
+        of.cluster_topterms_ctes(): (
+            "c6_prob_coherence", "c7_quality_summary", "l2_cluster_labels",
+        ),
+        of.coherence_ctes(): ("c6_prob_coherence", "c7_quality_summary"),
+        of.candidates_ctes(): (
+            "d3_lsh_candidate_pairs", "d4_minhash_dedup", "d10_neardup_components",
+            "cur2_component_survivors", "d18_component_size_histogram",
+        ),
+        of.bands_ctes(): (
+            "cur12_versioned_admission", "st16_stream_cascade_admission",
+            "ep10_release_roadmap",
+        ),
+        of.candidates_ctes(of.REP_TOKS): (
+            "d23_dedup_cascade", "ep13_dedup_budget_roadmap",
+            "d25_cascade_quality_survivors",
+        ),
+        of.JACCARD_CTES: (
+            "d4_minhash_dedup", "d7_jaccard_pairs", "d23_dedup_cascade",
+            "d25_cascade_quality_survivors", "st16_stream_cascade_admission",
+        ),
+        of.NEAR_PAIRS_CTE: (
+            "d10_neardup_components", "cur2_component_survivors",
+            "d18_component_size_histogram", "cur8_dedup_quality_interaction",
+            "d25_cascade_quality_survivors",
+        ),
+        of.closure_ctes(): (
+            "d10_neardup_components", "cur2_component_survivors",
+            "d18_component_size_histogram", "cur8_dedup_quality_interaction",
+            "d25_cascade_quality_survivors",
+        ),
+        of.closure_ctes("vec_a", "vec_b"): (
+            "n6_embedding_dedup_groups", "cur11_semantic_survivors",
+        ),
+        of.cascade_ctes(): ("d23_dedup_cascade", "ep13_dedup_budget_roadmap"),
+        of.FPS_CTE: ("d25_cascade_quality_survivors",),
+        of.exposure_ctes(): ("d27_cross_source_exposure", "ep15_source_drop_impact"),
+        of.WATERFILL_CTES: (
+            "mix9_budget_waterfill", "ep13_dedup_budget_roadmap",
+            "ep14_scrub_budget_roadmap",
+        ),
+        of.exact_topk_cte(): (
+            "n11_ann_recall_audit", "n12_ann_multitable_recall", "n13_ann_table_sweep",
+        ),
+        of.exact_topk_cte("q0"): (
+            "n21_srp_multiprobe_recall", "n22_srp_probe_budget_sweep",
+        ),
+        of.cos_sql("v.ve", "q.qve"): (
+            "n1_ann_brute_topk", "n14_ann_margin", "n16_hard_negatives",
+            "n17_ann_hard_negatives",
+        ),
+    }
+
+
+def test_oracles_share_the_fragments():
+    """Every shared oracle contract has one home in oracle_fragments: each
+    listed oracle embeds its fragment's exact text, so a semantics fix
+    lands in all of them and no drifted inline copy survives. (A
+    ``MATERIALIZED`` hint is a physical rewrite of the CTE header, undone
+    before matching.)"""
     osql = entry_mod.oracle_sql()
-    for name in ("d24_span_scrub", "ep14_scrub_budget_roadmap", "st17_stream_span_scrub"):
-        assert frag in osql[name], f"{name} oracle no longer embeds the shared fragment"
+    for frag, names in _fragment_table().items():
+        for name in names:
+            sql = osql[name].replace(" AS MATERIALIZED (", " AS (")
+            assert frag.strip() in sql, f"{name} oracle no longer embeds {frag.strip()[:60]!r}"
 
 
 def test_span_window_stream_matches_materialized_form(spark, tmp_path_factory):
@@ -438,14 +501,14 @@ def test_cur14_fully_contaminated_source_yields_null_rate(spark, tmp_path_factor
 
 
 def test_materialize_rewrites_word_boundary_cte_names_only():
-    """materialize() must hit exactly the named CTEs: 'sh AS (' inside
+    """materialized_ctes() must hit exactly the named CTEs: 'sh AS (' inside
     another identifier (e.g. 'hash AS (') or a non-requested CTE must
     stay untouched, and every occurrence of a requested name is
     rewritten (d20 defines cand_1 once but the helper is re-entrant)."""
-    from ml_training_data_pipeline_spark.plans.oracle_fragments import materialize
+    from ml_training_data_pipeline_spark.plans.oracle_fragments import materialized_ctes
 
     sql = "WITH hash AS (SELECT 1), sh AS (SELECT 2), stats_1 AS (SELECT 3) SELECT 4"
-    out = materialize(sql, "sh")
+    out = materialized_ctes(sql, "sh")
     assert "sh AS MATERIALIZED (" in out
     assert "hash AS (" in out  # suffix-collision guard
     assert "stats_1 AS (" in out  # non-requested CTE untouched
