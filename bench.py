@@ -294,7 +294,7 @@ def main() -> None:
     print(f"# host canary: {canary_s}s", file=sys.stderr)
     stat_before = read_proc_stat()
 
-    from ml_training_data_pipeline_spark.session import get_spark
+    from ml_training_data_pipeline_spark.session import codegen_compiles, get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)
     spark = get_spark("bench", shuffle_partitions=int(cpus))
@@ -308,11 +308,15 @@ def main() -> None:
     # Warm the JVM + whole-stage-codegen cache per PLAN SHAPE by running
     # each headline query once at the tiny SF before timing it at the
     # target SF. Janino compile + JIT is a fixed per-shape cost (5-10s for
-    # the complex dedup/TF-IDF plans) that amortizes to zero in a
-    # long-running deployment; timing it would benchmark the compiler,
-    # not the engine, and it dominated run-to-run variance (d4: 10.6s
-    # cold vs 3.8s warm, identical plan). Set SPARK_GRAFT_NO_WARM=1 for
-    # cold-start numbers.
+    # the complex dedup/TF-IDF plans); timing it would benchmark the
+    # compiler, not the engine, and it dominated run-to-run variance (d4:
+    # 10.6s cold vs 3.8s warm, identical plan). The cost is paid once per
+    # shape only while the generated-class cache holds every shape in use:
+    # Spark's 100-entry default evicted a pipeline's classes before their
+    # next use (ep2 recompiled ~320 per run), so get_spark sizes it to the
+    # engine's working set, and each query's codegen_compiles below counts
+    # the compiles its timed reps still paid. Set SPARK_GRAFT_NO_WARM=1
+    # for cold-start numbers.
     spark.range(1000).selectExpr("sum(id)").collect()
 
     def run(df) -> None:
@@ -344,6 +348,7 @@ def main() -> None:
     cpu: dict[str, float] = {}
     cpu_med: dict[str, float] = {}
     cpu_src: dict[str, str] = {}
+    compiles: dict[str, int] = {}
     # adaptive top-up (r15: m2's CPU column rested on a single clean rep,
     # clean-1/3): when steal-gating leaves fewer than 2 clean reps, run up
     # to this many EXTRA reps — bounded, same pattern as the sf1 probes'
@@ -403,6 +408,7 @@ def main() -> None:
             cpu_rep = delta if (c0 >= 0 and c1 >= 0 and delta >= 0) else -1.0
             rep_times.append((round(time.time() - t0, 3), cpu_rep, rep_steal))
 
+        compiles0 = codegen_compiles(spark)
         for _ in range(reps):
             one_rep()
         # top up ONLY when steal sampling works at all (on a host with no
@@ -423,6 +429,9 @@ def main() -> None:
             print(f"# {name}: clean reps {clean_count()} < 2, extra rep {extra}",
                   file=sys.stderr)
             one_rep()
+        # Janino compiles (generated-class cache misses) over the timed
+        # reps: near 0 when the warm passes left every shape compiled
+        compiles[name] = codegen_compiles(spark) - compiles0
         # per-rep steal gating: CPU stats prefer reps whose own window
         # was quiet (see pick_cpu_stats); min wall stays over all reps
         times[name], cpu[name], cpu_med[name], src = pick_cpu_stats(rep_times)
@@ -458,6 +467,7 @@ def main() -> None:
                 # (steal-gated) or "all-k/n" (no quiet rep available —
                 # read that query's CPU with suspicion)
                 "cpu_rep_source": cpu_src,
+                "codegen_compiles": compiles,
                 "total_cpu_s": total_cpu,
                 "total_cpu_median_s": total_cpu_med,
                 "sf": sf,

@@ -35,7 +35,8 @@ from pyspark.sql.types import ArrayType, LongType
 from .materialize import materialize
 
 
-def _as_double(arr: Column) -> Column:
+def as_double(arr: Column) -> Column:
+    """The array column with every element cast to double."""
     return F.transform(arr, lambda x: x.cast("double"))
 
 
@@ -69,7 +70,7 @@ def dot(a: Column, b: Column) -> Column:
     JVM fold on purpose — see sqdist's note (measured: the Arrow twin
     regressed every candidate-bounded scorer; n1 0.70→1.08 s)."""
     return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
+        F.zip_with(as_double(a), as_double(b), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -226,7 +227,7 @@ def ivf_assignments(
     from pyspark.ml.functions import array_to_vector
 
     feats = vectors.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
+        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("vec")
     ).withColumn("features", array_to_vector(F.col("vec")))
     model = KMeans(k=nlist, seed=seed, featuresCol="features", predictionCol="cell").fit(feats)
     assigned = model.transform(feats).select(
@@ -276,14 +277,14 @@ def ivf_probe_topk(
     build once, which is also the production serving shape: the index is
     an artifact, probes are queries."""
     probes = (
-        _query_cell_ranks(centers, queries, vec_col, id_col)
+        query_cell_ranks(centers, queries, vec_col, id_col)
         .where(F.col("p") <= nprobe)
         .drop("p")
     )
     return rank_topk(_ivf_score_probes(assigned, vectors, probes, vec_col, id_col), k)
 
 
-def _query_cell_ranks(
+def query_cell_ranks(
     centers: list[list[float]],
     queries: DataFrame,
     vec_col: str = "embedding",
@@ -298,7 +299,7 @@ def _query_cell_ranks(
         list(enumerate(centers)), schema="cell int, center array<double>"
     )
     q = with_norm(queries, vec_col, id_col).select(
-        F.col("vec_id").alias("query_id"), _as_double(F.col("vec")).alias("qvec"),
+        F.col("vec_id").alias("query_id"), as_double(F.col("vec")).alias("qvec"),
         F.col("nrm").alias("qnrm"),
     )
     qd = q.crossJoin(F.broadcast(centers_df)).select(
@@ -348,7 +349,7 @@ def ivf_probe_scored_all(
     (scores don't depend on nprobe). The full-probe branch of the sweep
     computes this anyway; tagging by probe rank lets every other branch
     reuse it."""
-    probes = _query_cell_ranks(centers, queries, vec_col, id_col)
+    probes = query_cell_ranks(centers, queries, vec_col, id_col)
     return _ivf_score_probes(assigned, vectors, probes, vec_col, id_col)
 
 
@@ -623,7 +624,7 @@ def pq_codebooks(
     Returns (codebooks[j][code] -> centroid,
     encoded (vec_id, j, code) long frame)."""
     base = vectors.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
+        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("vec")
     )
     d = base.select(F.size("vec")).first()[0]  # bounded scalar: one row
     assert d % m == 0, f"dim {d} not divisible by m={m}"
@@ -733,7 +734,7 @@ def _pq_query_lut(
         book_rows, "j int, code int, cvec array<double>, cnorm2 double"
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qvec")
     ).select(
         "query_id",
         norm(F.col("qvec")).alias("qnrm"),
@@ -849,7 +850,7 @@ def ivfpq_topk(
     ]
     cross_df = spark.createDataFrame(cross_rows, "cell int, j int, code int, cdot double")
     probes = (
-        _query_cell_ranks(centers, queries, vec_col, id_col)
+        query_cell_ranks(centers, queries, vec_col, id_col)
         .where(F.col("p") <= nprobe)
         .select("query_id", "qvec", "cell")
     )

@@ -16,8 +16,7 @@ from ..operators.cluster import center_dist_structs, lloyd_quantized
 from ..operators.dedup import connected_components
 from ..operators.materialize import materialize
 from ..operators.similarity import (
-    _as_double,
-    _query_cell_ranks,
+    as_double,
     brute_force_topk,
     cosine,
     dot,
@@ -36,6 +35,7 @@ from ..operators.similarity import (
     pq_adc_scores,
     pq_codebooks,
     prototype_classify,
+    query_cell_ranks,
     rank_topk,
     recall_audit,
     score_pairs,
@@ -1073,7 +1073,7 @@ def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cost face: how many corpus vectors each query's probed cells hold
 
     probed = (
-        _query_cell_ranks(centers, probes)
+        query_cell_ranks(centers, probes)
         .where(F.col("p") <= 8)
         .select("query_id", "cell")
     )
@@ -1146,7 +1146,7 @@ def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def n20_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "label", _as_double(F.col("embedding")).alias("v")
+        "label", as_double(F.col("embedding")).alias("v")
     )
     # ONE corpus scan: the per-row norm rides the posexplode (each vector
     # contributes exactly one row per dim, so avg(nrm) within any (label,

@@ -1,6 +1,7 @@
 """session.run_concurrently — the package's one driver-concurrency helper —
 and the source guard that keeps it (and operators/materialize.py's
-``materialize``) the only site of its kind."""
+``materialize``) the only site of its kind; get_spark's generated-class
+cache size."""
 
 from __future__ import annotations
 
@@ -9,13 +10,18 @@ import os
 import re
 import threading
 import time
-from functools import partial
+from functools import partial, reduce
 from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrame
 
 from ml_training_data_pipeline_spark.operators.materialize import materialize
-from ml_training_data_pipeline_spark.session import _MAX_DRIVER_THREADS, run_concurrently
+from ml_training_data_pipeline_spark.session import (
+    _MAX_DRIVER_THREADS,
+    codegen_compiles,
+    run_concurrently,
+)
 
 GROUP_PROP = "spark.jobGroup.id"
 POOL_PROP = "spark.scheduler.pool"
@@ -117,3 +123,24 @@ def test_materialize_name_binds_the_operator():
         mod = importlib.import_module(rel.replace("/", "."))
         if not rel.endswith("oracle_fragments"):
             assert getattr(mod, "materialize", materialize) is materialize, rel
+
+
+# --- generated-class cache --------------------------------------------------------
+
+
+def test_codegen_cache_keeps_more_plan_shapes_than_the_default(spark):
+    """One warm ep2 run compiles about 300 distinct classes; under Spark's
+    100-entry default the LRU evicted each before its next use, so every
+    run recompiled them all. 150 distinct tiny codegen stages (one union,
+    so one job), run twice: the second pass must find its classes in the
+    cache."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+    def one_pass() -> None:
+        shapes = [spark.range(0, 8, 1, 1).selectExpr(f"id * {i} + {i} AS v") for i in range(150)]
+        assert len(reduce(DataFrame.unionAll, shapes).collect()) == 8 * 150
+
+    one_pass()
+    before = codegen_compiles(spark)
+    one_pass()
+    assert codegen_compiles(spark) - before <= 5
