@@ -116,16 +116,16 @@ _QS_TMP = ("_qs_n_chars", "_qs_n_stripped", "_qs_toks", "_qs_n_toks",
 
 
 def with_token_stats(
-    df, text_col: str = "text", *, keep_tokens: bool = False
+    df, *, keep_tokens: bool = False
 ):
     """Append _qs_n_chars/_qs_n_stripped/_qs_n_toks/_qs_n_stop/_qs_tok_chars
     (and _qs_toks when keep_tokens) computed with ONE tokenize."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     df1 = df.withColumns(
         {
             "_qs_n_chars": F.length(t),
             "_qs_n_stripped": F.length(F.regexp_replace(t, r"[^\sa-zA-Z0-9]", "")),
-            "_qs_toks": tokenize(F.col(text_col)),
+            "_qs_toks": tokenize(F.col("text")),
         }
     )
     toks = F.col("_qs_toks")
@@ -140,11 +140,11 @@ def with_token_stats(
     return df2 if keep_tokens else df2.drop("_qs_toks")
 
 
-def with_quality_ratios(df, text_col: str = "text", *, keep_tokens: bool = False):
+def with_quality_ratios(df, *, keep_tokens: bool = False):
     """Append the UNROUNDED _qs_sw/_qs_pr/_qs_mwl ratio columns (same
     expression shapes as stopword_ratio/punct_ratio/mean_word_length,
     over the shared stats attributes)."""
-    df = with_token_stats(df, text_col, keep_tokens=keep_tokens)
+    df = with_token_stats(df, keep_tokens=keep_tokens)
     n_toks, n_stop = F.col("_qs_n_toks"), F.col("_qs_n_stop")
     n_chars, n_stripped = F.col("_qs_n_chars"), F.col("_qs_n_stripped")
     return df.withColumns(
@@ -166,11 +166,11 @@ def quality_score_from_ratios(sw: Column, pr: Column, mwl: Column) -> Column:
     )
 
 
-def with_quality_score(df, out_col: str, text_col: str = "text"):
+def with_quality_score(df, out_col: str):
     """Append ``out_col`` = quality_score(text) via the staged path (one
     tokenize, one token pass) and drop the intermediates. Drop-in for
     ``.withColumn(out_col, quality_score(text))`` — bit-identical output."""
-    df = with_quality_ratios(df, text_col)
+    df = with_quality_ratios(df)
     df = df.withColumn(
         out_col,
         quality_score_from_ratios(F.col("_qs_sw"), F.col("_qs_pr"), F.col("_qs_mwl")),
@@ -201,11 +201,11 @@ def lang_argmax(scores: "dict[str, Column]") -> Column:
     return best_lang
 
 
-def with_language(df, out_col: str = "lang_detected", toks_col: str = "_qs_toks"):
-    """Append ``out_col`` = detect_language over an existing token-array
-    column (share the tokenize with with_token_stats(keep_tokens=True))."""
-    df = df.withColumns(lang_score_cols(F.col(toks_col)))
-    df = df.withColumn(out_col, lang_argmax({k: F.col(k) for k in (f"_ls_{lg}" for lg in sorted(LANG_MARKERS))}))
+def with_language(df):
+    """Append ``lang_detected`` = detect_language over the ``_qs_toks``
+    token array (share the tokenize with with_token_stats(keep_tokens=True))."""
+    df = df.withColumns(lang_score_cols(F.col("_qs_toks")))
+    df = df.withColumn("lang_detected", lang_argmax({k: F.col(k) for k in (f"_ls_{lg}" for lg in sorted(LANG_MARKERS))}))
     return df.drop(*[f"_ls_{lg}" for lg in sorted(LANG_MARKERS)])
 
 

@@ -237,15 +237,15 @@ def parse_sector_response(resp: Column) -> list[Column]:
     ]
 
 
-def enrich_documents(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def enrich_documents(docs: DataFrame) -> DataFrame:
     """EP1 — the full enrichment stage (process_large_file,
     01_extract_features.R:461-506) as one lazy plan: prompt → completion
     (batched UDF) → regex fields → combined_features. The reference's
     chunk loop / worker pool / consolidation dissolve into partitions."""
     guarded = F.when(
-        F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""), None
-    ).otherwise(F.col(text_col))
-    out = docs.select(F.col(id_col).alias("doc_id"), guarded.alias("_text"))
+        F.col("text").isNull() | (F.trim(F.col("text")) == ""), None
+    ).otherwise(F.col("text"))
+    out = docs.select("doc_id", guarded.alias("_text"))
     out = out.withColumn("topic_response", llm_complete(topic_prompt(F.col("_text"))))
     out = out.withColumn("sector_response", llm_complete(sector_prompt(F.col("_text"))))
     out = out.select(

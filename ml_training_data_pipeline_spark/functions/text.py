@@ -80,15 +80,14 @@ def expand_contractions(c: Column) -> Column:
     return out
 
 
-def clean_text(c: Column, *, numbers: bool = True) -> Column:
+def clean_text(c: Column) -> Column:
     """The reference's clean_text composite (02_build_models.R:25-41):
-    lower → expand contractions → strip punctuation [→ strip numbers]
+    lower → expand contractions → strip punctuation → strip numbers
     → normalize whitespace. Pure column expression."""
     out = lowercase(c)
     out = expand_contractions(out)
     out = strip_punctuation(out)
-    if numbers:
-        out = strip_numbers(out)
+    out = strip_numbers(out)
     return normalize_whitespace(out)
 
 
@@ -133,27 +132,6 @@ def ngrams_up_to(tokens: Column, max_n: int) -> Column:
     for p in parts[1:]:
         out = F.concat(out, p)
     return out
-
-
-def extract_between(c: Column, left: str, right: str) -> Column:
-    """F8 — lookaround field extraction re-expressed with a capture group
-    (str_extract('(?<=Domain: ).*?(?= Level 1:)') at
-    01_extract_features.R:277-279,368-370). Returns NULL when no match."""
-    pat = f"{left}(.*?){right}"
-    extracted = F.regexp_extract(c, pat, 1)
-    return F.when(extracted == "", None).otherwise(F.trim(extracted))
-
-
-def concat_features(*cols: Column, sep: str = " ") -> Column:
-    """F9/P2 — combined_features = paste(Domain, Level_1, ...) with the
-    column list as an explicit parameter (the reference hard-codes two
-    different variants: 02_build_models.R:19-20 vs 02_test.R:19)."""
-    return F.concat_ws(sep, *cols)
-
-
-def null_if_empty(c: Column) -> Column:
-    """P7 — empty-prompt guard (01_extract_features.R:85-88)."""
-    return F.when(c.isNull() | (F.trim(c) == ""), None).otherwise(c)
 
 
 def strip_html(c: Column) -> Column:

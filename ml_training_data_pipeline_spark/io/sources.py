@@ -261,9 +261,9 @@ def _parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFram
     the scan are unchanged — pinned by tests/test_plan_shapes.py.
     Result-safe by construction: no query derives values from physical
     partitioning (no rand/sample-by-partition/monotonically_increasing_id
-    anywhere in the package). SPARK_GRAFT_SCAN_REPARTITION=0 disables."""
-    if os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "1") == "0":
-        return df
+    anywhere in the package). There is no switch to turn it off: the
+    row-group gate already leaves a scan alone once its file has as many
+    row groups as the cluster has cores."""
     try:
         rows, row_groups = _scan_layout(path)
     except Exception:  # unreadable footer: leave the scan alone
@@ -333,23 +333,11 @@ def register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """CSV scan (S1/S2/S3). Explicit schema preferred; header fallback for
-    ad-hoc use. A glob path (``.../chunk_*.csv``) covers the reference's
-    list.files+bind_rows consolidation (S3)."""
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Parquet sink (S4). ``partition_by`` covers the reference's
     dynamic-name sink (S6, ``04_cluster_refiner.R:686-693``) idiomatically:
     partition columns instead of filename templating."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -17,7 +17,7 @@ symbol pairs, merge the most frequent, repeat — expressed the Spark way:
 - The merge itself is a pure JVM higher-order fold (``aggregate``) over
   each term's symbol array — left-to-right, non-overlapping, exactly
   BPE's greedy replacement — so NO Python UDF anywhere in the loop.
-- Lineage is cut with materialize() every few iterations (the
+- Lineage is cut with materialize() every ``_CHECKPOINT_EVERY`` merges (the
   connected_components discipline) so N merges stay O(N) planning, not
   O(N²).
 """
@@ -29,6 +29,9 @@ from pyspark.sql import functions as F
 
 from .materialize import materialize
 from .tfidf import doc_tokens, term_counts
+
+# merges between lineage cuts, in training and in serving
+_CHECKPOINT_EVERY = 4
 
 # left-to-right greedy merge of the adjacent pair (L, R) inside a symbol
 # array, as a pure SQL fold: walk the symbols, and whenever the
@@ -62,12 +65,12 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def vocab_symbols(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def vocab_symbols(docs: DataFrame) -> DataFrame:
     """(term, tf, syms): distinct corpus terms with total tf, segmented
     into their initial character symbols — the trainer's working state.
     The ONLY corpus-sized pass in the whole trainer."""
     tf = (
-        term_counts(doc_tokens(docs, text_col, id_col))
+        term_counts(doc_tokens(docs))
         .groupBy("term")
         .agg(F.sum("tf").alias("tf"))
     )
@@ -79,9 +82,6 @@ def vocab_symbols(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 def train_bpe(
     docs: DataFrame,
     n_merges: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    checkpoint_every: int = 4,
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
     """Learn ``n_merges`` BPE merge rules. Returns (merges, state):
     merges = [(step, left, right, merged, pair_freq)] in learning order,
@@ -90,7 +90,7 @@ def train_bpe(
     Ties on pair frequency break by (left, right) lexicographic order —
     a total order, so the learned rules are deterministic across
     partitionings and engines."""
-    state = materialize(vocab_symbols(docs, text_col, id_col))
+    state = materialize(vocab_symbols(docs))
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(n_merges):
         pairs = state.where(F.size("syms") >= 2).select(
@@ -116,7 +116,7 @@ def train_bpe(
         merges.append((step, l, r, merged, freq))
         fold = _MERGE_FOLD.format(COL="syms", L=_lit(l), R=_lit(r), M=_lit(merged))
         state = state.select("term", "tf", F.expr(fold).alias("syms"))
-        if (step + 1) % checkpoint_every == 0:
+        if (step + 1) % _CHECKPOINT_EVERY == 0:
             state = materialize(state)
     return merges, state
 
@@ -133,7 +133,6 @@ def apply_merges(
     segmented: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
     syms_col: str = "syms",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Serve path: apply learned rules IN LEARNING ORDER to a (…, syms)
     DataFrame — the same JVM fold the trainer uses, so train/serve
@@ -144,7 +143,7 @@ def apply_merges(
     for step, (_i, l, r, merged, _f) in enumerate(merges):
         fold = _MERGE_FOLD.format(COL=_ident(syms_col), L=_lit(l), R=_lit(r), M=_lit(merged))
         out = out.withColumn(syms_col, F.expr(fold))
-        if (step + 1) % checkpoint_every == 0:
+        if (step + 1) % _CHECKPOINT_EVERY == 0:
             out = materialize(out)
     return out
 
@@ -152,8 +151,6 @@ def apply_merges(
 def encode_token_counts(
     docs: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, n_chars_sym, n_subwords): per-document subword counts
     under the learned merges — the token-budget number a training run
@@ -161,7 +158,7 @@ def encode_token_counts(
     distinct term once, then join term-level subword counts back to the
     per-doc term stream) — the corpus stream is never re-segmented
     per occurrence."""
-    toks = doc_tokens(docs, text_col, id_col)
+    toks = doc_tokens(docs)
     per_term = term_counts(toks)  # (doc_id, term, tf)
     vocab = per_term.select("term").distinct().select(
         "term", F.expr("split(term, '(?!^)(?=.)')").alias("syms")
@@ -173,7 +170,7 @@ def encode_token_counts(
     )
     return (
         per_term.join(seg, "term")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(F.col("tf") * F.col("n_chars_term")).cast("long").alias("n_chars_sym"),
             F.sum(F.col("tf") * F.col("n_sub_term")).cast("long").alias("n_subwords"),

@@ -15,14 +15,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def explode_vectors(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", group_col: str = "label"
-) -> DataFrame:
+def explode_vectors(df: DataFrame) -> DataFrame:
     """(group, id, idx, val) — double-cast long format of an array column."""
     return df.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("idx", "_v"),
+        F.col("label").alias("grp"),
+        F.col("vec_id").alias("vid"),
+        F.posexplode(F.col("embedding")).alias("idx", "_v"),
     ).select("grp", "vid", "idx", F.col("_v").cast("double").alias("val"))
 
 

@@ -33,8 +33,6 @@ def fit_kmeans(
     features: DataFrame,
     k: int = 15,
     seed: int = 123,
-    features_col: str = "features",
-    id_col: str = "doc_id",
 ) -> ClusterResult:
     """M1 — apply_clustering(features, k=15) with seed 123
     (02_build_models.R:183-190)."""
@@ -48,10 +46,10 @@ def fit_kmeans(
     from pyspark import StorageLevel
 
     features = features.persist(StorageLevel.MEMORY_AND_DISK)
-    km = KMeans(k=k, seed=seed, featuresCol=features_col, predictionCol="cluster_id")
+    km = KMeans(k=k, seed=seed, featuresCol="features", predictionCol="cluster_id")
     model = km.fit(features)
-    assigned = model.transform(features).select(id_col, "cluster_id")
-    return ClusterResult(model=model, assignments=assigned, features=features.select(id_col, features_col))
+    assigned = model.transform(features).select("doc_id", "cluster_id")
+    return ClusterResult(model=model, assignments=assigned, features=features.select("doc_id", "features"))
 
 
 def predict(model: KMeansModel, features: DataFrame) -> DataFrame:
@@ -65,24 +63,24 @@ def cluster_sizes(assignments: DataFrame) -> DataFrame:
     return assignments.groupBy("cluster_id").agg(F.count("*").alias("size"))
 
 
-def centroids_long(features: DataFrame, assignments: DataFrame, features_col: str = "features") -> DataFrame:
+def centroids_long(features: DataFrame, assignments: DataFrame) -> DataFrame:
     """A2 — colMeans per cluster (02_build_models.R:402-421) in long
     format (cluster_id, idx, weight). posexplode of the dense form +
     partial-aggregated mean; single-doc clusters fall out naturally (mean
     of one row), unlike the reference's special case."""
-    arr = features.select("doc_id", vector_to_array(F.col(features_col)).alias("arr"))
+    arr = features.select("doc_id", vector_to_array(F.col("features")).alias("arr"))
     exploded = arr.join(assignments, "doc_id").select(
         "cluster_id", F.posexplode("arr").alias("idx", "val")
     )
     return exploded.groupBy("cluster_id", "idx").agg(F.avg("val").alias("weight"))
 
 
-def withinss(features: DataFrame, assignments: DataFrame, centroids: DataFrame, features_col: str = "features") -> DataFrame:
+def withinss(features: DataFrame, assignments: DataFrame, centroids: DataFrame) -> DataFrame:
     """A4 — within-cluster sum of squares (02_build_models.R:437-444):
     sum over docs of squared distance to their centroid, per cluster.
     Long-format element-wise join keeps it shuffle-bounded at any scale."""
     arr = (
-        features.select("doc_id", vector_to_array(F.col(features_col)).alias("arr"))
+        features.select("doc_id", vector_to_array(F.col("features")).alias("arr"))
         .join(assignments, "doc_id")
         .select("doc_id", "cluster_id", F.posexplode("arr").alias("idx", "val"))
     )
@@ -93,12 +91,12 @@ def withinss(features: DataFrame, assignments: DataFrame, centroids: DataFrame, 
     )
 
 
-def cluster_summary(features: DataFrame, assignments: DataFrame, features_col: str = "features") -> DataFrame:
+def cluster_summary(features: DataFrame, assignments: DataFrame) -> DataFrame:
     """The kmeans-object summary fields as a table:
     (cluster_id, size, withinss)."""
-    cents = centroids_long(features, assignments, features_col)
+    cents = centroids_long(features, assignments)
     return cluster_sizes(assignments).join(
-        withinss(features, assignments, cents, features_col), "cluster_id", "left"
+        withinss(features, assignments, cents), "cluster_id", "left"
     )
 
 
@@ -160,17 +158,15 @@ def scatter_row_num(q_col: str, s_col: str, n_col: str):
 def quantize_vectors(
     vectors: DataFrame,
     quant: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The (vec_id, q, d) quantized-corpus frame the Lloyd determinism
     recipe runs on, materialized ONCE — the third return slot of
     ``lloyd_quantized`` and the ``prequantized`` input a k-sweep (m11)
     shares across every k (and across concurrently-submitted fits)."""
     q = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.transform(
-            F.col(vec_col), lambda x: F.floor(x.cast("double") * quant)
+            F.col("embedding"), lambda x: F.floor(x.cast("double") * quant)
         ).alias("q"),
     ).withColumn("d", F.transform("q", lambda x: x.cast("double")))
     return materialize(q)  # consumed by every iteration's assign + sums pass
@@ -181,8 +177,6 @@ def lloyd_quantized(
     k: int,
     iters: int,
     quant: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     prequantized: "DataFrame | None" = None,
 ) -> "tuple[DataFrame, dict[int, list[float]], DataFrame]":
     """Lloyd's k-means under a cross-engine determinism recipe (M10/N23).
@@ -207,7 +201,7 @@ def lloyd_quantized(
     - argmin ties break on cluster_id; an emptied cluster keeps its
       previous center.
 
-    Init: the ``k`` lowest ``id_col`` rows. Scale shape: one scan per
+    Init: the ``k`` lowest ``vec_id`` rows. Scale shape: one scan per
     iteration, centers ship as k x d literals (broadcast-equivalent),
     per-cluster sums are map-side-combinable longs; driver transfer is
     k rows per iteration (job control).
@@ -220,7 +214,7 @@ def lloyd_quantized(
     if prequantized is not None:
         q = prequantized
     else:
-        q = quantize_vectors(vectors, quant, id_col, vec_col)
+        q = quantize_vectors(vectors, quant)
 
     if iters < 1:
         raise ValueError(f"lloyd_deterministic: iters={iters}, need >= 1")
@@ -263,11 +257,9 @@ def lloyd_deterministic(
     k: int,
     iters: int,
     quant: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The M10 assignment table — see ``lloyd_quantized`` for the full
     (assignments, final centers, quantized frame) return that IVF-style
     consumers (n23) build on."""
-    assign, _, _ = lloyd_quantized(vectors, k, iters, quant, id_col, vec_col)
+    assign, _, _ = lloyd_quantized(vectors, k, iters, quant)
     return assign.select("vec_id", "cluster_id")

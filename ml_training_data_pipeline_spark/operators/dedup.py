@@ -33,6 +33,17 @@ from ..functions.analysis import fingerprint, fingerprint_pair
 from .materialize import materialize
 from .tfidf import doc_tokens, term_counts
 
+# MinHash-LSH: word 3-shingles, 8 min-hashes, bands of 2 rows
+SHINGLE_K = 3
+NUM_HASHES = 8
+ROWS_PER_BAND = 2
+# SimHash near-dups: at most 3 differing bits; the banded join splits a
+# 60-bit signature into 4 bands (more bands than bits allowed to differ,
+# so every qualifying pair agrees on a whole band)
+_MAX_HAMMING = 3
+_SIMHASH_BITS = 60
+_SIMHASH_BANDS = 4
+
 
 def md5_long(c: Column) -> Column:
     """Deterministic 60-bit hash from md5 — portable across engines
@@ -42,9 +53,7 @@ def md5_long(c: Column) -> Column:
 
 # --- exact dedup -------------------------------------------------------------
 
-def exact_dup_groups(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", hash_keys: bool = False
-) -> DataFrame:
+def exact_dup_groups(docs: DataFrame, hash_keys: bool = False) -> DataFrame:
     """(fp, n_docs, keep_doc_id): canonical-fingerprint groups; the kept
     representative is the min doc_id (deterministic survivor policy).
     ``hash_keys=True`` groups on the 120-bit struct<h,l> long-pair
@@ -55,8 +64,8 @@ def exact_dup_groups(
     from ..functions.analysis import fingerprint_pair
 
     fp_fn = fingerprint_pair if hash_keys else fingerprint
-    fps = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), fp_fn(F.col(text_col)).alias("fp")
+    fps = docs.where(F.col("text").isNotNull()).select(
+        "doc_id", fp_fn(F.col("text")).alias("fp")
     )
     return fps.groupBy("fp").agg(
         F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id")
@@ -65,8 +74,8 @@ def exact_dup_groups(
 
 # --- shingles + MinHash ------------------------------------------------------
 
-def doc_shingles(docs: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, shingle BIGINT) distinct word-k-shingles — the set
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle BIGINT) distinct word-``SHINGLE_K``-shingles — the set
     representation Jaccard is defined over. The shingle is hashed to a
     60-bit md5 long IN THE SCAN PROJECTION, before the distinct, so the
     distinct shuffle and every downstream equi-join/groupBy move 8-byte
@@ -81,18 +90,18 @@ def doc_shingles(docs: DataFrame, k: int = 3, text_col: str = "text", id_col: st
     n-gram lambda."""
     from ..functions.text import ngrams, tokenize
 
-    tok_rows = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), F.explode(F.array(tokenize(F.col(text_col)))).alias("_toks")
+    tok_rows = docs.where(F.col("text").isNotNull()).select(
+        "doc_id", F.explode(F.array(tokenize(F.col("text")))).alias("_toks")
     )
     return (
-        tok_rows.where(F.size("_toks") >= k)
-        .select("doc_id", F.explode(ngrams(F.col("_toks"), k)).alias("_shingle_str"))
+        tok_rows.where(F.size("_toks") >= SHINGLE_K)
+        .select("doc_id", F.explode(ngrams(F.col("_toks"), SHINGLE_K)).alias("_shingle_str"))
         .select("doc_id", md5_long(F.col("_shingle_str")).alias("shingle"))
         .distinct()
     )
 
 
-def minhash_wide(shingles: DataFrame, num_hashes: int = 8) -> DataFrame:
+def minhash_wide(shingles: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """(doc_id, m0..m{num_hashes-1}) — the signature as num_hashes
     AGGREGATE COLUMNS of one groupBy(doc_id), h_i(s) = md5_long(i||':'||s).
     Not a seed explode: the aggregator sees |shingles| input rows instead
@@ -107,7 +116,7 @@ def minhash_wide(shingles: DataFrame, num_hashes: int = 8) -> DataFrame:
     return shingles.groupBy("doc_id").agg(*mins)
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 8) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """(doc_id, seed, min_hash) — the long form of ``minhash_wide``
     (posexplode of the already-aggregated docs×num_hashes result); the
     serving/inspection contract (d2)."""
@@ -120,7 +129,7 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 8) -> DataFrame:
     ).select("doc_id", F.col("seed").cast("long").alias("seed"), "min_hash")
 
 
-def lsh_bands_from_wide(wide: DataFrame, rows_per_band: int = 2) -> DataFrame:
+def lsh_bands_from_wide(wide: DataFrame, rows_per_band: int = ROWS_PER_BAND) -> DataFrame:
     """(doc_id, band, band_sig) straight off the wide signature row — a
     pure projection, NO second aggregation: band b's signature is the md5
     of its rows_per_band min-hashes comma-joined in seed order, exactly
@@ -162,10 +171,10 @@ def lsh_bands_from_wide(wide: DataFrame, rows_per_band: int = 2) -> DataFrame:
     )
 
 
-def lsh_bands(minhash: DataFrame, rows_per_band: int = 2) -> DataFrame:
+def lsh_bands(minhash: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig) — 60-bit md5 long over the band's ordered
     min-hashes (same key form as ``lsh_bands_from_wide``)."""
-    banded = minhash.withColumn("band", F.floor(F.col("seed") / rows_per_band).cast("int"))
+    banded = minhash.withColumn("band", F.floor(F.col("seed") / ROWS_PER_BAND).cast("int"))
     sig = md5_long(
         F.array_join(
             F.transform(
@@ -283,7 +292,6 @@ def lsh_admission_rejects(
     delta_bands: DataFrame,
     corpus_bands: DataFrame,
     shingles: DataFrame,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """(delta_doc) — delta-side docs verified as near-duplicates of the
     standing corpus: the ONE admission pipeline behind cur10 (batch),
@@ -333,7 +341,7 @@ def lsh_admission_rejects(
     # delta×corpus band join + distinct. The frame is LSH-bounded.
     cand = materialize(cand)
     ver = jaccard_pairs(
-        shingles, threshold=threshold, candidates=cand.select("doc_a", "doc_b")
+        shingles, threshold=0.5, candidates=cand.select("doc_a", "doc_b")
     )
     # verified pairs are tiny — AQE broadcasts them onto the candidates
     return (
@@ -344,10 +352,10 @@ def lsh_admission_rejects(
     )
 
 
-def shingle_df_audit(shingles: DataFrame, cap: int = 20) -> DataFrame:
+def shingle_df_audit(shingles: DataFrame) -> DataFrame:
     """(df, n_shingles, n_postings, dropped_by_cap, posting_share) — the
     document-frequency histogram of a shingle inverted index and the
-    posting mass a ``max_shingle_df=cap`` guard would drop (d19). Bounded
+    posting mass a ``max_shingle_df=20`` guard would drop (d19). Bounded
     by the distinct-df domain after the df groupBy; nothing corpus-sized
     survives the first aggregate."""
     df = shingles.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -360,7 +368,7 @@ def shingle_df_audit(shingles: DataFrame, cap: int = 20) -> DataFrame:
         "df",
         "n_shingles",
         "n_postings",
-        F.when(F.col("df") > cap, 1).otherwise(0).alias("dropped_by_cap"),
+        F.when(F.col("df") > 20, 1).otherwise(0).alias("dropped_by_cap"),
         F.round(F.col("n_postings") / F.col("total").cast("double"), 6).alias(
             "posting_share"
         ),
@@ -370,9 +378,6 @@ def shingle_df_audit(shingles: DataFrame, cap: int = 20) -> DataFrame:
 def minhash_dedup(
     docs: DataFrame,
     *,
-    k: int = 3,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Full MinHash-LSH dedup: shingle → sign → band → candidates →
@@ -384,7 +389,7 @@ def minhash_dedup(
     # checkpointed RDD reports its true materialized size, so AQE keeps
     # planning correctly (measured: ~30% faster than recomputing the
     # tokenize→shingle lineage per consumer).
-    sh = materialize(doc_shingles(docs, k=k))
+    sh = materialize(doc_shingles(docs))
     # The candidate pair list has THREE plan references downstream
     # (jaccard_pairs uses it in both legs of the cand_docs union and in
     # the pair semi-join), and each reference re-derives the whole
@@ -394,7 +399,7 @@ def minhash_dedup(
     # whole point of banding), and the single build replaces three
     # executions of the banding scan at any scale.
     cands = materialize(
-        lsh_candidate_pairs(lsh_bands_from_wide(minhash_wide(sh, num_hashes), rows_per_band))
+        lsh_candidate_pairs(lsh_bands_from_wide(minhash_wide(sh)))
     )
     # candidate-scoped verification: LSH prunes the quadratic shingle
     # self-join, not just the final result (see jaccard_pairs docstring).
@@ -410,7 +415,7 @@ def minhash_dedup(
 
 # --- SimHash ----------------------------------------------------------------
 
-def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """(doc_id, simhash) — tf-weighted ``bits``-wide SimHash over unigram
     terms. bit b set iff Σ_t tf(t)·(±1 by bit b of h(t)) > 0.
 
@@ -423,7 +428,7 @@ def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text", id_col: str
     the wall-clock at 100 TB. The term hash is computed inline per
     doc-term row (md5 is codegen'd JVM work; a distinct-term hash join
     would trade a cheap rehash for a whole shuffle)."""
-    counts = term_counts(doc_tokens(docs, text_col, id_col))
+    counts = term_counts(doc_tokens(docs))
     contrib = counts.select("doc_id", "tf", md5_long(F.col("term")).alias("h"))
     bitsums = [
         F.sum(
@@ -442,26 +447,22 @@ def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text", id_col: str
     return wide.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_banded_near_dups(
-    sim: DataFrame, max_hamming: int = 3, bands: int = 4, bits: int = 60
-) -> DataFrame:
+def simhash_banded_near_dups(sim: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming ≤ max) via multi-band bucketing — the scale
-    path. The signature is split into ``bands`` disjoint bit-slices; docs
-    are joined per (band, slice-value). Pigeonhole: a pair differing in at
-    most ``max_hamming`` ≤ bands-1 bits must agree exactly on ≥1 band, so
-    with bands = max_hamming+1 this is COMPLETE (identical result to the
-    all-pairs hamming filter) while each join is an equi-join on a
-    ``bits/bands``-bit key — the same sub-quadratic shape as ``lsh_bands``
-    (and unlike single-high-byte bucketing, it cannot miss pairs that
-    differ in the bucket bits)."""
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for the completeness guarantee")
-    w = bits // bands
+    path. The signature is split into ``_SIMHASH_BANDS`` disjoint
+    bit-slices; docs are joined per (band, slice-value). Pigeonhole: a
+    pair differing in at most ``_MAX_HAMMING`` ≤ bands-1 bits must agree
+    exactly on ≥1 band, so with bands = max_hamming+1 this is COMPLETE
+    (identical result to the all-pairs hamming filter) while each join is
+    an equi-join on a ``bits/bands``-bit key — the same sub-quadratic
+    shape as ``lsh_bands`` (and unlike single-high-byte bucketing, it
+    cannot miss pairs that differ in the bucket bits)."""
+    w = _SIMHASH_BITS // _SIMHASH_BANDS
     mask = (1 << w) - 1
     banded = sim.select(
         "doc_id",
         "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        F.explode(F.sequence(F.lit(0), F.lit(_SIMHASH_BANDS - 1))).alias("band"),
     ).withColumn("band_key", F.expr(f"shiftright(simhash, band * {w})").bitwiseAND(F.lit(mask)))
     a = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"), "band", "band_key")
     b = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"), "band", "band_key")
@@ -472,18 +473,19 @@ def simhash_banded_near_dups(
             "doc_a", "doc_b",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long").alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= _MAX_HAMMING)
         .distinct()
     )
 
 
-def simhash_near_dups(sim: DataFrame, max_hamming: int = 3, bucket_shift: int = 8) -> DataFrame:
-    """(doc_a, doc_b, hamming ≤ max) — bucket on the signature's high bits
-    (sub-quadratic equi-join) then verify hamming on the full signature."""
+def simhash_near_dups(sim: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming ≤ max) — bucket on the signature's bits
+    above the low 8 (sub-quadratic equi-join) then verify hamming on the
+    full signature."""
     a = sim.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"),
-                   F.shiftright("simhash", bucket_shift).alias("bucket"))
+                   F.shiftright("simhash", 8).alias("bucket"))
     b = sim.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"),
-                   F.shiftright("simhash", bucket_shift).alias("bucket"))
+                   F.shiftright("simhash", 8).alias("bucket"))
     return (
         a.join(b, "bucket")
         .where(F.col("doc_a") < F.col("doc_b"))
@@ -491,7 +493,7 @@ def simhash_near_dups(sim: DataFrame, max_hamming: int = 3, bucket_shift: int = 
             "doc_a", "doc_b",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long").alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= _MAX_HAMMING)
     )
 
 
@@ -603,14 +605,12 @@ def connected_components(
 SPAN_WIDTH = 8
 
 
-def span_window_stream(
-    t8: DataFrame, width: int = SPAN_WIDTH, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(doc_id, *keep, pos, win) — every stride-1 ``width``-token window
+def span_window_stream(t8: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, *keep, pos, win) — every stride-1 ``SPAN_WIDTH``-token window
     of each doc as a 60-bit md5 long (string window keys never shuffle),
     as a PURE projection (no materialization): the single-consumer form
     st17 uses per micro-batch and for the corpus window inventory.
-    Expects (doc_id, toks) pre-filtered to ``size(toks) >= width``.
+    Expects (doc_id, toks) pre-filtered to ``size(toks) >= SPAN_WIDTH``.
     ``keep`` names extra t8 columns to carry through the explode — a
     per-doc attribute (e.g. ``source``) rides the projection for free,
     where joining it back onto the stream afterwards would shuffle the
@@ -621,9 +621,9 @@ def span_window_stream(
         *keep,
         F.explode(
             F.expr(
-                f"transform(sequence(0, size(toks) - {width}),"
+                f"transform(sequence(0, size(toks) - {SPAN_WIDTH}),"
                 " i -> struct(i AS pos,"
-                f" CAST(conv(substr(md5(concat_ws(' ', slice(toks, i+1, {width}))),"
+                f" CAST(conv(substr(md5(concat_ws(' ', slice(toks, i+1, {SPAN_WIDTH}))),"
                 " 1, 15), 16, 10) AS LONG) AS win))"
             )
         ).alias("w"),
@@ -632,11 +632,11 @@ def span_window_stream(
     )
 
 
-def span_windows(t8: DataFrame, width: int = SPAN_WIDTH) -> DataFrame:
+def span_windows(t8: DataFrame) -> DataFrame:
     """``span_window_stream`` materialized once — the batch-scrub form:
     d24/ep14 read the position stream twice (cross-doc support + removal
     probe)."""
-    return materialize(span_window_stream(t8, width))
+    return materialize(span_window_stream(t8))
 
 
 def duplicated_windows(p: DataFrame) -> DataFrame:
@@ -654,29 +654,29 @@ def duplicated_windows(p: DataFrame) -> DataFrame:
     )
 
 
-def span_removed_positions(p: DataFrame, dw: DataFrame, width: int = SPAN_WIDTH) -> DataFrame:
+def span_removed_positions(p: DataFrame, dw: DataFrame) -> DataFrame:
     """(doc_id, tok) — DISTINCT token positions covered by some duplicated
     window whose keeper is another doc (Lee-et-al span removal,
     keep-first). The explode is bounded to duplicated NON-KEEPER windows
     only, so the cost is proportional to duplicated-token coverage,
-    bounded at ``width`` × corpus tokens by construction."""
+    bounded at ``SPAN_WIDTH`` × corpus tokens by construction."""
     return (
         p.join(dw, "win")
         .where(F.col("doc_id") != F.col("keep_doc"))
         .select(
             "doc_id",
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + width - 1)).alias("tok"),
+            F.explode(F.sequence(F.col("pos"), F.col("pos") + SPAN_WIDTH - 1)).alias("tok"),
         )
         .distinct()
     )
 
 
-def span_scrub_removals(t8: DataFrame, width: int = SPAN_WIDTH) -> DataFrame:
+def span_scrub_removals(t8: DataFrame) -> DataFrame:
     """windows → duplicated-window inventory → removed positions, composed
     (the shared d24/ep14 pipeline — factored per r14 ADVICE so a scrub
     semantics fix lands once). Returns (doc_id, tok) distinct."""
-    p = span_windows(t8, width)
-    return span_removed_positions(p, duplicated_windows(p), width)
+    p = span_windows(t8)
+    return span_removed_positions(p, duplicated_windows(p))
 
 
 # --- exact-then-near cascade (d23/d25/ep13) -----------------------------------
@@ -691,7 +691,7 @@ def representative_near_pairs(docs: DataFrame, grp: DataFrame) -> DataFrame:
     reps = docs.join(
         grp.select(F.col("rep").alias("doc_id")).distinct(), "doc_id"
     ).select("doc_id", "text")
-    return minhash_dedup(reps, k=3, num_hashes=8, rows_per_band=2, threshold=0.5)
+    return minhash_dedup(reps, threshold=0.5)
 
 
 def exact_then_near(docs: DataFrame) -> tuple[DataFrame, DataFrame]:

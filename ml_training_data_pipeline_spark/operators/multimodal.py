@@ -40,14 +40,14 @@ class DecodedImage:
     pixels: np.ndarray
 
 
-def documents_as_media(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def documents_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: treat each document's UTF-8 bytes as an opaque media blob
     so the binary pipeline is exercisable on the driver's tables."""
-    return docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("media_id"),
+    return docs.where(F.col("text").isNotNull()).select(
+        F.col("doc_id").alias("media_id"),
         F.lit("text").alias("modality"),
-        F.encode(F.col(text_col), "UTF-8").alias("content"),
-        F.to_json(F.struct(F.length(F.col(text_col)).alias("n_chars"))).alias("meta"),
+        F.encode(F.col("text"), "UTF-8").alias("content"),
+        F.to_json(F.struct(F.length(F.col("text")).alias("n_chars"))).alias("meta"),
     )
 
 
@@ -145,9 +145,14 @@ def resize_image(content: bytes, width: int, height: int) -> bytes:
     return encode_netpbm(DecodedImage(width, height, img.mode, resized))
 
 
-def sample_frames(media: DataFrame, frame_size: int = 64, every_n: int = 3) -> DataFrame:
+# sample_frames keeps every third 64-byte frame
+_FRAME_BYTES = 64
+_FRAME_EVERY = 3
+
+
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling over opaque media blobs: split ``content`` into
-    fixed-size byte frames and keep every ``every_n``-th (a video
+    ``_FRAME_BYTES``-byte frames and keep every ``_FRAME_EVERY``-th (a video
     frame-sampler's plumbing — table-out mapInPandas, multiple rows per
     input, Arrow-batched). The frame boundary logic is real; a video
     deployment swaps byte-slicing for a demuxer behind the same
@@ -161,9 +166,9 @@ def sample_frames(media: DataFrame, frame_size: int = 64, every_n: int = 3) -> D
             out: dict[str, list] = {"media_id": [], "frame_idx": [], "frame_fp": [], "n_frame_bytes": []}
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(content)
-                n_frames = (len(b) + frame_size - 1) // frame_size
-                for idx in range(0, n_frames, every_n):
-                    fb = b[idx * frame_size : (idx + 1) * frame_size]
+                n_frames = (len(b) + _FRAME_BYTES - 1) // _FRAME_BYTES
+                for idx in range(0, n_frames, _FRAME_EVERY):
+                    fb = b[idx * _FRAME_BYTES : (idx + 1) * _FRAME_BYTES]
                     out["media_id"].append(mid)
                     out["frame_idx"].append(idx)
                     out["frame_fp"].append(_hashlib.md5(fb).hexdigest())
@@ -309,9 +314,10 @@ def synth_audio_samples(media_id: int, n: int) -> np.ndarray:
     return ((media_id * 31 + i * 17) % 65536 - 32768).astype(np.int16)
 
 
-def documents_as_audio(
-    docs: DataFrame, sample_rate: int = 8000, id_col: str = "doc_id"
-) -> DataFrame:
+_SAMPLE_RATE = 8000  # Hz, of the synthesized document clips
+
+
+def documents_as_audio(docs: DataFrame) -> DataFrame:
     """Adapter: fabricate a deterministic PCM signal per document (length
     driven by n_chars) and pack it through the REAL WAV encoder, so the
     binary audio pipeline carries genuine container bytes."""
@@ -319,14 +325,14 @@ def documents_as_audio(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             content = []
-            for mid, n_chars in zip(pdf[id_col], pdf["n_chars"]):
+            for mid, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
                 n = 160 + int(n_chars) % 160
                 content.append(
-                    encode_wav(DecodedAudio(sample_rate, synth_audio_samples(int(mid), n)))
+                    encode_wav(DecodedAudio(_SAMPLE_RATE, synth_audio_samples(int(mid), n)))
                 )
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col],
+                    "media_id": pdf["doc_id"],
                     "modality": "audio",
                     "content": content,
                     "meta": "{}",
@@ -335,7 +341,7 @@ def documents_as_audio(
 
     return (
         docs.where(F.col("text").isNotNull())
-        .select(id_col, "n_chars")
+        .select("doc_id", "n_chars")
         .mapInPandas(op, schema=MEDIA_SCHEMA)
     )
 
@@ -468,23 +474,30 @@ def synth_video_luma(media_id: int, n_frames: int, width: int, height: int) -> l
     ]
 
 
-def documents_as_video(
-    docs: DataFrame, width: int = 16, height: int = 8, id_col: str = "doc_id"
-) -> DataFrame:
+# frame size of the synthesized document clips
+_VIDEO_WIDTH = 16
+_VIDEO_HEIGHT = 8
+
+
+def documents_as_video(docs: DataFrame) -> DataFrame:
     """Adapter: fabricate a deterministic clip per document (frame count
     driven by n_chars) through the REAL Y4M encoder."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             content = []
-            for mid, n_chars in zip(pdf[id_col], pdf["n_chars"]):
+            for mid, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
                 n_frames = 2 + int(n_chars) % 6
                 content.append(
-                    encode_y4m(width, height, synth_video_luma(int(mid), n_frames, width, height))
+                    encode_y4m(
+                        _VIDEO_WIDTH,
+                        _VIDEO_HEIGHT,
+                        synth_video_luma(int(mid), n_frames, _VIDEO_WIDTH, _VIDEO_HEIGHT),
+                    )
                 )
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col],
+                    "media_id": pdf["doc_id"],
                     "modality": "video",
                     "content": content,
                     "meta": "{}",
@@ -493,7 +506,7 @@ def documents_as_video(
 
     return (
         docs.where(F.col("text").isNotNull())
-        .select(id_col, "n_chars")
+        .select("doc_id", "n_chars")
         .mapInPandas(op, schema=MEDIA_SCHEMA)
     )
 
@@ -546,7 +559,10 @@ def extract_video_features(media: DataFrame) -> DataFrame:
 # --- image perceptual hashing (aHash over the real netpbm roundtrip) ---------------
 
 
-def synth_image_pixels(media_id: int, width: int = 16, height: int = 16) -> np.ndarray:
+_IMAGE_SIDE = 16  # pixels, of the square test raster
+
+
+def synth_image_pixels(media_id: int) -> np.ndarray:
     """Deterministic engine-portable test raster: pixel (r, c) is
     ``(media_id*7 + r*3 + c) % 256`` — restatable as a DuckDB list
     comprehension, so the aHash computed off the REAL netpbm byte
@@ -554,12 +570,12 @@ def synth_image_pixels(media_id: int, width: int = 16, height: int = 16) -> np.n
     share a raster up to a constant shift (no 256-wrap inside the
     pattern when media_id*7 % 256 < 190), and aHash is shift-invariant —
     so the corpus genuinely contains perceptual-duplicate groups."""
-    r = np.arange(height, dtype=np.int64).reshape(-1, 1)
-    c = np.arange(width, dtype=np.int64)
+    r = np.arange(_IMAGE_SIDE, dtype=np.int64).reshape(-1, 1)
+    c = np.arange(_IMAGE_SIDE, dtype=np.int64)
     return ((media_id * 7 + r * 3 + c) % 256).astype(np.uint8)[:, :, None]
 
 
-def documents_as_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def documents_as_images(docs: DataFrame) -> DataFrame:
     """Adapter: fabricate a deterministic 16×16 grayscale raster per
     document and pack it through the REAL netpbm encoder, so the binary
     image pipeline carries genuine container bytes (same pattern as
@@ -569,11 +585,11 @@ def documents_as_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         for pdf in batches:
             content = [
                 encode_netpbm(DecodedImage(16, 16, "L", synth_image_pixels(int(mid))))
-                for mid in pdf[id_col]
+                for mid in pdf["doc_id"]
             ]
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col],
+                    "media_id": pdf["doc_id"],
                     "modality": "image",
                     "content": content,
                     "meta": "{}",
@@ -582,7 +598,7 @@ def documents_as_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     return (
         docs.where(F.col("text").isNotNull())
-        .select(id_col)
+        .select("doc_id")
         .mapInPandas(op, schema=MEDIA_SCHEMA)
     )
 
@@ -638,7 +654,10 @@ def extract_image_phash(media: DataFrame) -> DataFrame:
     )
 
 
-def audio_frame_profile(media: DataFrame, frame_len: int = 40) -> DataFrame:
+_AUDIO_FRAME_LEN = 40  # samples per audio_frame_profile frame
+
+
+def audio_frame_profile(media: DataFrame) -> DataFrame:
     """Frame-level energy profile off the real WAV decode — the
     segmentation primitive under VAD/silence-trim pipelines: fixed-length
     frames, per-frame RMS, and the count of low-energy frames (RMS below
@@ -658,10 +677,10 @@ def audio_frame_profile(media: DataFrame, frame_len: int = 40) -> DataFrame:
                 try:
                     au = decode_wav(bytes(content))
                     x = au.samples.astype(np.float64)
-                    nf = len(x) // frame_len
+                    nf = len(x) // _AUDIO_FRAME_LEN
                     if nf == 0:
                         raise ValueError("clip shorter than one frame")
-                    framed = x[: nf * frame_len].reshape(nf, frame_len)
+                    framed = x[: nf * _AUDIO_FRAME_LEN].reshape(nf, _AUDIO_FRAME_LEN)
                     frame_rms = np.sqrt((framed * framed).mean(axis=1))
                     clip_rms = float(np.sqrt((framed * framed).mean()))
                     out["n_frames"].append(nf)
@@ -685,19 +704,22 @@ def audio_frame_profile(media: DataFrame, frame_len: int = 40) -> DataFrame:
     )
 
 
-def synth_rgb_pixels(media_id: int, width: int = 8, height: int = 8) -> np.ndarray:
+_RGB_SIDE = 8  # pixels, of the square RGB test raster
+
+
+def synth_rgb_pixels(media_id: int) -> np.ndarray:
     """Deterministic engine-portable RGB raster: channel value (ch, r, c)
     is ``(media_id*7 + ch*11 + r*3 + c) % 256`` — restatable as a DuckDB
     list comprehension, so stats computed off the REAL P6 byte roundtrip
     stay oracle-checkable (the color-channel counterpart to
     synth_image_pixels)."""
-    r = np.arange(height, dtype=np.int64).reshape(-1, 1, 1)
-    c = np.arange(width, dtype=np.int64).reshape(1, -1, 1)
+    r = np.arange(_RGB_SIDE, dtype=np.int64).reshape(-1, 1, 1)
+    c = np.arange(_RGB_SIDE, dtype=np.int64).reshape(1, -1, 1)
     ch = np.arange(3, dtype=np.int64).reshape(1, 1, -1)
     return ((media_id * 7 + ch * 11 + r * 3 + c) % 256).astype(np.uint8)
 
 
-def documents_as_rgb_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def documents_as_rgb_images(docs: DataFrame) -> DataFrame:
     """Adapter: fabricate a deterministic 8×8 RGB raster per document and
     pack it through the REAL netpbm P6 encoder — the COLOR leg of the
     image pipeline (documents_as_images covers grayscale P5)."""
@@ -706,11 +728,11 @@ def documents_as_rgb_images(docs: DataFrame, id_col: str = "doc_id") -> DataFram
         for pdf in batches:
             content = [
                 encode_netpbm(DecodedImage(8, 8, "RGB", synth_rgb_pixels(int(mid))))
-                for mid in pdf[id_col]
+                for mid in pdf["doc_id"]
             ]
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col],
+                    "media_id": pdf["doc_id"],
                     "modality": "image",
                     "content": content,
                     "meta": "{}",
@@ -719,7 +741,7 @@ def documents_as_rgb_images(docs: DataFrame, id_col: str = "doc_id") -> DataFram
 
     return (
         docs.where(F.col("text").isNotNull())
-        .select(id_col)
+        .select("doc_id")
         .mapInPandas(op, schema=MEDIA_SCHEMA)
     )
 

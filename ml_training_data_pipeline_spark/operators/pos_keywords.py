@@ -112,9 +112,7 @@ def _tagger() -> HeuristicTagger | SpacyTagger:
     return _TAGGER
 
 
-def extract_pos_keywords(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_pos_keywords(docs: DataFrame) -> DataFrame:
     """(doc_id, keywords) — clean → tokenize → tag → keep NOUN/VERB →
     unique → sorted → comma-join (sorted, not first-occurrence, so the
     result is engine-order-independent and hash-comparable).
@@ -125,7 +123,7 @@ def extract_pos_keywords(
     """
     import re
 
-    out_schema = f"{id_col} long, keywords string"
+    out_schema = "doc_id long, keywords string"
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = _tagger()  # lazy per-executor init
@@ -141,7 +139,7 @@ def extract_pos_keywords(
 
         for pdf in batches:
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "keywords": [keywords(t) for t in pdf[text_col]]}
+                {"doc_id": pdf["doc_id"], "keywords": [keywords(t) for t in pdf["text"]]}
             )
 
-    return docs.select(id_col, text_col).mapInPandas(op, schema=out_schema)
+    return docs.select("doc_id", "text").mapInPandas(op, schema=out_schema)

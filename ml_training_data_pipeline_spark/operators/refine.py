@@ -121,15 +121,14 @@ def _probe_seed(seed: int, cluster_id: int, k: int) -> int:
 def _gibbs_topics(X: np.ndarray, k: int, seed: int, iters: int) -> tuple[np.ndarray, np.ndarray]:
     """Seeded collapsed-Gibbs LDA over a small dense doc-term count
     matrix — a true LDA twin (per-doc topic MIXTURES, matching the
-    reference's FitLdaModel, 02_build_models.R:520, and the sklearn path
-    above; the former multinomial-mixture EM here assigned one topic per
-    doc, so split decisions could differ on mixed-topic clusters).
-    Token-level topic assignments are resampled from the collapsed
-    conditional p(z=t) ∝ (n_dk+α)(n_kw+β)/(n_k+βW) with α=0.1, β=0.01
-    (the sklearn priors); theta/phi are the smoothed count estimates
-    after ``iters`` sweeps. Deterministic per seed — the fallback when
-    sklearn is absent (true of the current image, so this IS the hot
-    path for every local split fit)."""
+    reference's FitLdaModel, 02_build_models.R:520; the former
+    multinomial-mixture EM here assigned one topic per doc, so split
+    decisions could differ on mixed-topic clusters). Token-level topic
+    assignments are resampled from the collapsed conditional
+    p(z=t) ∝ (n_dk+α)(n_kw+β)/(n_k+βW) with α=0.1, β=0.01; theta/phi are
+    the smoothed count estimates after ``iters`` sweeps. Deterministic per
+    seed, and the one local topic fit: every small-cluster split runs it,
+    so a split never depends on which packages an executor image has."""
     rng = np.random.default_rng(seed)
     n, d = X.shape
     alpha, beta = 0.1, 0.01
@@ -190,23 +189,6 @@ def _gibbs_topics(X: np.ndarray, k: int, seed: int, iters: int) -> tuple[np.ndar
     return theta, phi
 
 
-def _fit_local_topics(X: np.ndarray, k: int, seed: int, iters: int) -> tuple[np.ndarray, np.ndarray]:
-    """Local topic fit: seeded sklearn LDA when the executor image has it,
-    else the collapsed-Gibbs numpy LDA. Both deterministic per (seed,
-    shape) and both true LDA (per-doc topic mixtures)."""
-    try:
-        from sklearn.decomposition import LatentDirichletAllocation
-    except ImportError:
-        return _gibbs_topics(X, k, seed, iters)
-    lda = LatentDirichletAllocation(
-        n_components=k, random_state=seed, max_iter=max(1, iters),
-        doc_topic_prior=0.1, topic_word_prior=0.01,
-    )
-    theta = lda.fit_transform(X)
-    phi = lda.components_ / lda.components_.sum(axis=1, keepdims=True)
-    return theta, phi
-
-
 def _local_prob_coherence(
     binary: np.ndarray, phi: np.ndarray, terms: np.ndarray, top_m: int
 ) -> float:
@@ -264,7 +246,7 @@ def _make_group_splitter(cfg: RefineConfig):
         binary = X > 0
         best_k, best_score = None, -math.inf
         for k in ks:
-            _, phi = _fit_local_topics(X, k, _probe_seed(seed, cid, k), search_iter)
+            _, phi = _gibbs_topics(X, k, _probe_seed(seed, cid, k), search_iter)
             score = _local_prob_coherence(binary, phi, terms, top_m)
             if not math.isnan(score) and score > best_score:
                 best_k, best_score = k, score
@@ -274,7 +256,7 @@ def _make_group_splitter(cfg: RefineConfig):
         # cluster stays whole (02_build_models.R:543-547)
         if best_score >= threshold:
             return unchanged
-        theta, _ = _fit_local_topics(X, best_k, _probe_seed(seed, cid, best_k), final_iter)
+        theta, _ = _gibbs_topics(X, best_k, _probe_seed(seed, cid, best_k), final_iter)
         topics = theta.argmax(axis=1)  # which.max: first-max tie-break
         rank = {t: i for i, t in enumerate(sorted(set(int(t) for t in topics)))}
         return pd.DataFrame(
@@ -304,7 +286,7 @@ def split_low_coherence_clusters(
 
     Execution: candidates at or below ``cfg.local_fit_max_docs`` docs run
     IN PARALLEL as one ``groupBy(cluster_id).applyInPandas`` stage —
-    every per-cluster fit is an executor-local numpy/sklearn job, no
+    every per-cluster fit is an executor-local numpy job, no
     driver-blocking chain. Larger candidates (rare by construction) fall
     back to distributed MLlib LDA jobs submitted CONCURRENTLY from driver
     threads (``session.run_concurrently``, FAIR pools). One anti-join ∪

@@ -34,6 +34,16 @@ from pyspark.sql.types import ArrayType, LongType
 
 from .materialize import materialize
 
+# neighbors every top-k serving path returns per query
+TOP_K = 5
+# IVF coarse-quantizer seed, and the cells a query probes by default
+IVF_SEED = 123
+NPROBE = 8
+# IVF-PQ residual codebooks: 16 subspaces
+IVFPQ_M = 16
+# Lloyd iterations per PQ subspace fit
+_LLOYD_ITERS = 20
+
 
 def as_double(arr: Column) -> Column:
     """The array column with every element cast to double."""
@@ -121,28 +131,25 @@ def srp_bucket_array(vec: Column, plane_tables: list[list[list[float]]]) -> Colu
     return bucket_arr(vec)
 
 
-def with_norm(vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def with_norm(vectors: DataFrame) -> DataFrame:
     """Precompute norms once — every pairwise op reuses them instead of
     recomputing O(pairs) norms."""
     return vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("nrm"),
+        "vec_id",
+        F.col("embedding").alias("vec"),
+        norm(F.col("embedding")).alias("nrm"),
     )
 
 
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus, window-rank per query. Returns
     (query_id, neighbor_id, cos_sim, rank); self-matches excluded."""
-    v = with_norm(vectors, vec_col, id_col)
-    q = with_norm(queries, vec_col, id_col).select(
+    v = with_norm(vectors)
+    q = with_norm(queries).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), F.col("nrm").alias("qnrm")
     )
     scored = (
@@ -158,19 +165,17 @@ def brute_force_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= TOP_K)
 
 
 def srp_buckets(
     vectors: DataFrame,
     planes: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Signed-random-projection bucket id per vector: bit i = sign of
     ⟨v, plane_i⟩. ``planes`` are fixed (seeded) hyperplanes baked into
     the batch kernel — deterministic, broadcast-free."""
-    out = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+    out = vectors.select("vec_id", F.col("embedding").alias("vec"))
     return out.withColumn(
         "bucket", F.element_at(srp_bucket_array(F.col("vec"), [planes]), 1)
     )
@@ -180,20 +185,17 @@ def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
     planes: list[list[float]],
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ANN top-k: candidates restricted to the query's SRP bucket, then
     exact cosine rank within the bucket (recall < 1 by design; the
     oracle states the identical bucketed semantics, so it stays checkable)."""
-    v = srp_buckets(vectors, planes, vec_col, id_col)
-    vn = with_norm(vectors, vec_col, id_col)
+    v = srp_buckets(vectors, planes)
+    vn = with_norm(vectors)
     v = v.join(vn.select("vec_id", "nrm"), "vec_id")
-    q = srp_buckets(queries, planes, vec_col, id_col).select(
+    q = srp_buckets(queries, planes).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), "bucket"
     )
-    qn = with_norm(queries, vec_col, id_col).select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qnrm"))
+    qn = with_norm(queries).select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qnrm"))
     q = q.join(qn, "query_id")
     scored = (
         v.join(F.broadcast(q), "bucket")
@@ -208,15 +210,12 @@ def lsh_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= TOP_K)
 
 
 def ivf_assignments(
     vectors: DataFrame,
     nlist: int = 16,
-    seed: int = 123,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> tuple[list[list[float]], DataFrame]:
     """IVF index build (the classic inverted-file ANN layout): a coarse
     KMeans quantizer partitions the corpus into ``nlist`` cells. Index
@@ -227,9 +226,9 @@ def ivf_assignments(
     from pyspark.ml.functions import array_to_vector
 
     feats = vectors.select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("vec")
+        "vec_id", as_double(F.col("embedding")).alias("vec")
     ).withColumn("features", array_to_vector(F.col("vec")))
-    model = KMeans(k=nlist, seed=seed, featuresCol="features", predictionCol="cell").fit(feats)
+    model = KMeans(k=nlist, seed=IVF_SEED, featuresCol="features", predictionCol="cell").fit(feats)
     assigned = model.transform(feats).select(
         "vec_id", "vec", F.col("cell").cast("int").alias("cell")
     )
@@ -240,26 +239,19 @@ def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
     nlist: int = 16,
-    nprobe: int = 8,
-    k: int = 5,
-    seed: int = 123,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    nprobe: int = NPROBE,
 ) -> DataFrame:
     """IVF ANN top-k (SURVEY's scale path beside SRP-LSH): each query
     probes its ``nprobe`` nearest cells and ranks exact cosine only
     within them — candidate volume is nprobe/nlist of the corpus, and
     the probe is an equi-join on cell (sub-quadratic, shuffle-bounded).
     ``nprobe == nlist`` degenerates to exact brute force (the recall
-    knob is explicit). The default nprobe=8 is the measured knee of
+    knob is explicit). The default ``NPROBE`` is the measured knee of
     n15's sweep on the synthetic space (recall@5 = 0.88 probing half
     the cells; 16 reaches 1.00) — the serving default embodies the
     audit's answer. Returns (query_id, neighbor_id, cos_sim, rank)."""
-    centers, assigned = ivf_assignments(vectors, nlist, seed, vec_col, id_col)
-    return ivf_probe_topk(
-        centers, assigned, vectors, queries, nprobe=nprobe, k=k,
-        vec_col=vec_col, id_col=id_col,
-    )
+    centers, assigned = ivf_assignments(vectors, nlist)
+    return ivf_probe_topk(centers, assigned, vectors, queries, nprobe=nprobe)
 
 
 def ivf_probe_topk(
@@ -267,28 +259,23 @@ def ivf_probe_topk(
     assigned: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
-    nprobe: int = 8,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    nprobe: int = NPROBE,
 ) -> DataFrame:
     """The probe stage of IVF ANN, taking a PRE-BUILT index (centers +
     cell assignments) — so a sweep over nprobe (n15) pays the KMeans
     build once, which is also the production serving shape: the index is
     an artifact, probes are queries."""
     probes = (
-        query_cell_ranks(centers, queries, vec_col, id_col)
+        query_cell_ranks(centers, queries)
         .where(F.col("p") <= nprobe)
         .drop("p")
     )
-    return rank_topk(_ivf_score_probes(assigned, vectors, probes, vec_col, id_col), k)
+    return rank_topk(_ivf_score_probes(assigned, vectors, probes))
 
 
 def query_cell_ranks(
     centers: list[list[float]],
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(query_id, qvec, qnrm, cell, p) — every IVF cell ranked by
     distance per query (p=1 is the nearest cell). Q × nlist rows, tiny.
@@ -298,7 +285,7 @@ def query_cell_ranks(
     centers_df = spark.createDataFrame(
         list(enumerate(centers)), schema="cell int, center array<double>"
     )
-    q = with_norm(queries, vec_col, id_col).select(
+    q = with_norm(queries).select(
         F.col("vec_id").alias("query_id"), as_double(F.col("vec")).alias("qvec"),
         F.col("nrm").alias("qnrm"),
     )
@@ -316,12 +303,10 @@ def _ivf_score_probes(
     assigned: DataFrame,
     vectors: DataFrame,
     probes: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine of every corpus vector in a probed cell — keeps any
     extra probe columns (e.g. the sweep's probe rank ``p``)."""
-    vn = assigned.join(with_norm(vectors, vec_col, id_col).select("vec_id", "nrm"), "vec_id")
+    vn = assigned.join(with_norm(vectors).select("vec_id", "nrm"), "vec_id")
     extra = [c for c in probes.columns if c not in ("query_id", "qvec", "qnrm", "cell")]
     return (
         vn.join(F.broadcast(probes), "cell")
@@ -340,8 +325,6 @@ def ivf_probe_scored_all(
     assigned: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(query_id, neighbor_id, cos_sim, p) over ALL cells — the sweep
     form (n15): cosine is scored once for the full-probe superset and a
@@ -349,24 +332,21 @@ def ivf_probe_scored_all(
     (scores don't depend on nprobe). The full-probe branch of the sweep
     computes this anyway; tagging by probe rank lets every other branch
     reuse it."""
-    probes = query_cell_ranks(centers, queries, vec_col, id_col)
-    return _ivf_score_probes(assigned, vectors, probes, vec_col, id_col)
+    probes = query_cell_ranks(centers, queries)
+    return _ivf_score_probes(assigned, vectors, probes)
 
 
 def embedding_near_dups(
     vectors: DataFrame,
     threshold: float = 0.95,
-    block_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(vec_a, vec_b, cos_sim ≥ threshold) within blocking groups.
     Blocking (here the label column; in production an SRP bucket or
     cluster id) keeps the self-join sub-quadratic."""
     v = vectors.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"), F.col(block_col).alias("block")
+        "vec_id", F.col("embedding").alias("vec"), F.col("label").alias("block")
     )
-    n = with_norm(vectors, vec_col, id_col).select("vec_id", "nrm")
+    n = with_norm(vectors).select("vec_id", "nrm")
     v = v.join(n, "vec_id")
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("nrm").alias("na"), "block")
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb"), "block")
@@ -387,8 +367,6 @@ def embedding_near_dups(
 
 def label_prototypes(
     vectors: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(label, proto) — the mean embedding per label. Element means
     aggregate via posexplode → groupBy(label, pos) — n·dim rows through
@@ -397,7 +375,7 @@ def label_prototypes(
     vectors ever happens; partial aggregation bounds the shuffle at any
     corpus size."""
     cell = vectors.select(
-        F.col(label_col).alias("label"), F.posexplode(vec_col).alias("pos", "v")
+        "label", F.posexplode("embedding").alias("pos", "v")
     )
     proto_long = cell.groupBy("label", "pos").agg(
         F.avg(F.col("v").cast("double")).alias("m")
@@ -412,8 +390,6 @@ def label_prototypes(
 def prototype_classify(
     vectors: DataFrame,
     prototypes: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(vec_id, label, predicted_label, cos) — nearest-prototype (max
     cosine) assignment. The prototype table is one row per class, so the
@@ -426,15 +402,15 @@ def prototype_classify(
         F.col("label").alias("predicted_label"), F.col("proto")
     )
     scored = vectors.crossJoin(F.broadcast(pl)).withColumn(
-        "cos", cosine(F.col(vec_col), F.col("proto"))
+        "cos", cosine(F.col("embedding"), F.col("proto"))
     )
-    rk = Window.partitionBy(id_col).orderBy(
+    rk = Window.partitionBy("vec_id").orderBy(
         F.desc("cos"), F.asc("predicted_label")
     )
     return (
         scored.withColumn("rk", F.row_number().over(rk))
         .where(F.col("rk") == 1)
-        .select(id_col, "label", "predicted_label", "cos")
+        .select("vec_id", "label", "predicted_label", "cos")
     )
 
 
@@ -442,8 +418,6 @@ def multi_table_candidates_long(
     vectors: DataFrame,
     queries: DataFrame,
     plane_tables: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(query_id, neighbor_id, tbl) ANN candidate pairs PER TABLE from T
     independent SRP hash tables — the sweep-friendly long form: because
@@ -456,7 +430,7 @@ def multi_table_candidates_long(
     still an equi-join, T× the postings, nothing quadratic."""
 
     def buckets_long(df: DataFrame, out_id: str) -> DataFrame:
-        base = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("vec"))
+        base = df.select(F.col("vec_id").alias(out_id), F.col("embedding").alias("vec"))
         return base.select(
             out_id,
             "vec",
@@ -478,8 +452,6 @@ def multi_table_candidates(
     vectors: DataFrame,
     queries: DataFrame,
     plane_tables: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Distinct (query_id, neighbor_id) ANN candidate pairs from T
     independent SRP hash tables — the probe-cost surface of multi-table
@@ -488,7 +460,7 @@ def multi_table_candidates(
     a downstream scorer touches each survivor exactly once however many
     tables agreed on it."""
     return (
-        multi_table_candidates_long(vectors, queries, plane_tables, vec_col, id_col)
+        multi_table_candidates_long(vectors, queries, plane_tables)
         .select("query_id", "neighbor_id")
         .distinct()
     )
@@ -498,17 +470,15 @@ def score_pairs(
     vectors: DataFrame,
     queries: DataFrame,
     pairs: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine for a pre-built (query_id, neighbor_id) pair set —
     the shared scoring stage of every candidate-generation strategy.
     One corpus join, queries broadcast. Returns
     (query_id, neighbor_id, cos_sim)."""
-    vn = with_norm(vectors, vec_col, id_col).select(
+    vn = with_norm(vectors).select(
         F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"), F.col("nrm")
     )
-    qn = with_norm(queries, vec_col, id_col).select(
+    qn = with_norm(queries).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), F.col("nrm").alias("qnrm")
     )
     return (
@@ -525,7 +495,7 @@ def score_pairs(
     )
 
 
-def rank_topk(scored: DataFrame, k: int = 5, score_col: str = "cos_sim") -> DataFrame:
+def rank_topk(scored: DataFrame, score_col: str = "cos_sim") -> DataFrame:
     """Per-query rank filter over (query_id, neighbor_id, <score_col>) —
     the ONE ranking idiom (desc score, asc neighbor_id tie-break) shared
     by every exact and approximate serving path, so a tie-break or
@@ -534,7 +504,7 @@ def rank_topk(scored: DataFrame, k: int = 5, score_col: str = "cos_sim") -> Data
         F.desc(score_col), F.asc("neighbor_id")
     )
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= k
+        F.col("rank") <= TOP_K
     )
 
 
@@ -542,9 +512,6 @@ def multi_table_lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
     plane_tables: list[list[list[float]]],
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Multi-table SRP-LSH ANN — the production fix for the single-table
     recall collapse n11 measures: T independent hash tables, candidate
@@ -552,11 +519,11 @@ def multi_table_lsh_topk(
     (``multi_table_candidates``), scored once. Probe cost grows
     ~linearly in T while recall compounds (each table is an independent
     chance to co-bucket a true neighbor)."""
-    cands = multi_table_candidates(vectors, queries, plane_tables, vec_col, id_col)
-    return rank_topk(score_pairs(vectors, queries, cands, vec_col, id_col), k)
+    cands = multi_table_candidates(vectors, queries, plane_tables)
+    return rank_topk(score_pairs(vectors, queries, cands))
 
 
-def _make_codebook_fitter(ksub: int, seed: int, iters: int = 20):
+def _make_codebook_fitter(ksub: int, seed: int):
     """The per-subspace Lloyd's fit behind ``pq_codebooks``, exposed as a
     factory so determinism is unit-testable: rows are sorted by vec_id
     before any sampling or mean (so partitioning/arrival order cannot
@@ -574,7 +541,7 @@ def _make_codebook_fitter(ksub: int, seed: int, iters: int = 20):
         n = len(X)
         k = min(ksub, n)
         centers = X[rng.choice(n, size=k, replace=False)].copy()
-        for _ in range(iters):
+        for _ in range(_LLOYD_ITERS):
             dists = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=-1)
             assign = dists.argmin(axis=1)
             for c in range(k):
@@ -597,7 +564,6 @@ def pq_codebooks(
     ksub: int = 16,
     seed: int = 123,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
     train_n: int = 65536,
 ) -> tuple[list[list[list[float]]], DataFrame]:
     """Product-quantization index build: split each d-dim vector into
@@ -624,7 +590,7 @@ def pq_codebooks(
     Returns (codebooks[j][code] -> centroid,
     encoded (vec_id, j, code) long frame)."""
     base = vectors.select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("vec")
+        "vec_id", as_double(F.col(vec_col)).alias("vec")
     )
     d = base.select(F.size("vec")).first()[0]  # bounded scalar: one row
     assert d % m == 0, f"dim {d} not divisible by m={m}"
@@ -680,8 +646,6 @@ def pq_adc_scores(
     books: list[list[list[float]]],
     encoded: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) scoring off a PRE-BUILT PQ index: the
     query stays full-precision, the corpus is codes. The classic ADC
@@ -694,7 +658,7 @@ def pq_adc_scores(
     from per-(j,code) centroid norms so the ranking metric is
     approximate COSINE, matching the exact baseline it is audited
     against. Returns (query_id, neighbor_id, approx_cos)."""
-    lut = _pq_query_lut(books, queries, vec_col, id_col)
+    lut = _pq_query_lut(books, queries)
     return (
         encoded.join(F.broadcast(lut), ["j", "code"])
         .where(F.col("vec_id") != F.col("query_id"))
@@ -711,8 +675,6 @@ def pq_adc_scores(
 def _pq_query_lut(
     books: list[list[list[float]]],
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """The ADC lookup table: per (query, subspace, code), the partial
     inner product ⟨q_j, c_{j,code}⟩ plus the codeword's squared norm —
@@ -734,7 +696,7 @@ def _pq_query_lut(
         book_rows, "j int, code int, cvec array<double>, cnorm2 double"
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qvec")
+        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qvec")
     ).select(
         "query_id",
         norm(F.col("qvec")).alias("qnrm"),
@@ -752,32 +714,11 @@ def _pq_query_lut(
     )
 
 
-def pq_adc_topk(
-    books: list[list[list[float]]],
-    encoded: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Per-query top-k over ``pq_adc_scores`` — the PQ serving call.
-    Returns (query_id, neighbor_id, approx_cos, rank)."""
-    scored = pq_adc_scores(books, encoded, queries, vec_col, id_col)
-    return rank_topk(scored, k, score_col="approx_cos")
-
-
 def ivfpq_index(
     vectors: DataFrame,
-    nlist: int = 16,
-    m: int = 16,
-    ksub: int = 16,
-    seed: int = 123,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    train_n: int = 65536,
 ) -> tuple[list[list[float]], list[list[list[float]]], DataFrame, DataFrame]:
     """The FAISS-style IVF-PQ index build: a coarse KMeans quantizer
-    assigns each vector to one of ``nlist`` cells, then PQ codebooks are
+    assigns each vector to one of 16 cells, then PQ codebooks are
     fitted on the RESIDUALS (vec − cell center) — residuals concentrate
     around zero with far less variance than raw vectors, so the same
     byte budget quantizes them with less distortion (the reason IVF-PQ
@@ -786,7 +727,7 @@ def ivfpq_index(
     layout — per-cell codebooks would be nlist× the training and LUT
     cost). Returns (cell centers, residual codebooks,
     cellmap (vec_id, cell), encoded (vec_id, j, code))."""
-    centers, assigned = ivf_assignments(vectors, nlist, seed, vec_col, id_col)
+    centers, assigned = ivf_assignments(vectors)
     spark = vectors.sparkSession
     centers_df = spark.createDataFrame(
         [(i, c) for i, c in enumerate(centers)], "cell int, center array<double>"
@@ -797,8 +738,7 @@ def ivfpq_index(
         F.zip_with("vec", "center", lambda x, y: x - y).alias("rvec"),
     )
     books, encoded = pq_codebooks(
-        residuals, m=m, ksub=ksub, seed=seed + 1000, vec_col="rvec",
-        id_col="vec_id", train_n=train_n,
+        residuals, m=IVFPQ_M, seed=IVF_SEED + 1000, vec_col="rvec"
     )
     return centers, books, assigned.select("vec_id", "cell"), encoded
 
@@ -809,13 +749,9 @@ def ivfpq_topk(
     cellmap: DataFrame,
     encoded: DataFrame,
     queries: DataFrame,
-    nprobe: int = 8,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ ADC top-k off a PRE-BUILT index: each query probes its
-    ``nprobe`` nearest cells and scores ONLY their members, from codes —
+    ``NPROBE`` nearest cells and scores ONLY their members, from codes —
     the inverted-file pruning of n5 composed with the no-float-corpus
     scoring of n18, i.e. the production 100 TB serving shape. The inner
     product splits exactly: ⟨q, c_cell + r_v⟩ = ⟨q, c_cell⟩ (Q×nprobe
@@ -850,8 +786,8 @@ def ivfpq_topk(
     ]
     cross_df = spark.createDataFrame(cross_rows, "cell int, j int, code int, cdot double")
     probes = (
-        query_cell_ranks(centers, queries, vec_col, id_col)
-        .where(F.col("p") <= nprobe)
+        query_cell_ranks(centers, queries)
+        .where(F.col("p") <= NPROBE)
         .select("query_id", "qvec", "cell")
     )
     # ⟨q, c_cell⟩ per (query, probed cell): Q×nprobe rows
@@ -861,7 +797,7 @@ def ivfpq_topk(
     qc = probes.join(F.broadcast(centers_df), "cell").select(
         "query_id", "cell", dot(F.col("qvec"), F.col("center")).alias("qcdot")
     )
-    lut = _pq_query_lut(books, queries, vec_col, id_col)
+    lut = _pq_query_lut(books, queries)
     cand = (
         cellmap.join(F.broadcast(qc), "cell")  # inverted-file pruning
         .join(encoded, "vec_id")
@@ -887,7 +823,7 @@ def ivfpq_topk(
         )
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "approx_cos")
     )
-    return rank_topk(scored, k, score_col="approx_cos")
+    return rank_topk(scored, score_col="approx_cos")
 
 
 def recall_audit(

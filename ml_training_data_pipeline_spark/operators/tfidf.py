@@ -26,42 +26,33 @@ Python UDFs anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import ngrams_up_to, remove_stopwords, tokenize
+from ..functions.text import ngrams_up_to, tokenize
 from .materialize import materialize
 
 
-def _token_array(
-    text_col: str, *, ngram_max: int = 1, stopwords: tuple[str, ...] | None = None
-) -> Column:
-    toks: Column = tokenize(F.col(text_col))
-    if stopwords:
-        toks = remove_stopwords(toks, stopwords)
-    if ngram_max > 1:
-        toks = ngrams_up_to(toks, ngram_max)
-    return toks
+# V4's vocabulary cap: reduce_dfm(top_n=2000)
+VOCAB_SIZE = 2000
 
 
 def doc_tokens(
     docs: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     ngram_max: int = 1,
-    stopwords: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """(doc_id, term) exploded token table. V1: ngram_max=3 reproduces the
     reference's quanteda tokens(ngrams=1:3) (02_build_models.R:162)."""
-    base = _token_array(text_col, ngram_max=1, stopwords=stopwords)
+    base = tokenize(F.col(text_col))
     # explode(array(toks)) is a Generate barrier: it materializes the token
     # array ONCE per row as a real attribute. Without it, CollapseProject
     # inlines the tokenize subtree into every n-gram lambda and the
     # generated (whole-stage codegen) Java blows up super-linearly —
     # observed 270s vs 7s on the same data.
     tok_rows = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), F.explode(F.array(base)).alias("_toks")
+        "doc_id", F.explode(F.array(base)).alias("_toks")
     )
     grams = F.col("_toks") if ngram_max == 1 else ngrams_up_to(F.col("_toks"), ngram_max)
     return (
@@ -77,40 +68,28 @@ def term_counts(tokens_long: DataFrame) -> DataFrame:
     return tokens_long.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
 
 
-def corpus_size(
-    docs: DataFrame,
-    text_col: str = "text",
-    *,
-    stopwords: tuple[str, ...] | None = None,
-) -> int:
+def corpus_size(docs: DataFrame, text_col: str = "text") -> int:
     """N — count of docs with ≥1 token. A scalar: one cheap count action
     on the source (at 100 TB this is a metadata-cheap scan), so the main
     plan stays a single lineage — otherwise Catalyst re-derives the
     counts subtree for the N aggregate and the df join (3× the explode
-    work, no shared scan). Without a stopword filter, "doc has ≥1 token"
-    ⇔ "text contains ≥1 ASCII alnum char" (the tokenizer keeps exactly
-    [a-z0-9] runs), so the count scans with a single rlike instead of
-    full tokenization. With stopwords the full token expression is
-    required (an all-stopword doc has alnum chars but zero tokens)."""
+    work, no shared scan). "doc has ≥1 token" ⇔ "text contains ≥1 ASCII
+    alnum char" (the tokenizer keeps exactly [a-z0-9] runs), so the count
+    scans with a single rlike instead of full tokenization."""
     nonempty = docs.where(F.col(text_col).isNotNull())
-    if stopwords:
-        base_toks = _token_array(text_col, ngram_max=1, stopwords=stopwords)
-        return nonempty.where(F.size(base_toks) > 0).count()
     return nonempty.where(F.col(text_col).rlike("[a-zA-Z0-9]")).count()
 
 
 def tfidf_long(
     docs: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     ngram_max: int = 1,
-    stopwords: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """(doc_id, term, tf, weight) — V2+V3, the dfm_tfidf equivalent
     (02_build_models.R:163-165). weight = tf * ln(N/df), rounded to 6
     decimals so Spark and the DuckDB oracle hash identically."""
-    tokens = doc_tokens(docs, text_col, id_col, ngram_max=ngram_max, stopwords=stopwords)
+    tokens = doc_tokens(docs, text_col, ngram_max=ngram_max)
     # counts has TWO consumers (the weight projection and the df
     # aggregate); lazy, the plan re-executes scan→tokenize→explode for
     # each. Round 7 measured the localCheckpoint fix-candidate as "a
@@ -122,7 +101,7 @@ def tfidf_long(
     # the old comment predicted for 100 TB (corpus scan ≫ doc-term
     # shuffle materialization).
     counts = materialize(term_counts(tokens))
-    n_docs = corpus_size(docs, text_col, stopwords=stopwords)
+    n_docs = corpus_size(docs, text_col)
     # df(t) via groupBy + join, not a window over term: the groupBy gets
     # map-side partial aggregation (the shuffle carries one row per
     # (partition, term), not per posting), the dft table is vocabulary-
@@ -139,24 +118,24 @@ def tfidf_long(
     )
 
 
-def top_vocabulary(tfidf: DataFrame, top_n: int = 2000) -> DataFrame:
+def top_vocabulary(tfidf: DataFrame) -> DataFrame:
     """V4 — reduce_dfm(top_n=2000) (02_build_models.R:174-180): rank terms
-    by total TF-IDF mass, keep the top N. Deterministic tie-break on term.
+    by total TF-IDF mass, keep the top ``VOCAB_SIZE``. Deterministic tie-break on term.
     Returns (term, total_weight, rank)."""
     totals = tfidf.groupBy("term").agg(F.round(F.sum("weight"), 6).alias("total_weight"))
     # orderBy().limit() compiles to TakeOrderedAndProject: every partition
     # keeps its local top-N and only N rows ever cross the network — unlike
     # a no-partition row_number window, which funnels the whole vocabulary
-    # through one partition. rank is derived afterwards on the ≤top_n-row
+    # through one partition. rank is derived afterwards on the ≤VOCAB_SIZE-row
     # result; the constant partition key keeps that tiny window off
     # WindowExec's single-partition warning path (it IS one partition, but
-    # of at most top_n rows by construction).
-    top = totals.orderBy(F.desc("total_weight"), F.asc("term")).limit(top_n)
+    # of at most VOCAB_SIZE rows by construction).
+    top = totals.orderBy(F.desc("total_weight"), F.asc("term")).limit(VOCAB_SIZE)
     w = Window.partitionBy(F.lit(0)).orderBy(F.desc("total_weight"), F.asc("term"))
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def top_vocabulary_from_counts(counts: DataFrame, n_docs: int, top_n: int = 2000) -> DataFrame:
+def top_vocabulary_from_counts(counts: DataFrame, n_docs: int) -> DataFrame:
     """V4, single-pass form: total tf-idf mass per term computed directly
     from (doc_id, term, tf) — df(t) is count(*) and Σ_d tf·idf = idf·Σ_d tf
     since idf is constant per term, so ONE groupBy(term) replaces the
@@ -169,7 +148,7 @@ def top_vocabulary_from_counts(counts: DataFrame, n_docs: int, top_n: int = 2000
             F.sum("tf") * F.log(F.lit(float(n_docs)) / F.count("*")), 6
         ).alias("total_weight")
     )
-    top = totals.orderBy(F.desc("total_weight"), F.asc("term")).limit(top_n)
+    top = totals.orderBy(F.desc("total_weight"), F.asc("term")).limit(VOCAB_SIZE)
     w = Window.partitionBy(F.lit(0)).orderBy(F.desc("total_weight"), F.asc("term"))
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
@@ -181,14 +160,14 @@ def reduce_to_vocabulary(tfidf: DataFrame, vocab: DataFrame) -> DataFrame:
     return tfidf.join(F.broadcast(vocab.select("term")), "term").select(tfidf.columns)
 
 
-def doc_top_terms(tfidf: DataFrame, k: int = 10) -> DataFrame:
-    """V6 — per-doc top-k terms by TF-IDF (extract_summary,
+def doc_top_terms(tfidf: DataFrame) -> DataFrame:
+    """V6 — per-doc top-10 terms by TF-IDF (extract_summary,
     02_build_models.R:141-158; defined-but-dead in the reference, live
     here). Window top-k: the canonical ranking workload (T2/T3 family)."""
     w = Window.partitionBy("doc_id").orderBy(F.desc("weight"), F.asc("term"))
     return (
         tfidf.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .select("doc_id", "term", "weight", "rank")
     )
 
@@ -226,13 +205,4 @@ def cluster_term_scores(
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= top_n)
-    )
-
-
-def cluster_keywords(cluster_terms: DataFrame, sep: str = ", ") -> DataFrame:
-    """T2's keyword-string form (cluster, keywords) (02_build_models.R:212-216):
-    collapse ranked terms into one comma-joined string per cluster."""
-    return (
-        cluster_terms.groupBy("cluster_id")
-        .agg(F.array_join(F.array_sort(F.collect_list(F.struct("rank", "term"))).getField("term"), sep).alias("keywords"))
     )

@@ -19,30 +19,28 @@ from ..functions.text import ALL_STOPWORDS, remove_stopwords, tokenize
 
 def tokens_frame(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     stopwords: tuple[str, ...] | None = ALL_STOPWORDS,
 ) -> DataFrame:
     """(doc_id, tokens) with empty docs dropped (P4,
     04_cluster_refiner.R:33-35)."""
-    toks: Column = tokenize(F.col(text_col))
+    toks: Column = tokenize(F.col("text"))
     if stopwords:
         toks = remove_stopwords(toks, stopwords)
     return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("doc_id"), toks.alias("tokens"))
+        docs.where(F.col("text").isNotNull())
+        .select("doc_id", toks.alias("tokens"))
         .where(F.size("tokens") > 0)
     )
 
 
-def fit_tfidf_vectorizer(tokens: DataFrame, vocab_size: int = 2000, min_df: int = 1) -> PipelineModel:
+def fit_tfidf_vectorizer(tokens: DataFrame, vocab_size: int = 2000) -> PipelineModel:
     """V2+V3+V4 in MLlib form: CountVectorizer(vocabSize) → IDF. vocabSize
     caps the feature space exactly like reduce_dfm(top_n=2000)
     (02_build_models.R:174-180) — CountVectorizer keeps the top-N terms by
     document frequency. Returns the fitted PipelineModel (the vocabulary
     contract for serving, V7)."""
-    cv = CountVectorizer(inputCol="tokens", outputCol="tf", vocabSize=vocab_size, minDF=float(min_df))
+    cv = CountVectorizer(inputCol="tokens", outputCol="tf", vocabSize=vocab_size)
     idf = IDF(inputCol="tf", outputCol="features")
     return Pipeline(stages=[cv, idf]).fit(tokens)
 

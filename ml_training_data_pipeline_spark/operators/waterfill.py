@@ -12,6 +12,10 @@ is one division of two BIGINTs, so it is bit-identical to the oracle
 (``plans/oracle_fragments.waterfill_sql``) and +0.0 by construction. The
 window is ``partitionBy(lit(0))`` over a frame of |sources| rows, tiny
 by construction.
+
+``capped_mixture`` is the simpler policy of mix7, ep9 and ep10: every
+source is upweighted toward an equal share, by at most a fixed number of
+epochs, with no budget.
 """
 
 from __future__ import annotations
@@ -81,3 +85,26 @@ def waterfill(per_src: DataFrame) -> DataFrame:
             6,
         ).alias("epochs_equiv"),
     )
+
+
+def capped_mixture(per_src: DataFrame, epochs: int) -> DataFrame:
+    """The cap-weight mixture over ``per_src(source, …, n_tokens)`` (one
+    row per source, materialized by the caller: the totals and the
+    weights both read it). Returns every ``per_src`` column followed by
+    n (Σ n_tokens), n_src, cap = least(n, epochs·n_src·n_tokens) and
+    zc = Σcap, all BIGINT, so each share the caller derives is one
+    division of exact integers (oracle twin:
+    ``plans/oracle_fragments.capped_mixture_ctes``)."""
+    tot = per_src.agg(
+        F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
+    )
+    w = per_src.crossJoin(F.broadcast(tot)).select(  # singleton totals row
+        *per_src.columns,
+        "n",
+        "n_src",
+        F.least(F.col("n"), F.lit(epochs) * F.col("n_src") * F.col("n_tokens"))
+        .cast("long")
+        .alias("cap"),
+    )
+    z = w.agg(F.sum("cap").cast("long").alias("zc"))
+    return w.crossJoin(F.broadcast(z))  # singleton normalizer row

@@ -19,13 +19,11 @@ from ..operators.tfidf import cluster_term_scores, tfidf_long
 from ..operators.vectorize import fit_tfidf_vectorizer, tokens_frame, vectorize
 
 
-def flagship_cluster_top_terms(
-    spark: SparkSession, sf_dir: str, *, k: int = 15, seed: int = 123, top_n: int = 5
-) -> DataFrame:
+def flagship_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tokens = tokens_frame(docs).cache()
     vec_model = fit_tfidf_vectorizer(tokens, vocab_size=2000)
     vectors = vectorize(tokens, vec_model)
-    result = fit_kmeans(vectors, k=k, seed=seed)
+    result = fit_kmeans(vectors)
     tfidf = tfidf_long(docs)
-    return cluster_term_scores(tfidf, result.assignments, top_n=top_n)
+    return cluster_term_scores(tfidf, result.assignments, top_n=5)

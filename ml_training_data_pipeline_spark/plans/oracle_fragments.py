@@ -38,14 +38,14 @@ TOKS_EXPR = (
 )
 
 
-def toks_cte(table: str = "documents", text_col: str = "text", id_col: str = "doc_id") -> str:
+def toks_cte(table: str = "documents") -> str:
     """CTE `toks(doc_id, toks)` — canonical token arrays."""
-    expr = TOKS_EXPR.format(col=text_col)
+    expr = TOKS_EXPR.format(col="text")
     return f"""
     toks AS (
-      SELECT {id_col} AS doc_id, {expr} AS toks
+      SELECT doc_id AS doc_id, {expr} AS toks
       FROM {table}
-      WHERE {text_col} IS NOT NULL
+      WHERE text IS NOT NULL
     )"""
 
 
@@ -57,11 +57,11 @@ def unigram_cte() -> str:
     )"""
 
 
-def ngram_cte(max_n: int = 3) -> str:
-    """CTE `tok(doc_id, term)` — 1..max_n-grams via list comprehension
+def ngram_cte() -> str:
+    """CTE `tok(doc_id, term)` — 1..3-grams via list comprehension
     (requires toks CTE). Mirrors functions/text.py ngrams_up_to."""
     parts = ["toks"]
-    for n in range(2, max_n + 1):
+    for n in range(2, 4):
         joined = "||' '||".join(f"toks[i+{j}]" if j else "toks[i]" for j in range(n))
         parts.append(f"[{joined} for i in range(1, len(toks) - {n - 2})]")
     concat = " || ".join(parts)
@@ -98,15 +98,15 @@ H60 = "('0x'||substr(md5({x}),1,15))::BIGINT"
 from ..operators.dedup import SPAN_WIDTH  # noqa: E402
 
 
-def span_scrub_ctes(width: int = SPAN_WIDTH) -> str:
+def span_scrub_ctes() -> str:
     """CTEs ``t8, p, dw, rem, rc`` — the span-scrub window→removal
     pipeline shared by d24/ep14/st17 (requires the ``toks`` CTE
     upstream). Mirrors operators/dedup.span_scrub_removals exactly:
-    stride-1 ``width``-token windows as 60-bit md5 longs, duplicated
+    stride-1 ``SPAN_WIDTH``-token windows as 60-bit md5 longs, duplicated
     windows keep their min-doc owner, non-keeper occurrences mark every
     covered token position for removal. Factored once (r14 ADVICE) so a
     scrub-semantics fix cannot diverge between the queries."""
-    w = width
+    w = SPAN_WIDTH
     win = H60.format(x=f"array_to_string(toks[(pos+1):(pos+{w})], ' ')")
     return f"""
     t8 AS (SELECT doc_id, toks, len(toks) AS L FROM toks WHERE len(toks) >= {w}),
@@ -596,6 +596,20 @@ WATERFILL_CTES = """
              CAST(sum(CASE WHEN is_capped THEN 1 ELSE 0 END) AS BIGINT) AS k
       FROM marked
     )"""
+
+
+def capped_mixture_ctes(epochs: int) -> str:
+    """CTEs ``tot, w, z`` — the cap-weight mixture (operators/waterfill.
+    capped_mixture) over ``per_src(source, …, n_tokens)``: w carries every
+    per_src column, n, n_src and cap = least(n, epochs·n_src·n_tokens);
+    z holds zc = Σcap. mix7 allows 1 epoch, ep9/ep10 allow 4."""
+    return f"""
+    tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n, count(*) AS n_src FROM per_src),
+    w AS (
+      SELECT p.*, t.n, t.n_src, least(t.n, {epochs} * t.n_src * p.n_tokens) AS cap
+      FROM per_src p CROSS JOIN tot t
+    ),
+    z AS (SELECT CAST(sum(cap) AS BIGINT) AS zc FROM w)"""
 
 
 def waterfill_select(*lead: str) -> str:

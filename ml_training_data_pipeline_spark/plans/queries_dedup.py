@@ -46,7 +46,7 @@ from ..operators.dedup import (
     span_window_stream,
 )
 from ..operators.materialize import materialize
-from ..operators.waterfill import waterfill
+from ..operators.waterfill import capped_mixture, waterfill
 from .oracle_fragments import (
     FPS_CTE,
     H60,
@@ -57,6 +57,7 @@ from .oracle_fragments import (
     WATERFILL_CTES,
     bands_ctes,
     candidates_ctes,
+    capped_mixture_ctes,
     cascade_ctes,
     cascade_ledger_sql,
     closure_ctes,
@@ -96,7 +97,7 @@ def d1_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d2_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_signatures(doc_shingles(docs, k=3), num_hashes=8)
+    return minhash_signatures(doc_shingles(docs), num_hashes=8)
 
 
 # --- D3: LSH candidate pairs ----------------------------------------------------
@@ -111,7 +112,7 @@ def d3_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # fused path: band signatures project straight off the wide minhash
     # row (no re-aggregation); output identical to lsh_bands∘minhash_signatures
-    return lsh_candidate_pairs(lsh_bands_from_wide(minhash_wide(doc_shingles(docs, k=3), 8), 2))
+    return lsh_candidate_pairs(lsh_bands_from_wide(minhash_wide(doc_shingles(docs), 8), 2))
 
 
 # --- D4: full MinHash-LSH dedup (verified Jaccard) -------------------------------
@@ -127,7 +128,7 @@ def d3_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_dedup(docs, k=3, num_hashes=8, rows_per_band=2, threshold=0.5).select(
+    return minhash_dedup(docs, threshold=0.5).select(
         "doc_a", "doc_b", "jaccard"
     )
 
@@ -187,7 +188,7 @@ def d5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d6_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = simhash(load_table(spark, sf_dir, "documents"), bits=16)
-    return simhash_near_dups(sim, max_hamming=3, bucket_shift=8)
+    return simhash_near_dups(sim)
 
 
 # --- D9: multi-band SimHash near-dups (the 100-TB path) ----------------------------
@@ -223,7 +224,7 @@ def d6_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d9_simhash_banded_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = simhash(load_table(spark, sf_dir, "documents"), bits=60)
-    return simhash_banded_near_dups(sim, max_hamming=3, bands=4, bits=60)
+    return simhash_banded_near_dups(sim)
 
 
 # --- D10: near-dup connected components (dedup groups, not pairs) ------------------
@@ -259,7 +260,7 @@ def d10_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d7_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(doc_shingles(docs, k=3), threshold=0.2)
+    return jaccard_pairs(doc_shingles(docs), threshold=0.2)
 
 
 # --- D8: Jaccard with a posting-list (shingle-df) cap -------------------------------
@@ -295,7 +296,7 @@ def d7_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d8_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(doc_shingles(docs, k=3), threshold=0.2, max_shingle_df=20)
+    return jaccard_pairs(doc_shingles(docs), threshold=0.2, max_shingle_df=20)
 
 
 # --- CUR2: survivor selection per near-dup component ------------------------------
@@ -387,7 +388,7 @@ def cur2_component_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cur3_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     is_eval = F.col("doc_id") % 97 == 0
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     # sh is distinct (doc_id, shingle), so count(*) after the inner join
@@ -552,7 +553,7 @@ def cur5_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d11_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return jaccard_pairs(
-        doc_shingles(docs, k=3), threshold=0.6, max_shingle_df=20, metric="containment"
+        doc_shingles(docs), threshold=0.6, max_shingle_df=20, metric="containment"
     )
 
 
@@ -887,7 +888,7 @@ def d15_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d16_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = materialize(doc_shingles(docs, k=3))
+    sh = materialize(doc_shingles(docs))
     wide = minhash_wide(sh, num_hashes=8)
     cands = lsh_candidate_pairs(lsh_bands_from_wide(wide, rows_per_band=2))
     exact = jaccard_pairs(sh, candidates=cands)
@@ -948,7 +949,7 @@ def d16_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d17_lsh_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_dedup(docs, k=3, num_hashes=8, rows_per_band=2, threshold=0.0)
+    pairs = minhash_dedup(docs, threshold=0.0)
     fan = pairs.select(
         "jaccard",
         F.explode(F.array(*[F.lit(t) for t in (0.3, 0.5, 0.7, 0.9)])).alias("threshold"),
@@ -1237,7 +1238,7 @@ def cur8_dedup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def cur9_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     bucket = F.pmod(md5_long(F.col("doc_id").cast("string")), F.lit(100))
     lab = sh.select(
         "doc_id",
@@ -1319,7 +1320,7 @@ def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % 2 == 1
     # one tokenize/shingle/band build over BOTH halves, split by parity
     # afterwards (three consumers — the d4 checkpoint discipline)
-    sh = materialize(doc_shingles(docs, k=3))
+    sh = materialize(doc_shingles(docs))
     bands = lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
     nb = bands.where(is_new).select(
         F.col("doc_id").alias("delta_doc"), "band", "band_sig"
@@ -1330,7 +1331,7 @@ def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared admission pipeline (cur10/st13/cur12): band equi-join
     # candidates, candidate-scoped Jaccard >= 0.5, delta side recovered
     # by membership
-    rejected = lsh_admission_rejects(nb, cb, sh, threshold=0.5).select(
+    rejected = lsh_admission_rejects(nb, cb, sh).select(
         F.col("delta_doc").alias("new_doc")
     )
     newdocs = docs.where(is_new).select("doc_id", "source")
@@ -1377,7 +1378,7 @@ def cur10_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d19_shingle_df_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    return shingle_df_audit(doc_shingles(docs, k=3), cap=20)
+    return shingle_df_audit(doc_shingles(docs))
 
 
 # --- CUR12: snapshot-versioned near-dup admission ----------------------------------
@@ -1467,7 +1468,7 @@ def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("status"),
         )
     )  # consumers: shingle build, delta report
-    sh = materialize(doc_shingles(snap, k=3))
+    sh = materialize(doc_shingles(snap))
     bands = lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
     stat = snap.select("doc_id", "status")
     b = bands.join(stat, "doc_id")
@@ -1480,7 +1481,7 @@ def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared admission pipeline (cur10/st13/cur12): delta bands ×
     # standing bands on the bucket key, candidate-scoped verification,
     # delta side recovered by membership
-    rejected = lsh_admission_rejects(db, ub, sh, threshold=0.5)
+    rejected = lsh_admission_rejects(db, ub, sh)
     delta = snap.where(F.col("status") != "unchanged").select("doc_id", "status")
     return (
         delta.join(rejected, delta.doc_id == rejected.delta_doc, "left")
@@ -1541,7 +1542,7 @@ def cur12_versioned_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cur13_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_eval = F.col("doc_id") % 97 == 0
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     ov = (
         sh.where(~is_eval)
@@ -1655,7 +1656,7 @@ def cur14_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_eval = F.col("doc_id") % 97 == 0
     # one shingle build, three consumers (eval bits, exact truth, train probes)
-    sh = materialize(doc_shingles(docs, k=3))
+    sh = materialize(doc_shingles(docs))
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     bits = (
         sh.where(is_eval)
@@ -1802,7 +1803,7 @@ def _band_config_select(r: int) -> str:
 )
 def d20_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = materialize(doc_shingles(docs, k=3))  # signature + truth share it
+    sh = materialize(doc_shingles(docs))  # signature + truth share it
     wide = materialize(minhash_wide(sh, num_hashes=8))  # 3 band projections
     truth = materialize(
         jaccard_pairs(sh, threshold=0.5)
@@ -1896,7 +1897,7 @@ def d20_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cur15_decontamination_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_eval = F.col("doc_id") % 97 == 0
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     flagged = (
         sh.where(~is_eval)
@@ -2025,7 +2026,7 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed because the admission pipeline reads each side twice
     # (same-id screen + band equi-join) — without it the minhash groupBy
     # re-executes per consumer
-    sh = materialize(doc_shingles(docs, k=3))
+    sh = materialize(doc_shingles(docs))
     bands = materialize(lsh_bands_from_wide(
         minhash_wide(sh, num_hashes=8), rows_per_band=2
     ))
@@ -2035,7 +2036,7 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb = bands.where(~is_test).select(
         F.col("doc_id").alias("corpus_doc"), "band", "band_sig"
     )
-    leaked = lsh_admission_rejects(tb, rb, sh, threshold=0.5).select(
+    leaked = lsh_admission_rejects(tb, rb, sh).select(
         F.col("delta_doc").alias("doc_id"), F.lit(1).alias("_l")
     )
     test = docs.where(is_test).select(
@@ -2123,12 +2124,7 @@ def cur16_neardup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM train GROUP BY source
       HAVING sum(CASE WHEN is_cont = 0 AND is_leak = 0 THEN 1 ELSE 0 END) > 0
     ),
-    tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n, count(*) AS n_src FROM per_src),
-    w AS (
-      SELECT p.*, t.n_src, least(t.n, 4 * t.n_src * p.n_tokens) AS cap
-      FROM per_src p CROSS JOIN tot t
-    ),
-    z AS (SELECT CAST(sum(cap) AS BIGINT) AS zc FROM w)
+    {capped_mixture_ctes(4)}
     SELECT w.source, w.n_train_docs, w.n_contaminated, w.n_leak_twins,
            w.n_survivors, w.n_tokens,
            round(w.cap / (w.n_src * w.n_tokens), 6) AS weight,
@@ -2144,7 +2140,7 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = F.col("doc_id") % 97 == 0
     is_train = ~is_test & ~is_eval
     # one shingle build, three consumers (eval gate, bands, Jaccard verify)
-    sh = materialize(doc_shingles(docs, k=3))
+    sh = materialize(doc_shingles(docs))
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     contaminated = (
         sh.where(is_train)
@@ -2163,7 +2159,7 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_b = bands.where(is_test & ~is_eval).select(
         F.col("doc_id").alias("corpus_doc"), "band", "band_sig"
     )
-    leaked = lsh_admission_rejects(train_b, test_b, sh, threshold=0.5).select(
+    leaked = lsh_admission_rejects(train_b, test_b, sh).select(
         F.col("delta_doc").alias("doc_id"), F.lit(1).alias("_l")
     )
     survives = F.col("_c").isNull() & F.col("_l").isNull()
@@ -2186,24 +2182,8 @@ def ep10_release_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("n_survivors") > 0)
     )  # |sources| rows; totals/weights/normalizer reuse it
-    tot = per_src.agg(
-        F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
-    )
-    w = per_src.crossJoin(F.broadcast(tot)).select(  # singleton totals row
-        "source",
-        "n_train_docs",
-        "n_contaminated",
-        "n_leak_twins",
-        "n_survivors",
-        "n_tokens",
-        "n_src",
-        F.least(F.col("n"), F.lit(4) * F.col("n_src") * F.col("n_tokens"))
-        .cast("long")
-        .alias("cap"),
-    )
-    z = w.agg(F.sum("cap").cast("long").alias("zc"))
     den = F.col("n_src") * F.col("n_tokens")
-    return w.crossJoin(F.broadcast(z)).select(  # singleton normalizer row
+    return capped_mixture(per_src, epochs=4).select(
         "source",
         "n_train_docs",
         "n_contaminated",
@@ -2298,7 +2278,7 @@ def cur17_bloom_sizing_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_col = F.explode(F.array(*[F.lit(m) for m in MS])).alias("m")
     # one shingle build, hashes computed ONCE; three consumers
     # (bitsets, probes, exact truth)
-    sh = materialize(doc_shingles(docs, k=3))
+    sh = materialize(doc_shingles(docs))
     eval_sh = sh.where(is_eval).select("shingle").distinct()
     bits = materialize(
         sh.where(is_eval)
@@ -2526,7 +2506,7 @@ def cur18_ngram_decontamination_sweep(spark: SparkSession, sf_dir: str) -> DataF
 def d21_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     TS = (0.5, 0.7, 0.9)
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    sh = materialize(doc_shingles(docs, k=3))  # consumers: bands + verify
+    sh = materialize(doc_shingles(docs))  # consumers: bands + verify
     cands = materialize(lsh_candidate_pairs(
         lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
     ))  # consumers: verification scope + the count face

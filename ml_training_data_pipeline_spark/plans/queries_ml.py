@@ -319,7 +319,7 @@ def ep2_build_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id, keywords) — compact — and both consumers read it.
     kw = materialize(extract_pos_keywords(docs))
     tfidf = tfidf_long(kw, text_col="keywords", ngram_max=3)
-    vocab = top_vocabulary(tfidf, top_n=2000)
+    vocab = top_vocabulary(tfidf)
     reduced = reduce_to_vocabulary(tfidf, vocab)
     # ONE vocabulary for everything (02:174-190): the KMeans/LDA vectors
     # are assembled from the SAME reduced DFM that feeds coherence and

@@ -55,7 +55,7 @@ def mm2_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import sample_frames
 
     media = documents_as_media(load_table(spark, sf_dir, "documents"))
-    return sample_frames(media, frame_size=64, every_n=3)
+    return sample_frames(media)
 
 
 # --- MM3: audio features off a REAL WAV byte roundtrip ----------------------------
@@ -274,7 +274,7 @@ def mm6_audio_frame_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import audio_frame_profile, documents_as_audio
 
     docs = load_table(spark, sf_dir, "documents")
-    prof = audio_frame_profile(documents_as_audio(docs), frame_len=40)
+    prof = audio_frame_profile(documents_as_audio(docs))
     return prof.select(
         "media_id",
         "n_frames",

@@ -88,7 +88,7 @@ _V = "v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ve FROM embeddi
 )
 def n1_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
+    return brute_force_topk(emb, emb.where(F.col("vec_id") < 10))
 
 
 # --- N2: signed-random-projection buckets ---------------------------------------
@@ -126,7 +126,7 @@ def n2_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def n3_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_topk(emb, emb.where(F.col("vec_id") < 10), SRP_PLANES, k=5)
+    return lsh_topk(emb, emb.where(F.col("vec_id") < 10), SRP_PLANES)
 
 
 # --- N4: embedding near-duplicates (blocked pairwise cosine) ---------------------
@@ -143,7 +143,7 @@ def n3_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def n4_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dups(emb, threshold=0.35, block_col="label")
+    return embedding_near_dups(emb, threshold=0.35)
 
 
 # --- N5: IVF ANN top-k (coarse-quantizer inverted file) --------------------------
@@ -157,7 +157,7 @@ def n4_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("n5_ann_ivf_topk")
 def n5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, emb.where(F.col("vec_id") < 10), nlist=16, k=5, seed=123)
+    return ivf_topk(emb, emb.where(F.col("vec_id") < 10), nlist=16)
 
 
 # --- N6: embedding near-dup GROUPS (closure over n4's pair graph) ----------------
@@ -184,7 +184,7 @@ def n5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def n6_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dups(emb, threshold=0.35, block_col="label")
+    pairs = embedding_near_dups(emb, threshold=0.35)
     return connected_components(pairs, a_col="vec_a", b_col="vec_b")
 
 
@@ -484,8 +484,8 @@ def n10_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def n11_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
-    return recall_audit(exact, lsh_topk(emb, probes, SRP_PLANES, k=5))
+    exact = brute_force_topk(emb, probes).select("query_id", "neighbor_id")
+    return recall_audit(exact, lsh_topk(emb, probes, SRP_PLANES))
 
 
 # fixed multi-table SRP hyperplanes: 4 tables × 4 planes × 64 dims,
@@ -556,8 +556,8 @@ def _mt_bucket_sql(planes: list[list[float]]) -> str:
 def n12_ann_multitable_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
-    return recall_audit(exact, multi_table_lsh_topk(emb, probes, MT_PLANE_TABLES, k=5))
+    exact = brute_force_topk(emb, probes).select("query_id", "neighbor_id")
+    return recall_audit(exact, multi_table_lsh_topk(emb, probes, MT_PLANE_TABLES))
 
 
 # fixed sweep hyperplanes: 16 tables × 4 planes × 64 dims, seeded apart
@@ -641,7 +641,7 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ground truth is shared by every sweep branch — materialize once
     # (50 rows) instead of re-scoring the corpus per config
     exact = materialize(
-        brute_force_topk(emb, probes, k=5)
+        brute_force_topk(emb, probes)
         .select("query_id", "neighbor_id")
     )
     n_q = probes.agg(F.count("*").alias("nq"))
@@ -665,9 +665,7 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands = (
             cand_long.where(F.col("tbl") < T).select("query_id", "neighbor_id").distinct()
         )
-        approx = rank_topk(
-            cands.join(F.broadcast(scored_all), ["query_id", "neighbor_id"]), k=5
-        )
+        approx = rank_topk(cands.join(F.broadcast(scored_all), ["query_id", "neighbor_id"]))
         recall = recall_audit(exact, approx, by=(), name="mean_recall_at_5")
         # singleton-stats broadcast crossJoins (1×1 rows — job structure)
         avg_c = (
@@ -714,7 +712,7 @@ def n13_ann_table_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def n14_ann_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
-    topk = brute_force_topk(emb, probes, k=5)
+    topk = brute_force_topk(emb, probes)
     return topk.groupBy("query_id").agg(
         F.round(F.max(F.when(F.col("rank") == 1, F.col("cos_sim"))), 6).alias("top1_sim"),
         F.round(F.max(F.when(F.col("rank") == 5, F.col("cos_sim"))), 6).alias("top5_sim"),
@@ -745,11 +743,11 @@ def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executors the fit's iteration tail leaves idle
     def _exact() -> DataFrame:
         return materialize(
-            brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
+            brute_force_topk(emb, probes).select("query_id", "neighbor_id")
         )
 
     def _index() -> tuple[list[list[float]], DataFrame]:
-        centers, assigned = ivf_assignments(emb, nlist=16, seed=123)
+        centers, assigned = ivf_assignments(emb, nlist=16)
         return centers, materialize(assigned)  # one index build, five probe passes
 
     exact, (centers, assigned) = run_concurrently(spark, _exact, _index)
@@ -760,7 +758,7 @@ def n15_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_all = materialize(ivf_probe_scored_all(centers, assigned, emb, probes))
     rows = None
     for nprobe in (1, 2, 4, 8, 16):
-        approx = rank_topk(scored_all.where(F.col("p") <= nprobe).drop("p"), k=5)
+        approx = rank_topk(scored_all.where(F.col("p") <= nprobe).drop("p"))
         row = recall_audit(exact, approx, by=(), name="mean_recall_at_5").select(
             F.lit(nprobe).cast("long").alias("nprobe"), "mean_recall_at_5"
         )
@@ -822,7 +820,6 @@ def n16_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             hard.select(
                 F.col("anchor_id").alias("query_id"), F.col("negative_id").alias("neighbor_id"), "cos_sim"
             ),
-            k=5,
         )
         .select(
             F.col("query_id").alias("anchor_id"),
@@ -882,7 +879,7 @@ def cur11_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # pairs has three consumers (closure, both score directions) — tiny
     # (verified near-dups only), materialize once
-    pairs = materialize(embedding_near_dups(emb, threshold=0.35, block_col="label"))
+    pairs = materialize(embedding_near_dups(emb, threshold=0.35))
     comp = connected_components(pairs, a_col="vec_a", b_col="vec_b").select(
         F.col("doc_id").alias("vec_id"), "component_id"
     )
@@ -983,7 +980,7 @@ def n17_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dups free slots exactly as in n16)
     cands = multi_table_candidates(emb, anchors, MT_PLANE_TABLES)
     scored = score_pairs(emb, anchors, cands)
-    approx = rank_topk(scored.where(F.col("cos_sim") < 0.35), k=5).select(
+    approx = rank_topk(scored.where(F.col("cos_sim") < 0.35)).select(
         F.col("query_id").alias("anchor_id"), F.col("neighbor_id").alias("negative_id")
     )
     return recall_audit(
@@ -1020,14 +1017,14 @@ def n17_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, probes, k=5).select(
+    exact = brute_force_topk(emb, probes).select(
         "query_id", "neighbor_id", "cos_sim"
     )
     books, encoded = pq_codebooks(emb, m=16, ksub=16, seed=123)
     scored = materialize(pq_adc_scores(books, encoded, probes))  # 2 consumers
     return recall_audit(
         exact.join(scored, ["query_id", "neighbor_id"], "left"),
-        rank_topk(scored, k=5, score_col="approx_cos"),
+        rank_topk(scored, score_col="approx_cos"),
         F.round(F.avg(F.abs(F.col("approx_cos") - F.col("cos_sim"))), 6).alias(
             "mean_cos_err"
         ),
@@ -1063,13 +1060,13 @@ def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact, (centers, books, cellmap, encoded) = run_concurrently(
         spark,
         lambda: materialize(
-            brute_force_topk(emb, probes, k=5).select("query_id", "neighbor_id")
+            brute_force_topk(emb, probes).select("query_id", "neighbor_id")
         ),
-        lambda: ivfpq_index(emb, nlist=16, m=16, ksub=16, seed=123),
+        lambda: ivfpq_index(emb),
     )
     cellmap = materialize(cellmap)  # 2 consumers: scoring + cost count
     encoded = materialize(encoded)
-    approx = ivfpq_topk(centers, books, cellmap, encoded, probes, nprobe=8, k=5)
+    approx = ivfpq_topk(centers, books, cellmap, encoded, probes)
     # the cost face: how many corpus vectors each query's probed cells hold
 
     probed = (
@@ -1351,7 +1348,7 @@ def n21_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_cand_single"),
         F.count("*").cast("long").alias("n_cand_multi"),
     )
-    exact = brute_force_topk(emb, qsrc, k=5).select("query_id", "neighbor_id")
+    exact = brute_force_topk(emb, qsrc).select("query_id", "neighbor_id")
     hits = (
         exact.join(
             single,
@@ -1574,7 +1571,7 @@ def n22_srp_probe_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("r") <= 5)
         .select("probe_budget", "query_id", F.col("neighbor_id").alias("t_neighbor"))
     )
-    exact = brute_force_topk(emb, qsrc, k=5).select("query_id", "neighbor_id")
+    exact = brute_force_topk(emb, qsrc).select("query_id", "neighbor_id")
     bud = spark.range(1).select(F.explode(budgets).alias("probe_budget"))
     exb = exact.crossJoin(F.broadcast(bud))  # 3-row budget frame
     hits = (

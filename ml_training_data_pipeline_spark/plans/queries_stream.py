@@ -96,7 +96,7 @@ def st1_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st2_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_table(spark, sf_dir, "events")
-    sessions = streaming_sessionize(events, gap="30 minutes")
+    sessions = streaming_sessionize(events)
     out = run_bounded(sessions, "st2_out", output_mode="complete")
     return out.select(
         "user_id",
@@ -676,16 +676,14 @@ def _admission_counts(
         minhash_wide,
     )
 
-    sh_new = materialize(doc_shingles(batch_df, k=3))
+    sh_new = materialize(doc_shingles(batch_df))
     nb = lsh_bands_from_wide(
         minhash_wide(sh_new, num_hashes=8), rows_per_band=2
     ).select(F.col("doc_id").alias("delta_doc"), "band", "band_sig")
     # the shared admission pipeline (cur10/st13/cur12): batch bands ×
     # corpus bands on the bucket key — the ONLY place the batch meets
     # the corpus — then candidate-scoped Jaccard >= 0.5
-    rejected = lsh_admission_rejects(
-        nb, corpus_bands, sh_new.unionAll(corpus_sh), threshold=0.5
-    )
+    rejected = lsh_admission_rejects(nb, corpus_bands, sh_new.unionAll(corpus_sh))
     return (
         batch_df.select("doc_id", "source")
         .join(rejected, F.col("doc_id") == F.col("delta_doc"), "left")
@@ -724,7 +722,7 @@ def st13_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # standing-corpus index, built ONCE before the stream starts: shingle
     # sets (exact verification) + band table (candidate generation)
-    corpus_sh = materialize(doc_shingles(corpus, k=3))
+    corpus_sh = materialize(doc_shingles(corpus))
     corpus_bands = materialize(
         lsh_bands_from_wide(minhash_wide(corpus_sh, num_hashes=8), rows_per_band=2)
         .select(F.col("doc_id").alias("corpus_doc"), "band", "band_sig")
@@ -1016,7 +1014,7 @@ def st16_stream_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     def _build_bands() -> tuple[DataFrame, DataFrame]:
-        sh = materialize(doc_shingles(corpus, k=3))
+        sh = materialize(doc_shingles(corpus))
         return sh, materialize(
             lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
             .select(F.col("doc_id").alias("corpus_doc"), "band", "band_sig")

@@ -26,9 +26,10 @@ from ..operators.tfidf import (
     tfidf_long,
     top_vocabulary_from_counts,
 )
-from ..operators.waterfill import waterfill
+from ..operators.waterfill import capped_mixture, waterfill
 from .oracle_fragments import (
     WATERFILL_CTES,
+    capped_mixture_ctes,
     ngram_cte,
     stopword_list_sql,
     tfidf_cte,
@@ -131,7 +132,7 @@ def v3_tfidf_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "v1_tfidf_ngram",
     oracle=f"""
-    WITH {toks_cte()}, {ngram_cte(3)}, {tfidf_cte()}
+    WITH {toks_cte()}, {ngram_cte()}, {tfidf_cte()}
     SELECT doc_id, term, tf, weight FROM tfidf
     """,
 )
@@ -145,7 +146,7 @@ def v1_tfidf_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "v4_vocab_top2000",
     oracle=f"""
-    WITH {toks_cte()}, {ngram_cte(3)},
+    WITH {toks_cte()}, {ngram_cte()},
     counts AS (
       SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
     ),
@@ -169,7 +170,7 @@ def v4_vocab_top2000(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matches the reference's unrounded colSums, 02_build_models.R:174-180)
     docs = load_table(spark, sf_dir, "documents")
     counts = term_counts(doc_tokens(docs, ngram_max=3))
-    return top_vocabulary_from_counts(counts, corpus_size(docs), top_n=2000)
+    return top_vocabulary_from_counts(counts, corpus_size(docs))
 
 
 # --- V6/T-family: per-doc top-k TF-IDF terms ----------------------------------
@@ -187,7 +188,7 @@ def v4_vocab_top2000(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def v6_doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return doc_top_terms(tfidf_long(docs), k=10)
+    return doc_top_terms(tfidf_long(docs))
 
 
 # --- F6: stopword removal (duplicate-preserving) -------------------------------
@@ -2224,7 +2225,7 @@ def v13_bpe_compression_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "v14_oov_by_source",
     oracle=f"""
-    WITH {toks_cte()}, {ngram_cte(3)},
+    WITH {toks_cte()}, {ngram_cte()},
     counts AS (
       SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
     ),
@@ -2259,7 +2260,7 @@ def v14_oov_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     counts = term_counts(doc_tokens(docs, ngram_max=3))
-    vocab = top_vocabulary_from_counts(counts, corpus_size(docs), top_n=2000).select(
+    vocab = top_vocabulary_from_counts(counts, corpus_size(docs)).select(
         "term", F.lit(1).alias("in_vocab")
     )
     # second scan: per-source n-gram mass (source rides the explode, so
@@ -2363,13 +2364,7 @@ def mix6_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT d.source, count(*) AS n_docs, CAST(sum(len(t.toks)) AS BIGINT) AS n_tokens
       FROM toks t JOIN documents d USING (doc_id) GROUP BY d.source
     ),
-    tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n, count(*) AS n_src FROM per_src),
-    w AS (
-      SELECT p.source, p.n_docs, p.n_tokens, t.n, t.n_src,
-             least(t.n, t.n_src * p.n_tokens) AS cap
-      FROM per_src p CROSS JOIN tot t
-    ),
-    z AS (SELECT CAST(sum(cap) AS BIGINT) AS zc FROM w)
+    {capped_mixture_ctes(1)}
     SELECT w.source, w.n_docs, w.n_tokens,
            round(w.n_tokens / w.n, 6) AS cur_share,
            round(1.0 / w.n_src, 6) AS target_share,
@@ -2389,21 +2384,9 @@ def mix7_target_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
     ))
-    tot = per_src.agg(
-        F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
-    )
     # cap = least(n, n_src·tok_s) as BIGINT: every output below is ONE
     # division of exact integers (see the contract note above the oracle)
-    w = per_src.crossJoin(F.broadcast(tot)).select(  # singleton stats row
-        "source",
-        "n_docs",
-        "n_tokens",
-        "n",
-        "n_src",
-        F.least(F.col("n"), F.col("n_src") * F.col("n_tokens")).cast("long").alias("cap"),
-    )
-    z = w.agg(F.sum("cap").cast("long").alias("zc"))
-    return w.crossJoin(F.broadcast(z)).select(  # singleton normalizer row
+    return capped_mixture(per_src, epochs=1).select(
         "source",
         "n_docs",
         "n_tokens",
@@ -2538,13 +2521,7 @@ def mix8_epoch_upsampling(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT d.source, count(*) AS n_docs, CAST(sum(len(t.toks)) AS BIGINT) AS n_tokens
       FROM toks t JOIN documents d USING (doc_id) GROUP BY d.source
     ),
-    tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n, count(*) AS n_src FROM per_src),
-    w AS (
-      SELECT p.source, p.n_docs, p.n_tokens, t.n_src,
-             least(t.n, 4 * t.n_src * p.n_tokens) AS cap
-      FROM per_src p CROSS JOIN tot t
-    ),
-    z AS (SELECT CAST(sum(cap) AS BIGINT) AS zc FROM w)
+    {capped_mixture_ctes(4)}
     SELECT w.source, w.n_docs, w.n_tokens,
            round(w.cap / (w.n_src * w.n_tokens), 6) AS weight,
            CAST(w.cap // (w.n_src * w.n_tokens) AS BIGINT) AS full_epochs,
@@ -2566,23 +2543,10 @@ def ep9_mixture_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
     ))
-    tot = per_src.agg(
-        F.sum("n_tokens").cast("long").alias("n"), F.count("*").alias("n_src")
-    )
     # cap = least(n, 4·n_src·tok_s) as BIGINT: every float below is ONE
     # division of exact integers (see the contract note above the oracle)
-    w = per_src.crossJoin(F.broadcast(tot)).select(  # singleton totals row
-        "source",
-        "n_docs",
-        "n_tokens",
-        "n_src",
-        F.least(F.col("n"), F.lit(4) * F.col("n_src") * F.col("n_tokens"))
-        .cast("long")
-        .alias("cap"),
-    )
-    z = w.agg(F.sum("cap").cast("long").alias("zc"))
     den = F.col("n_src") * F.col("n_tokens")  # BIGINT per-source denominator
-    return w.crossJoin(F.broadcast(z)).select(  # singleton normalizer row
+    return capped_mixture(per_src, epochs=4).select(
         "source",
         "n_docs",
         "n_tokens",

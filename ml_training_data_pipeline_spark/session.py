@@ -28,7 +28,6 @@ _MAX_DRIVER_THREADS = 4
 def get_spark(
     app_name: str = "ml_training_data_pipeline_spark",
     shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -38,7 +37,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -52,15 +51,9 @@ def get_spark(
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # scan-split size: the 128m default is the right opening bid at
-        # 100 TB (≈ 800k input splits; tasks big enough to amortize
-        # scheduling, small enough to fit executor memory with wide
-        # rows). Env-tunable so a deployment resizes splits — e.g. down
-        # when wide binary media columns spill — without code changes.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
+        # scan splits keep Spark's 128 MB spark.sql.files.maxPartitionBytes
+        # (about 800k splits at 100 TB); a deployment that needs smaller
+        # splits, e.g. for wide binary media columns, passes --conf.
         # independent jobs are submitted from concurrent driver threads
         # (run_concurrently below); FAIR mode lets those jobs share
         # executors instead of queueing FIFO.

@@ -120,15 +120,11 @@ def _drain(writer, ckpt: str | None):
             # measured st4 at sf0.1: 43 CPU-s at 32 partitions vs 17 at 8,
             # byte-identical output (partition count only routes keys; all
             # stateful merges here are per-key). Scale-adaptive, never a
-            # local[32] constant: defaultParallelism/4 floored at 4, and
-            # SPARK_GRAFT_STREAM_SHUFFLE overrides for a deployment whose
-            # per-batch volume warrants full-width state (set it equal to
-            # the session shuffle partitions to restore the old behavior).
+            # local[32] constant: defaultParallelism/4 floored at 4.
             # Applies only while a bounded drive-to-completion run holds
             # the lock; the session value is restored after.
             dp = spark.sparkContext.defaultParallelism
-            stream_sp = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE") or max(4, dp // 4)
-            spark.conf.set(_SP, str(stream_sp))
+            spark.conf.set(_SP, str(max(4, dp // 4)))
         q = writer.start()
         try:
             q.processAllAvailable()
@@ -180,29 +176,12 @@ def streaming_enrich(docs_stream: DataFrame) -> DataFrame:
     return enrich_documents(docs_stream)
 
 
-def streaming_window_counts(events_stream: DataFrame, *, window: str = "5 minutes",
-                            watermark: str = "10 minutes") -> DataFrame:
-    """W1 as a stream: watermarked tumbling-window aggregation — the
-    late-data-safe form of the batch epoch-bucket query."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def streaming_sessionize(events_stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def streaming_sessionize(events_stream: DataFrame) -> DataFrame:
     """W2 as a stream: native session_window (gap-based), the streaming
     twin of the batch lag/cumsum sessionization."""
     return (
         events_stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select("user_id", F.col("session_window.start").alias("session_start"), "n_events")
     )
@@ -240,7 +219,7 @@ def run_bounded_foreach(stream_df: DataFrame, batch_fn) -> None:
     )
 
 
-def streaming_user_stats(events_stream: DataFrame, ttl_minutes: int = 60) -> DataFrame:
+def streaming_user_stats(events_stream: DataFrame) -> DataFrame:
     """§2.10 custom stateful operator via ``applyInPandasWithState``:
     per-user running profile (distinct event types, event count, first
     event id) held in explicit group state across micro-batches — the
@@ -250,7 +229,7 @@ def streaming_user_stats(events_stream: DataFrame, ttl_minutes: int = 60) -> Dat
     of arrival order — what keeps the operator oracle-checkable.
 
     State is bounded: each key's state carries an EVENT-TIME TTL of
-    ``ttl_minutes`` past the key's latest event (refreshed on every update) and is
+    60 minutes past the key's latest event (refreshed on every update) and is
     dropped on expiry — without it, per-user state grows monotonically
     with the key universe, the one unbounded-memory failure mode of keyed
     streaming state at 100-TB ingest. Event-time (not processing-time)
@@ -269,7 +248,7 @@ def streaming_user_stats(events_stream: DataFrame, ttl_minutes: int = 60) -> Dat
         .select("user_id", "event_type", "event_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
-            make_profile_update(int(ttl_minutes) * 60_000),
+            make_profile_update(60 * 60_000),
             out_schema,
             state_schema,
             "update",

@@ -119,15 +119,10 @@ def test_split_respects_min_docs_guard(spark, corpus, fitted):
     assert out.count() == 6
 
 
-def test_gibbs_fallback_agrees_with_sklearn_split(monkeypatch):
-    """The sklearn-absent fallback must make the SAME split decision as
-    the sklearn path on the fixture's mixed cluster (docs 3,4 finance vs
-    5,6 health). The splitter group function runs in-process, so the
-    fallback is exercised by making `from sklearn.decomposition import
-    ...` raise (sys.modules[name] = None) — the executor-image-without-
-    sklearn scenario."""
-    import sys
-
+def test_gibbs_split_separates_mixed_cluster():
+    """The local Gibbs LDA fit splits the fixture's mixed cluster (docs
+    3,4 finance vs 5,6 health) in two. The splitter group function runs
+    in-process, as it would inside an executor task."""
     import pandas as pd
 
     from ml_training_data_pipeline_spark.operators.refine import (
@@ -148,17 +143,9 @@ def test_gibbs_fallback_agrees_with_sklearn_split(monkeypatch):
     )
     split = _make_group_splitter(cfg)
 
-    def partition(out: pd.DataFrame) -> set[frozenset[int]]:
-        return {
-            frozenset(int(d) for d in g["doc_id"]) for _, g in out.groupby("cluster_id")
-        }
-
-    with_sklearn = partition(split(pdf.copy()))
-    monkeypatch.setitem(sys.modules, "sklearn.decomposition", None)
-    monkeypatch.setitem(sys.modules, "sklearn", None)
-    without_sklearn = partition(split(pdf.copy()))
-    assert len(with_sklearn) == 2, with_sklearn
-    assert with_sklearn == without_sklearn
+    out = split(pdf)
+    parts = {frozenset(int(d) for d in g["doc_id"]) for _, g in out.groupby("cluster_id")}
+    assert len(parts) == 2, parts
 
 
 def test_merge_identical_clusters(spark, fitted):

@@ -178,9 +178,9 @@ def test_band_sig_is_long_in_both_forms(spark):
     )
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).limit(50)
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     wide = lsh_bands_from_wide(minhash_wide(sh, num_hashes=4), rows_per_band=2)
-    long_form = lsh_bands(minhash_signatures(sh, num_hashes=4), rows_per_band=2)
+    long_form = lsh_bands(minhash_signatures(sh, num_hashes=4))
     assert isinstance(wide.schema["band_sig"].dataType, LongType)
     assert isinstance(long_form.schema["band_sig"].dataType, LongType)
     assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, long_form.collect()))
@@ -253,7 +253,7 @@ def test_st13_admission_is_batch_boundary_invariant(spark):
 
     docs = load_table(spark, SF_DIR, "documents").where(F.col("text").isNotNull())
     corpus = docs.where(F.col("doc_id") % 2 == 0)
-    corpus_sh = doc_shingles(corpus, k=3).localCheckpoint()
+    corpus_sh = doc_shingles(corpus).localCheckpoint()
     corpus_bands = (
         lsh_bands_from_wide(minhash_wide(corpus_sh, num_hashes=8), rows_per_band=2)
         .select(F.col("doc_id").alias("corpus_doc"), "band", "band_sig")

@@ -33,7 +33,7 @@ def test_admission_rejects_reingested_same_id(spark):
     from pyspark.sql import functions as F
 
     docs = _toy_corpus(spark)
-    sh = doc_shingles(docs, k=3).localCheckpoint()
+    sh = doc_shingles(docs).localCheckpoint()
     bands = lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
     # corpus holds docs 1 and 2; the delta re-ingests doc 1 under its own
     # id and brings the novel doc 3
@@ -45,7 +45,7 @@ def test_admission_rejects_reingested_same_id(spark):
     )
     rejected = {
         r.delta_doc
-        for r in lsh_admission_rejects(delta, corpus, sh, threshold=0.5).collect()
+        for r in lsh_admission_rejects(delta, corpus, sh).collect()
     }
     assert 1 in rejected, "re-ingesting a standing doc under its own id must reject"
     assert 3 not in rejected, "a novel doc must still be admitted"

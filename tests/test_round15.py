@@ -203,6 +203,8 @@ def _fragment_table() -> dict[str, tuple[str, ...]]:
             "mix9_budget_waterfill", "ep13_dedup_budget_roadmap",
             "ep14_scrub_budget_roadmap",
         ),
+        of.capped_mixture_ctes(1): ("mix7_target_mixture_weights",),
+        of.capped_mixture_ctes(4): ("ep9_mixture_roadmap", "ep10_release_roadmap"),
         of.exact_topk_cte(): (
             "n11_ann_recall_audit", "n12_ann_multitable_recall", "n13_ann_table_sweep",
         ),

@@ -37,7 +37,7 @@ def test_banded_simhash_catches_high_bit_diff(spark):
     a = 0b1 << 59 | 0b1010
     b = 0b1010
     sim = spark.createDataFrame([(1, a), (2, b)], schema="doc_id long, simhash long")
-    out = simhash_banded_near_dups(sim, max_hamming=3, bands=4, bits=60).collect()
+    out = simhash_banded_near_dups(sim).collect()
     assert [(r["doc_a"], r["doc_b"], r["hamming"]) for r in out] == [(1, 2, 1)]
 
 

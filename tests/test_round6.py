@@ -57,9 +57,9 @@ def test_wide_bands_emit_trailing_partial_band(spark):
     )
     from ml_training_data_pipeline_spark.operators.dedup import doc_shingles
 
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     wide = lsh_bands_from_wide(minhash_wide(sh, num_hashes=5), rows_per_band=2)
-    long = lsh_bands(minhash_signatures(sh, num_hashes=5), rows_per_band=2)
+    long = lsh_bands(minhash_signatures(sh, num_hashes=5))
     a = {(r["doc_id"], r["band"], r["band_sig"]) for r in wide.collect()}
     b = {(r["doc_id"], r["band"], r["band_sig"]) for r in long.collect()}
     assert a == b
@@ -118,7 +118,7 @@ def test_banded_simhash_complete_vs_brute_force(spark):
     }
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in simhash_banded_near_dups(sim, max_hamming=3, bands=4, bits=60).collect()
+        for r in simhash_banded_near_dups(sim).collect()
     }
     assert got == expected
 

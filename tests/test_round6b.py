@@ -189,7 +189,7 @@ def test_d11_containment_dominates_jaccard(spark):
         ],
         schema="doc_id long, text string",
     )
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     cont = {
         (r["doc_a"], r["doc_b"]): r["containment"]
         for r in jaccard_pairs(sh, metric="containment").collect()
@@ -449,7 +449,7 @@ def test_minhash_dedup_cross_checked_against_mllib(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").where(
         F.col("text").isNotNull()
     )
-    sh = doc_shingles(docs, k=3)
+    sh = doc_shingles(docs)
     exact = {
         (r["doc_a"], r["doc_b"])
         for r in jaccard_pairs(sh, threshold=0.5).collect()

@@ -90,7 +90,7 @@ def test_audio_frame_profile_bounds(spark):
     from ml_training_data_pipeline_spark.io.sources import load_table
 
     docs = load_table(spark, SF_DIR, "documents").limit(50)
-    rows = audio_frame_profile(documents_as_audio(docs), frame_len=40).collect()
+    rows = audio_frame_profile(documents_as_audio(docs)).collect()
     assert rows
     for r in rows:
         assert r["decoded"] is True

@@ -339,8 +339,8 @@ def test_d19_cap_binds_on_boilerplate_fixture(spark):
         [(i, f"common boiler plate unique{i} tail{i} end{i}") for i in range(25)],
         schema="doc_id long, text string",
     )
-    sh = doc_shingles(docs, k=3).localCheckpoint()
-    rows = {r["df"]: r for r in shingle_df_audit(sh, cap=20).collect()}
+    sh = doc_shingles(docs).localCheckpoint()
+    rows = {r["df"]: r for r in shingle_df_audit(sh).collect()}
     assert 25 in rows and rows[25]["dropped_by_cap"] == 1
     assert rows[25]["n_shingles"] == 1  # 'common boiler plate' only
     assert all(r["dropped_by_cap"] == 0 for d, r in rows.items() if d <= 20)

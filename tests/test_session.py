@@ -1,10 +1,11 @@
 """session.run_concurrently — the package's one driver-concurrency helper —
 and the source guard that keeps it (and operators/materialize.py's
-``materialize``) the only site of its kind; get_spark's generated-class
-cache size."""
+``materialize``) the only site of its kind; the guard on the package's
+environment reads; get_spark's generated-class cache size."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import re
@@ -111,6 +112,48 @@ def test_one_checkpoint_site_and_one_driver_thread_site():
                 ):
                     continue
                 offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
+# the environment variables the package may read: deployment settings
+# (cores, shuffle width, driver memory, where checkpoints and streams write,
+# which POS model and LLM endpoint to use) and PySpark's own thread mode
+ENV_ALLOWED = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SHUFFLE",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_MATERIALIZE",
+    "SPARK_GRAFT_CHECKPOINT_DIR",
+    "SPARK_GRAFT_MATERIALIZE_DIR",
+    "SPARK_GRAFT_STREAM_CKPT_DIR",
+    "MTDP_POS_MODEL",
+    "LLM_ENDPOINT",
+    "LLM_API_KEY",
+    "LLM_MAX_CONCURRENCY",
+    "PYSPARK_PIN_THREAD",
+}
+
+
+def test_env_reads_are_deployment_settings():
+    """The package reads only the named deployment settings from the
+    environment: a tuning knob that nothing sets is a configuration no
+    test runs. Every read must name its variable as a string literal."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and ast.unparse(node.func) in (
+                "os.environ.get",
+                "os.getenv",
+            ):
+                key = node.args[0] if node.args else None
+            elif isinstance(node, ast.Subscript) and ast.unparse(node.value) == "os.environ":
+                key = node.slice
+            else:
+                continue
+            name = key.value if isinstance(key, ast.Constant) else None
+            if name not in ENV_ALLOWED:
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
     assert not offenders, "\n".join(offenders)
 
 

@@ -26,8 +26,8 @@ def _pairs(df) -> set[tuple[int, int]]:
 
 def test_full_probe_equals_brute_force(spark, emb):
     queries = emb.where(F.col("vec_id") < 5)
-    exact = brute_force_topk(emb, queries, k=5)
-    full = ivf_topk(emb, queries, nlist=4, nprobe=4, k=5, seed=123)
+    exact = brute_force_topk(emb, queries)
+    full = ivf_topk(emb, queries, nlist=4, nprobe=4)
     assert _pairs(full) == _pairs(exact)
     # cosine values identical too, not just the id sets
     ev = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in exact.collect()}
@@ -37,8 +37,8 @@ def test_full_probe_equals_brute_force(spark, emb):
 
 def test_partial_probe_recall(spark, emb):
     queries = emb.where(F.col("vec_id") < 5)
-    exact = _pairs(brute_force_topk(emb, queries, k=5))
-    approx = _pairs(ivf_topk(emb, queries, nlist=8, nprobe=3, k=5, seed=123))
+    exact = _pairs(brute_force_topk(emb, queries))
+    approx = _pairs(ivf_topk(emb, queries, nlist=8, nprobe=3))
     recall = len(approx & exact) / len(exact)
     # embeddings are generated around label centroids → cells align with
     # labels and most true neighbors share the query's probed cells
@@ -46,7 +46,7 @@ def test_partial_probe_recall(spark, emb):
 
 
 def test_ivf_rank_contract(spark, emb):
-    out = ivf_topk(emb, emb.where(F.col("vec_id") < 3), nlist=4, nprobe=2, k=5, seed=123)
+    out = ivf_topk(emb, emb.where(F.col("vec_id") < 3), nlist=4, nprobe=2)
     pdf = out.toPandas()
     assert set(pdf.columns) == {"query_id", "neighbor_id", "cos_sim", "rank"}
     for _, grp in pdf.groupby("query_id"):
@@ -80,14 +80,12 @@ def test_sweep_path_equals_serving_path(spark, emb):
     from pyspark.sql import functions as F
 
     queries = emb.where(F.col("vec_id") < 5)
-    centers, assigned = ivf_assignments(emb, nlist=8, seed=123)
+    centers, assigned = ivf_assignments(emb, nlist=8)
     assigned = assigned.localCheckpoint()
     scored_all = ivf_probe_scored_all(centers, assigned, emb, queries)
     for nprobe in (2, 5, 8):
-        via_sweep = rank_topk(
-            scored_all.where(F.col("p") <= nprobe).drop("p"), k=5
-        )
-        direct = ivf_probe_topk(centers, assigned, emb, queries, nprobe=nprobe, k=5)
+        via_sweep = rank_topk(scored_all.where(F.col("p") <= nprobe).drop("p"))
+        direct = ivf_probe_topk(centers, assigned, emb, queries, nprobe=nprobe)
         a = {tuple(r) for r in via_sweep.collect()}
         b = {tuple(r) for r in direct.collect()}
         assert a == b, f"nprobe={nprobe}: sweep path diverged from serving path"
