@@ -32,7 +32,8 @@ from .oracle_fragments import (
 # registered first even on a direct `import queries_stream` (code-review
 # r10: dropping the old H60 import silently dropped that ordering).
 from . import queries_dedup  # noqa: F401
-from .queries_llm import l1_enrich_documents
+# and l1 before st3 copies its oracle below
+from .queries_llm import l1_enrich_documents  # noqa: F401
 from .registry import ORACLE_SQL, query
 
 
@@ -665,7 +666,7 @@ def _admission_counts(
     of arriving docs probed against the prebuilt standing-corpus index.
     Depends ONLY on the batch and the static corpus, so micro-batch
     boundaries cannot change the summed result — the invariance
-    tests/test_round10.py pins by splitting the feed in two. The batch
+    tests/test_stream.py pins by splitting the feed in two. The batch
     side is identified by MEMBERSHIP (lsh_admission_rejects carries the
     delta orientation on the candidate row), so any batch composition is
     handled — no doc_id parity convention is assumed."""

@@ -36,43 +36,14 @@ def query(name: str, oracle: str | None = None):
 
 
 # Driver-check priority. The correctness harness verifies a PREFIX of the
-# registry (each round checks exactly the first 50 registered names and
-# skips the rest), so iteration order decides which queries get a driver
-# row. This explicit order front-loads (a) queries that have never had a
-# driver row, (b) queries whose implementation changed this round, then
-# (c) the rest by STALENESS (oldest newest-stamp first, from the folded
-# CORRECTNESS_r01..r13 ledger — the round-13 pre-staged note guessed the
-# x1 block was oldest, but the fold reads those as r11; the true oldest
-# cohort is the r7 block led by cur5_passage_dedup). Queries beyond the
-# prefix were hash-green at their newest driver check and remain covered
-# by tests/test_oracle_parity.py locally.
+# registry (the first 50 registered names), so iteration order decides
+# which queries get a driver row. The order applies one rule: queries new
+# since the last driver check first, then queries whose implementation
+# changed, then the rest by staleness (oldest newest-stamp first, from the
+# folded CORRECTNESS_r*.json ledger). Names past the prefix were
+# hash-green at their newest driver check and stay covered by
+# tests/test_oracle_parity.py.
 PRIORITY: tuple[str, ...] = (
-    # ROUND-16 PREFIX (50), stamp-fold-driven (fold CORRECTNESS_r01..r16
-    # for the newest stamp per name; the lists below were re-derived from
-    # the fold this round, not trusted from comments):
-    # (a) the two NEW queries (d28_compaction_arrival_scrub closes st17's
-    # documented cross-arrival scope hole; ep15_source_drop_impact
-    # composes d26/d27 exposure into the post-drop mix9 water-fill) —
-    # both oracle-verified driver-style from /tmp at sf0.001+sf0.01+sf0.1
-    # before registration; (b) the three queries whose implementation
-    # changed this round (m11's scatter fold moved to decimal(38,0) with
-    # a shared quantized corpus across the k-sweep — r15 ADVICE; cur2 and
-    # cur11's survivor argmax moved from a component-partitioned window
-    # to d25's combinable (score,-id)-max struct groupBy — VERDICT r15
-    # #3), each re-verified at two scales; (c) the ENTIRE 31-name
-    # r8-stamp block (sorted; cur7_length_survivorship ... 
-    # x24_template_families); (d) the first 14 of the 20-name r9-stamp
-    # block in the prior rotation's order (n6_embedding_dedup_groups ...
-    # j2_dense_rank_renumber). The remaining six r9 names (j5, u1, f1,
-    # f6, f8, f11) sit at positions 51-56 and lead the ROUND-17 rotation
-    # after any round-17 additions/changes; after they are stamped, no
-    # registry stamp predates r11. Everything pushed past this round's
-    # cut was hash-green at its newest stamp and stays in the local
-    # two-scale full-registry sweeps.
-    # ROUND-17: h25 is NEW this round (the bench CPU-scaling probe,
-    # oracle-verified at sf0.001/0.01/0.1 before registration) — it leads
-    # the prefix so the driver stamps it; the r16-prefix names below keep
-    # their freshly-stamped rotation.
     "h25_cpu_scaling_probe",
     "d28_compaction_arrival_scrub", "ep15_source_drop_impact",
     "m11_lloyd_elbow_exact", "cur2_component_survivors",

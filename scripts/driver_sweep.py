@@ -26,6 +26,29 @@ TABLES = (
 )
 
 
+def driver_session(cores: int, driver_mem: str | None = None):
+    """A session built the way the grading driver builds its own:
+    local[cores], one shuffle partition per core, UTC, UI off, and Spark's
+    default 100-entry codegen cache, because the driver's session does not
+    resize it (``session.get_spark`` does, so it is not used here).
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides ``driver_mem``; with neither set
+    the driver memory is Spark's default."""
+    from pyspark.sql import SparkSession
+
+    builder = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(cores))
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+    )
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", driver_mem)
+    if mem:
+        builder = builder.config("spark.driver.memory", mem)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def compare(sp_df, od_df) -> dict:
     cols = sorted(sp_df.columns)
     out = {
@@ -74,7 +97,6 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
 
@@ -86,15 +108,7 @@ def main() -> int:
     else:
         names = list(qs)[: args.prefix or 50]
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = driver_session(args.cores, "16g")
     con = duckdb.connect()
     # keep duckdb temp out of the repo (it spills to ./.tmp under cwd);
     # see sf1_probe.py for the sf1 incident this guards against

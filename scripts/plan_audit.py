@@ -188,21 +188,12 @@ def main() -> int:
             "local (default) or reliable strategy"
         )
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
+    from driver_sweep import driver_session
 
     qs = entry_mod.queries()
     names = args.names or list(qs)
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = driver_session(args.cores)
 
     violations: dict[str, list[str]] = {}
     bnlj_counts: dict[str, int] = {}

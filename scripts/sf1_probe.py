@@ -180,10 +180,9 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
-    from driver_sweep import TABLES, compare
+    from driver_sweep import TABLES, compare, driver_session
 
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
     if args.rows_only:
@@ -192,15 +191,7 @@ def main() -> int:
     else:
         names = args.names or pick_names(args.n if args.n is not None else 12)
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = driver_session(args.cores, "48g")
     con = duckdb.connect()
     # Spill guard: before the materialize() fix, a CTE-inlined oracle at
     # sf1 wrote >80 GB of duckdb temp into ./.tmp INSIDE THE REPO until

@@ -1,16 +1,33 @@
 from __future__ import annotations
 
-import numpy as np
-import pytest
+import sys
+import types
 
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from ml_training_data_pipeline_spark.io.sources import load_table
 from ml_training_data_pipeline_spark.operators.multimodal import (
+    DecodedImage,
+    ahash_bits,
+    audio_frame_profile,
     decode_image,
+    documents_as_audio,
+    documents_as_images,
     documents_as_media,
+    encode_netpbm,
     extract_decoded_stats,
+    extract_image_channel_stats,
+    extract_image_phash,
     extract_media_features,
     fake_decode_stats,
     resize_image,
+    synth_image_pixels,
+    synth_rgb_pixels,
 )
+from tests.conftest import SF_DIR
 
 
 def _ppm(width: int, height: int, pixel_rows: list[list[tuple[int, int, int]]]) -> bytes:
@@ -58,9 +75,6 @@ def test_resize_nearest_neighbor_roundtrip():
 def test_pil_branch_wires_up(monkeypatch):
     # fake-module injection (the spaCy-test pattern): PIL present → its
     # decode result is normalized into DecodedImage, builtin not used.
-    import sys
-    import types
-
     class _FakeImg:
         mode = "RGB"
 
@@ -117,14 +131,6 @@ def test_media_pipeline_batch_shape(spark):
 def test_ahash_shift_invariance_and_roundtrip():
     # aHash must be invariant to a constant intensity shift (no wrap):
     # the property that makes constant-shifted rasters perceptual dups.
-    from ml_training_data_pipeline_spark.operators.multimodal import (
-        DecodedImage,
-        ahash_bits,
-        decode_image,
-        encode_netpbm,
-        synth_image_pixels,
-    )
-
     base = synth_image_pixels(0)  # base 0: values 0..66, shift headroom
     shifted = (base.astype(np.int64) + 100).astype(np.uint8)
     assert ahash_bits(base) == ahash_bits(shifted)
@@ -136,15 +142,6 @@ def test_ahash_shift_invariance_and_roundtrip():
 def test_phash_corpus_has_dup_groups(spark):
     # the synthetic raster family must produce at least one multi-doc
     # hash group (the near-dup signal mm5 exists to surface).
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.multimodal import (
-        documents_as_images,
-        extract_image_phash,
-    )
-    from tests.conftest import SF_DIR
-
     docs = load_table(spark, SF_DIR, "documents").limit(300)
     ph = extract_image_phash(documents_as_images(docs))
     groups = (
@@ -155,3 +152,55 @@ def test_phash_corpus_has_dup_groups(spark):
         .count()
     )
     assert groups >= 1, "expected perceptual-dup groups in the synthetic corpus"
+
+
+def test_audio_frame_profile_error_isolation(spark):
+    media = spark.createDataFrame(
+        [(1, "audio", bytearray(b"not a riff container"), "{}")],
+        "media_id long, modality string, content binary, meta string",
+    )
+    rows = audio_frame_profile(media).collect()
+    assert len(rows) == 1
+    assert rows[0]["decoded"] is False
+    assert rows[0]["n_frames"] is None and rows[0]["min_rms"] is None
+
+
+def test_audio_frame_profile_bounds(spark):
+    docs = load_table(spark, SF_DIR, "documents").limit(50)
+    rows = audio_frame_profile(documents_as_audio(docs)).collect()
+    assert rows
+    for r in rows:
+        assert r["decoded"] is True
+        assert r["n_frames"] >= 4  # 160+ samples / 40
+        assert 0.0 <= r["min_rms"] <= r["max_rms"]
+        assert 0 <= r["n_low"] <= r["n_frames"]
+
+
+def test_mm7_rgb_roundtrip_and_error_isolation(spark):
+    # P6 encode → decode is pixel-identical for the synthetic RGB raster
+    # (the color analogue of the P5 property test), and a corrupt blob
+    # yields a decoded=false row instead of a task failure.
+    for mid in (0, 1, 37, 255, 1000):
+        px = synth_rgb_pixels(mid)
+        back = decode_image(encode_netpbm(DecodedImage(8, 8, "RGB", px)))
+        assert back.mode == "RGB"
+        assert np.array_equal(np.asarray(back.pixels), px)
+
+    media = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "media_id": [1, 2],
+                "modality": ["image", "image"],
+                "content": [
+                    encode_netpbm(DecodedImage(8, 8, "RGB", synth_rgb_pixels(1))),
+                    b"not an image",
+                ],
+                "meta": ["{}", "{}"],
+            }
+        )
+    )
+    rows = extract_image_channel_stats(media).collect()
+    ok = [r for r in rows if r["decoded"]]
+    bad = [r for r in rows if not r["decoded"]]
+    assert len(ok) == 3 and {r["channel"] for r in ok} == {0, 1, 2}
+    assert len(bad) == 1 and bad[0]["media_id"] == 2

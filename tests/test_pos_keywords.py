@@ -101,3 +101,10 @@ def test_spacy_load_failure_falls_back(monkeypatch):
     monkeypatch.setenv("MTDP_POS_MODEL", "missing_model")
     tagger = pk.load_tagger()
     assert isinstance(tagger, pk.HeuristicTagger)
+    # no model configured → heuristic; configured but spaCy not
+    # importable → heuristic fallback, no raise
+    monkeypatch.delenv("MTDP_POS_MODEL")
+    assert isinstance(pk.load_tagger(), pk.HeuristicTagger)
+    monkeypatch.setenv("MTDP_POS_MODEL", "no_such_model")
+    monkeypatch.setitem(sys.modules, "spacy", None)
+    assert isinstance(pk.load_tagger(), pk.HeuristicTagger)

@@ -408,11 +408,16 @@ def test_quality_score_contract_spark_vs_duckdb(texts):
     # the x2/cur1 composite quality formula must agree cross-engine on
     # arbitrary unicode (cur8 BANDS on this value with strict <
     # thresholds, so a last-ulp divergence would flip a band). Uses the
-    # shared quality_cte fragment — the same SQL cur8's oracle runs.
+    # shared quality_cte fragment — the same SQL cur8's oracle runs. Both
+    # Spark forms are checked: the Column form and the staged
+    # with_quality_score/quality_score_from_ratios path the queries run.
     import duckdb
     import pyspark.sql.functions as F
 
-    from ml_training_data_pipeline_spark.functions.analysis import quality_score
+    from ml_training_data_pipeline_spark.functions.analysis import (
+        quality_score,
+        with_quality_score,
+    )
     from ml_training_data_pipeline_spark.plans.oracle_fragments import (
         quality_cte,
         toks_cte,
@@ -422,9 +427,10 @@ def test_quality_score_contract_spark_vs_duckdb(texts):
     spark = get_spark("tests", shuffle_partitions=8)
     rows = [(i, s) for i, s in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string").select(
-        "doc_id", quality_score(F.col("text")).alias("q")
+        "doc_id", "text", quality_score(F.col("text")).alias("q")
     )
-    got = {r["doc_id"]: r["q"] for r in df.collect()}
+    df = with_quality_score(df, "q_staged")
+    got = {r["doc_id"]: (r["q"], r["q_staged"]) for r in df.collect()}
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
@@ -433,7 +439,7 @@ def test_quality_score_contract_spark_vs_duckdb(texts):
             f"WITH {toks_cte()}, {quality_cte()} SELECT doc_id, quality_score FROM qual"
         ).fetchall()
     )
-    assert got == want
+    assert got == {i: (q, q) for i, q in want.items()}
 
 
 @settings(max_examples=8, deadline=None)
@@ -454,13 +460,18 @@ def test_quality_score_contract_spark_vs_duckdb(texts):
 def test_langid_and_fingerprint_contract_spark_vs_duckdb(texts):
     # detect_language's argmax-with-tie-break and fingerprint's
     # md5-of-joined-tokens must agree cross-engine — x3/x23 (confusion
-    # audit) and d1/x27/cur8 (survivor policy) all key on them.
+    # audit) and d1/x27/cur8 (survivor policy) all key on them. The staged
+    # forms the queries run (with_language and with_fingerprint_pair over
+    # one shared token array) are checked against the same DuckDB values.
     import duckdb
     import pyspark.sql.functions as F
 
     from ml_training_data_pipeline_spark.functions.analysis import (
         detect_language,
         fingerprint,
+        with_fingerprint_pair,
+        with_language,
+        with_token_stats,
     )
     from ml_training_data_pipeline_spark.plans.oracle_fragments import toks_cte
     from ml_training_data_pipeline_spark.plans.queries_text import _langid_oracle
@@ -470,10 +481,16 @@ def test_langid_and_fingerprint_contract_spark_vs_duckdb(texts):
     rows = [(i, s) for i, s in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string").select(
         "doc_id",
+        "text",
         detect_language(F.col("text")).alias("lang"),
         fingerprint(F.col("text")).alias("fp"),
     )
-    got = {r["doc_id"]: (r["lang"], r["fp"]) for r in df.collect()}
+    staged = with_token_stats(df, keep_tokens=True)
+    staged = with_fingerprint_pair(with_language(staged), "fpp", "_qs_toks")
+    got = {
+        r["doc_id"]: (r["lang"], r["fp"], r["lang_detected"], (r["fpp"]["h"], r["fpp"]["l"]))
+        for r in staged.collect()
+    }
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
@@ -490,9 +507,11 @@ def test_langid_and_fingerprint_contract_spark_vs_duckdb(texts):
             f"md5(coalesce(array_to_string(toks, ' '), '')) FROM toks"
         ).fetchall()
     )
-    for i, (lang, fp) in got.items():
-        assert lang == want_lang[i], (i, lang, want_lang[i])
+    for i, (lang, fp, staged_lang, fpp) in got.items():
+        assert lang == staged_lang == want_lang[i], (i, lang, staged_lang, want_lang[i])
         assert fp == want_fp[i], (i, fp, want_fp[i])
+        # the pair is md5 hex chars 1-15 and 16-30 read as two longs
+        assert fpp == (int(want_fp[i][:15], 16), int(want_fp[i][15:30], 16)), (i, fpp, want_fp[i])
 
 
 @settings(max_examples=8, deadline=None)
