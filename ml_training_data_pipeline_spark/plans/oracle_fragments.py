@@ -148,7 +148,7 @@ def materialized_ctes(sql: str, *cte_names: str) -> str:
     a no-op), so a silent regex miss on a PRESENT definition would be
     indistinguishable from legitimate absence — the match is therefore
     case- and whitespace-tolerant (``name  as\\n(`` still rewrites), and
-    tests/test_oracle_fragments.py pins that no heavy fragment is left inlined
+    tests/test_round15.py pins that no heavy fragment is left inlined
     in any guarded oracle."""
     import re as _re
 

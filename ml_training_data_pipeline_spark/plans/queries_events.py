@@ -212,7 +212,7 @@ def w5_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keeps the exp() arguments bounded (a global-now anchor underflows for
 # old users and is non-reproducible). Plan shape: the max-ts window and
 # the final aggregate share the user_id hash partitioning, so Spark
-# plans ONE Exchange for both (guarded in tests/test_plan_shapes.py).
+# plans ONE Exchange for both (guarded in tests/test_round6b.py).
 # Timestamps compare as fractional epoch seconds on both engines
 # (Spark `cast(ts as double)` ≡ DuckDB `epoch(ts)`, session TZ UTC).
 _W6_LAMBDA = 1.1460766874337719e-06  # ln(2) / (7 * 86400)

@@ -297,7 +297,7 @@ def j6_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregates with map-side partials and NO full sort / no two-phase
 # distinct — the 100-TB form of x5/x7. Estimator-backed → rows-only
 # driver check; accuracy vs the exact answers is pinned by
-# tests/test_text.py.
+# tests/test_round5.py.
 @query("x8_approx_profile")
 def x8_approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -446,7 +446,7 @@ def t7_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sides' files are already hash-clustered on the key, so SortMergeJoin
 # reads buckets pairwise (the plan shows `Bucketed: true` and the only
 # Exchange left is the final tiny groupBy — guarded in
-# tests/test_plan_shapes.py). This is how enrichment outputs (LLM features,
+# tests/test_round6b.py). This is how enrichment outputs (LLM features,
 # token counts, quality scores) re-join the corpus repeatedly without
 # paying the corpus-sized shuffle each time.
 @query(
@@ -668,7 +668,7 @@ def g4_salted_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filtered on either one — the Delta/Iceberg OPTIMIZE ZORDER layout,
 # expressed with nothing but bit ops + repartitionByRange. The read-back
 # aggregate proves losslessness; test_plan_shapes asserts the range
-# exchange on zval; tests/test_io.py asserts the layout quality
+# exchange on zval; tests/test_round6c.py asserts the layout quality
 # (each written file touches ≤ half the lang buckets — a lang-filtered
 # scan skips most files, which a pure length-ordered layout cannot do).
 @query(
@@ -842,7 +842,7 @@ def pack2_overlap_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whole job is a read + write. The query writes a deliberately
 # fragmented copy (64 files), compacts it to 4, and returns the
 # aggregate off the compacted table — proving losslessness; the
-# file-count audit lives in tests/test_io.py.
+# file-count audit lives in tests/test_round6c.py.
 @query(
     "s11_small_file_compaction",
     oracle="""

@@ -405,7 +405,7 @@ def ep3_phase1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ratings; the features/pipeline stay). Deterministic: fixed seed,
 # LBFGS, fixed feature order. Estimator-backed → rows-only driver check;
 # separability invariant (labels are a threshold of these features, so
-# train accuracy must be high) pinned in tests/test_ml.py.
+# train accuracy must be high) pinned in tests/test_round6b.py.
 @query("m6_quality_classifier")
 def m6_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -468,7 +468,7 @@ def m6_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the sweep parallelizes by k across FAIR-pool jobs like refine's
 # big-candidate stage). Deterministic:
 # fixed seed per k, so rows-only still reruns identically. Invariant
-# pinned in tests/test_ml.py: withinss is non-increasing in k.
+# pinned in tests/test_round6c.py: withinss is non-increasing in k.
 @query("m7_kmeans_elbow")
 def m7_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.cluster import fit_kmeans, withinss
@@ -536,7 +536,7 @@ def _ari_from_contingency(cells: list[tuple[int, int, int]]) -> float:
 # the shared third. ARI ≈ 1 → structure is real; ARI ≈ 0 → the "clusters"
 # are noise and everything downstream (refine, labeling, stratified
 # mixing) inherits that. The contingency table is ≤ k² cells (bounded
-# collect); invariants pinned in tests/test_ml.py, including the
+# collect); invariants pinned in tests/test_round6c.py, including the
 # identical-fit ARI == 1 calibration case. Measured here: ARI ≈ 0.02 —
 # k-means partitions of these near-isotropic synthetic embeddings are
 # NOT stable across subsamples (consistent with n11's isotropy finding),
@@ -576,7 +576,7 @@ def m8_cluster_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DEGRADED two-feature one (punct_ratio, n_tokens only) so the
 # classifier is genuinely imperfect. Predicted-positive count
 # and recall are nonincreasing in the cutoff — pinned in
-# tests/test_ml.py.
+# tests/test_round7.py.
 @query("m9_classifier_threshold_sweep")
 def m9_classifier_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.classification import LogisticRegression

@@ -151,7 +151,7 @@ def n4_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inverted file, nprobe nearest cells probed per query, exact cosine only
 # within them. Estimator-backed (cell centers aren't SQL-expressible) →
 # rows-only driver check; recall/exactness invariants live in
-# tests/test_similarity.py (nprobe=nlist ≡ brute force). Serves on
+# tests/test_similarity_ivf.py (nprobe=nlist ≡ brute force). Serves on
 # the DEFAULT nprobe — n15's measured recall-0.88 knee (nprobe=8), so
 # the serving path embodies the sweep's answer rather than a guess.
 @query("n5_ann_ivf_topk")
@@ -730,7 +730,7 @@ def n14_ann_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # paid once — ivf_probe_topk takes the index as an artifact, the
 # production serving shape). nprobe=nlist degenerates to exact brute
 # force, so the curve must END at recall 1.0 — pinned in
-# tests/test_similarity.py along with monotonicity. Estimator-backed
+# tests/test_round7.py along with monotonicity. Estimator-backed
 # (KMeans cells aren't SQL-expressible) → rows-only driver check, like
 # n5.
 @query("n15_ivf_nprobe_sweep")
@@ -1009,7 +1009,7 @@ def n17_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shipped default is the scale-safe 8-byte config and the sweep is the
 # recorded evidence for raising ksub at deployment. Rows-only (two
 # KMeans layers inside; DuckDB cannot restate fitted codebooks);
-# determinism + bounds pinned in tests/test_similarity.py. Scale shape:
+# determinism + bounds pinned in tests/test_round10b.py. Scale shape:
 # the index build is m small fits over one cached projection; serving
 # touches only the codes and a broadcast Q·m·ksub lookup table —
 # additions, no corpus-side float math.
@@ -1049,7 +1049,7 @@ def n18_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trusting the layout, with nlist√N-scaling and nprobe as the recall
 # lever. Fully deterministic (seeded coarse + subspace fits); rows-only
 # (two fitted KMeans layers); bounds and pruning invariants in
-# tests/test_similarity.py.
+# tests/test_round10b.py.
 @query("n19_ivfpq_audit")
 def n19_ivfpq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

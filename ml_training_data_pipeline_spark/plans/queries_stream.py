@@ -666,7 +666,7 @@ def _admission_counts(
     of arriving docs probed against the prebuilt standing-corpus index.
     Depends ONLY on the batch and the static corpus, so micro-batch
     boundaries cannot change the summed result — the invariance
-    tests/test_stream.py pins by splitting the feed in two. The batch
+    tests/test_round10.py pins by splitting the feed in two. The batch
     side is identified by MEMBERSHIP (lsh_admission_rejects carries the
     delta orientation on the candidate row), so any batch composition is
     handled — no doc_id parity convention is assumed."""

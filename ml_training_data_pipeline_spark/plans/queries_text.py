@@ -782,7 +782,7 @@ def mix2_stratified_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 # length/stopword ratios miss. The alphabet is closed ([a-z0-9 ]), so
 # per-char counts are a PURE PROJECTION: 37 length(replace(...)) terms,
 # zero explode, zero shuffle — the whole signal costs one map pass at
-# any scale (plan-guarded Exchange-free in tests/test_plan_shapes.py).
+# any scale (plan-guarded Exchange-free in tests/test_round6b.py).
 _X12_ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 "
 
 
@@ -1765,7 +1765,7 @@ def v11_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The first transform every web-scraped corpus runs: drop script/style
 # blocks with their payloads, strip tags, unescape entities, collapse
 # whitespace (functions/text.strip_html; semantics pinned on HTML-laden
-# fixtures in tests/test_text.py — this corpus is already clean, so
+# fixtures in tests/test_round6c.py — this corpus is already clean, so
 # the report honestly shows n_changed = 0, proving the op is a no-op
 # exactly when it should be). Identical RE2-safe regex chain on both
 # engines; entity unescape runs AFTER tag-strip so &lt;script&gt; text
@@ -2172,7 +2172,7 @@ def mix5_mixture_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # config off a SINGLE training run's rule list (prefixes of the same
 # learning order, like n13's table prefixes); subword totals are exact
 # integers. Monotone nonincreasing by construction — pinned in
-# tests/test_bpe.py.
+# tests/test_round7.py.
 def _v13_oracle() -> str:
     # session-2 upgrade: the compression curve needs only the trainer's
     # intermediate states — total subwords at n merges is

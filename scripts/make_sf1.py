@@ -13,7 +13,7 @@ probed.
 
 Replica 0 keeps the original keys, so the exact-dedup representatives
 of a replicated corpus ARE the source corpus — the property
-tests/test_dedup.py's pair-count identity relies on.
+tests/test_round13.py's pair-count identity relies on.
 
 Usage:
     python scripts/make_sf1.py [--src /root/testdata/sf0.1] [--out /tmp/sf1] [--reps 10]

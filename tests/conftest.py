@@ -3,6 +3,7 @@ from __future__ import annotations
 import importlib.util
 import math
 import os
+import subprocess
 import sys
 
 import duckdb
@@ -102,6 +103,15 @@ def compare_to_oracle(spark, name: str, sf_dir: str) -> pd.DataFrame:
     b = b[cols].sort_values(by=cols, ignore_index=True)
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
     return a
+
+
+def dead_pid() -> int:
+    """A just-reaped child pid: guaranteed dead (Linux allocates pids
+    sequentially, so no immediate reuse) — scratch pruning is
+    liveness-gated."""
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
 
 
 def assert_no_negative_zero(pdf: pd.DataFrame, name: str) -> None:

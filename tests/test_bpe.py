@@ -4,7 +4,6 @@ semantics, and partitioning determinism."""
 
 from __future__ import annotations
 
-import duckdb
 from pyspark.sql import functions as F
 
 from ml_training_data_pipeline_spark.io.sources import load_table
@@ -14,8 +13,7 @@ from ml_training_data_pipeline_spark.operators.bpe import (
     train_bpe,
     vocab_symbols,
 )
-from ml_training_data_pipeline_spark.plans import registry
-from tests.conftest import SF_DIR, write_documents
+from tests.conftest import SF_DIR
 
 
 def _classic_docs(spark):
@@ -106,57 +104,3 @@ def test_encode_token_counts_compresses(spark):
     # low×5→[low]=1, lower×2→[low,e,r]=3, newest×6→[n,ewest]=2,
     # widest×3→[w,i,d,est]=4
     assert row["n_subwords"] == 5 * 1 + 2 * 3 + 6 * 2 + 3 * 4
-
-
-def test_bpe_merge_symbol_containing_column_name(spark):
-    # a learned merge symbol that literally contains the
-    # target column's name must not corrupt the fold SQL now that the
-    # column is a template parameter.
-    seg = spark.createDataFrame(
-        [(1, ["sym", "s", "x"])], "term long, cols array<string>"
-    )
-    merges = [(0, "sym", "s", "syms", 1), (1, "syms", "x", "symsx", 1)]
-    out = apply_merges(seg, merges, syms_col="cols").collect()
-    assert out[0]["cols"] == ["symsx"]
-
-
-def test_v13_compression_monotone(spark):
-    rows = (
-        registry.QUERIES["v13_bpe_compression_curve"](spark, SF_DIR)
-        .orderBy("n_merges")
-        .collect()
-    )
-    assert [r["n_merges"] for r in rows] == [0, 2, 4, 8]
-    for a, b in zip(rows, rows[1:]):
-        # each extra merge can only shrink (or hold) the subword count
-        assert b["total_subwords"] <= a["total_subwords"], rows
-        assert b["chars_per_subword"] >= a["chars_per_subword"], rows
-    # zero merges ⇒ every subword is one char
-    assert rows[0]["chars_per_subword"] == 1.0
-
-
-def test_bpe_oracle_survives_merge_dryup(spark, tmp_path):
-    # when the pair pool dries up before n_merges, b{t} is EMPTY — a
-    # CROSS JOIN collapsed st{t+1} to
-    # zero rows, so the v11/v13 oracles returned empty/NULL while Spark's
-    # train_bpe breaks early and still serves real numbers. The LEFT JOIN
-    # carry-forward must keep both engines matched on degenerate corpora.
-    sf = write_documents(str(tmp_path), ["ab ab ab", "ab"], ["s", "s"])
-    for name in ("v10_bpe_learned_merges", "v11_bpe_token_budget",
-                 "v13_bpe_compression_curve"):
-        sp = registry.QUERIES[name](spark, sf).toPandas()
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-        )
-        od = con.execute(registry.ORACLE_SQL[name]).df()
-        con.close()
-        assert len(sp) > 0, f"{name}: Spark side empty"
-        assert len(od) == len(sp), f"{name}: rows {len(od)} vs {len(sp)}"
-        a = sp[sorted(sp.columns)].sort_values(sorted(sp.columns), ignore_index=True)
-        b = od[sorted(od.columns)].sort_values(sorted(od.columns), ignore_index=True)
-        for c in a.columns:
-            if a[c].dtype.kind == "f":
-                assert (a[c].round(6) == b[c].astype(float).round(6)).all(), (name, c)
-            else:
-                assert (a[c].astype(str) == b[c].astype(str)).all(), (name, c)

@@ -4,7 +4,6 @@ import sys
 import types
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,20 +11,16 @@ from ml_training_data_pipeline_spark.io.sources import load_table
 from ml_training_data_pipeline_spark.operators.multimodal import (
     DecodedImage,
     ahash_bits,
-    audio_frame_profile,
     decode_image,
-    documents_as_audio,
     documents_as_images,
     documents_as_media,
     encode_netpbm,
     extract_decoded_stats,
-    extract_image_channel_stats,
     extract_image_phash,
     extract_media_features,
     fake_decode_stats,
     resize_image,
     synth_image_pixels,
-    synth_rgb_pixels,
 )
 from tests.conftest import SF_DIR
 
@@ -152,55 +147,3 @@ def test_phash_corpus_has_dup_groups(spark):
         .count()
     )
     assert groups >= 1, "expected perceptual-dup groups in the synthetic corpus"
-
-
-def test_audio_frame_profile_error_isolation(spark):
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(b"not a riff container"), "{}")],
-        "media_id long, modality string, content binary, meta string",
-    )
-    rows = audio_frame_profile(media).collect()
-    assert len(rows) == 1
-    assert rows[0]["decoded"] is False
-    assert rows[0]["n_frames"] is None and rows[0]["min_rms"] is None
-
-
-def test_audio_frame_profile_bounds(spark):
-    docs = load_table(spark, SF_DIR, "documents").limit(50)
-    rows = audio_frame_profile(documents_as_audio(docs)).collect()
-    assert rows
-    for r in rows:
-        assert r["decoded"] is True
-        assert r["n_frames"] >= 4  # 160+ samples / 40
-        assert 0.0 <= r["min_rms"] <= r["max_rms"]
-        assert 0 <= r["n_low"] <= r["n_frames"]
-
-
-def test_mm7_rgb_roundtrip_and_error_isolation(spark):
-    # P6 encode → decode is pixel-identical for the synthetic RGB raster
-    # (the color analogue of the P5 property test), and a corrupt blob
-    # yields a decoded=false row instead of a task failure.
-    for mid in (0, 1, 37, 255, 1000):
-        px = synth_rgb_pixels(mid)
-        back = decode_image(encode_netpbm(DecodedImage(8, 8, "RGB", px)))
-        assert back.mode == "RGB"
-        assert np.array_equal(np.asarray(back.pixels), px)
-
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": [1, 2],
-                "modality": ["image", "image"],
-                "content": [
-                    encode_netpbm(DecodedImage(8, 8, "RGB", synth_rgb_pixels(1))),
-                    b"not an image",
-                ],
-                "meta": ["{}", "{}"],
-            }
-        )
-    )
-    rows = extract_image_channel_stats(media).collect()
-    ok = [r for r in rows if r["decoded"]]
-    bad = [r for r in rows if not r["decoded"]]
-    assert len(ok) == 3 and {r["channel"] for r in ok} == {0, 1, 2}
-    assert len(bad) == 1 and bad[0]["media_id"] == 2

@@ -10,10 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ml_training_data_pipeline_spark.io.sources import load_table
-from ml_training_data_pipeline_spark.operators.dedup import simhash
-from ml_training_data_pipeline_spark.operators.tfidf import doc_tokens, term_counts
 from ml_training_data_pipeline_spark.plans import registry
-from tests.conftest import SF_DIR, explain_str, load_script, plan_str
+from tests.conftest import SF_DIR, explain_str
 
 
 def test_global_topk_is_take_ordered(spark):
@@ -300,221 +298,3 @@ def test_w17_window_rides_the_daily_grain(spark):
     agg = plan.index("HashAggregate")
     win = plan.index("Window")
     assert agg > win, "formatted plan lists Window above (after) the aggregate"
-
-
-def count_nodes(plan: str, op: str) -> int:
-    # formatted plans print every node twice (tree + detail section);
-    # count only the detail headers "(3) Exchange".
-    return len(re.findall(rf"^\(\d+\) {op}\b", plan, re.M))
-
-
-def test_simhash_plan_has_no_bit_explode_and_no_join(spark):
-    # the per-bit contribution sums are aggregate expressions over one row
-    # per (doc, term): no Generate beyond tokenization's own explodes (a
-    # sequence(0, bits-1) explode is a bits× row inflation through the
-    # first shuffle), and no join (the term hash is computed inline).
-    docs = spark.createDataFrame(
-        [(1, "alpha beta beta"), (2, "gamma alpha")], schema="doc_id long, text string"
-    )
-    sig_plan = explain_str(spark, simhash(docs, bits=60))
-    base_plan = explain_str(spark, term_counts(doc_tokens(docs)))
-    assert sig_plan.count("Generate") == base_plan.count("Generate"), sig_plan
-    for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
-        assert op not in sig_plan, sig_plan
-
-
-def test_x12_entropy_is_exchange_free(spark):
-    # the whole signal is a map-side projection: 37 length(replace(...))
-    # terms over a closed alphabet — any Exchange means someone turned it
-    # back into an explode+groupBy.
-    plan = explain_str(spark, "x12_char_entropy")
-    assert "Exchange" not in plan, plan
-    assert "Generate" not in plan, plan
-
-
-def test_w6_single_exchange(spark):
-    # the max-ts window and the final groupBy share the user_id hash
-    # partitioning: Spark must plan exactly one shuffle.
-    plan = explain_str(spark, "w6_decayed_engagement")
-    assert count_nodes(plan, "Exchange") == 1, plan
-
-
-def test_cur5_no_distinct_shuffle_no_window_funnel(spark):
-    # per-doc passage dedup happens in-row (array_distinct inside the
-    # projection — no distinct shuffle), and the cross-doc count is a
-    # map-side-combinable groupBy joined back off the checkpointed
-    # passage table — NOT a window partitioned by passage, which would
-    # funnel hot boilerplate passages into one task. Three Exchanges:
-    # count aggregate, join probe, final doc aggregate (the probe
-    # Exchange disappears when the count side is small enough to
-    # broadcast, as at test SF).
-    plan = explain_str(spark, "cur5_passage_dedup")
-    assert count_nodes(plan, "Window") == 0, plan
-    assert count_nodes(plan, "Exchange") in (2, 3), plan
-    assert count_nodes(plan, "Scan ExistingRDD") == 2, plan  # checkpointed once
-
-
-def test_s9_bucketed_join_shuffle_free(spark):
-    # both sides are bucketed by doc_id, so the join needs no Exchange:
-    # with broadcast disabled the plan is a bucket-pairwise SortMergeJoin
-    # and the ONLY Exchange is the final groupBy(lang).
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = explain_str(spark, "s9_bucketed_join_roundtrip")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert plan.count("Bucketed: true") == 2, plan
-    assert count_nodes(plan, "SortMergeJoin") == 1, plan
-    assert count_nodes(plan, "Exchange") == 1, plan
-    assert "BroadcastExchange" not in plan, plan
-
-
-def test_x13_topk_is_take_ordered(spark):
-    # the global top-100 must be a parallel TakeOrderedAndProject, with
-    # the rank/cum-share window above the limit (≤100 rows).
-    plan = explain_str(spark, "x13_zipf_profile")
-    assert "TakeOrderedAndProject" in plan, plan
-    rows = registry.QUERIES["x13_zipf_profile"](spark, SF_DIR).collect()
-    assert 0 < len(rows) <= 100
-    # cumulative share is nondecreasing and ends ≤ 1
-    by_rank = sorted(rows, key=lambda r: r["rank"])
-    cums = [r["cum_share"] for r in by_rank]
-    assert all(a <= b + 1e-9 for a, b in zip(cums, cums[1:]))
-    assert cums[-1] <= 1.0 + 1e-9
-
-
-def test_w7_single_scan_and_sane_rates(spark):
-    # ONE scan of events (the cohort-size self-join would re-execute the
-    # lineage and scan twice); cohort day is in-row array_min (no second
-    # user-level shuffle); cohort size is a window over the tiny offset
-    # matrix.
-    plan = explain_str(spark, "w7_cohort_retention")
-    assert count_nodes(plan, "Scan parquet") == 1, plan
-    assert count_nodes(plan, "Exchange") == 3, plan
-    assert "Join" not in plan, plan
-    rows = registry.QUERIES["w7_cohort_retention"](spark, SF_DIR).collect()
-    assert rows
-    for r in rows:
-        assert r["day_offset"] >= 0
-        assert 0.0 < r["retention_rate"] <= 1.0
-    # offset 0 is every cohort's own size → rate exactly 1.0
-    assert all(
-        r["retention_rate"] == 1.0 for r in rows if r["day_offset"] == 0
-    )
-
-
-def test_g3_cube_single_expand_single_scan(spark):
-    # the four grouping sets aggregate in ONE pass: one scan, one Expand
-    # (row fan-out to set memberships), one Exchange — not four scans.
-    plan = explain_str(spark, "g3_cube_profile")
-    assert count_nodes(plan, "Expand") == 1, plan
-    assert count_nodes(plan, "Exchange") == 1, plan
-    assert count_nodes(plan, "Scan parquet") == 1, plan
-    rows = registry.QUERIES["g3_cube_profile"](spark, SF_DIR).collect()
-    by_gid = {}
-    for r in rows:
-        by_gid.setdefault(r["gid"], []).append(r)
-    # margins must reconcile: every grouping set sums to the grand total
-    grand = by_gid[3][0]["n_docs"]
-    assert len(by_gid[3]) == 1
-    for gid in (0, 1, 2):
-        assert sum(r["n_docs"] for r in by_gid[gid]) == grand, gid
-
-
-def test_ep4_single_scan_three_shuffles(spark):
-    # the whole prep pipeline — gates, quota, shards, budget — must cost
-    # ONE corpus scan and three Exchanges (fp survivorship window, the
-    # source quota windows sharing one shuffle, the shard aggregate).
-    plan = explain_str(spark, "ep4_curation_to_shards")
-    assert count_nodes(plan, "Scan parquet") == 1, plan
-    assert count_nodes(plan, "Exchange") == 3, plan
-
-
-def test_s11_compaction_plan_has_no_shuffle(spark):
-    # coalesce must not introduce an Exchange — the whole point is a
-    # shuffle-free rewrite.
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id")
-    plan = plan_str(docs.coalesce(4))
-    assert "Exchange" not in plan, plan
-
-
-def test_t10_window_is_partitioned_not_global(spark):
-    # the whole point of stratified round-robin: the row_number window
-    # partitions by stratum (parallel), never a single-partition global
-    # sort. A global window would show "Window [...]" fed by an Exchange
-    # SinglePartition.
-    plan = plan_str(registry.QUERIES["t10_balanced_shards"](spark, SF_DIR))
-    assert "Window" in plan, plan
-    assert "SinglePartition" not in plan, plan
-
-
-def test_h12_h18_no_cartesian_and_broadcast_dims(spark):
-    for name in ("h12_two_nation_volume", "h13_market_share", "h18_nation_profit"):
-        plan = plan_str(registry.QUERIES[name](spark, SF_DIR))
-        assert "CartesianProduct" not in plan, (name, plan)
-        assert "BroadcastHashJoin" in plan, (name, plan)
-
-
-def test_p11_all_anti_joins_broadcast(spark):
-    # every FK edge checks via a broadcast anti-join; a SortMergeJoin here
-    # means a dim failed to broadcast and the audit would shuffle 100 TB.
-    plan = plan_str(registry.QUERIES["p11_referential_integrity"](spark, SF_DIR))
-    assert "SortMergeJoin" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 7, plan
-
-
-def test_ep7_unpivot_does_not_rescan_per_metric(spark):
-    # the card's 7-branch unpivot union runs off the materialized 1×1
-    # stats row: the final plan must contain ZERO parquet scans (both
-    # corpus passes happen before the checkpoint), so adding a metric
-    # row costs nothing.
-    df = registry.QUERIES["ep7_dataset_card"](spark, SF_DIR)
-    plan = plan_str(df)
-    assert "Scan parquet" not in plan, plan
-    rows = {r["metric"]: r["value"] for r in df.collect()}
-    assert rows["n_docs"] > 0 and 0.0 <= rows["exact_dup_rate"] <= 1.0
-
-
-def test_v12_limit_then_window(spark):
-    # the rank window must run over a TakeOrdered top-4000 slice, never a
-    # single-partition sort of the full vocabulary (at 100 TB
-    # the vocab is 10^7-10^8 terms and a global window is the funnel the
-    # w14 commit bans). v4's own pattern, applied to the audit that picks
-    # v4's cutoff.
-    df = registry.QUERIES["v12_vocab_coverage"](spark, SF_DIR)
-    plan = plan_str(df)
-    lines = plan.splitlines()
-    win = [i for i, ln in enumerate(lines) if "Window" in ln and "row_number" in ln]
-    assert win, plan
-    # the window's direct input is the bounded TakeOrdered slice — not an
-    # Exchange SinglePartition over the full vocab (the one SinglePartition
-    # elsewhere in the plan is `tot`'s one-row global sum, which is fine)
-    assert "TakeOrderedAndProject" in lines[win[0] + 1], plan
-    assert "SinglePartition" not in lines[win[0] + 1], plan
-
-
-@pytest.mark.parametrize(
-    "names",
-    [
-        pytest.param(("d25_cascade_quality_survivors",), id="d25_plan_has_no_window_funnel"),
-        pytest.param(
-            ("cur2_component_survivors", "cur11_semantic_survivors"),
-            id="cur2_cur11_use_combinable_argmax_not_window",
-        ),
-    ],
-)
-def test_survivor_argmax_is_not_a_window(spark, names):
-    """Survivor selection in d25 (both cascade stages), cur2 and cur11 is
-    the combinable (score, -id)-max struct groupBy — a pathological giant
-    near-dup component must not ride a component-partitioned hot-key
-    window funnel. Checked on the FULL executed plan including
-    pre-checkpoint segments (the ledger's checkpoint lens), since d25 and
-    cur11 checkpoint mid-pipeline."""
-    pa = load_script("plan_audit")
-    for name in names:
-        spark.catalog.clearCache()
-        with pa.CkptRecorder() as rec:
-            final_plan = plan_str(registry.QUERIES[name](spark, SF_DIR))
-        for seg in [final_plan, *rec.plans]:
-            assert "Window" not in seg, f"component window reappeared in {name}"

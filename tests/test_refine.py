@@ -8,12 +8,10 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from ml_training_data_pipeline_spark.operators.centroids import merge_components
 from ml_training_data_pipeline_spark.operators.refine import (
     RefineConfig,
     _make_group_splitter,
     merge_similar_clusters,
-    refine,
     renumber_clusters,
     split_low_coherence_clusters,
 )
@@ -169,113 +167,3 @@ def test_merge_threshold_1_is_identity(spark, fitted):
     before = {(r["doc_id"], r["cluster_id"]) for r in a.collect()}
     after = {(r["doc_id"], r["cluster_id"]) for r in merged.collect()}
     assert before == after
-
-
-def _two_theme_group(cluster_id: int = 1, base_id: int = 100) -> pd.DataFrame:
-    """12 docs, two disjoint term themes: a/b/c (docs 1-6), x/y/z (7-12).
-    Probe LDA at k=2 separates them; each topic's top terms then co-occur
-    in all their docs but only half the cluster, so cluster-local
-    coherence ≈ 1 - 6/12 = 0.5 per pair."""
-    rows = []
-    for d in range(1, 7):
-        for t in ("alpha", "beta", "ceta"):
-            rows.append((d, t, 1))
-    for d in range(7, 13):
-        for t in ("xray", "yankee", "zulu"):
-            rows.append((d, t, 1))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "term", "tf"])
-    pdf["cluster_id"] = cluster_id
-    pdf["base_id"] = base_id
-    return pdf
-
-
-def _cfg(threshold: float) -> RefineConfig:
-    return RefineConfig(
-        coherence_threshold=threshold,
-        k_range=(2,),
-        min_docs=4,
-        top_m=3,
-        lda_search_iter=30,
-        lda_final_iter=30,
-    )
-
-
-def test_probe_gate_keeps_coherent_cluster_unsplit():
-    # best probe coherence (~0.5) clears the threshold → the reference
-    # keeps the cluster whole ("Cluster is coherent. No split needed.")
-    out = _make_group_splitter(_cfg(threshold=0.3))(_two_theme_group())
-    assert sorted(out["doc_id"]) == list(range(1, 13))
-    assert set(out["cluster_id"]) == {1}
-
-
-def test_low_coherence_cluster_splits_along_themes():
-    out = _make_group_splitter(_cfg(threshold=0.9))(_two_theme_group())
-    assert sorted(out["doc_id"]) == list(range(1, 13))
-    by_doc = dict(zip(out["doc_id"], out["cluster_id"]))
-    theme_a = {by_doc[d] for d in range(1, 7)}
-    theme_b = {by_doc[d] for d in range(7, 13)}
-    # two minted ids in the cluster's reserved block, one per theme
-    assert len(theme_a) == 1 and len(theme_b) == 1 and theme_a != theme_b
-    assert theme_a | theme_b == {100, 101}
-
-
-def test_group_splitter_respects_size_guards():
-    pdf = _two_theme_group()
-    small = pdf[pdf["doc_id"] <= 3]  # 3 docs < min_docs=4
-    out = _make_group_splitter(_cfg(threshold=0.9))(small)
-    assert set(out["cluster_id"]) == {1}
-
-
-def test_merge_components_includes_disjoint_group(spark):
-    # group 3 shares no nonzero index with 1/2 → no cosine pair row; it
-    # must still appear in the mapping (mapped to itself).
-    pairs = spark.createDataFrame(
-        [(1, 2, 0.95)], schema="grp_a int, grp_b int, cos_sim double"
-    )
-    groups = spark.createDataFrame([(1,), (2,), (3,)], schema="grp int")
-    mapping = {
-        r["grp"]: r["new_grp"]
-        for r in merge_components(pairs, 0.9, groups=groups).collect()
-    }
-    assert mapping == {1: 1, 2: 1, 3: 3}
-
-
-def test_refine_end_to_end_parity_across_partitionings(spark):
-    """m5/m6/m11 are rows-only 🔶; §5's determinism-under-reconfiguration
-    discipline (same answer at shuffle partitions 3 and 32) applied to
-    the full iterative composite: split → renumber → merge → renumber
-    must produce IDENTICAL assignments regardless of physical layout."""
-    cfg = RefineConfig(
-        coherence_threshold=0.9,  # force splits so the loop actually works
-        k_range=(2,),
-        min_docs=3,
-        top_m=3,
-        lda_search_iter=5,
-        lda_final_iter=10,
-        max_rounds=2,
-    )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    results = {}
-    try:
-        for parts in (3, 32):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            corpus = spark.createDataFrame(
-                CORPUS, schema="doc_id long, text string, cluster_id int"
-            ).repartition(parts)
-            tokens = tokens_frame(corpus, stopwords=None)
-            model = fit_tfidf_vectorizer(tokens, vocab_size=100)
-            vecs = vectorize(tokens, model)
-            tfidf = tfidf_long(corpus)
-            out = refine(
-                vecs.select("doc_id", "tf"),
-                tfidf,
-                corpus.select("doc_id", "cluster_id"),
-                cfg,
-            )
-            results[parts] = {
-                r["doc_id"]: r["cluster_id"] for r in out.collect()
-            }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert sorted(results[3]) == [1, 2, 3, 4, 5, 6]
-    assert results[3] == results[32], results

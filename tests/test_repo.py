@@ -1,64 +1,13 @@
-"""Whole-repository contracts: the README/SURVEY query totals and
-source hygiene (no invalid escape sequences, no unused imports)."""
+"""Source hygiene across the package, tests/ and scripts/: no unused
+imports."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
-import py_compile
-import re
-import tempfile
-import warnings
 
-from ml_training_data_pipeline_spark.plans import registry
 from tests.conftest import REPO
-
-
-def test_doc_counts_match_registry():
-    # README/SURVEY query totals once drifted from the registry. Derive
-    # the numbers from the registry and require both docs to state them
-    # exactly, so the drift can't recur.
-    n_q = len(registry.QUERIES)
-    n_o = len(registry.ORACLE_SQL)
-    n_r = n_q - n_o
-    readme = open(os.path.join(REPO, "README.md")).read()
-    survey = open(os.path.join(REPO, "SURVEY.md")).read()
-    m = re.search(r"\((\d+) queries, (\d+) oracle-backed; (\d+) estimator", readme)
-    assert m, "README query-total sentence not found"
-    assert tuple(map(int, m.groups())) == (n_q, n_o, n_r), (m.groups(), n_q, n_o, n_r)
-    m = re.search(r"\*\*(\d+) named queries, (\d+)\s+oracle-backed\*\*", survey)
-    assert m, "SURVEY query-total sentence not found"
-    assert tuple(map(int, m.groups())) == (n_q, n_o), (m.groups(), n_q, n_o)
-    m = re.search(r"the (\d+) rows-only", survey)
-    assert m and int(m.group(1)) == n_r, (m and m.group(1), n_r)
-
-
-def test_doc_count_test_still_enforced():
-    # the totals in README/SURVEY are checked by
-    # test_doc_counts_match_registry; this probe pins that x29/g6/cur8
-    # registered with their oracles.
-    for name in (
-        "x29_token_psi",
-        "g6_source_lang_chi2",
-        "cur8_dedup_quality_interaction",
-    ):
-        assert name in registry.QUERIES and name in registry.ORACLE_SQL, name
-
-
-def test_no_invalid_escape_sequences_anywhere():
-    # \s in non-raw f-strings emits SyntaxWarning today and is slated to
-    # become SyntaxError. Compile every engine module with
-    # warnings-as-errors so a regression fails loudly.
-    files = glob.glob(
-        os.path.join(REPO, "ml_training_data_pipeline_spark", "**", "*.py"),
-        recursive=True,
-    )
-    assert len(files) > 20
-    with warnings.catch_warnings(), tempfile.TemporaryDirectory() as td:
-        warnings.simplefilter("error", SyntaxWarning)
-        for f in files:
-            py_compile.compile(f, doraise=True, cfile=os.path.join(td, "x.pyc"))
 
 
 def test_no_unused_imports():

@@ -10,20 +10,25 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+import __spark_entry__ as entry_mod
+import bench
+from ml_training_data_pipeline_spark.functions.analysis import (
+    fingerprint,
+    fingerprint_pair,
+)
 from ml_training_data_pipeline_spark.io import sources
-
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.dedup import (
+    doc_shingles,
+    exact_dup_groups,
+    lsh_bands_from_wide,
+    minhash_wide,
+)
+from ml_training_data_pipeline_spark.plans.queries_stream import _admission_counts
 from tests.conftest import SF_DIR
 
 
-# --- ADVICE r9 #1: fingerprint identity widened to a 120-bit long pair -------
-
-
 def test_fingerprint_pair_shape_and_identity(spark):
-    from ml_training_data_pipeline_spark.functions.analysis import (
-        fingerprint,
-        fingerprint_pair,
-    )
-
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).where(
         F.col("text").isNotNull()
     )
@@ -50,8 +55,6 @@ def test_fingerprint_pair_shape_and_identity(spark):
 
 
 def test_exact_dup_groups_hash_keys_matches_hex_policy(spark):
-    from ml_training_data_pipeline_spark.operators.dedup import exact_dup_groups
-
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     by_hex = exact_dup_groups(docs).select("n_docs", "keep_doc_id")
     by_pair = exact_dup_groups(docs, hash_keys=True).select("n_docs", "keep_doc_id")
@@ -60,13 +63,10 @@ def test_exact_dup_groups_hash_keys_matches_hex_policy(spark):
     assert a == b, "survivor policy must be identical under the pair key"
 
 
-# --- ADVICE r9 #2: heartbeat keeps a live owner ahead of the 7-day cap -------
-
-
 def test_hard_cap_spares_heartbeated_live_owner(tmp_path, monkeypatch):
     # an 8-day-old tree whose LIVE owner keeps heartbeating its sentinel
     # must survive: the cap measures time since the owner last touched
-    # the entry, not time since creation (ADVICE r9)
+    # the entry, not time since creation
     monkeypatch.setattr(sources.tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(sources, "_stale_pruned", False)
     ancient = time.time() - 8 * 24 * 3600
@@ -77,7 +77,6 @@ def test_hard_cap_spares_heartbeated_live_owner(tmp_path, monkeypatch):
     owner.write_text(str(os.getpid()))
     os.utime(tree, (ancient, ancient))  # tree itself untouched for 8 days
     # owner sentinel mtime is FRESH (the heartbeat) — cap must not fire
-
     sources._prune_stale_scratch(str(tmp_path))
     assert tree.exists(), "8-day tree with live owner + fresh heartbeat survives"
 
@@ -106,9 +105,6 @@ def test_heartbeat_refreshes_owned_entries(tmp_path, monkeypatch):
         assert os.path.getmtime(p) > time.time() - 60, f"{p} not heartbeated"
 
 
-# --- ADVICE r9 #3: ep8 histogram is grouping-sets marginals ------------------
-
-
 def test_grouping_sets_gid_contract(spark):
     # ep8 derives its three marginals from grouping_id() == 3/5/6 over
     # cols (source, n_chars, lang, ntok); pin Spark's bit assignment so
@@ -135,8 +131,8 @@ def test_grouping_sets_gid_contract(spark):
     # a NULL-valued group that ep8's x29 marginal filters out
     assert sorted(r.ntok for r in by_gid[6] if r.ntok is not None) == [5]
     assert sum(1 for r in by_gid[6] if r.ntok is None) == 1
-    # the materialized cardinality is the SUM of marginals (ADVICE r9:
-    # the old composite groupBy could approach corpus row count)
+    # the materialized cardinality is the SUM of marginals (a composite
+    # groupBy could approach corpus row count)
     assert len(m) == len(by_gid[3]) + len(by_gid[5]) + len(by_gid[6])
 
 
@@ -165,9 +161,6 @@ def test_ep8_equals_component_union(spark):
     assert a.equals(b), "fused ep8 must equal the three standalone audits"
 
 
-# --- band_sig long-key pin ----------------------------------------------------
-
-
 def test_band_sig_is_long_in_both_forms(spark):
     from ml_training_data_pipeline_spark.operators.dedup import (
         doc_shingles,
@@ -186,12 +179,7 @@ def test_band_sig_is_long_in_both_forms(spark):
     assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, long_form.collect()))
 
 
-# --- bench contention guard ---------------------------------------------------
-
-
 def test_sample_load_waits_then_goes_quiet():
-    import bench
-
     loads = iter([0.8, 0.6, 0.02])
     slept = []
     clock = iter([0.0, 1.0, 2.0, 3.0, 4.0, 5.0])
@@ -208,8 +196,6 @@ def test_sample_load_waits_then_goes_quiet():
 
 
 def test_sample_load_stamps_contended_on_timeout():
-    import bench
-
     clock = iter([0.0, 5.0, 11.0])
     load, contended = bench.sample_load(
         threshold=0.05,
@@ -224,33 +210,16 @@ def test_sample_load_stamps_contended_on_timeout():
 
 
 def test_sample_load_handles_missing_loadavg():
-    import bench
-
     def boom():
         raise OSError("no loadavg")
 
     assert bench.sample_load(_loadavg=boom) == (-1.0, False)
 
 
-# --- st13: micro-batch boundary invariance -----------------------------------
-
-
 def test_st13_admission_is_batch_boundary_invariant(spark):
     # st13's contract: admission depends only on the static corpus index,
     # so splitting the arriving feed into any micro-batches sums to the
     # same per-source counts as one batch (= cur10's oracle semantics).
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.dedup import (
-        doc_shingles,
-        lsh_bands_from_wide,
-        minhash_wide,
-    )
-    from ml_training_data_pipeline_spark.plans.queries_stream import (
-        _admission_counts,
-    )
-
     docs = load_table(spark, SF_DIR, "documents").where(F.col("text").isNotNull())
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     corpus_sh = doc_shingles(corpus).localCheckpoint()
@@ -278,12 +247,7 @@ def test_st13_admission_is_batch_boundary_invariant(spark):
     assert sum(v[0] for v in one.values()) > 0
 
 
-# --- cur13: decontamination sweep invariants -----------------------------------
-
-
 def test_cur13_sweep_is_monotone(spark):
-    import __spark_entry__ as entry_mod
-
     rows = {
         r.min_shared: r
         for r in entry_mod.queries()["cur13_decontamination_sweep"](

@@ -8,15 +8,14 @@ a hash match alone would not explain."""
 
 from __future__ import annotations
 
-from pyspark.sql import Window
-from pyspark.sql import functions as F
+import datetime
+
+from pyspark.sql import Window, functions as F
 
 import __spark_entry__ as entry_mod
-
-from tests.conftest import SF_DIR
-
-
-# --- h20: late-shipping priority counts ---------------------------------------
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.similarity import pq_codebooks
+from tests.conftest import SF_DIR, plan_str
 
 
 def test_h20_counts_reconcile_with_plain_filter(spark):
@@ -25,8 +24,6 @@ def test_h20_counts_reconcile_with_plain_filter(spark):
     total = sum(r.high_line_count + r.low_line_count for r in rows)
     # recount the gated join without the CASE split — the two conditional
     # counts must partition it exactly
-    from ml_training_data_pipeline_spark.io.sources import load_table
-
     l = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_shipdate")
     o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderdate")
     delay = F.floor(
@@ -35,9 +32,6 @@ def test_h20_counts_reconcile_with_plain_filter(spark):
     n = l.join(o, l.l_orderkey == o.o_orderkey).where(delay >= 60).count()
     assert total == n > 0
     assert all(r.max_delay_days >= 60 for r in rows)
-
-
-# --- w17: RANGE-frame rolling stats -------------------------------------------
 
 
 def test_w17_frame_invariants(spark):
@@ -73,9 +67,6 @@ def test_w17_range_frame_thins_across_gaps(spark):
     assert got[3] == (3, 30)
 
 
-# --- mix8: epoch-aware upsampling ---------------------------------------------
-
-
 def test_mix8_epoch_arithmetic_and_materialization(spark):
     rows = entry_mod.queries()["mix8_epoch_upsampling"](spark, SF_DIR).collect()
     assert rows
@@ -93,12 +84,8 @@ def test_mix8_epoch_arithmetic_and_materialization(spark):
     assert abs(sum(r.eff_share for r in rows) - 1.0) < 1e-4
 
 
-# --- v15: subword fertility ----------------------------------------------------
-
-
 def test_v15_fertility_bounds(spark):
     rows = entry_mod.queries()["v15_subword_fertility"](spark, SF_DIR).collect()
-    from ml_training_data_pipeline_spark.io.sources import load_table
 
     langs = {
         r.lang
@@ -116,9 +103,6 @@ def test_v15_fertility_bounds(spark):
         assert r.chars_per_subword > 0
 
 
-# --- st14: stream-stream LEFT OUTER join --------------------------------------
-
-
 def test_st14_outer_join_matches_batch_eviction_rule(spark):
     out = entry_mod.queries()["st14_stream_outer_join"](spark, SF_DIR)
     got_inner = {
@@ -128,8 +112,6 @@ def test_st14_outer_join_matches_batch_eviction_rule(spark):
     got_null = {
         (r.user_id, r.click_id) for r in out.where(F.col("purchase_id").isNull()).collect()
     }
-
-    from ml_training_data_pipeline_spark.io.sources import load_table
 
     e = load_table(spark, SF_DIR, "events")
     c = e.where(F.col("event_type") == "click").select(
@@ -154,7 +136,6 @@ def test_st14_outer_join_matches_batch_eviction_rule(spark):
     wm = min(
         c.agg(F.max("cts")).collect()[0][0], p.agg(F.max("pts")).collect()[0][0]
     )
-    import datetime
 
     horizon = wm - datetime.timedelta(minutes=10) - datetime.timedelta(hours=1)
     unmatched = c.join(p, cond, "left_anti")
@@ -166,9 +147,6 @@ def test_st14_outer_join_matches_batch_eviction_rule(spark):
     # hold back the tail-horizon clicks
     assert want_null
     assert unmatched.count() > len(want_null)
-
-
-# --- ep9: unified mixture roadmap ---------------------------------------------
 
 
 def test_ep9_policy_decomposition_and_single_scan(spark):
@@ -190,18 +168,12 @@ def test_ep9_policy_decomposition_and_single_scan(spark):
     # localCheckpoint (a linear scan→groupBy plan), after which the three
     # downstream branches (totals, weights, normalizer) read the
     # |sources|-sized checkpoint, so the final plan touches no parquet
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_str(df)
     assert plan.count("documents.parquet") == 0, "branches must reuse the checkpoint"
     assert "Scan ExistingRDD" in plan
 
 
-# --- n18: product-quantization ADC audit --------------------------------------
-
-
 def test_n18_pq_shapes_and_audit_bounds(spark):
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.similarity import pq_codebooks
-
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
     books, encoded = pq_codebooks(emb, m=16, ksub=16, seed=123)
@@ -226,9 +198,6 @@ def test_n18_pq_shapes_and_audit_bounds(spark):
     assert all(r.mean_cos_err < 0.25 for r in rows)
 
 
-# --- l5: batched-inference plan -------------------------------------------------
-
-
 def test_l5_batching_conserves_work(spark):
     rows = entry_mod.queries()["l5_batched_inference_plan"](spark, SF_DIR).collect()
     assert rows
@@ -243,9 +212,6 @@ def test_l5_batching_conserves_work(spark):
     assert sum(r.calls_saved for r in rows) > 0, "batching must save requests"
 
 
-# --- cur15: decontamination impact ----------------------------------------------
-
-
 def test_cur15_conservation_and_shift(spark):
     rows = entry_mod.queries()["cur15_decontamination_impact"](spark, SF_DIR).collect()
     assert rows
@@ -258,9 +224,6 @@ def test_cur15_conservation_and_shift(spark):
     assert abs(sum(r.share_before for r in rows) - 1.0) < 1e-4
     assert abs(sum(r.share_after for r in rows) - 1.0) < 1e-4
     assert abs(sum(r.share_shift for r in rows)) < 1e-4
-
-
-# --- d20: LSH band-configuration sweep ----------------------------------------
 
 
 def test_d20_scurve_monotonicity(spark):
@@ -284,12 +247,7 @@ def test_d20_scurve_monotonicity(spark):
     assert rows[1].n_candidates > rows[1].n_hit, "r=1 must over-generate"
 
 
-# --- n19: IVF-PQ audit ---------------------------------------------------------
-
-
 def test_n19_ivfpq_bounds_and_pruning(spark):
-    from ml_training_data_pipeline_spark.io.sources import load_table
-
     n = load_table(spark, SF_DIR, "embeddings").count()
     rows = entry_mod.queries()["n19_ivfpq_audit"](spark, SF_DIR).collect()
     assert len(rows) == 10
@@ -300,9 +258,6 @@ def test_n19_ivfpq_bounds_and_pruning(spark):
         # the inverted file must actually prune: probed cells hold fewer
         # vectors than the corpus, and at least one candidate
         assert 0 < r.n_candidates < n
-
-
-# --- cur14: Bloom decontamination screen --------------------------------------
 
 
 def test_cur14_one_sided_error_and_fill(spark):

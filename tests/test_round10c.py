@@ -7,8 +7,17 @@ group, while the encode still covers every row)."""
 
 from __future__ import annotations
 
-import __spark_entry__ as entry_mod  # noqa: F401  (registry import side effects)
+from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.dedup import (
+    doc_shingles,
+    lsh_admission_rejects,
+    lsh_bands_from_wide,
+    minhash_wide,
+)
+from ml_training_data_pipeline_spark.operators.similarity import pq_codebooks
 from tests.conftest import SF_DIR
 
 
@@ -24,14 +33,6 @@ def _toy_corpus(spark):
 
 
 def test_admission_rejects_reingested_same_id(spark):
-    from ml_training_data_pipeline_spark.operators.dedup import (
-        doc_shingles,
-        lsh_admission_rejects,
-        lsh_bands_from_wide,
-        minhash_wide,
-    )
-    from pyspark.sql import functions as F
-
     docs = _toy_corpus(spark)
     sh = doc_shingles(docs).localCheckpoint()
     bands = lsh_bands_from_wide(minhash_wide(sh, num_hashes=8), rows_per_band=2)
@@ -52,9 +53,6 @@ def test_admission_rejects_reingested_same_id(spark):
 
 
 def test_pq_codebook_fit_trains_on_bounded_sample(spark):
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.similarity import pq_codebooks
-
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
     train_n = max(8, n // 4)  # strictly smaller than the corpus
@@ -70,9 +68,6 @@ def test_pq_codebook_fit_trains_on_bounded_sample(spark):
         emb.repartition(7), m=16, ksub=8, seed=123, train_n=train_n
     )
     assert books == books2
-
-
-# --- late round-10 additions: cur16 / n20 / s20 --------------------------------
 
 
 def test_cur16_leakage_invariants(spark):

@@ -13,40 +13,35 @@ comparator can no longer wave the failure class through.
 
 from __future__ import annotations
 
-import importlib.util
-import math
-import os
 import sys
 from decimal import ROUND_HALF_UP, Decimal
+from fractions import Fraction
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as hst
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from tests.conftest import SF_DIR, SF_DIR_T2
-
-
-def _load_driver_sweep():
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "scripts", "driver_sweep.py")
-    spec = importlib.util.spec_from_file_location("driver_sweep", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-# --- VERDICT r11 #3: the comparator must FAIL a -0.0 vs 0.0 frame ------------
+import bench
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.similarity import srp_buckets, with_norm
+from ml_training_data_pipeline_spark.plans.queries_similarity import SRP_PLANES
+from ml_training_data_pipeline_spark.plans.queries_stream import (
+    _semantic_admission_counts,
+)
+from tests.conftest import SF_DIR, SF_DIR_T2, assert_no_negative_zero, load_script
 
 
 def test_sweep_compare_fails_on_signed_zero():
-    ds = _load_driver_sweep()
+    ds = load_script("driver_sweep")
     a = pd.DataFrame({"k": [1, 2], "v": [0.0, 1.5]})
     b = pd.DataFrame({"k": [1, 2], "v": [-0.0, 1.5]})
     out = ds.compare(a, b)
     assert out["rows_match"] and out["schema_match"]
     assert not out["hash_match"], (
         "comparator treated -0.0 == 0.0 — the exact failure class the "
-        "driver's byte-level value-hash catches (round-10 ep9)"
+        "driver's byte-level value-hash catches (ep9's signed zero)"
     )
 
 
@@ -54,14 +49,14 @@ def test_sweep_compare_order_insensitive_on_signed_zero_ties():
     # identical MULTISETS must match even when -0.0/0.0 ties arrive in
     # different row orders (a numeric sort key treats them equal and
     # preserves input order, which a positional compare would flag)
-    ds = _load_driver_sweep()
+    ds = load_script("driver_sweep")
     a = pd.DataFrame({"k": [1, 1], "v": [-0.0, 0.0]})
     b = pd.DataFrame({"k": [1, 1], "v": [0.0, -0.0]})
     assert ds.compare(a, b)["hash_match"]
 
 
 def test_sweep_compare_passes_on_identical_and_nan():
-    ds = _load_driver_sweep()
+    ds = load_script("driver_sweep")
     a = pd.DataFrame({"k": [1, 2, 3], "v": [0.0, float("nan"), -2.25]})
     b = pd.DataFrame({"k": [1, 2, 3], "v": [0.0, float("nan"), -2.25]})
     assert ds.compare(a, b)["hash_match"]
@@ -71,25 +66,11 @@ def test_sweep_compare_passes_on_identical_and_nan():
     assert ds.compare(c, d)["hash_match"]
 
 
-# --- VERDICT r11 #1-2: ep9/mix7 emit no negative zero anywhere ---------------
-
-
-def _assert_no_negative_zero(pdf: pd.DataFrame, name: str) -> None:
-    for c in pdf.columns:
-        if pd.api.types.is_float_dtype(pdf[c]):
-            for i, x in enumerate(pdf[c]):
-                if x == 0.0 and not math.isnan(x):
-                    assert math.copysign(1.0, x) > 0, (
-                        f"{name}.{c}[{i}] is -0.0 — the integer-exact "
-                        "contract guarantees +0.0 for zero numerators"
-                    )
-
-
 def test_ep9_no_negative_zero(spark):
     for sf in (SF_DIR, SF_DIR_T2):
         pdf = entry_mod.queries()["ep9_mixture_roadmap"](spark, sf).toPandas()
         assert len(pdf) > 0
-        _assert_no_negative_zero(pdf, "ep9")
+        assert_no_negative_zero(pdf, "ep9")
         # the roadmap identity: achieved shares sum to 1 and each
         # shortfall is target − achieved (checked against the exact
         # integer reconstruction below at full double precision)
@@ -100,18 +81,15 @@ def test_mix7_no_negative_zero(spark):
     for sf in (SF_DIR, SF_DIR_T2):
         pdf = entry_mod.queries()["mix7_target_mixture_weights"](spark, sf).toPandas()
         assert len(pdf) > 0
-        _assert_no_negative_zero(pdf, "mix7")
+        assert_no_negative_zero(pdf, "mix7")
         # downsample-only: every weight is in (0, 1]
         assert ((pdf["weight"] > 0) & (pdf["weight"] <= 1.0)).all()
-
-
-# --- round-12 breadth: ep10 release composite, cur17 Bloom sizing sweep ------
 
 
 def test_ep10_release_roadmap_invariants(spark):
     pdf = entry_mod.queries()["ep10_release_roadmap"](spark, SF_DIR).toPandas()
     assert len(pdf) > 0
-    _assert_no_negative_zero(pdf, "ep10")
+    assert_no_negative_zero(pdf, "ep10")
     # gates only ever DROP: survivors never exceed the split, and the
     # two drop flags can overlap, so survivors >= docs - both flags
     assert (pdf["n_survivors"] <= pdf["n_train_docs"]).all()
@@ -188,17 +166,6 @@ def test_st15_microbatch_invariance(spark):
     """st15's admission depends only on (batch row, static index), so any
     micro-batch partitioning of the feed must sum to the same counts —
     the st13 invariance property, embedding-side."""
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.similarity import (
-        srp_buckets,
-        with_norm,
-    )
-    from ml_training_data_pipeline_spark.plans.queries_similarity import SRP_PLANES
-    from ml_training_data_pipeline_spark.plans.queries_stream import (
-        _semantic_admission_counts,
-    )
 
     corpus = load_table(spark, SF_DIR, "embeddings").where(F.col("vec_id") % 2 == 0)
     corpus_b = (
@@ -231,7 +198,7 @@ def test_st15_microbatch_invariance(spark):
 def test_mix9_waterfill_invariants(spark):
     pdf = entry_mod.queries()["mix9_budget_waterfill"](spark, SF_DIR).toPandas()
     assert len(pdf) > 0
-    _assert_no_negative_zero(pdf, "mix9")
+    assert_no_negative_zero(pdf, "mix9")
     b = int(pdf["budget_tokens"].iloc[0])
     assert (pdf["budget_tokens"] == b).all()
     # feasibility: every allocation within its cap (tolerate round(6))
@@ -255,10 +222,6 @@ def test_waterfill_algebra_properties(seed):
     (b) the resulting allocation is feasible (≤ cap each), exhausts B
     exactly when any source is uncapped, and every capped cap sits at or
     below the uncapped level (the defining water-filling property)."""
-    from fractions import Fraction
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as hst
 
     @settings(max_examples=300, deadline=None)
     @given(
@@ -303,7 +266,7 @@ def test_n21_multiprobe_dominance(spark):
 def test_ep11_release_diff_ledger_closes(spark):
     pdf = entry_mod.queries()["ep11_release_diff_card"](spark, SF_DIR).toPandas()
     assert len(pdf) > 0
-    _assert_no_negative_zero(pdf, "ep11")
+    assert_no_negative_zero(pdf, "ep11")
     # the ledger must close: statuses partition version B, removals
     # reconcile both doc and token columns, and the shifts sum to ~0
     assert (pdf["n_changed"] + pdf["n_unchanged"] == pdf["docs_v2"]).all()
@@ -314,40 +277,8 @@ def test_ep11_release_diff_ledger_closes(spark):
     assert abs(pdf["share_shift"].sum()) < 2e-3  # round(6) per row
 
 
-# --- rotation-ritual integrity: PRIORITY must BE the registry ----------------
-
-
-def test_priority_is_exactly_the_registry():
-    """The driver checks the first 50 names of queries(), whose order is
-    PRIORITY — and _load_all has a silent safety net that appends any
-    registered name PRIORITY forgot. A rotation typo would therefore not
-    fail anything; it would quietly demote a query past the 50-cut. Pin
-    exact set equality and no duplicates so rotation edits stay honest."""
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
-    pri = list(registry.PRIORITY)
-    assert len(pri) == len(set(pri)), "duplicate name in PRIORITY"
-    missing = set(registry.QUERIES) - set(pri)
-    stale = set(pri) - set(registry.QUERIES)
-    assert not missing, f"registered but absent from PRIORITY: {sorted(missing)}"
-    assert not stale, f"in PRIORITY but not registered: {sorted(stale)}"
-    # and the iteration order the driver sees IS the PRIORITY order
-    assert list(registry.QUERIES) == pri
-
-
-# --- VERDICT r11 #6: bench.py records contention-insensitive CPU seconds -----
-
-
 @pytest.mark.skipif(sys.platform != "linux", reason="proc_tree_cpu_s is /proc-based")
 def test_proc_tree_cpu_seconds_positive_and_monotone():
-    import importlib.util as ilu
-
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "bench.py")
-    spec = ilu.spec_from_file_location("bench_mod", path)
-    bench = ilu.module_from_spec(spec)
-    spec.loader.exec_module(bench)
     c0 = bench.proc_tree_cpu_s()
     assert c0 > 0  # this pytest process has burned CPU already
     x = 0

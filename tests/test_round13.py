@@ -16,33 +16,29 @@ cluster.
 
 from __future__ import annotations
 
-import importlib.util
+import glob
+import json
 import os
-import sys
+import re
 
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from tests.conftest import SF_DIR
-
-
-def _load_script(name: str):
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        f"{name}.py",
-    )
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-# --- ledger_counts: the counting rules themselves -----------------------------
+from ml_training_data_pipeline_spark.functions.text import tokenize
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.refine import RefineConfig, refine
+from ml_training_data_pipeline_spark.operators.tfidf import tfidf_long
+from ml_training_data_pipeline_spark.operators.vectorize import (
+    fit_tfidf_vectorizer,
+    tokens_frame,
+    vectorize,
+)
+from tests.conftest import REPO, SF_DIR, fill, load_script, plan_str, write_documents
 
 
 def test_ledger_counts_shuffle_vs_broadcast_vs_scan():
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     plan = """AdaptiveSparkPlan isFinalPlan=false
 +- SortMergeJoin [k#1], [k#2], Inner
    :- Sort [k#1 ASC NULLS FIRST]
@@ -66,7 +62,7 @@ def test_ledger_counts_shuffle_vs_broadcast_vs_scan():
 
 
 def test_ledger_counts_single_partition_and_bnlj():
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     plan = (
         "Exchange SinglePartition, ENSURE_REQUIREMENTS\n"
         "+- BroadcastNestedLoopJoin BuildRight, Cross\n"
@@ -76,72 +72,43 @@ def test_ledger_counts_single_partition_and_bnlj():
     assert (c["exchanges"], c["bnlj"], c["aqe_shuffle_reads"]) == (2, 1, 0)
 
 
-# --- the headline-10 plan-shape pin (the round-over-round diff anchor) --------
+# The round-over-round diff anchor: ten headline queries whose static
+# plan shape must equal what the newest committed ledger records. A
+# difference is not automatically a bug, but it IS a plan change, and it
+# is recorded by committing a new PLANS_rN.json (scripts/plan_audit.py
+# --ledger at sf0.001), not by editing this test.
+HEADLINE = (
+    "h1_lineitem_pricing_summary", "h2_revenue_per_nation", "v1_tfidf_ngram",
+    "v4_vocab_top2000", "c1_cluster_term_scores", "d4_minhash_dedup",
+    "n1_ann_brute_topk", "w2_sessionization", "x2_quality_scores",
+    "m2_kmeans_cluster_sizes",
+)
 
-# (exchanges, broadcasts, bnlj, scans) on the static executedPlan at
-# sf0.001, measured at the round-13 baseline. A diff here is not
-# automatically a bug — but it IS a plan change that must be explained
-# in the commit that causes it (new shuffle? lost broadcast? extra
-# scan?), exactly the drift the r7-r11 h2 re-litigation lacked.
-HEADLINE_PLAN_SHAPE = {
-    # h1/h2 changed in round 16: io/sources._parallelize_scan round-robin
-    # repartitions single-row-group scans whose row count clears the
-    # 512-rows/task floor — at this pin's sf0.001 that adds one
-    # Repartition exchange per qualifying scan (h1: lineitem; h2:
-    # lineitem + orders + customer; documents/embeddings stay below the
-    # floor so v1/x2/m2 keep their shapes). h1 was (1,0,0,1), h2
-    # (1,3,0,4). At >=row-group-per-core scale the gate never fires and
-    # the old shapes return.
-    "h1_lineitem_pricing_summary": (2, 0, 0, 1),
-    "h2_revenue_per_nation": (3, 3, 0, 4),
-    # v1/c1 changed in round 14: tfidf_long checkpoints its doc-term
-    # counts (the round-7 "wash" verdict was an artifact of the pruned
-    # count() bench action; honest measurement reads 2x — see
-    # operators/tfidf.py), so the tokenize scan moved into the
-    # pre-checkpoint segment (v1 was (3,1,0,2), c1 (5,2,0,3))
-    "v1_tfidf_ngram": (1, 1, 0, 0),
-    "v4_vocab_top2000": (2, 0, 0, 1),
-    "c1_cluster_term_scores": (3, 2, 0, 1),
-    # d4 changed in round 16: the LSH candidate-pair list is materialized
-    # once (operators/dedup.minhash_dedup), so the three downstream plan
-    # references no longer re-derive the minhash→bands→self-join subtree
-    # (was (28, 12, 0, 0); checkpointed index/pairs: scans upstream).
-    # Changed again in round 17: jaccard_pairs materializes its
-    # candidate-scoped shingle table, so the sizes aggregate and both
-    # intersection legs read that instead of re-running the semi-join
-    # (was (10, 3, 0, 0); re-measured with scripts/plan_audit.py).
-    "d4_minhash_dedup": (4, 3, 0, 0),
-    "n1_ann_brute_topk": (1, 1, 1, 2),  # the bnlj is the broadcast probe batch
-    "w2_sessionization": (1, 0, 0, 1),
-    "x2_quality_scores": (0, 0, 0, 1),
-    "m2_kmeans_cluster_sizes": (1, 0, 0, 1),
-}
+
+SHAPE = ("exchanges", "broadcasts", "bnlj", "scans")
+
+
+def newest_ledger() -> dict:
+    paths = glob.glob(os.path.join(REPO, "PLANS_r*.json"))
+    return json.load(open(max(paths, key=lambda p: int(re.search(r"PLANS_r(\d+)", p).group(1)))))
 
 
 def test_headline_plan_shapes_pinned(spark):
-    pa = _load_script("plan_audit")
-    qs = entry_mod.queries()
-    got = {}
-    for name in HEADLINE_PLAN_SHAPE:
+    pa = load_script("plan_audit")
+    ledger = newest_ledger()["queries"]
+    got, want = {}, {}
+    for name in HEADLINE:
         # cold cache per query, exactly as plan_audit.main measures: an
-        # earlier test's .cache() (the round-3 flagship caches its token
+        # earlier test's .cache() (the EP3 flagship caches its token
         # frame) substitutes InMemoryRelations into matching subtrees and
         # the plan string prints the cached subtree under every
         # InMemoryTableScan — c1 read (7,3,0,5) instead of (5,2,0,3)
-        # whenever test ordering put round3 first (round 14 catch)
+        # whenever test ordering put the flagship first
         spark.catalog.clearCache()
-        df = qs[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        c = pa.ledger_counts(plan)
-        got[name] = (c["exchanges"], c["broadcasts"], c["bnlj"], c["scans"])
-    assert got == HEADLINE_PLAN_SHAPE, {
-        k: (got[k], HEADLINE_PLAN_SHAPE[k])
-        for k in got
-        if got[k] != HEADLINE_PLAN_SHAPE[k]
-    }
-
-
-# --- n22: probe-budget sweep invariants ---------------------------------------
+        c = pa.ledger_counts(plan_str(entry_mod.queries()[name](spark, SF_DIR)))
+        got[name] = tuple(c[k] for k in SHAPE)
+        want[name] = tuple(ledger[name][k] for k in SHAPE)
+    assert got == want, {k: (got[k], want[k]) for k in got if got[k] != want[k]}
 
 
 def test_n22_probe_budget_monotone(spark):
@@ -161,9 +128,6 @@ def test_n22_probe_budget_monotone(spark):
     assert (
         (pdf["mean_cand"] - pdf["n_cand_total"] / pdf["n_queries"]).abs() < 1e-6
     ).all()
-
-
-# --- round-12 ADVICE closures --------------------------------------------------
 
 
 def test_bench_total_cpu_poisoned_by_sentinel():
@@ -198,7 +162,14 @@ def test_cur17_always_emits_all_three_configs(spark):
     assert (pdf["n_bloom_flagged"] >= pdf["n_exact_flagged"]).all()
 
 
-# --- VERDICT r12 #5: full refine() determinism under reconfiguration ----------
+CORPUS = [
+    (1, "energy battery power electric charging", 1),
+    (2, "energy storage renewable power battery", 1),
+    (3, "finance investment risk banking money", 2),
+    (4, "stock markets economic growth inflation", 2),
+    (5, "healthcare hospital treatment diagnosis", 2),
+    (6, "medicine health doctor therapy", 2),
+]
 
 
 def test_refine_end_to_end_parity_across_partitionings(spark):
@@ -206,25 +177,6 @@ def test_refine_end_to_end_parity_across_partitionings(spark):
     discipline (same answer at shuffle partitions 3 and 32) applied to
     the full iterative composite: split → renumber → merge → renumber
     must produce IDENTICAL assignments regardless of physical layout."""
-    from ml_training_data_pipeline_spark.operators.refine import (
-        RefineConfig,
-        refine,
-    )
-    from ml_training_data_pipeline_spark.operators.tfidf import tfidf_long
-    from ml_training_data_pipeline_spark.operators.vectorize import (
-        fit_tfidf_vectorizer,
-        tokens_frame,
-        vectorize,
-    )
-
-    corpus_rows = [
-        (1, "energy battery power electric charging", 1),
-        (2, "energy storage renewable power battery", 1),
-        (3, "finance investment risk banking money", 2),
-        (4, "stock markets economic growth inflation", 2),
-        (5, "healthcare hospital treatment diagnosis", 2),
-        (6, "medicine health doctor therapy", 2),
-    ]
     cfg = RefineConfig(
         coherence_threshold=0.9,  # force splits so the loop actually works
         k_range=(2,),
@@ -240,7 +192,7 @@ def test_refine_end_to_end_parity_across_partitionings(spark):
         for parts in (3, 32):
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
             corpus = spark.createDataFrame(
-                corpus_rows, schema="doc_id long, text string, cluster_id int"
+                CORPUS, schema="doc_id long, text string, cluster_id int"
             ).repartition(parts)
             tokens = tokens_frame(corpus, stopwords=None)
             model = fit_tfidf_vectorizer(tokens, vocab_size=100)
@@ -261,9 +213,6 @@ def test_refine_end_to_end_parity_across_partitionings(spark):
     assert results[3] == results[32], results
 
 
-# --- d22: maximal exact-substring spans ----------------------------------------
-
-
 def test_d22_span_algebra_consistent_with_d15(spark):
     """Every maximal island is a union of 8-token windows, so each span
     is >= 8 tokens; and a doc has a dup SPAN iff d15 sees a dup WINDOW —
@@ -280,9 +229,6 @@ def test_d22_span_algebra_consistent_with_d15(spark):
     assert set(hit["doc_id"]) == set(d15[d15["n_dup_windows"] > 0]["doc_id"])
 
 
-# --- ep12: the release diff card must agree with ep7 and ep11 ------------------
-
-
 def test_ep12_agrees_with_ep7_card_and_ep11_ledger(spark):
     qs = entry_mod.queries()
     diff = qs["ep12_data_card_diff"](spark, SF_DIR).toPandas().set_index("metric")
@@ -296,9 +242,6 @@ def test_ep12_agrees_with_ep7_card_and_ep11_ledger(spark):
     assert diff.loc["n_tokens", "delta"] == -float(ep11["tokens_removed"].sum())
     # delta column is exactly v2 - v1 (rounded), and fully populated
     assert not diff["delta"].isna().any()
-
-
-# --- d23: cascade ledger closure ------------------------------------------------
 
 
 def test_d23_cascade_ledger_closes_against_d1(spark):
@@ -319,9 +262,6 @@ def test_d23_cascade_ledger_closes_against_d1(spark):
     ).all()
 
 
-# --- the quadratic face as a COUNTED identity, not a timing ---------------------
-
-
 def test_lsh_pair_count_quadratic_vs_cascade_linear(spark, tmp_path_factory):
     """The scale-probe's 29-91x CPU readings pinned as exact combinatorics:
     replicate the corpus R=3x verbatim (replica 0 keeps original keys, so
@@ -336,15 +276,12 @@ def test_lsh_pair_count_quadratic_vs_cascade_linear(spark, tmp_path_factory):
     EXACTLY the base corpus's. No timing, no noise, just counting."""
     base = SF_DIR
     out = str(tmp_path_factory.mktemp("rep3"))
-    rep3 = _load_script("make_sf1")
+    rep3 = load_script("make_sf1")
     rep3.generate(base, out, reps=3, quiet=True)
 
     qs = entry_mod.queries()
     pairs_base = qs["d3_lsh_candidate_pairs"](spark, base).count()
     pairs_full = qs["d3_lsh_candidate_pairs"](spark, out).count()
-    from ml_training_data_pipeline_spark.functions.text import tokenize
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from pyspark.sql import functions as F
 
     n_shingled = (
         load_table(spark, base, "documents")
@@ -370,9 +307,6 @@ def test_lsh_pair_count_quadratic_vs_cascade_linear(spark, tmp_path_factory):
     assert (d23_full["n_survivors"] == d23_base["n_survivors"]).all()
 
 
-# --- st16: the cascade gate admits exactly st13's set ----------------------------
-
-
 def test_st16_cascade_admits_same_set_as_st13(spark):
     """An exact corpus twin shares every band signature and verifies at
     jaccard 1.0, so st13 rejects it too — the cascade only changes WHERE
@@ -393,25 +327,6 @@ def test_st16_cascade_admits_same_set_as_st13(spark):
     assert s["n_rejected"].sum() > 0, "fixture corpus should have near-dup twins"
 
 
-# --- d22 planted ground truth: a shared span of length L reconstructs exactly ---
-
-
-def _write_documents(tmpdir: str, texts: list[str]) -> str:
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(1, len(texts) + 1),
-            "text": texts,
-            "lang": ["en"] * len(texts),
-            "source": ["planted"] * len(texts),
-            "n_chars": [len(t) for t in texts],
-        }
-    )
-    pdf.to_parquet(os.path.join(tmpdir, "documents.parquet"), index=False)
-    return tmpdir
-
-
 @pytest.mark.parametrize("span_len", [8, 15, 40])
 def test_d22_planted_span_reconstructs_exactly(spark, tmp_path_factory, span_len):
     """Lee et al.'s exact-substring contract, verified against a planted
@@ -419,14 +334,10 @@ def test_d22_planted_span_reconstructs_exactly(spark, tmp_path_factory, span_len
     otherwise doc-unique filler, so d22 must report exactly one maximal
     span of span_len duplicated tokens in each doc — the L-7 consecutive
     duplicated windows reconstruct L, not L±1."""
-    shared = " ".join(f"shared{i:03d}" for i in range(span_len))
-    a = " ".join(f"aupre{i:03d}" for i in range(10)) + " " + shared + " " + " ".join(
-        f"aupost{i:03d}" for i in range(10)
-    )
-    b = " ".join(f"bupre{i:03d}" for i in range(7)) + " " + shared + " " + " ".join(
-        f"bupost{i:03d}" for i in range(12)
-    )
-    d = _write_documents(str(tmp_path_factory.mktemp("planted")), [a, b])
+    shared = fill("shared", span_len)
+    a = fill("aupre", 10) + " " + shared + " " + fill("aupost", 10)
+    b = fill("bupre", 7) + " " + shared + " " + fill("bupost", 12)
+    d = write_documents(str(tmp_path_factory.mktemp("planted")), [a, b])
     pdf = (
         entry_mod.queries()["d22_exact_substring_spans"](spark, d)
         .toPandas()
@@ -440,12 +351,11 @@ def test_d22_planted_span_reconstructs_exactly(spark, tmp_path_factory, span_len
 
 
 def test_d22_two_disjoint_planted_spans(spark, tmp_path_factory):
-    s1 = " ".join(f"one{i:03d}" for i in range(9))
-    s2 = " ".join(f"two{i:03d}" for i in range(12))
-    filler = lambda p, n: " ".join(f"{p}{i:03d}" for i in range(n))  # noqa: E731
-    a = " ".join([filler("ax", 9), s1, filler("ay", 9), s2, filler("az", 9)])
-    b = " ".join([filler("bx", 5), s1, filler("by", 11), s2, filler("bz", 6)])
-    d = _write_documents(str(tmp_path_factory.mktemp("planted2")), [a, b])
+    s1 = fill("one", 9)
+    s2 = fill("two", 12)
+    a = " ".join([fill("ax", 9), s1, fill("ay", 9), s2, fill("az", 9)])
+    b = " ".join([fill("bx", 5), s1, fill("by", 11), s2, fill("bz", 6)])
+    d = write_documents(str(tmp_path_factory.mktemp("planted2")), [a, b])
     pdf = (
         entry_mod.queries()["d22_exact_substring_spans"](spark, d)
         .toPandas()
@@ -457,14 +367,11 @@ def test_d22_two_disjoint_planted_spans(spark, tmp_path_factory):
     assert (pdf["dup_tokens"] == 21).all()
 
 
-# --- d23 / st16 planted ground truth: stage attribution is exact ---------------
-
-
 def test_d23_cascade_planted_attribution(spark, tmp_path_factory):
-    base = " ".join(f"alpha{i:03d}" for i in range(20))
-    near = " ".join(f"alpha{i:03d}" for i in range(19)) + " omega999"
-    other = " ".join(f"beta{i:03d}" for i in range(20))
-    d = _write_documents(
+    base = fill("alpha", 20)
+    near = fill("alpha", 19) + " omega999"
+    other = fill("beta", 20)
+    d = write_documents(
         str(tmp_path_factory.mktemp("cascade")), [base, base, near, other]
     )
     pdf = entry_mod.queries()["d23_dedup_cascade"](spark, d).toPandas()
@@ -478,14 +385,14 @@ def test_d23_cascade_planted_attribution(spark, tmp_path_factory):
 
 
 def test_st16_cascade_planted_attribution(spark, tmp_path_factory):
-    x = " ".join(f"gamma{i:03d}" for i in range(20))
-    y = " ".join(f"delta{i:03d}" for i in range(20))
-    y_near = " ".join(f"delta{i:03d}" for i in range(19)) + " omega999"
-    z = " ".join(f"edge{i:03d}" for i in range(20))
+    x = fill("gamma", 20)
+    y = fill("delta", 20)
+    y_near = fill("delta", 19) + " omega999"
+    z = fill("edge", 20)
     # doc_id parity is the stream/corpus split: evens {2: x, 4: y} are the
     # standing corpus; odds arrive — 1 = x verbatim (exact reject),
     # 3 = y-near (near reject), 5 = novel (admitted)
-    d = _write_documents(
+    d = write_documents(
         str(tmp_path_factory.mktemp("stcascade")), [x, x, y_near, y, z]
     )
     pdf = entry_mod.queries()["st16_stream_cascade_admission"](spark, d).toPandas()
@@ -493,9 +400,6 @@ def test_st16_cascade_planted_attribution(spark, tmp_path_factory):
     r = pdf.iloc[0]
     assert (r["n_new"], r["n_exact_rejected"], r["n_near_rejected"], r["n_admitted"]) \
         == (3, 1, 1, 1), dict(r)
-
-
-# --- ep13: the cascade-then-budget composite closes against both parents -------
 
 
 def test_ep13_budget_over_cascade_survivors(spark):

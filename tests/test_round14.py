@@ -13,62 +13,36 @@ ledger (and the expected scrubbed BYTES, via md5) is computable by hand
 from __future__ import annotations
 
 import hashlib
-import importlib.util
+import json
 import os
+import subprocess
+import sys
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from tests.conftest import SF_DIR
+from ml_training_data_pipeline_spark.functions.analysis import quality_score
+from tests.conftest import SF_DIR, fill, load_script, plan_str, write_documents
 
 
-def _load_script(name: str):
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        f"{name}.py",
-    )
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def _write_documents(tmpdir: str, texts: list[str]) -> str:
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(1, len(texts) + 1),
-            "text": texts,
-            "lang": ["en"] * len(texts),
-            "source": ["planted"] * len(texts),
-            "n_chars": [len(t) for t in texts],
-        }
-    )
-    pdf.to_parquet(os.path.join(tmpdir, "documents.parquet"), index=False)
-    return tmpdir
-
-
-def _md5(s: str) -> str:
+def md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-# --- d24: the scrub is byte-exact against a planted truth -----------------------
 
 
 def test_d24_planted_span_scrubbed_byte_exact(spark, tmp_path_factory):
     """Two docs share one 12-token span; the keeper (min doc_id) must come
     through untouched and the other doc must lose EXACTLY the span — the
     md5 fingerprints prove the reassembled bytes, not just the counts."""
-    span = " ".join(f"shared{i:03d}" for i in range(12))
-    a_pre = " ".join(f"apre{i:03d}" for i in range(10))
-    a_post = " ".join(f"apost{i:03d}" for i in range(10))
-    b_pre = " ".join(f"bpre{i:03d}" for i in range(7))
-    b_post = " ".join(f"bpost{i:03d}" for i in range(12))
+    span = fill("shared", 12)
+    a_pre = fill("apre", 10)
+    a_post = fill("apost", 10)
+    b_pre = fill("bpre", 7)
+    b_post = fill("bpost", 12)
     a = f"{a_pre} {span} {a_post}"
     b = f"{b_pre} {span} {b_post}"
-    d = _write_documents(str(tmp_path_factory.mktemp("scrub")), [a, b])
+    d = write_documents(str(tmp_path_factory.mktemp("scrub")), [a, b])
     pdf = (
         entry_mod.queries()["d24_span_scrub"](spark, d)
         .toPandas()
@@ -79,22 +53,21 @@ def test_d24_planted_span_scrubbed_byte_exact(spark, tmp_path_factory):
     # keeper: nothing removed, fingerprint of the ORIGINAL token stream
     assert pdf.loc[1, "tokens_removed"] == 0
     assert pdf.loc[1, "tokens_kept"] == 32
-    assert pdf.loc[1, "scrubbed_fp"] == _md5(a)
+    assert pdf.loc[1, "scrubbed_fp"] == md5(a)
     # non-keeper: exactly the span excised, byte-exact reassembly
     assert pdf.loc[2, "tokens_removed"] == 12
     assert pdf.loc[2, "tokens_kept"] == 19
-    assert pdf.loc[2, "scrubbed_fp"] == _md5(f"{b_pre} {b_post}")
+    assert pdf.loc[2, "scrubbed_fp"] == md5(f"{b_pre} {b_post}")
 
 
 def test_d24_three_way_span_keeps_first_only(spark, tmp_path_factory):
-    span = " ".join(f"common{i:03d}" for i in range(9))
-    fill = lambda p, n: " ".join(f"{p}{i:03d}" for i in range(n))  # noqa: E731
+    span = fill("common", 9)
     docs = [
         f"{fill('x', 8)} {span}",
         f"{fill('y', 8)} {span}",
         f"{span} {fill('z', 8)}",
     ]
-    d = _write_documents(str(tmp_path_factory.mktemp("scrub3")), docs)
+    d = write_documents(str(tmp_path_factory.mktemp("scrub3")), docs)
     pdf = (
         entry_mod.queries()["d24_span_scrub"](spark, d)
         .toPandas()
@@ -102,21 +75,21 @@ def test_d24_three_way_span_keeps_first_only(spark, tmp_path_factory):
         .sort_index()
     )
     assert pdf["tokens_removed"].tolist() == [0, 9, 9]
-    assert pdf.loc[2, "scrubbed_fp"] == _md5(fill("y", 8))
-    assert pdf.loc[3, "scrubbed_fp"] == _md5(fill("z", 8))
+    assert pdf.loc[2, "scrubbed_fp"] == md5(fill("y", 8))
+    assert pdf.loc[3, "scrubbed_fp"] == md5(fill("z", 8))
 
 
 def test_d24_intra_doc_repeat_is_kept(spark, tmp_path_factory):
     """A span repeated WITHIN one doc is x9's domain (repetition quality),
     not cross-doc duplication — the scrub must keep it (the duplicated-
     window rule counts DISTINCT docs, exactly as d22 does)."""
-    run = " ".join(f"loop{i:03d}" for i in range(8))
+    run = fill("loop", 8)
     a = f"{run} {run}"
-    d = _write_documents(str(tmp_path_factory.mktemp("intra")), [a])
+    d = write_documents(str(tmp_path_factory.mktemp("intra")), [a])
     pdf = entry_mod.queries()["d24_span_scrub"](spark, d).toPandas()
     assert len(pdf) == 1
     assert pdf.iloc[0]["tokens_removed"] == 0
-    assert pdf.iloc[0]["scrubbed_fp"] == _md5(a)
+    assert pdf.iloc[0]["scrubbed_fp"] == md5(a)
 
 
 def test_d24_consistent_with_d22_report(spark):
@@ -138,9 +111,6 @@ def test_d24_consistent_with_d22_report(spark):
     assert j["tokens_removed"].sum() < j["dup_tokens"].sum()
 
 
-# --- d25: the quality policy picks the better copy, not the earlier id ----------
-
-
 def _planted_quality_corpus() -> tuple[list[str], int]:
     """doc1 = near-dup of doc2 with heavy punctuation noise (lower
     quality, EARLIER id), doc2 = the clean twin, doc3 = unrelated and
@@ -160,7 +130,7 @@ def _planted_quality_corpus() -> tuple[list[str], int]:
 
 def test_d25_planted_higher_quality_twin_survives(spark, tmp_path_factory):
     texts, survivor = _planted_quality_corpus()
-    d = _write_documents(str(tmp_path_factory.mktemp("qsurv")), texts)
+    d = write_documents(str(tmp_path_factory.mktemp("qsurv")), texts)
     pdf = entry_mod.queries()["d25_cascade_quality_survivors"](spark, d).toPandas()
     assert len(pdf) == 1
     r = pdf.iloc[0]
@@ -171,10 +141,6 @@ def test_d25_planted_higher_quality_twin_survives(spark, tmp_path_factory):
     # best_survivor_quality must equal doc2's engine quality score, which
     # is strictly above the noisy earlier-id twin's (min-doc-id policy
     # would have kept doc1 and read the lower value here)
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.functions.analysis import quality_score
-
     q = {
         row.doc_id: row.q
         for row in spark.createDataFrame(
@@ -188,7 +154,7 @@ def test_d25_planted_higher_quality_twin_survives(spark, tmp_path_factory):
 
 
 def test_d25_exact_group_keeps_clean_copy(spark, tmp_path_factory):
-    """The stage-1 policy pin (the review finding that motivated it): the
+    """The stage-1 policy pin: the
     exact fingerprint is token-normalized but punct_ratio reads RAW
     text, so a punctuation-noisy EARLIER-id copy and a clean later-id
     copy land in ONE exact group with different qualities — the group
@@ -196,15 +162,12 @@ def test_d25_exact_group_keeps_clean_copy(spark, tmp_path_factory):
     words = " ".join(f"alpha{i:02d} the and for are" for i in range(4))
     noisy = words + " !!!???!!!???!!!???!!!???!!!???"  # same TOKEN stream
     other = " ".join(f"gamma{i:02d}" for i in range(10))
-    d = _write_documents(str(tmp_path_factory.mktemp("exq")), [noisy, words, other])
+    d = write_documents(str(tmp_path_factory.mktemp("exq")), [noisy, words, other])
     pdf = entry_mod.queries()["d25_cascade_quality_survivors"](spark, d).toPandas()
     assert len(pdf) == 1
     r = pdf.iloc[0]
     assert (r["n_docs"], r["n_exact_dropped"], r["n_near_dropped"], r["n_survivors"]) \
         == (3, 1, 0, 2), dict(r)
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.functions.analysis import quality_score
 
     qvals = (
         spark.createDataFrame([(1, noisy), (2, words)], "doc_id long, text string")
@@ -244,9 +207,6 @@ def test_d25_ledger_closes_against_d23(spark):
     ).all()
 
 
-# --- ep14: the scrub-then-budget composite closes against both parents ----------
-
-
 def test_ep14_budget_over_scrubbed_mass(spark):
     qs = entry_mod.queries()
     ep14 = qs["ep14_scrub_budget_roadmap"](spark, SF_DIR).toPandas()
@@ -273,27 +233,16 @@ def test_ep14_budget_over_scrubbed_mass(spark):
 def test_ep14_planted_scrub_shifts_the_mixture(spark, tmp_path_factory):
     """Two sources, equal raw mass; source A's second doc is a verbatim
     span-copy of its first, so the scrub removes that mass from A only
-    — post-scrub, A's cap must shrink below B's while raw masses tie.
-    (Sources are constant within the planted table, so plant via two
-    writes... simpler: one source column crafted per doc.)"""
-    import pandas as pd
+    — post-scrub, A's cap must shrink below B's while raw masses tie."""
 
-    span = " ".join(f"dup{i:03d}" for i in range(16))
+    span = fill("dup", 16)
     a1 = span
     a2 = span  # verbatim: every window duplicated, non-keeper loses all 16
-    b1 = " ".join(f"bone{i:03d}" for i in range(16))
-    b2 = " ".join(f"btwo{i:03d}" for i in range(16))
-    tmpdir = str(tmp_path_factory.mktemp("ep14"))
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "text": [a1, a2, b1, b2],
-            "lang": ["en"] * 4,
-            "source": ["srcA", "srcA", "srcB", "srcB"],
-            "n_chars": [len(t) for t in [a1, a2, b1, b2]],
-        }
+    b1 = fill("bone", 16)
+    b2 = fill("btwo", 16)
+    tmpdir = write_documents(
+        str(tmp_path_factory.mktemp("ep14")), [a1, a2, b1, b2], ["srcA", "srcA", "srcB", "srcB"]
     )
-    pdf.to_parquet(os.path.join(tmpdir, "documents.parquet"), index=False)
     out = (
         entry_mod.queries()["ep14_scrub_budget_roadmap"](spark, tmpdir)
         .toPandas()
@@ -308,27 +257,24 @@ def test_ep14_planted_scrub_shifts_the_mixture(spark, tmp_path_factory):
     assert out.loc["srcA", "cap_tokens"] == 64 and out.loc["srcB", "cap_tokens"] == 128
 
 
-# --- the ledger's checkpoint blind spot is closed (VERDICT r13 #4) ---------------
-
-
 def test_ckpt_recorder_surfaces_ep12_upstream_scans(spark):
     """PLANS_r13.json read ep12 as {exchanges: 0, scans: 0} because
     localCheckpoint truncates the visible plan — the recorder must
-    surface the two upstream aggregation scans VERDICT r13 flagged, and
+    surface the two upstream aggregation scans, and
     segments must not double count (d24's second checkpoint reads the
     first's RDD, so pre_scans stays 1)."""
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     qs = entry_mod.queries()
 
     def audit(name: str) -> dict:
         # Per-query cache clear, mirroring plan_audit.main: a hot cache from
         # earlier tests (m-family caches tf-idf/token subtrees that ep12/d24
         # plans contain) substitutes InMemoryRelations and shifts the pinned
-        # counters, making this test order-dependent (r14 ADVICE).
+        # counters, making this test order-dependent.
         spark.catalog.clearCache()
         with pa.CkptRecorder() as rec:
             df = qs[name](spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = plan_str(df)
         out = pa.ledger_counts(plan)
         out.update(rec.pre_counts())
         return out
@@ -354,13 +300,13 @@ def test_ledger_counts_are_cache_independent(spark):
     x=3/s=2 in isolation but x=6/s=4 after the m-family in the first
     r14 sweep. The audit clears the cache per query, so the fingerprint
     must be identical with and without a hot cache."""
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     qs = entry_mod.queries()
 
     def counts() -> dict:
         spark.catalog.clearCache()  # what plan_audit.main does per query
         df = qs["v3_tfidf_unigram"](spark, SF_DIR)
-        return pa.ledger_counts(df._jdf.queryExecution().executedPlan().toString())
+        return pa.ledger_counts(plan_str(df))
 
     cold = counts()
     qs["m2_kmeans_cluster_sizes"](spark, SF_DIR).count()  # caches tf-idf
@@ -370,7 +316,7 @@ def test_ledger_counts_are_cache_independent(spark):
 
 
 def test_ckpt_recorder_restores_method_even_on_error():
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     cls = pa.CkptRecorder._target()
     orig = cls.localCheckpoint
     with pytest.raises(RuntimeError):
@@ -380,14 +326,7 @@ def test_ckpt_recorder_restores_method_even_on_error():
     assert cls.localCheckpoint is orig
 
 
-# --- round-13 ADVICE closures ----------------------------------------------------
-
-
 def _run_plan_diff(tmpdir, old: dict, new: dict) -> tuple[int, str]:
-    import json
-    import subprocess
-    import sys
-
     po, pn = os.path.join(tmpdir, "old.json"), os.path.join(tmpdir, "new.json")
     with open(po, "w") as f:
         json.dump(old, f)
@@ -407,7 +346,7 @@ def _run_plan_diff(tmpdir, old: dict, new: dict) -> tuple[int, str]:
 def test_plan_diff_old_errors_do_not_fail_forever(tmp_path):
     """A clean new run diffed against a HISTORICAL ledger that captured a
     broken sweep must exit 0 (old errors are known history) — and a new
-    error must still gate (ADVICE r13)."""
+    error must still gate."""
     q = {"exchanges": 1, "broadcasts": 0, "bnlj": 0, "scans": 1,
          "aqe_shuffle_reads": 0}
     t = {k: v for k, v in q.items()}
@@ -473,13 +412,12 @@ def test_bench_emits_median_cpu_column():
 
 
 def test_make_sf1_rejects_aliasing_offset(tmp_path):
-    """ADVICE r13: a source key >= OFF would silently alias keys across
+    """A source key >= OFF would silently alias keys across
     replicas; generate() must refuse instead."""
-    import pandas as pd
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    ms = _load_script("make_sf1")
+    ms = load_script("make_sf1")
     # build a minimal source dir: every KEYED table with tiny rows, one
     # key pushed past OFF
     for t, keys in ms.KEYED.items():

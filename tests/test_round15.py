@@ -11,48 +11,25 @@ computable by hand.
 
 from __future__ import annotations
 
-import importlib.util
 import os
+import re
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from tests.conftest import SF_DIR
-
-
-def _load_script(name: str):
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        f"{name}.py",
-    )
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def _write_documents(tmpdir: str, texts: list[str], sources: list[str] | None = None) -> str:
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(1, len(texts) + 1),
-            "text": texts,
-            "lang": ["en"] * len(texts),
-            "source": sources or (["planted"] * len(texts)),
-            "n_chars": [len(t) for t in texts],
-        }
-    )
-    pdf.to_parquet(os.path.join(tmpdir, "documents.parquet"), index=False)
-    return tmpdir
-
-
-def _fill(prefix: str, n: int) -> str:
-    return " ".join(f"{prefix}{i:03d}" for i in range(n))
-
-
-# --- st17: arriving docs lose exactly their corpus-covered spans ------------------
+import bench
+from ml_training_data_pipeline_spark.functions.text import tokenize
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.dedup import (
+    span_window_stream,
+    span_windows,
+)
+from ml_training_data_pipeline_spark.operators.materialize import _strategy
+from ml_training_data_pipeline_spark.plans import oracle_fragments as of
+from ml_training_data_pipeline_spark.plans.oracle_fragments import materialized_ctes
+from tests.conftest import SF_DIR, fill, load_script, write_documents
 
 
 def test_st17_planted_repost_loses_corpus_covered_span(spark, tmp_path_factory):
@@ -61,12 +38,12 @@ def test_st17_planted_repost_loses_corpus_covered_span(spark, tmp_path_factory):
     already contains — it must lose EXACTLY those 12 tokens; doc3
     (arriving, novel) must lose nothing. The ledger is per-source over
     ALL arriving docs."""
-    span = " ".join(f"shared{i:03d}" for i in range(12))
-    arr_dup = f"{_fill('bpre', 7)} {span} {_fill('bpost', 12)}"  # doc1, 31 toks
-    corpus = f"{_fill('apre', 10)} {span} {_fill('apost', 10)}"  # doc2
-    arr_novel = _fill("novel", 20)  # doc3
-    corpus2 = _fill("corp", 15)  # doc4
-    d = _write_documents(
+    span = fill("shared", 12)
+    arr_dup = f"{fill('bpre', 7)} {span} {fill('bpost', 12)}"  # doc1, 31 toks
+    corpus = f"{fill('apre', 10)} {span} {fill('apost', 10)}"  # doc2
+    arr_novel = fill("novel", 20)  # doc3
+    corpus2 = fill("corp", 15)  # doc4
+    d = write_documents(
         str(tmp_path_factory.mktemp("st17")), [arr_dup, corpus, arr_novel, corpus2]
     )
     pdf = entry_mod.queries()["st17_stream_span_scrub"](spark, d).toPandas()
@@ -86,11 +63,11 @@ def test_st17_cross_arrival_duplication_is_not_scrubbed(spark, tmp_path_factory)
     static corpus inventory, so micro-batch boundaries cannot change the
     result (the st13/st16 discipline). Cross-arrival duplication is the
     batch scrub's job at the next compaction."""
-    span = " ".join(f"feeddup{i:03d}" for i in range(10))
-    arr_a = f"{_fill('fa', 8)} {span}"  # doc1 (odd)
-    corpus = _fill("standing", 25)  # doc2 (even)
-    arr_b = f"{span} {_fill('fb', 8)}"  # doc3 (odd)
-    d = _write_documents(str(tmp_path_factory.mktemp("st17x")), [arr_a, corpus, arr_b])
+    span = fill("feeddup", 10)
+    arr_a = f"{fill('fa', 8)} {span}"  # doc1 (odd)
+    corpus = fill("standing", 25)  # doc2 (even)
+    arr_b = f"{span} {fill('fb', 8)}"  # doc3 (odd)
+    d = write_documents(str(tmp_path_factory.mktemp("st17x")), [arr_a, corpus, arr_b])
     pdf = entry_mod.queries()["st17_stream_span_scrub"](spark, d).toPandas()
     assert len(pdf) == 1
     assert pdf.iloc[0]["tokens_removed"] == 0
@@ -102,9 +79,9 @@ def test_st17_short_arrivals_pass_through_in_ledger(spark, tmp_path_factory):
     cannot be scrubbed, but they ARE part of the arriving universe — the
     ledger counts them (the ep14 whole-corpus discipline, not d24's
     >= 8-token report universe)."""
-    corpus = _fill("base", 30)  # doc2 (even)
+    corpus = fill("base", 30)  # doc2 (even)
     tiny = "just five little words here"  # doc1 (odd), 5 tokens
-    d = _write_documents(str(tmp_path_factory.mktemp("st17s")), [tiny, corpus])
+    d = write_documents(str(tmp_path_factory.mktemp("st17s")), [tiny, corpus])
     pdf = entry_mod.queries()["st17_stream_span_scrub"](spark, d).toPandas()
     assert len(pdf) == 1
     assert pdf.iloc[0]["n_docs"] == 1
@@ -133,16 +110,13 @@ def test_st17_agrees_with_d24_on_the_fixture_direction(spark):
         assert st17["tokens_removed"].sum() == 0
 
 
-# --- d25: no component-partitioned window anywhere (VERDICT r14 #4) ---------------
-
-
 def test_d25_plan_has_no_window_funnel(spark):
     """d25's survivor argmax at BOTH stages must be the combinable
     (q, -doc_id)-max struct groupBy — a pathological giant near-dup
     component must not ride a hot-key window funnel. Checked on the FULL
     executed plan including pre-checkpoint segments (the ledger's
     checkpoint lens), since d25 checkpoints mid-pipeline."""
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     spark.catalog.clearCache()
     with pa.CkptRecorder() as rec:
         df = entry_mod.queries()["d25_cascade_quality_survivors"](spark, SF_DIR)
@@ -151,12 +125,8 @@ def test_d25_plan_has_no_window_funnel(spark):
         assert "Window" not in seg, "component-partitioned window reappeared in d25"
 
 
-# --- shared oracle fragments: one home per contract ------------------------------
-
-
 def _fragment_table() -> dict[str, tuple[str, ...]]:
     """{fragment text: oracles that must embed it verbatim}."""
-    from ml_training_data_pipeline_spark.plans import oracle_fragments as of
 
     return {
         of.span_scrub_ctes(): (
@@ -233,17 +203,9 @@ def test_oracles_share_the_fragments():
 
 def test_span_window_stream_matches_materialized_form(spark, tmp_path_factory):
     """span_windows is span_window_stream + materialize — same rows."""
-    from pyspark.sql import functions as F
 
-    from ml_training_data_pipeline_spark.functions.text import tokenize
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.dedup import (
-        span_window_stream,
-        span_windows,
-    )
-
-    d = _write_documents(
-        str(tmp_path_factory.mktemp("sws")), [_fill("w", 12), _fill("v", 9)]
+    d = write_documents(
+        str(tmp_path_factory.mktemp("sws")), [fill("w", 12), fill("v", 9)]
     )
     t8 = (
         load_table(spark, d, "documents")
@@ -255,12 +217,7 @@ def test_span_window_stream_matches_materialized_form(spark, tmp_path_factory):
     assert a == b and len(a) == (12 - 7) + (9 - 7)
 
 
-# --- materialization-strategy knob (VERDICT r14 #5) --------------------------------
-
-
 def test_materialize_invalid_strategy_raises(monkeypatch):
-    from ml_training_data_pipeline_spark.operators.materialize import _strategy
-
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "cache")
     with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
         _strategy()
@@ -291,10 +248,10 @@ def test_materialize_strategies_preserve_results(
     monkeypatch.setenv(
         "SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path_factory.mktemp("ckptdir"))
     )
-    span = " ".join(f"mshare{i:03d}" for i in range(10))
-    d = _write_documents(
+    span = fill("mshare", 10)
+    d = write_documents(
         str(tmp_path_factory.mktemp(f"mat_{strategy}")),
-        [f"{_fill('ma', 6)} {span}", f"{span} {_fill('mb', 6)}"],
+        [f"{fill('ma', 6)} {span}", f"{span} {fill('mb', 6)}"],
     )
     pdf = (
         entry_mod.queries()["d24_span_scrub"](spark, d)
@@ -312,15 +269,12 @@ def test_materialize_strategies_preserve_results(
         assert _query_rows(spark, name) == _LOCAL_ROWS[name], name
 
 
-# --- CkptRecorder reentry guard (r14 ADVICE) ---------------------------------------
-
-
 def test_ckpt_recorder_rejects_interleaved_recorders():
     """Recorders patch the DataFrame class process-globally; a second
     active recorder would restore a stale wrapper on exit and
     cross-attribute segments — it must fail loudly at __enter__, and the
     original method must survive the failed attempt."""
-    pa = _load_script("plan_audit")
+    pa = load_script("plan_audit")
     cls = pa.CkptRecorder._target()
     orig = cls.localCheckpoint
     with pa.CkptRecorder():
@@ -331,7 +285,19 @@ def test_ckpt_recorder_rejects_interleaved_recorders():
     assert cls.localCheckpoint is orig
 
 
-# --- d26: cross-source boilerplate contagion matrix -------------------------------
+def _three_source_corpus(tmpdir: str) -> str:
+    span_ab = fill("sharedab", 8)
+    span_ac = fill("sharedac", 10)
+    span_c = fill("cdup", 8)
+    texts = [
+        f"{fill('fa1x', 10)} {span_ab}",  # A: 18 toks -> 11 windows, 8 exposed
+        f"{fill('fa2x', 9)} {span_ac}",  # A: 19 toks -> 12 windows, 10 exposed
+        f"{fill('fb1x', 12)} {span_ab}",  # B: 20 toks -> 13 windows, 8 exposed
+        f"{fill('fc1x', 11)} {span_ac}",  # C: 21 toks -> 14 windows, 10 exposed
+        f"{fill('fc2x', 7)} {span_c}",  # C: 15 toks -> 8 windows, 0 exposed (intra-C)
+        f"{fill('fc3x', 8)} {span_c}",  # C: 16 toks -> 9 windows (1 shared w/ fc2), 0 exposed
+    ]
+    return write_documents(tmpdir, texts, ["srcA", "srcA", "srcB", "srcC", "srcC", "srcC"])
 
 
 def test_d26_planted_contagion_matrix_exact(spark, tmp_path_factory):
@@ -341,19 +307,7 @@ def test_d26_planted_contagion_matrix_exact(spark, tmp_path_factory):
     only (no pair row — intra-source duplication is not contagion).
     Fillers are doc-unique, so every cross-filler window is unique and
     the per-source window vocabularies are exact arithmetic."""
-    span_ab = " ".join(f"sharedab{i:03d}" for i in range(8))
-    span_ac = " ".join(f"sharedac{i:03d}" for i in range(10))
-    span_c = " ".join(f"cdup{i:03d}" for i in range(8))
-    texts = [
-        f"{_fill('fa1x', 10)} {span_ab}",  # A: 18 toks -> 11 windows
-        f"{_fill('fa2x', 9)} {span_ac}",  # A: 19 toks -> 12 windows
-        f"{_fill('fb1x', 12)} {span_ab}",  # B: 20 toks -> 13 windows
-        f"{_fill('fc1x', 11)} {span_ac}",  # C: 21 toks -> 14 windows
-        f"{_fill('fc2x', 7)} {span_c}",  # C: 15 toks -> 8 windows
-        f"{_fill('fc3x', 8)} {span_c}",  # C: 16 toks -> 9 windows (1 shared w/ fc2)
-    ]
-    srcs = ["srcA", "srcA", "srcB", "srcC", "srcC", "srcC"]
-    d = _write_documents(str(tmp_path_factory.mktemp("d26")), texts, sources=srcs)
+    d = _three_source_corpus(str(tmp_path_factory.mktemp("d26")))
     pdf = (
         entry_mod.queries()["d26_boilerplate_contagion"](spark, d)
         .toPandas()
@@ -386,19 +340,7 @@ def test_d27_planted_cross_source_exposure_exact(spark, tmp_path_factory):
     of docA2/docC1; span_c is intra-C only and exposes NOTHING — the
     cross-source filter is the whole point (d24 would remove the
     non-keeper copy of span_c; d27 must not count it)."""
-    span_ab = " ".join(f"sharedab{i:03d}" for i in range(8))
-    span_ac = " ".join(f"sharedac{i:03d}" for i in range(10))
-    span_c = " ".join(f"cdup{i:03d}" for i in range(8))
-    texts = [
-        f"{_fill('fa1x', 10)} {span_ab}",  # A: 18 toks, 8 exposed
-        f"{_fill('fa2x', 9)} {span_ac}",  # A: 19 toks, 10 exposed
-        f"{_fill('fb1x', 12)} {span_ab}",  # B: 20 toks, 8 exposed
-        f"{_fill('fc1x', 11)} {span_ac}",  # C: 21 toks, 10 exposed
-        f"{_fill('fc2x', 7)} {span_c}",  # C: 15 toks, 0 exposed (intra-C)
-        f"{_fill('fc3x', 8)} {span_c}",  # C: 16 toks, 0 exposed
-    ]
-    srcs = ["srcA", "srcA", "srcB", "srcC", "srcC", "srcC"]
-    d = _write_documents(str(tmp_path_factory.mktemp("d27")), texts, sources=srcs)
+    d = _three_source_corpus(str(tmp_path_factory.mktemp("d27")))
     pdf = (
         entry_mod.queries()["d27_cross_source_exposure"](spark, d)
         .toPandas()
@@ -416,15 +358,10 @@ def test_d27_planted_cross_source_exposure_exact(spark, tmp_path_factory):
     assert c["exposure_frac"] == pytest.approx(round(10 / 52, 6), abs=1e-9)
 
 
-# --- bench.py: non-numeric sf-dir suffix must not kill a finished run --------------
-
-
 def test_bench_parse_sf_tolerates_probe_dirs():
-    import bench
-
     assert bench.parse_sf("/root/testdata/sf0.1") == 0.1
     assert bench.parse_sf("/tmp/sf1/") == 1.0
-    # the r15 low-dup floor probe lost its artifact to float('1_lowdup')
+    # a low-dup floor probe once lost its artifact to float('1_lowdup')
     # AFTER all nine reps had run — carry the suffix as a string instead
     assert bench.parse_sf("/tmp/sf1_lowdup") == "1_lowdup"
     # PEP-515: float('1_2') == 12.0 — an underscore suffix must never
@@ -437,10 +374,9 @@ def test_ckpt_recorder_captures_reliable_checkpoints(spark, tmp_path_factory):
     """SPARK_GRAFT_MATERIALIZE=reliable routes materialization through
     df.checkpoint(); the recorder must capture those segments too, or
     auditing a reliable-configured deployment silently re-opens the
-    pre-checkpoint blind spot (round-15 review finding)."""
-    pa = _load_script("plan_audit")
+    pre-checkpoint blind spot."""
+    pa = load_script("plan_audit")
     spark.sparkContext.setCheckpointDir(str(tmp_path_factory.mktemp("ckpt")))
-    from pyspark.sql import functions as F
 
     with pa.CkptRecorder() as rec:
         df = spark.range(100).withColumn("g", F.col("id") % 5).groupBy("g").count()
@@ -479,20 +415,14 @@ def test_cur14_fully_contaminated_source_yields_null_rate(spark, tmp_path_factor
     now make the NULL explicit. Planted: doc 97 is the eval doc (the
     %97 slice), the 'dirty' source is two verbatim copies of it, the
     'clean' source shares no shingle."""
-    import pandas as pd
 
-    eval_text = _fill("contam", 10)
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [97, 1, 2, 3, 4],
-            "text": [eval_text, eval_text, eval_text, _fill("ca", 12), _fill("cb", 12)],
-            "lang": ["en"] * 5,
-            "source": ["evalsrc", "dirty", "dirty", "clean", "clean"],
-        }
+    eval_text = fill("contam", 10)
+    d = write_documents(
+        str(tmp_path_factory.mktemp("cur14null")),
+        [eval_text, eval_text, eval_text, fill("ca", 12), fill("cb", 12)],
+        ["evalsrc", "dirty", "dirty", "clean", "clean"],
+        doc_ids=[97, 1, 2, 3, 4],
     )
-    pdf["n_chars"] = pdf["text"].str.len()
-    d = str(tmp_path_factory.mktemp("cur14null"))
-    pdf.to_parquet(os.path.join(d, "documents.parquet"), index=False)
     out = entry_mod.queries()["cur14_bloom_decontamination"](spark, d).toPandas()
     rows = {r["source"]: r for _, r in out.iterrows()}
     assert rows["dirty"]["n_train_docs"] == 2
@@ -507,7 +437,6 @@ def test_materialize_rewrites_word_boundary_cte_names_only():
     another identifier (e.g. 'hash AS (') or a non-requested CTE must
     stay untouched, and every occurrence of a requested name is
     rewritten (d20 defines cand_1 once but the helper is re-entrant)."""
-    from ml_training_data_pipeline_spark.plans.oracle_fragments import materialized_ctes
 
     sql = "WITH hash AS (SELECT 1), sh AS (SELECT 2), stats_1 AS (SELECT 3) SELECT 4"
     out = materialized_ctes(sql, "sh")
@@ -554,20 +483,13 @@ def test_cur17_fully_contaminated_corpus_yields_null_rate(spark, tmp_path_factor
     (n_train_docs - n_exact_flagged) is 0 — ANSI Spark threw
     DIVIDE_BY_ZERO at sf1 where DuckDB yields NULL. Planted: doc 97 is
     the eval doc, both train docs are verbatim copies of it."""
-    import pandas as pd
 
-    eval_text = _fill("bloomsat", 10)
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [97, 1, 2],
-            "text": [eval_text] * 3,
-            "lang": ["en"] * 3,
-            "source": ["evalsrc", "train", "train"],
-        }
+    d = write_documents(
+        str(tmp_path_factory.mktemp("cur17null")),
+        [fill("bloomsat", 10)] * 3,
+        ["evalsrc", "train", "train"],
+        doc_ids=[97, 1, 2],
     )
-    pdf["n_chars"] = pdf["text"].str.len()
-    d = str(tmp_path_factory.mktemp("cur17null"))
-    pdf.to_parquet(os.path.join(d, "documents.parquet"), index=False)
     out = entry_mod.queries()["cur17_bloom_sizing_sweep"](spark, d).toPandas()
     assert len(out) == 3  # one row per M
     assert (out["n_train_docs"] == 2).all()
@@ -604,7 +526,6 @@ def test_no_guarded_oracle_leaves_a_heavy_cte_inlined():
     would silently bring back the measured >80 GB sf1 temp spill. The
     helper is case/whitespace-tolerant, and this pin catches whatever
     still slips through."""
-    import re
 
     heavy = ("toks", "sh", "mh", "bands", "cands", "jac", "inter", "sizes")
     guarded = (

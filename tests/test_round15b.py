@@ -8,9 +8,14 @@ from __future__ import annotations
 
 import math
 
+import duckdb
+import numpy as np
 import pytest
 
+import bench
 from ml_training_data_pipeline_spark.operators.cluster import lloyd_deterministic
+from ml_training_data_pipeline_spark.plans import registry
+from tests.conftest import SF_DIR, write_documents
 
 
 def _mk_vectors(spark, rows):
@@ -64,8 +69,6 @@ def test_lloyd_matches_pure_python_mirror(spark):
             v.append((state / (1 << 31)) - 0.5)
         rows.append((i, v))
     # push through float32 the same way the parquet column does
-    import numpy as np
-
     rows = [(i, [float(np.float32(x)) for x in v]) for i, v in rows]
     got = (
         lloyd_deterministic(_mk_vectors(spark, rows), k=4, iters=3)
@@ -118,13 +121,6 @@ def test_lloyd_raises_when_fewer_rows_than_k(spark):
         lloyd_deterministic(_mk_vectors(spark, rows), k=5, iters=1)
 
 
-# --- bench.py steal-time visibility ------------------------------------------
-# This session's own hazard: identical code read 12.4s wall one boot and
-# 25.4s the next at host_load 0.007/contended=false — loadavg only counts
-# THIS machine's runnable tasks, so hypervisor steal was invisible. bench
-# now samples /proc/stat across the suite and folds steal into contended.
-
-
 def test_read_proc_stat_parses_aggregate_cpu_line(tmp_path):
     import bench
 
@@ -148,8 +144,6 @@ def test_read_proc_stat_handles_missing_and_malformed(tmp_path):
 
 
 def test_steal_pct_flags_contention_and_degrades_cleanly():
-    import bench
-
     # 3% of all cpu time stolen across the window
     assert bench.steal_pct((100, 10_000), (400, 20_000)) == 3.0
     assert bench.steal_pct(None, (400, 20_000)) == -1.0
@@ -158,18 +152,9 @@ def test_steal_pct_flags_contention_and_degrades_cleanly():
     assert bench.steal_pct((100, 10_000), (100, 10_000)) == -1.0
 
 
-# --- n23 structural pins ------------------------------------------------------
-# n23's value correctness is oracle-checked at four scales; these pin the
-# probe pipeline's structure so a window/tie-break regression can't hide
-# behind a same-shape answer.
-
-
 def test_n23_probe_structure(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-    import ml_training_data_pipeline_spark.plans.queries_similarity  # noqa: F401
-
     out = (
-        registry.QUERIES["n23_deterministic_ivf_topk"](spark, "/root/testdata/sf0.001")
+        registry.QUERIES["n23_deterministic_ivf_topk"](spark, SF_DIR)
         .toPandas()
         .sort_values(["query_id", "rank"])
     )
@@ -236,30 +221,15 @@ def test_lloyd_rejects_zero_iters(spark):
 
 
 def test_bpe_oracle_survives_merge_dryup(spark, tmp_path):
-    # review finding (r15 session 2): when the pair pool dries up before
-    # n_merges, b{t} is EMPTY — the old CROSS JOIN collapsed st{t+1} to
+    # when the pair pool dries up before n_merges, b{t} is EMPTY — a
+    # CROSS JOIN collapsed st{t+1} to
     # zero rows, so the v11/v13 oracles returned empty/NULL while Spark's
     # train_bpe breaks early and still serves real numbers. The LEFT JOIN
     # carry-forward must keep both engines matched on degenerate corpora.
-    import duckdb
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ml_training_data_pipeline_spark.plans import registry
-    import ml_training_data_pipeline_spark.plans.queries_text  # noqa: F401
-
-    docs = pd.DataFrame(
-        {"doc_id": [1, 2], "text": ["ab ab ab", "ab"], "lang": ["en", "en"],
-         "source": ["s", "s"]}
-    )
-    sf = tmp_path / "sf_tiny"
-    sf.mkdir()
-    pq.write_table(pa.Table.from_pandas(docs), str(sf / "documents.parquet"))
-
+    sf = write_documents(str(tmp_path), ["ab ab ab", "ab"], ["s", "s"])
     for name in ("v10_bpe_learned_merges", "v11_bpe_token_budget",
                  "v13_bpe_compression_curve"):
-        sp = registry.QUERIES[name](spark, str(sf)).toPandas()
+        sp = registry.QUERIES[name](spark, sf).toPandas()
         con = duckdb.connect()
         con.execute(
             f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
@@ -278,11 +248,8 @@ def test_bpe_oracle_survives_merge_dryup(spark, tmp_path):
 
 
 def test_m11_elbow_structure(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-    import ml_training_data_pipeline_spark.plans.queries_ml  # noqa: F401
-
     out = registry.QUERIES["m11_lloyd_elbow_exact"](
-        spark, "/root/testdata/sf0.001"
+        spark, SF_DIR
     ).toPandas()
     n_vecs = 500  # sf0.001 embeddings table size (TESTDATA.md)
     for k, g in out.groupby("k"):

@@ -13,8 +13,14 @@ import types
 import pandas as pd
 import pytest
 
-from ml_training_data_pipeline_spark.functions.llm import HTTPLLMClient
+from ml_training_data_pipeline_spark.functions.llm import (
+    CLUSTER_LABELS,
+    HTTPLLMClient,
+    enrich_documents,
+)
+from ml_training_data_pipeline_spark.io.sources import load_table
 from ml_training_data_pipeline_spark.operators.centroids import merge_components
+from ml_training_data_pipeline_spark.operators.cluster import fit_kmeans
 from ml_training_data_pipeline_spark.operators.pos_keywords import (
     HeuristicTagger,
     SpacyTagger,
@@ -24,6 +30,23 @@ from ml_training_data_pipeline_spark.operators.refine import (
     RefineConfig,
     _make_group_splitter,
 )
+from ml_training_data_pipeline_spark.operators.tfidf import tfidf_long
+from ml_training_data_pipeline_spark.operators.vectorize import (
+    fit_tfidf_vectorizer,
+    tokens_frame,
+    vectorize,
+)
+from ml_training_data_pipeline_spark.plans.queries_ml import (
+    _phase1_cfg,
+    ep2_build_models,
+    ep3_phase1_pipeline,
+    phase1_summary,
+)
+from ml_training_data_pipeline_spark.streaming.enrich import (
+    enrich_stream_to_parquet,
+    stream_table,
+)
+from tests.conftest import SF_DIR
 
 
 def _two_theme_group(cluster_id: int = 1, base_id: int = 100) -> pd.DataFrame:
@@ -178,24 +201,9 @@ def test_load_tagger_defaults_to_heuristic(monkeypatch):
 def test_ep3_matches_in_memory_run(spark):
     """The reloaded-refined EP3 summary equals the same pipeline run
     without the persistence round-trip (runPhase1Pipeline parity)."""
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.cluster import fit_kmeans
-    from ml_training_data_pipeline_spark.operators.tfidf import tfidf_long
-    from ml_training_data_pipeline_spark.operators.vectorize import (
-        fit_tfidf_vectorizer,
-        tokens_frame,
-        vectorize,
-    )
-    from ml_training_data_pipeline_spark.plans.queries_ml import (
-        _phase1_cfg,
-        ep3_phase1_pipeline,
-        phase1_summary,
-    )
+    persisted = ep3_phase1_pipeline(spark, SF_DIR).collect()
 
-    sf_dir = "/root/testdata/sf0.001"
-    persisted = ep3_phase1_pipeline(spark, sf_dir).collect()
-
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, SF_DIR, "documents")
     tokens = tokens_frame(docs)
     vec_model = fit_tfidf_vectorizer(tokens, vocab_size=500)
     vecs = vectorize(tokens, vec_model)
@@ -212,11 +220,7 @@ def test_ep3_matches_in_memory_run(spark):
 def test_ep2_build_models_invariants(spark):
     """EP2 composite: hard-clustering summary over the POS-keyword DFM —
     every doc with keywords lands in exactly one labeled cluster."""
-    from ml_training_data_pipeline_spark.functions.llm import CLUSTER_LABELS
-    from ml_training_data_pipeline_spark.plans.queries_ml import ep2_build_models
-
-    sf_dir = "/root/testdata/sf0.001"
-    out = ep2_build_models(spark, sf_dir).collect()
+    out = ep2_build_models(spark, SF_DIR).collect()
     assert out, "summary must be non-empty"
     assert {c for r in out for c in (r["label"],)} <= set(CLUSTER_LABELS)
     sizes = [r["documents"] for r in out]
@@ -229,20 +233,12 @@ def test_ep2_build_models_invariants(spark):
 def test_foreach_batch_enrichment_matches_batch(spark, tmp_path):
     """foreachBatch sink parity: streaming micro-batches through the same
     enrichment operator write exactly the batch result."""
-    from ml_training_data_pipeline_spark.functions.llm import enrich_documents
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.streaming.enrich import (
-        enrich_stream_to_parquet,
-        stream_table,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
     out_dir = str(tmp_path / "enriched")
-    enrich_stream_to_parquet(stream_table(spark, sf_dir, "documents"), out_dir)
+    enrich_stream_to_parquet(stream_table(spark, SF_DIR, "documents"), out_dir)
     streamed = {
         tuple(r) for r in spark.read.parquet(out_dir).collect()
     }
     batch = {
-        tuple(r) for r in enrich_documents(load_table(spark, sf_dir, "documents")).collect()
+        tuple(r) for r in enrich_documents(load_table(spark, SF_DIR, "documents")).collect()
     }
     assert streamed == batch

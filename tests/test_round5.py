@@ -3,12 +3,19 @@ step) and the banded-SimHash completeness guarantee on a crafted pair."""
 
 from __future__ import annotations
 
+import random
+
+import pandas as pd
 from pyspark.sql import functions as F
 
+from ml_training_data_pipeline_spark.io.sources import load_table
 from ml_training_data_pipeline_spark.operators.dedup import (
     connected_components,
     simhash_banded_near_dups,
 )
+from ml_training_data_pipeline_spark.plans import registry
+from ml_training_data_pipeline_spark.streaming.enrich import make_profile_update
+from tests.conftest import SF_DIR
 
 
 def test_components_transitive_chain(spark):
@@ -65,8 +72,6 @@ class _FakeState:
 
 
 def test_profile_state_evicts_on_timeout():
-    from ml_training_data_pipeline_spark.streaming.enrich import make_profile_update
-
     update = make_profile_update(ttl_ms=60_000)
     state = _FakeState(has_timed_out=True)
     rows = list(update((7,), iter([]), state) or [])
@@ -76,10 +81,6 @@ def test_profile_state_evicts_on_timeout():
 
 
 def test_profile_state_sets_event_time_ttl():
-    import pandas as pd
-
-    from ml_training_data_pipeline_spark.streaming.enrich import make_profile_update
-
     update = make_profile_update(ttl_ms=60_000)
     state = _FakeState(has_timed_out=False)
     ts = pd.Timestamp("2024-01-01T00:00:00Z")
@@ -97,10 +98,6 @@ def test_profile_state_sets_event_time_ttl():
 def test_profile_state_ttl_anchor_survives_out_of_order_batch():
     # an out-of-order batch of OLDER events must not pull the timeout
     # earlier: the anchor is the per-key max event ts persisted in state.
-    import pandas as pd
-
-    from ml_training_data_pipeline_spark.streaming.enrich import make_profile_update
-
     update = make_profile_update(ttl_ms=60_000)
     state = _FakeState(has_timed_out=False)
     state.exists = True
@@ -119,21 +116,14 @@ def test_x8_sketches_track_exact_answers(spark):
     # HLL++ (rsd 1%) and GK quantiles (accuracy 10000) must land within
     # tight bounds of the exact profile at test scale — the honesty check
     # behind the rows-only driver row.
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
-    from tests.conftest import SF_DIR
-
     row = registry.QUERIES["x8_approx_profile"](spark, SF_DIR).collect()[0]
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from pyspark.sql import functions as F2
 
     docs = load_table(spark, SF_DIR, "documents")
     exact = docs.agg(
-        F2.countDistinct("source").alias("s"),
-        F2.countDistinct("doc_id").alias("d"),
-        F2.expr("percentile(n_chars, 0.5)").alias("m"),
-        F2.expr("percentile(n_chars, 0.9)").alias("p90"),
+        F.countDistinct("source").alias("s"),
+        F.countDistinct("doc_id").alias("d"),
+        F.expr("percentile(n_chars, 0.5)").alias("m"),
+        F.expr("percentile(n_chars, 0.9)").alias("p90"),
     ).collect()[0]
     assert abs(row["approx_sources"] - exact["s"]) <= max(1, 0.05 * exact["s"])
     assert abs(row["approx_docs"] - exact["d"]) <= 0.05 * exact["d"]
@@ -146,10 +136,6 @@ def test_results_invariant_to_shuffle_partitions(spark):
     # shuffles into 3 or 32 partitions — the determinism contract that
     # lets results be reproduced across deployment sizes (tie-breaks in
     # every ranking/window make this hold by construction).
-    from ml_training_data_pipeline_spark.plans import registry
-    from tests.conftest import SF_DIR
-
-    registry._load_all()
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         outs = {}
@@ -159,14 +145,14 @@ def test_results_invariant_to_shuffle_partitions(spark):
                 "v4_vocab_top2000",
                 "d4_minhash_dedup",
                 "w5_asof_attribution",
-                # round-6 float-heavy additions: parallel sums + rank
+                # float-heavy: parallel sums + rank
                 # tie-breaks are exactly where partitioning sensitivity
                 # would surface
                 "x14_source_divergence",
                 "w6_decayed_engagement",
                 "n7_prototype_confusion",
                 "mix2_stratified_quota",
-                # round-6b float-heavy additions: decimal-summed join
+                # decimal-summed join
                 # aggregates (h5), double array folds (n10), salted join
                 # deviation means (j10), readability averages (x19)
                 "h5_local_supplier_volume",
@@ -209,10 +195,6 @@ def test_components_match_union_find_on_random_graphs(spark):
     # deterministic pseudo-random graphs (no hypothesis: a Spark job per
     # example is the cost driver, so a fixed seed sweep is the right
     # trade) — label propagation must equal classic union-find.
-    import random
-
-    from ml_training_data_pipeline_spark.operators.dedup import connected_components
-
     rng = random.Random(20260813)
     for trial in range(5):
         n_nodes = rng.randint(4, 24)

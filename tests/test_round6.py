@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ml_training_data_pipeline_spark.io.sources import load_table
 from ml_training_data_pipeline_spark.operators.dedup import (
     connected_components,
     lsh_bands,
@@ -16,7 +17,9 @@ from ml_training_data_pipeline_spark.operators.dedup import (
     simhash,
     simhash_banded_near_dups,
 )
-from tests.conftest import SF_DIR
+from ml_training_data_pipeline_spark.operators.tfidf import doc_tokens, term_counts
+from ml_training_data_pipeline_spark.operators.vectorize import vectorize_dfm
+from tests.conftest import SF_DIR, explain_str
 
 
 def test_components_converge_on_long_chain(spark):
@@ -81,8 +84,6 @@ def test_vectorize_dfm_keeps_zero_vector_docs(spark):
     # a doc whose every term fell out of the pinned vocabulary must stay
     # in the vectorized state as a zero vector (dfm_match semantics), not
     # silently vanish from the KMeans/phase-1 corpus.
-    from ml_training_data_pipeline_spark.operators.vectorize import vectorize_dfm
-
     dfm = spark.createDataFrame(
         [(1, "alpha", 2), (1, "beta", 1), (2, "alpha", 1)],
         schema="doc_id long, term string, tf long",
@@ -103,8 +104,6 @@ def test_banded_simhash_complete_vs_brute_force(spark):
     # equi-join must find EXACTLY the pairs an all-pairs hamming filter
     # finds — checked on 60 real signatures (pigeonhole guarantee, not a
     # sample of it).
-    from ml_training_data_pipeline_spark.io.sources import load_table
-
     docs = load_table(spark, SF_DIR, "documents").limit(60)
     sim = simhash(docs, bits=60)
     rows = sim.collect()
@@ -128,19 +127,11 @@ def test_simhash_plan_has_no_bit_explode_and_no_join(spark):
     # per (doc, term): no Generate beyond tokenization's own explodes (a
     # sequence(0, bits-1) explode is a bits× row inflation through the
     # first shuffle), and no join (the term hash is computed inline).
-    from ml_training_data_pipeline_spark.operators.tfidf import doc_tokens, term_counts
-
     docs = spark.createDataFrame(
         [(1, "alpha beta beta"), (2, "gamma alpha")], schema="doc_id long, text string"
     )
-
-    def formatted(df):
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
-    sig_plan = formatted(simhash(docs, bits=60))
-    base_plan = formatted(term_counts(doc_tokens(docs)))
+    sig_plan = explain_str(spark, simhash(docs, bits=60))
+    base_plan = explain_str(spark, term_counts(doc_tokens(docs)))
     assert sig_plan.count("Generate") == base_plan.count("Generate"), sig_plan
     for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
         assert op not in sig_plan, sig_plan

@@ -4,26 +4,25 @@ passage-dedup / stratified-quota / char-entropy / shard / decay queries
 
 from __future__ import annotations
 
+import collections
 import math
+import re
 
-from pyspark.sql import functions as F
+from pyspark.ml.feature import CountVectorizer, MinHashLSH
+from pyspark.sql import Observation, functions as F
 
+from ml_training_data_pipeline_spark.operators.dedup import (
+    doc_shingles,
+    jaccard_pairs,
+    minhash_dedup,
+)
 from ml_training_data_pipeline_spark.plans import registry
-from tests.conftest import SF_DIR
-
-registry._load_all()
-
-
-def explain_str(spark, name: str) -> str:
-    df = registry.QUERIES[name](spark, SF_DIR)
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+from tests.conftest import SF_DIR, explain_str
 
 
 def count_nodes(plan: str, op: str) -> int:
     # formatted plans print every node twice (tree + detail section);
     # count only the detail headers "(3) Exchange".
-    import re
-
     return len(re.findall(rf"^\(\d+\) {op}\b", plan, re.M))
 
 
@@ -43,7 +42,6 @@ def test_x12_entropy_matches_python(spark):
         for r in spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
         if r["text"] is not None
     }
-    import re
 
     checked = 0
     for r in rows[:20]:
@@ -176,11 +174,6 @@ def test_x13_topk_is_take_ordered(spark):
 def test_d11_containment_dominates_jaccard(spark):
     # containment = inter/min(|A|,|B|) ≥ inter/|A∪B| = jaccard for every
     # pair, and subset pairs score exactly 1.0.
-    from ml_training_data_pipeline_spark.operators.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-    )
-
     docs = spark.createDataFrame(
         [
             (1, "a b c d e f g h i j"),
@@ -274,9 +267,7 @@ def test_aqe_skew_join_mechanism_fires(spark):
         )
         joined = fact.join(dim, "k").groupBy().agg(F.sum("attr").alias("s"))
         joined.collect()  # AQE finalizes the plan during execution
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_str(spark, joined)
         assert "skew=true" in plan, plan
     finally:
         for k, v in prev.items():
@@ -287,14 +278,11 @@ def test_x14_closed_form_matches_bruteforce(spark):
     # the zero-count KL mass is folded in closed form; validate against a
     # brute-force full-vocabulary sum computed in Python on the same data
     # (independent of the oracle, which shares the engine's derivation).
-    import collections
-
     rows = registry.QUERIES["x14_source_divergence"](spark, SF_DIR).collect()
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
-    import re as _re
 
     def toks(s):
-        cleaned = _re.sub(r"[ \t\n\r\f\v]+", " ", _re.sub(r"[^a-z0-9 \t\n\r\f\v]", "", s.lower())).strip()
+        cleaned = re.sub(r"[ \t\n\r\f\v]+", " ", re.sub(r"[^a-z0-9 \t\n\r\f\v]", "", s.lower())).strip()
         return [t for t in cleaned.split(" ") if t]
 
     per_source: dict[str, collections.Counter] = collections.defaultdict(collections.Counter)
@@ -338,8 +326,6 @@ def test_g3_cube_single_expand_single_scan(spark):
 
 
 def test_d12_sources_ordered_and_counts_match_pairs(spark):
-    from ml_training_data_pipeline_spark.operators.dedup import minhash_dedup
-
     rows = registry.QUERIES["d12_cross_source_dups"](spark, SF_DIR).collect()
     n_pairs = minhash_dedup(
         spark.read.parquet(f"{SF_DIR}/documents.parquet"), threshold=0.5
@@ -367,8 +353,6 @@ def test_ep4_observe_metrics_without_extra_pass(spark):
     # so row counts/token totals come back WITH the action instead of a
     # second scan — prove the API composes with the composite and agrees
     # with the result.
-    from pyspark.sql import Observation
-
     df = registry.QUERIES["ep4_curation_to_shards"](spark, SF_DIR)
     obs = Observation("ep4_metrics")
     observed = df.observe(
@@ -414,38 +398,12 @@ def test_ep4_single_scan_three_shuffles(spark):
     assert count_nodes(plan, "Exchange") == 3, plan
 
 
-def test_registry_contract():
-    # the driver checks a PRIORITY prefix — a typo there silently drops a
-    # query to the safety-net tail and changes which 50 get driver rows.
-    from ml_training_data_pipeline_spark.plans.registry import (
-        ORACLE_SQL,
-        PRIORITY,
-        QUERIES,
-    )
-
-    assert len(PRIORITY) == len(set(PRIORITY)), "duplicate PRIORITY entries"
-    missing = [n for n in PRIORITY if n not in QUERIES]
-    assert not missing, f"PRIORITY names not registered: {missing}"
-    unlisted = [n for n in QUERIES if n not in set(PRIORITY)]
-    assert not unlisted, f"registered queries missing from PRIORITY: {unlisted}"
-    assert set(ORACLE_SQL) <= set(QUERIES)
-    # iteration order == PRIORITY order (the driver consumes dict order)
-    assert list(QUERIES) == [n for n in PRIORITY if n in QUERIES]
-
-
 def test_minhash_dedup_cross_checked_against_mllib(spark):
     # independent-implementation agreement: MLlib's MinHashLSH (different
     # hash family, approxSimilarityJoin with EXACT Jaccard distance on
     # its candidates) must emit only pairs our exact inverted-index
     # jaccard confirms, and recover most of them — two codebases, one
     # truth.
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    from ml_training_data_pipeline_spark.operators.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-    )
-
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").where(
         F.col("text").isNotNull()
     )

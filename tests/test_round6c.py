@@ -5,14 +5,15 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from ml_training_data_pipeline_spark.functions.text import tokenize
+from ml_training_data_pipeline_spark.io.sources import load_table, scratch_dir
+from ml_training_data_pipeline_spark.operators.dedup import md5_long
 from ml_training_data_pipeline_spark.plans import registry
-from tests.conftest import SF_DIR
-
-registry._load_all()
+from ml_training_data_pipeline_spark.plans.queries_ml import _ari_from_contingency
+from tests.conftest import SF_DIR, plan_str
 
 
 def test_t9_zorder_files_cluster_both_dims(spark):
@@ -21,7 +22,6 @@ def test_t9_zorder_files_cluster_both_dims(spark):
     # files should touch at most half of the 8 lang buckets. A pure
     # length-ordered layout fails this (every length run spans all langs).
     registry.QUERIES["t9_zorder_layout"](spark, SF_DIR).collect()
-    from ml_training_data_pipeline_spark.io.sources import scratch_dir
 
     out_dir = scratch_dir(spark, "zorder", SF_DIR)
     files = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
@@ -53,7 +53,6 @@ def test_d15_catches_shifted_alignment_cur5_misses(spark):
         ],
         "doc_id long, text string",
     )
-    from ml_training_data_pipeline_spark.functions.text import tokenize
 
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     # stride-8 passages: no shared passage (alignment differs by 13-2=11 % 8 != 0)
@@ -91,13 +90,8 @@ def test_pack2_chunks_cover_every_token_with_overlap(spark):
     # 300-token doc must produce ceil((300-16)/112)=3 chunks, starting
     # at 0/112/224, each 128 tokens except the 76-token tail, adjacent
     # chunks sharing exactly 16 tokens, and the union covering 0..299.
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.plans import registry
-
     text = " ".join(f"tok{i}" for i in range(300))
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    from ml_training_data_pipeline_spark.functions.text import tokenize
 
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     rows = (
@@ -125,7 +119,6 @@ def test_pack2_chunks_cover_every_token_with_overlap(spark):
 
 def test_s11_compaction_reduces_file_count_losslessly(spark):
     registry.QUERIES["s11_small_file_compaction"](spark, SF_DIR).collect()
-    from ml_training_data_pipeline_spark.io.sources import scratch_dir
 
     base = scratch_dir(spark, "compact", SF_DIR)
     frag = glob.glob(os.path.join(base + "_frag", "part-*.parquet"))
@@ -140,10 +133,8 @@ def test_s11_compaction_reduces_file_count_losslessly(spark):
 def test_s11_compaction_plan_has_no_shuffle(spark):
     # coalesce must not introduce an Exchange — the whole point is a
     # shuffle-free rewrite.
-    from ml_training_data_pipeline_spark.io.sources import load_table
-
     docs = load_table(spark, SF_DIR, "documents").select("doc_id")
-    plan = docs.coalesce(4)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_str(docs.coalesce(4))
     assert "Exchange" not in plan, plan
 
 
@@ -183,11 +174,6 @@ def test_m7_elbow_is_monotone_nonincreasing(spark):
 
 
 def test_mix4_split_is_a_partition_with_sane_ratios(spark):
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from ml_training_data_pipeline_spark.operators.dedup import md5_long
-
     docs = load_table(spark, SF_DIR, "documents").where(F.col("text").isNotNull())
     bucket = F.pmod(md5_long(F.col("doc_id").cast("string")), F.lit(100))
     split = F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
@@ -205,13 +191,8 @@ def test_mix4_split_is_a_partition_with_sane_ratios(spark):
 
 
 def test_ep5_survivors_are_subset_and_split(spark):
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.plans import registry
-
     rows = registry.QUERIES["ep5_dedup_split_shards"](spark, SF_DIR).collect()
     total = sum(r["n_docs"] for r in rows)
-    from ml_training_data_pipeline_spark.io.sources import load_table
 
     n_docs = load_table(spark, SF_DIR, "documents").where(
         F.col("text").isNotNull()
@@ -222,9 +203,6 @@ def test_ep5_survivors_are_subset_and_split(spark):
 
 
 def test_m8_ari_bounds_and_identical_fit_calibration(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-    from ml_training_data_pipeline_spark.plans.queries_ml import _ari_from_contingency
-
     # calibration: a perfectly-agreeing contingency (diagonal) gives 1
     assert _ari_from_contingency([(0, 0, 30), (1, 1, 25), (2, 2, 45)]) == 1.0
     # independence-shaped contingency gives ~0 (not exactly: the

@@ -4,16 +4,19 @@ oracle can't state (sweep monotonicity, codec error isolation)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
+import re
 
+from pyspark.sql import Window, functions as F
+
+from ml_training_data_pipeline_spark.io.sources import load_table, scratch_dir
+from ml_training_data_pipeline_spark.operators.bpe import apply_merges
+from ml_training_data_pipeline_spark.operators.multimodal import (
+    audio_frame_profile,
+    documents_as_audio,
+)
 from ml_training_data_pipeline_spark.plans import registry
-from tests.conftest import SF_DIR
-
-registry._load_all()
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import REPO, SF_DIR, plan_str
 
 
 def test_t10_window_is_partitioned_not_global(spark):
@@ -21,14 +24,14 @@ def test_t10_window_is_partitioned_not_global(spark):
     # partitions by stratum (parallel), never a single-partition global
     # sort. A global window would show "Window [...]" fed by an Exchange
     # SinglePartition.
-    plan = _plan(registry.QUERIES["t10_balanced_shards"](spark, SF_DIR))
+    plan = plan_str(registry.QUERIES["t10_balanced_shards"](spark, SF_DIR))
     assert "Window" in plan, plan
     assert "SinglePartition" not in plan, plan
 
 
 def test_h12_h18_no_cartesian_and_broadcast_dims(spark):
     for name in ("h12_two_nation_volume", "h13_market_share", "h18_nation_profit"):
-        plan = _plan(registry.QUERIES[name](spark, SF_DIR))
+        plan = plan_str(registry.QUERIES[name](spark, SF_DIR))
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BroadcastHashJoin" in plan, (name, plan)
 
@@ -36,7 +39,7 @@ def test_h12_h18_no_cartesian_and_broadcast_dims(spark):
 def test_p11_all_anti_joins_broadcast(spark):
     # every FK edge checks via a broadcast anti-join; a SortMergeJoin here
     # means a dim failed to broadcast and the audit would shuffle 100 TB.
-    plan = _plan(registry.QUERIES["p11_referential_integrity"](spark, SF_DIR))
+    plan = plan_str(registry.QUERIES["p11_referential_integrity"](spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 7, plan
 
@@ -68,10 +71,6 @@ def test_n13_sweep_monotone_in_tables(spark):
 
 
 def test_audio_frame_profile_error_isolation(spark):
-    from ml_training_data_pipeline_spark.operators.multimodal import (
-        audio_frame_profile,
-    )
-
     media = spark.createDataFrame(
         [(1, "audio", bytearray(b"not a riff container"), "{}")],
         "media_id long, modality string, content binary, meta string",
@@ -83,12 +82,6 @@ def test_audio_frame_profile_error_isolation(spark):
 
 
 def test_audio_frame_profile_bounds(spark):
-    from ml_training_data_pipeline_spark.operators.multimodal import (
-        audio_frame_profile,
-        documents_as_audio,
-    )
-    from ml_training_data_pipeline_spark.io.sources import load_table
-
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     rows = audio_frame_profile(documents_as_audio(docs)).collect()
     assert rows
@@ -100,19 +93,15 @@ def test_audio_frame_profile_bounds(spark):
 
 
 def test_scratch_dir_is_session_unique(spark):
-    from ml_training_data_pipeline_spark.io.sources import scratch_dir
-
     d1 = scratch_dir(spark, "x", SF_DIR)
     assert spark.sparkContext.applicationId.replace("-", "_") in d1
     assert d1 == scratch_dir(spark, "x", SF_DIR)  # stable within a session
 
 
 def test_bpe_merge_symbol_containing_column_name(spark):
-    # ADVICE r6: a learned merge symbol that literally contains the
+    # a learned merge symbol that literally contains the
     # target column's name must not corrupt the fold SQL now that the
     # column is a template parameter.
-    from ml_training_data_pipeline_spark.operators.bpe import apply_merges
-
     seg = spark.createDataFrame(
         [(1, ["sym", "s", "x"])], "term long, cols array<string>"
     )
@@ -135,18 +124,14 @@ def test_n15_ivf_sweep_monotone_and_exact_at_full_probe(spark):
 
 
 def test_doc_counts_match_registry():
-    # ADVICE r6: README/SURVEY query totals drifted from the registry.
-    # Derive the numbers from the registry and require both docs to
-    # state them exactly, so the drift can't recur.
-    import os
-    import re
-
+    # README/SURVEY query totals once drifted from the registry. Derive
+    # the numbers from the registry and require both docs to state them
+    # exactly, so the drift can't recur.
     n_q = len(registry.QUERIES)
     n_o = len(registry.ORACLE_SQL)
     n_r = n_q - n_o
-    root = os.path.join(os.path.dirname(__file__), "..")
-    readme = open(os.path.join(root, "README.md")).read()
-    survey = open(os.path.join(root, "SURVEY.md")).read()
+    readme = open(os.path.join(REPO, "README.md")).read()
+    survey = open(os.path.join(REPO, "SURVEY.md")).read()
     m = re.search(r"\((\d+) queries, (\d+) oracle-backed; (\d+) estimator", readme)
     assert m, "README query-total sentence not found"
     assert tuple(map(int, m.groups())) == (n_q, n_o, n_r), (m.groups(), n_q, n_o, n_r)
@@ -199,14 +184,11 @@ def test_strip_html_drops_unterminated_script(spark):
 def test_w14_gini_bounds_and_uniform_zero(spark):
     # Gini of a perfectly uniform distribution is 0 by construction
     # (up to the (n+1)/n sample correction: exactly 0 for equal counts).
-    from ml_training_data_pipeline_spark.plans import registry as reg
-
     ev = spark.createDataFrame(
         [(u, i) for u in range(8) for i in range(5)], "user_id long, event_id long"
     ).withColumn("ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
     ev.createOrReplaceTempView("_gini_uniform")
     per_user = ev.groupBy("user_id").agg(F.count("*").alias("c"))
-    from pyspark.sql import Window
 
     w = Window.orderBy("c", "user_id")
     ranked = per_user.select("c", F.row_number().over(w).alias("i"))
@@ -220,7 +202,7 @@ def test_w14_gini_bounds_and_uniform_zero(spark):
     ).collect()[0]
     assert row["gini"] == 0.0
     # and on the real table the coefficient is a proper fraction
-    real = reg.QUERIES["w14_activity_gini"](spark, SF_DIR).collect()[0]
+    real = registry.QUERIES["w14_activity_gini"](spark, SF_DIR).collect()[0]
     assert 0.0 <= real["gini"] < 1.0
 
 
@@ -228,10 +210,7 @@ def test_t10_round_robin_balance_within_stratum(spark):
     # round-robin inside each stratum ⇒ per-shard doc counts differ by
     # at most 1 within a stratum — the balance property the layout
     # exists for.
-    from ml_training_data_pipeline_spark.io.sources import load_table
-
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "n_chars")
-    from pyspark.sql import Window
 
     stratum = F.floor(F.least(F.col("n_chars"), F.lit(799)) / 100).cast("int")
     w = Window.partitionBy("stratum").orderBy("doc_id")
@@ -283,7 +262,7 @@ def test_ep7_unpivot_does_not_rescan_per_metric(spark):
     # corpus passes happen before the checkpoint), so adding a metric
     # row costs nothing.
     df = registry.QUERIES["ep7_dataset_card"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_str(df)
     assert "Scan parquet" not in plan, plan
     rows = {r["metric"]: r["value"] for r in df.collect()}
     assert rows["n_docs"] > 0 and 0.0 <= rows["exact_dup_rate"] <= 1.0

@@ -5,33 +5,42 @@ exact-tag-name match, and scratch_dir's stale-tree pruning."""
 
 from __future__ import annotations
 
+import collections
 import os
 import time
 
-import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from ml_training_data_pipeline_spark.io import sources
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.multimodal import (
+    DecodedImage,
+    decode_image,
+    encode_netpbm,
+    extract_image_channel_stats,
+    synth_rgb_pixels,
+)
 from ml_training_data_pipeline_spark.plans import registry
-from tests.conftest import SF_DIR
-
-registry._load_all()
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import (
+    SF_DIR,
+    compare_to_oracle,
+    dead_pid,
+    plan_str,
+    write_documents,
+)
 
 
 def test_v12_limit_then_window(spark):
     # the rank window must run over a TakeOrdered top-4000 slice, never a
-    # single-partition sort of the full vocabulary (VERDICT r7: at 100 TB
+    # single-partition sort of the full vocabulary (at 100 TB
     # the vocab is 10^7-10^8 terms and a global window is the funnel the
     # w14 commit bans). v4's own pattern, applied to the audit that picks
     # v4's cutoff.
     df = registry.QUERIES["v12_vocab_coverage"](spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_str(df)
     lines = plan.splitlines()
     win = [i for i, ln in enumerate(lines) if "Window" in ln and "row_number" in ln]
     assert win, plan
@@ -42,49 +51,16 @@ def test_v12_limit_then_window(spark):
     assert "SinglePartition" not in lines[win[0] + 1], plan
 
 
-def _docs_fixture(spark, tmp_path, rows):
-    sf_dir = str(tmp_path)
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source"])
-    pdf["n_chars"] = pdf["text"].str.len().astype("int64")
-    pdf.to_parquet(os.path.join(sf_dir, "documents.parquet"), index=False)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    return sf_dir, con
-
-
-def _compare(spark_df, con, sql):
-    a = spark_df.toPandas()
-    b = con.execute(sql).fetchdf()
-    cols = sorted(a.columns)
-    assert cols == sorted(b.columns)
-    a = a[cols].sort_values(by=cols, ignore_index=True)
-    b = b[cols].sort_values(by=cols, ignore_index=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-    return a
-
-
 def test_x27_zero_survivor_source_kept(spark, tmp_path):
     # source 'b' contributes nothing but duplicates of a lower-doc_id doc
     # in source 'a': the old inner join dropped it; the oracle (and now
-    # the engine) emit it with effective_tokens=0 (ADVICE r7).
-    sf_dir, con = _docs_fixture(
-        spark,
-        tmp_path,
-        [
-            (1, "alpha beta gamma", "en", "a"),
-            (2, "alpha beta gamma", "en", "b"),
-            (3, "alpha beta gamma", "en", "b"),
-            (4, "delta epsilon", "en", "a"),
-        ],
+    # the engine) emit it with effective_tokens=0.
+    sf_dir = write_documents(
+        str(tmp_path),
+        ["alpha beta gamma", "alpha beta gamma", "alpha beta gamma", "delta epsilon"],
+        ["a", "b", "b", "a"],
     )
-    out = _compare(
-        registry.QUERIES["x27_effective_tokens"](spark, sf_dir),
-        con,
-        registry.ORACLE_SQL["x27_effective_tokens"],
-    )
+    out = compare_to_oracle(spark, "x27_effective_tokens", sf_dir)
     b_row = out[out["source"] == "b"].iloc[0]
     assert b_row["effective_tokens"] == 0
     assert b_row["effective_ratio"] == 0.0
@@ -92,21 +68,10 @@ def test_x27_zero_survivor_source_kept(spark, tmp_path):
 
 def test_x22_one_token_source_simpson_null(spark, tmp_path):
     # a one-token source makes Simpson's denominator sum(c)*(sum(c)-1)=0;
-    # without the CASE guard Spark says NULL while DuckDB says NaN
-    # (ADVICE r7). Both engines must now agree on NULL.
-    sf_dir, con = _docs_fixture(
-        spark,
-        tmp_path,
-        [
-            (1, "solo", "en", "tiny"),
-            (2, "alpha beta alpha gamma", "en", "big"),
-        ],
-    )
-    out = _compare(
-        registry.QUERIES["x22_lexical_diversity"](spark, sf_dir),
-        con,
-        registry.ORACLE_SQL["x22_lexical_diversity"],
-    )
+    # without the CASE guard Spark says NULL while DuckDB says NaN. Both
+    # engines must now agree on NULL.
+    sf_dir = write_documents(str(tmp_path), ["solo", "alpha beta alpha gamma"], ["tiny", "big"])
+    out = compare_to_oracle(spark, "x22_lexical_diversity", sf_dir)
     tiny = out[out["source"] == "tiny"].iloc[0]
     assert pd.isna(tiny["simpson"])
     big = out[out["source"] == "big"].iloc[0]
@@ -144,26 +109,19 @@ def test_strip_html_exact_tag_name_only(spark):
 def test_scratch_dir_registers_and_prunes(spark, tmp_path, monkeypatch):
     # every handed-out path is tracked for atexit removal; stale mtdp_*
     # trees from PRIOR runs (crashed runs never reach atexit) are pruned
-    # age-gated on first use, while fresh trees survive (ADVICE r7).
+    # age-gated on first use, while fresh trees survive.
     monkeypatch.setattr(sources.tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(sources, "_stale_pruned", False)
-    import subprocess
-
-    # a just-reaped child pid: guaranteed-dead (Linux allocates pids
-    # sequentially, so no immediate reuse) — pruning is liveness-gated now
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    dead_pid = proc.pid
     stale = tmp_path / "mtdp_old_sf0_001_app_dead"
     fresh = tmp_path / "mtdp_new_sf0_001_app_live"
-    stale_zip = tmp_path / f"mtdp_spark_pkg_{dead_pid}.zip"
+    stale_zip = tmp_path / f"mtdp_spark_pkg_{dead_pid()}.zip"
     stale.mkdir()
     fresh.mkdir()
     stale_zip.write_bytes(b"zip")
     old = time.time() - 3 * 3600
     os.utime(stale, (old, old))
     os.utime(stale_zip, (old, old))
-    path = sources.scratch_dir(spark, "probe", "/root/testdata/sf0.001")
+    path = sources.scratch_dir(spark, "probe", SF_DIR)
     assert path in sources._scratch_created
     assert not stale.exists(), "3h-old tree from a prior app must be pruned"
     assert not stale_zip.exists(), "3h-old per-pid package zip must be pruned"
@@ -171,9 +129,9 @@ def test_scratch_dir_registers_and_prunes(spark, tmp_path, monkeypatch):
 
 
 def test_doc_count_test_still_enforced():
-    # registry grew this round (x29/g6/cur8) — the totals in README/SURVEY
-    # are re-checked by test_round7.py::test_doc_counts_match_registry;
-    # this probe just pins that the three new names registered.
+    # the totals in README/SURVEY are checked by
+    # test_doc_counts_match_registry; this probe pins that x29/g6/cur8
+    # registered with their oracles.
     for name in (
         "x29_token_psi",
         "g6_source_lang_chi2",
@@ -201,8 +159,6 @@ def test_g6_chi2_invariants(spark):
 
 
 def test_cur8_shares_sum_to_one(spark):
-    import collections
-
     rows = registry.QUERIES["cur8_dedup_quality_interaction"](spark, SF_DIR).collect()
     by_band = collections.defaultdict(float)
     for r in rows:
@@ -217,8 +173,6 @@ def test_w16_finds_the_level_shift(spark, tmp_path):
     # 20 days at ~10 events/day then 10 days at ~50/day: the CUSUM
     # S_t = Σ(c_i − μ) is most negative exactly at the last low day, so
     # the reported change point must be the regime boundary.
-    import numpy as np
-
     base = 86400 * 20000  # arbitrary epoch anchor
     ts, etype = [], []
     for d in range(30):
@@ -263,21 +217,12 @@ def test_x29_degenerate_single_value_psi_zero(spark, tmp_path):
     # and PSI must be exactly 0 with no skipped bins — on both engines
     # (the tie-heavy edge where interpolated-percentile binning would
     # diverge; the integer-histogram rule cannot).
-    sf_dir, con = _docs_fixture(
-        spark,
-        tmp_path,
-        [
-            (1, "alpha beta gamma", "en", "a"),
-            (2, "delta epsilon zeta", "en", "a"),
-            (3, "eta theta iota", "en", "b"),
-            (4, "kappa lambda mu", "en", "b"),
-        ],
+    sf_dir = write_documents(
+        str(tmp_path),
+        ["alpha beta gamma", "delta epsilon zeta", "eta theta iota", "kappa lambda mu"],
+        ["a", "a", "b", "b"],
     )
-    out = _compare(
-        registry.QUERIES["x29_token_psi"](spark, sf_dir),
-        con,
-        registry.ORACLE_SQL["x29_token_psi"],
-    )
+    out = compare_to_oracle(spark, "x29_token_psi", sf_dir)
     assert (out["psi"] == 0.0).all()
     assert (out["n_skipped_bins"] == 0).all()
 
@@ -296,16 +241,13 @@ def test_mix6_weighted_sample_bias(spark):
     # the sample's mean length exceeds the corpus mean (the whole point
     # of weighting), ranks are exactly 1..200 (or corpus size if
     # smaller), and draws are unique docs.
-    from ml_training_data_pipeline_spark.io.sources import load_table
-    from pyspark.sql import functions as F2
-
     rows = registry.QUERIES["mix6_weighted_sample"](spark, SF_DIR).collect()
     assert len({r["doc_id"] for r in rows}) == len(rows)
     assert sorted(r["rank"] for r in rows) == list(range(1, len(rows) + 1))
     corpus_mean = (
         load_table(spark, SF_DIR, "documents")
-        .where(F2.col("n_chars") > 0)
-        .agg(F2.avg("n_chars"))
+        .where(F.col("n_chars") > 0)
+        .agg(F.avg("n_chars"))
         .first()[0]
     )
     sample_mean = sum(r["n_chars"] for r in rows) / len(rows)
@@ -316,17 +258,6 @@ def test_mm7_rgb_roundtrip_and_error_isolation(spark):
     # P6 encode → decode is pixel-identical for the synthetic RGB raster
     # (the color analogue of the P5 property test), and a corrupt blob
     # yields a decoded=false row instead of a task failure.
-    import numpy as np
-    import pandas as pd
-
-    from ml_training_data_pipeline_spark.operators.multimodal import (
-        DecodedImage,
-        decode_image,
-        encode_netpbm,
-        extract_image_channel_stats,
-        synth_rgb_pixels,
-    )
-
     for mid in (0, 1, 37, 255, 1000):
         px = synth_rgb_pixels(mid)
         back = decode_image(encode_netpbm(DecodedImage(8, 8, "RGB", px)))
@@ -358,27 +289,11 @@ def test_zero_token_docs_fingerprint_identically(spark, tmp_path):
     # concat_ws gives '' (fp = md5('')) while DuckDB's array_to_string
     # gives NULL; the oracles coalesce so both engines agree, and all
     # zero-token docs land in ONE exact-dup group.
-    sf_dir, con = _docs_fixture(
-        spark,
-        tmp_path,
-        [
-            (1, "!!! ???", "en", "a"),
-            (2, "---", "en", "a"),
-            (3, "real words here", "en", "a"),
-        ],
-    )
-    out = _compare(
-        registry.QUERIES["x4_fingerprint"](spark, sf_dir),
-        con,
-        registry.ORACLE_SQL["x4_fingerprint"],
-    )
+    sf_dir = write_documents(str(tmp_path), ["!!! ???", "---", "real words here"], ["a"] * 3)
+    out = compare_to_oracle(spark, "x4_fingerprint", sf_dir)
     empty_md5 = "d41d8cd98f00b204e9800998ecf8427e"
     assert list(out[out["doc_id"] == 1]["fp"]) == [empty_md5]
-    groups = _compare(
-        registry.QUERIES["d1_exact_dup_groups"](spark, sf_dir),
-        con,
-        registry.ORACLE_SQL["d1_exact_dup_groups"],
-    )
+    groups = compare_to_oracle(spark, "d1_exact_dup_groups", sf_dir)
     g = groups[groups["fp"] == empty_md5].iloc[0]
     assert g["n_docs"] == 2 and g["keep_doc_id"] == 1
 

@@ -3,25 +3,29 @@ pruning; escape-sequence hygiene) plus this round's structural changes."""
 
 from __future__ import annotations
 
+import glob
 import os
 import py_compile
-import subprocess
+import tempfile
 import time
 import warnings
+from collections import defaultdict
+
+from pyspark.sql import functions as F
 
 from ml_training_data_pipeline_spark.io import sources
-
-from tests.conftest import SF_DIR  # noqa: F401  (fixture wiring)
-
-
-def _dead_pid() -> int:
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    return proc.pid
+from ml_training_data_pipeline_spark.io.sources import load_table
+from ml_training_data_pipeline_spark.operators.dedup import (
+    doc_shingles,
+    jaccard_pairs,
+    shingle_df_audit,
+)
+from ml_training_data_pipeline_spark.plans import queries_misc as qm, registry
+from tests.conftest import REPO, SF_DIR, dead_pid
 
 
 def test_prune_spares_live_owner_regardless_of_age(tmp_path, monkeypatch):
-    # ADVICE r8: a session alive longer than the 2h age gate must NOT lose
+    # a session alive longer than the 2h age gate must NOT lose
     # its scratch to a newly-starting concurrent session. The .owner pid
     # sentinel now gates pruning on process liveness, not mtime alone.
     monkeypatch.setattr(sources.tempfile, "gettempdir", lambda: str(tmp_path))
@@ -33,7 +37,7 @@ def test_prune_spares_live_owner_regardless_of_age(tmp_path, monkeypatch):
     (tmp_path / (live_tree.name + ".owner")).write_text(str(os.getpid()))
     dead_tree = tmp_path / "mtdp_sink_sf0_001_app_crashed"
     dead_tree.mkdir()
-    (tmp_path / (dead_tree.name + ".owner")).write_text(str(_dead_pid()))
+    (tmp_path / (dead_tree.name + ".owner")).write_text(str(dead_pid()))
     for p in (live_tree, tmp_path / (live_tree.name + ".owner"),
               dead_tree, tmp_path / (dead_tree.name + ".owner")):
         os.utime(p, (old, old))
@@ -57,11 +61,11 @@ def test_prune_spares_live_pid_zip_and_orphan_sentinels(tmp_path, monkeypatch):
     # alive, never our own pid, so not skipped as own_zip) must survive
     # the age gate on liveness alone
     live_zip = tmp_path / "mtdp_spark_pkg_1.zip"
-    dead_zip = tmp_path / f"mtdp_spark_pkg_{_dead_pid()}.zip"
+    dead_zip = tmp_path / f"mtdp_spark_pkg_{dead_pid()}.zip"
     live_other = tmp_path / "mtdp_tree_no_sentinel_fresh"
     live_other.mkdir()  # fresh mtime — age gate spares it
     orphan = tmp_path / "mtdp_gone_tree.owner"
-    orphan.write_text(str(_dead_pid()))
+    orphan.write_text(str(dead_pid()))
     live_zip.write_bytes(b"zip")
     dead_zip.write_bytes(b"zip")
     os.utime(live_zip, (old, old))
@@ -96,7 +100,7 @@ def test_prune_hard_cap_overrides_liveness(tmp_path, monkeypatch):
 def test_scratch_dir_writes_owner_sentinel(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sources.tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(sources, "_stale_pruned", True)
-    path = sources.scratch_dir(spark, "probe9", "/root/testdata/sf0.001")
+    path = sources.scratch_dir(spark, "probe9", SF_DIR)
     owner = path + ".owner"
     assert os.path.exists(owner)
     with open(owner) as fh:
@@ -105,19 +109,14 @@ def test_scratch_dir_writes_owner_sentinel(spark, tmp_path, monkeypatch):
 
 
 def test_no_invalid_escape_sequences_anywhere():
-    # ADVICE r8: \s in non-raw f-strings emits SyntaxWarning today and is
-    # slated to become SyntaxError. Compile every engine module with
+    # \s in non-raw f-strings emits SyntaxWarning today and is slated to
+    # become SyntaxError. Compile every engine module with
     # warnings-as-errors so a regression fails loudly.
-    import glob
-
-    root = os.path.join(os.path.dirname(__file__), "..")
     files = glob.glob(
-        os.path.join(root, "ml_training_data_pipeline_spark", "**", "*.py"),
+        os.path.join(REPO, "ml_training_data_pipeline_spark", "**", "*.py"),
         recursive=True,
     )
     assert len(files) > 20
-    import tempfile
-
     with warnings.catch_warnings(), tempfile.TemporaryDirectory() as td:
         warnings.simplefilter("error", SyntaxWarning)
         for f in files:
@@ -125,12 +124,11 @@ def test_no_invalid_escape_sequences_anywhere():
 
 
 def test_ep8_single_scan_and_component_equivalence(spark, monkeypatch):
-    # VERDICT r8 #6: ep8 is the per-batch monitoring query — its cost sets
-    # the cadence. The fused path must read documents ONCE (x28/g6 need
-    # only plain columns; x29's tokenize rides the same scan), and the
-    # numbers must equal the three standalone components exactly.
-    from ml_training_data_pipeline_spark.plans import queries_misc as qm
-
+    # ep8 is the per-batch monitoring query — its cost sets the cadence.
+    # The fused path must read documents ONCE (x28/g6 need only plain
+    # columns; x29's tokenize rides the same scan), its rows must equal
+    # the three standalone audits exactly, and all three metrics must
+    # cover the same source set.
     calls = []
     real = qm.load_table
 
@@ -139,26 +137,28 @@ def test_ep8_single_scan_and_component_equivalence(spark, monkeypatch):
         return real(spark_, sf_dir_, name)
 
     monkeypatch.setattr(qm, "load_table", counting)
-    fused = {
-        (r["source"], r["metric"]): r["value"]
-        for r in qm.ep8_drift_report(spark, SF_DIR).collect()
-    }
+    fused = sorted(
+        (r["source"], r["metric"], r["value"]) for r in qm.ep8_drift_report(spark, SF_DIR).collect()
+    )
     assert calls == ["documents"], f"ep8 must scan documents exactly once, got {calls}"
-
-    parts = {}
-    for r in qm.x28_length_drift_ks(spark, SF_DIR).collect():
-        parts[(r["source"], "ks_chars")] = r["ks_stat"]
-    for r in qm.x29_token_psi(spark, SF_DIR).collect():
-        parts[(r["source"], "psi_tokens")] = r["psi"]
-    for r in qm.g6_source_lang_chi2(spark, SF_DIR).collect():
-        parts[(r["source"], "chi2_lang")] = r["chi2_contrib"]
-    assert fused == parts
+    parts = sorted(
+        (r["source"], metric, r[col])
+        for fn, metric, col in (
+            (qm.x28_length_drift_ks, "ks_chars", "ks_stat"),
+            (qm.x29_token_psi, "psi_tokens", "psi"),
+            (qm.g6_source_lang_chi2, "chi2_lang", "chi2_contrib"),
+        )
+        for r in fn(spark, SF_DIR).collect()
+    )
+    assert fused == parts, "fused ep8 must equal the three standalone audits"
+    by_metric = {}
+    for source, metric, _ in fused:
+        by_metric.setdefault(metric, set()).add(source)
+    assert set(by_metric) == {"ks_chars", "psi_tokens", "chi2_lang"}
+    assert len({frozenset(v) for v in by_metric.values()}) == 1
 
 
 def test_st12_psi_invariants(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["st12_stream_drift_gate"](spark, SF_DIR).collect()
     assert rows, "arriving half must produce at least one source"
     for r in rows:
@@ -168,9 +168,6 @@ def test_st12_psi_invariants(spark):
 
 
 def test_cur10_admission_invariants(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["cur10_incremental_neardup"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
@@ -179,9 +176,6 @@ def test_cur10_admission_invariants(spark):
 
 
 def test_mix7_mixture_invariants(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["mix7_target_mixture_weights"](spark, SF_DIR).collect()
     assert rows
     assert abs(sum(r["eff_share"] for r in rows) - 1.0) < 1e-4
@@ -192,9 +186,6 @@ def test_mix7_mixture_invariants(spark):
 
 
 def test_d19_histogram_invariants(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["d19_shingle_df_audit"](spark, SF_DIR).collect()
     assert rows
     assert abs(sum(r["posting_share"] for r in rows) - 1.0) < 1e-4
@@ -209,8 +200,6 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
     # deliver every input row exactly once into a file sink — no loss, no
     # replay — and (b) recover aggregation STATE from the checkpoint, so
     # post-restart snapshots count pre-restart rows it never re-read.
-    from pyspark.sql import functions as F
-
     ind = str(tmp_path / "in")
     out = str(tmp_path / "out")
     ck1 = str(tmp_path / "ck1")
@@ -270,11 +259,6 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
 
 
 def test_n16_hard_negative_invariants(spark):
-    from collections import defaultdict
-
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["n16_hard_negatives"](spark, SF_DIR).collect()
     assert rows
     per = defaultdict(list)
@@ -289,9 +273,6 @@ def test_n16_hard_negative_invariants(spark):
 
 
 def test_cur11_survivor_invariants(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["cur11_semantic_survivors"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
@@ -301,12 +282,8 @@ def test_cur11_survivor_invariants(spark):
 
 
 def test_s17_no_leaks_and_conservation(spark):
-    from ml_training_data_pipeline_spark.plans import registry
-
-    registry._load_all()
     rows = registry.QUERIES["s17_tombstone_delete"](spark, SF_DIR).collect()
     assert rows
-    from ml_training_data_pipeline_spark.io.sources import load_table
 
     totals = {
         r["source"]: r["n"]
@@ -327,14 +304,6 @@ def test_d19_cap_binds_on_boilerplate_fixture(spark):
     # only structurally exercised there. This fixture makes the cap BITE:
     # one boilerplate shingle shared by 25 docs (df 25 > cap 20) plus one
     # unique shingle per doc — and checks the audit prices it correctly.
-    from pyspark.sql import functions as F
-
-    from ml_training_data_pipeline_spark.operators.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-        shingle_df_audit,
-    )
-
     docs = spark.createDataFrame(
         [(i, f"common boiler plate unique{i} tail{i} end{i}") for i in range(25)],
         schema="doc_id long, text string",

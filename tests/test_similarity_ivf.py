@@ -3,16 +3,21 @@ partial probing keeps recall high on the clustered synthetic embeddings."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 from pyspark.sql import functions as F
 
 from ml_training_data_pipeline_spark.io.sources import load_table
 from ml_training_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
+    ivf_assignments,
+    ivf_probe_scored_all,
+    ivf_probe_topk,
     ivf_topk,
+    rank_topk,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -59,10 +64,6 @@ def test_serving_default_is_measured_knee():
     # n15's sweep measured recall@5 = 0.88 at nprobe=8 (1.00 at 16) on a
     # 16-cell index; the serving default must embody that audit, not a
     # guess. A default drift here silently changes n5's output.
-    import inspect
-
-    from ml_training_data_pipeline_spark.operators.similarity import ivf_probe_topk
-
     assert inspect.signature(ivf_topk).parameters["nprobe"].default == 8
     assert inspect.signature(ivf_probe_topk).parameters["nprobe"].default == 8
 
@@ -71,14 +72,6 @@ def test_sweep_path_equals_serving_path(spark, emb):
     # the n15 score-once form (ivf_probe_scored_all filtered to
     # p <= nprobe, then ranked) must reproduce ivf_probe_topk exactly —
     # the sweep and the serving path may never drift apart.
-    from ml_training_data_pipeline_spark.operators.similarity import (
-        ivf_assignments,
-        ivf_probe_scored_all,
-        ivf_probe_topk,
-        rank_topk,
-    )
-    from pyspark.sql import functions as F
-
     queries = emb.where(F.col("vec_id") < 5)
     centers, assigned = ivf_assignments(emb, nlist=8)
     assigned = assigned.localCheckpoint()
